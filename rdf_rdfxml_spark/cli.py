@@ -5,10 +5,14 @@ SURVEY.md §2.1), spark-submit friendly:
     python -m rdf_rdfxml_spark.cli --input docs.parquet --output out/ \
         --format parquet --resume-manifest manifest/
 
-Reads a documents table (input_hint shape), runs the pipeline, writes
-triples (parquet, partitioned) or NTriples text, and prints the reference's
+Reads a documents table (input_hint shape), runs the one pipeline entry
+(``construct_graph``, each document parsed once — persisted across the two
+writes when ``--errors-output`` is set), writes triples (``materialize``'s
+``bucket=B`` parquet, NTriples text or RDF/XML) and prints the reference's
 throughput line ("Parsed N statements in S seconds @ R statements/second.",
-script/parse:42).
+script/parse:42), N observed on the write job. ``--resume-manifest`` runs
+``resumable_run`` with the same options: parquet only, nested
+``unit=U/bucket=B`` (errors ``unit=U``), N counting this invocation's rows.
 """
 
 from __future__ import annotations
@@ -78,49 +82,49 @@ def main(argv=None):
                     help="enable checkpoint/resume with this manifest path")
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
+    if args.resume_manifest and args.format != "parquet":
+        ap.error("--resume-manifest writes parquet only, "
+                 f"not --format {args.format}")
 
     from pyspark.sql import functions as F
 
-    from .operators.materialize import resumable_run, with_bucket
+    from .operators.materialize import (errors_alongside, materialize,
+                                        observe_rows, resumable_run)
     from .plans.pipeline import construct_graph, default_session
 
     spark = default_session(app="rdf-rdfxml-spark-cli", master=args.master)
     docs = spark.read.parquet(args.input)
     if args.base_uri and "base_uri" not in docs.columns:
         docs = docs.withColumn("base_uri", F.lit(args.base_uri))
+    opts = dict(strict=not args.no_strict, repartition=args.repartition,
+                canonicalize=args.canonicalize)
 
     t0 = time.time()
     if args.resume_manifest:
         stats = resumable_run(spark, docs, args.output, args.resume_manifest,
-                              strict=not args.no_strict,
-                              n_buckets=args.buckets)
-        n = spark.read.parquet(args.output).count()
+                              n_buckets=args.buckets,
+                              errors_path=args.errors_output, **opts)
+        n = stats["triples_written"]
         print(f"Resume run: {stats['units_done']}/{stats['units_total']} "
               f"units this invocation.")
     else:
-        g = construct_graph(docs, strict=not args.no_strict,
-                            repartition=args.repartition,
-                            canonicalize=args.canonicalize)
-        if args.format == "parquet":
-            with_bucket(g.triples, args.buckets).write.mode("overwrite") \
-                .partitionBy("bucket").parquet(args.output)
-            n = spark.read.parquet(args.output).count()
-        elif args.format == "rdfxml":
-            from .writer.serialize import write_rdfxml
-            t = g.triples.select("doc_sha", "s", "s_kind", "p", "o",
-                                 "o_kind", "o_lang", "o_dt")
-            xml = write_rdfxml(t, group_cols=("doc_sha",),
-                               attributes=args.writer_attributes,
-                               base_uri=args.base_uri or None)
-            xml.write.mode("overwrite").parquet(args.output)
-            # the throughput line counts statements, as the reference does
-            n = g.triples.count()
-        else:
-            nt = _nt_lines(g.triples)
-            nt.write.mode("overwrite").text(args.output)
-            n = spark.read.text(args.output).count()
-        if args.errors_output:
-            g.errors.write.mode("overwrite").parquet(args.errors_output)
+        g = construct_graph(docs, **opts)
+        with errors_alongside(g, args.errors_output):
+            if args.format == "parquet":
+                n = materialize(g.triples, args.output,
+                                n_buckets=args.buckets)
+            else:
+                # the throughput line counts statements, as the reference does
+                t, obs = observe_rows(g.triples)
+                if args.format == "rdfxml":
+                    from .writer.serialize import write_rdfxml
+                    write_rdfxml(t, group_cols=("doc_sha",),
+                                 attributes=args.writer_attributes,
+                                 base_uri=args.base_uri or None) \
+                        .write.mode("overwrite").parquet(args.output)
+                else:
+                    _nt_lines(t).write.mode("overwrite").text(args.output)
+                n = obs.get["n"]
     secs = time.time() - t0
     # parity with /root/reference/script/parse:42
     print(f"Parsed {n} statements in {secs:.2f} seconds @ "

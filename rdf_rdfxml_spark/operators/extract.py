@@ -1,7 +1,8 @@
 """Triple extraction: the one vectorized UDF stage (SURVEY.md §2.2).
 
 ``documents(repo, path, commit, lang, content[, base_uri])`` →
-``mapInPandas(parse_batch)`` → unified (triple | error) rows.
+``mapInArrow(parse_batch)`` → unified (triple | error) rows, each
+document's triples a set (the reference's ``RDF::Repository`` insert).
 
 Design notes for 100 TB scale:
 
@@ -106,8 +107,7 @@ def _col_or_none(rb: pa.RecordBatch, name: str, want: bool):
 
 
 def _make_parse_batch(has_base: bool, has_prov: bool, strict: bool,
-                      max_content_bytes: int, dedup: bool = False,
-                      canonicalize: bool = False):
+                      max_content_bytes: int, canonicalize: bool = False):
     def parse_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # Hostile nesting headroom; RecursionError is still caught per-doc.
         sys.setrecursionlimit(50_000)
@@ -139,16 +139,14 @@ def _make_parse_batch(has_base: bool, has_prov: bool, strict: bool,
                 repo = repos[i] if repos is not None else None
                 path = paths[i] if paths is not None else None
                 commit = commits[i] if commits is not None else None
-                if dedup:
-                    # Per-document set semantics applied at the source: a
-                    # document's triples all live in the row that produced
-                    # them, so the RDF::Repository set-insert is document-
-                    # local — doing it here removes the dropDuplicates
-                    # shuffle from the flagship plan entirely (measured:
-                    # dedup cost 20% of pipeline wall and the worst-scaling
-                    # stage; order-preserving dict dedup is O(triples)).
-                    triples = list(dict.fromkeys(triples))
-                for s, p, o in triples:
+                # Per-document set semantics applied at the source: a
+                # document's triples all live in the row that produced
+                # them, so the RDF::Repository set-insert is document-
+                # local — doing it here removes the dropDuplicates
+                # shuffle from the flagship plan entirely (measured:
+                # dedup cost 20% of pipeline wall and the worst-scaling
+                # stage; order-preserving dict dedup is O(triples)).
+                for s, p, o in dict.fromkeys(triples):
                     buf.add_triple(s, p, o, doc_sha, repo, path, commit)
                 for message in errors:
                     buf.add_error(message, doc_sha, repo, path, commit)
@@ -162,17 +160,17 @@ def _make_parse_batch(has_base: bool, has_prov: bool, strict: bool,
 
 def extract(documents: DataFrame, *, strict: bool = True,
             max_content_bytes: int = 256 * 1024 * 1024,
-            dedup: bool = False, canonicalize: bool = False) -> DataFrame:
+            canonicalize: bool = False) -> DataFrame:
     """Run the RDF/XML grammar over a documents DataFrame.
 
     Input columns: ``content`` (required); ``base_uri`` (optional — default
     empty, mirroring the reference's ``base_uri:`` reader option);
     ``repo``/``path``/``commit`` provenance (optional, passed through).
 
-    ``dedup=True`` applies per-document set semantics inside the UDF
+    Each document's triples are a set, collapsed inside the UDF
     (shuffle-free; equivalent to ``dedup_document`` except when the *same
     document row* appears more than once in the input — there the shuffle
-    variant also collapses across copies).
+    operator also collapses across copies).
 
     Returns the unified extraction DataFrame (EXTRACT_SCHEMA): filter
     ``rec='triple'`` / ``rec='error'`` for the two channels, or use
@@ -190,7 +188,7 @@ def extract(documents: DataFrame, *, strict: bool = True,
     pruned = documents.select(*keep)
     return pruned.mapInArrow(
         _make_parse_batch(has_base, has_prov, strict, max_content_bytes,
-                          dedup, canonicalize),
+                          canonicalize),
         schema=EXTRACT_SCHEMA)
 
 

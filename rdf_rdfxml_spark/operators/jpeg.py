@@ -315,12 +315,6 @@ def _mcu_groups(comps, mcux, mcuy):
             yield grp
 
 
-def _mcu_block_order(comps, mcux, mcuy):
-    """Yield (comp_index, by, bx) in interleaved MCU order."""
-    for grp in _mcu_groups(comps, mcux, mcuy):
-        yield from grp
-
-
 class _OpStream:
     """Two-pass emission: ops collected as ("sym", tsel, symbol) /
     ("bits", value, length); per-table canonical codes are built from the

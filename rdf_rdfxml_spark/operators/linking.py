@@ -153,9 +153,12 @@ def encode_triples(
             # each call frees the previous call's cache (at most one
             # dictionary stays resident past its use — round-2 ADVICE).
             # Callers that already know the cardinality pass ``dict_count``
-            # and no cache is created.
+            # and no cache is created. A stopped session's probe is just
+            # dropped: its storage is gone and unpersist() would raise.
             while _DICT_PROBE_CACHE:
-                _DICT_PROBE_CACHE.pop().unpersist()
+                stale = _DICT_PROBE_CACHE.pop()
+                if stale.sparkSession.sparkContext._jsc is not None:
+                    stale.unpersist()
             dict_slim = dict_slim.persist()
             _DICT_PROBE_CACHE.append(dict_slim)
             probe_n = dict_slim.limit(broadcast_threshold + 1).count()

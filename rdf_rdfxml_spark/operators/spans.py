@@ -341,16 +341,6 @@ def _spans_cte(*, k: int, window: int, min_docs: int, table: str) -> str:
     {_islands_cte(k=k)}"""
 
 
-def dup_spans_oracle_sql(*, k: int = SPAN_K, window: int = SPAN_WINDOW,
-                         min_docs: int = 2,
-                         table: str = "documents") -> str:
-    return f"""WITH {_spans_cte(k=k, window=window, min_docs=min_docs,
-                                table=table)}
-    SELECT doc_id, CAST(span_start AS BIGINT) AS span_start,
-           CAST(span_end AS BIGINT) AS span_end
-    FROM spans"""
-
-
 def dup_span_stats_oracle_sql(*, k: int = SPAN_K,
                               window: int = SPAN_WINDOW, min_docs: int = 2,
                               table: str = "documents") -> str:

@@ -1,8 +1,10 @@
 """End-to-end KG-construction plan (SURVEY.md §3 translated to Spark).
 
-scan(documents) → [repartition for balance] → extract (Arrow UDF) →
-per-document dedup → {triples, errors, metrics} — with optional global
-graph view, dictionary encoding, and partitioned materialization.
+scan(documents) → [repartition for balance] → extract (Arrow UDF, per-
+document set semantics) → {triples, errors, metrics} — with optional global
+graph view, dictionary encoding, and partitioned materialization. The CLI,
+the resumable run and the streaming ingest all extract through
+``construct_graph``, so a document gives the same triples on every path.
 
 The relational stages stay fully declarative so Catalyst/AQE keep column
 pruning, partial aggregation, and adaptive shuffle coalescing; the only
@@ -31,7 +33,6 @@ def construct_graph(
     *,
     strict: bool = True,
     repartition: int | None = None,
-    dedup: bool = True,
     canonicalize: bool = False,
 ) -> GraphResult:
     """The flagship plan: documents → triples + errors.
@@ -49,8 +50,7 @@ def construct_graph(
     # flagship plan has no post-parse shuffle at all; use
     # operators.dedup.dedup_document explicitly if the input table may
     # contain duplicate rows of the same document.
-    extracted = extract(documents, strict=strict, dedup=dedup,
-                        canonicalize=canonicalize)
+    extracted = extract(documents, strict=strict, canonicalize=canonicalize)
     triples = triples_channel(extracted)
     return GraphResult(extracted=extracted, triples=triples,
                        errors=errors_channel(extracted))

@@ -432,20 +432,3 @@ def corpus(instances_per_category: int = 3, include_negative: bool = True,
                 idx += 1
     return rows
 
-
-def bench_corpus(n_docs: int):
-    """Large replicated corpus for throughput runs: positive categories
-    cycled with IRI rewriting via the instance index."""
-    cats = list(POSITIVE_CATEGORIES.values())
-    rows = []
-    for i in range(n_docs):
-        content, _golden, base = cats[i % len(cats)](i)
-        rows.append({
-            "repo": f"org{i % 17}/repo{i % 101}",
-            "path": f"bench/doc{i}.rdf",
-            "commit": _pseudo_sha(f"bench:{i}"),
-            "lang": "rdfxml",
-            "content": content,
-            "base_uri": base,
-        })
-    return rows

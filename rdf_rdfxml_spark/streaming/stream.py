@@ -2,9 +2,9 @@
 
 The reference is strictly batch (whole-document DOM, reader.rb:161), so
 streaming here means *incremental ingest of new documents*: a
-``readStream`` over the documents table feeding the identical extraction
-stage via ``foreachBatch``, with the resume manifest making restarts
-exactly-once at the sink (deterministic bnode ids + idempotent appends).
+``readStream`` over the documents table feeding the batch pipeline entry
+(``construct_graph`` → ``materialize``) via ``foreachBatch``, with the
+stream checkpoint keeping restarts from re-ingesting committed files.
 
 Also provides the watermarked windowed aggregation over the ``events``
 table — the standard late-data pattern (the batch-equivalent query is
@@ -16,8 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import extract, triples_channel
-from ..operators.materialize import with_bucket
+from ..operators.materialize import materialize
+from ..plans.pipeline import construct_graph
 from ..schema import DOCUMENTS_SCHEMA
 
 
@@ -35,14 +35,12 @@ def stream_construct(docs_stream: DataFrame, output_path: str,
                      checkpoint_path: str, *, strict: bool = True,
                      n_buckets: int = 16):
     """documents stream → triples parquet, via foreachBatch of the batch
-    extraction stage (one code path for batch and streaming — the UDF and
+    pipeline entry (one code path for batch and streaming — the UDF and
     its semantics are identical)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        triples = with_bucket(
-            triples_channel(extract(batch_df, strict=strict)), n_buckets)
-        (triples.write.mode("append").partitionBy("bucket")
-         .parquet(output_path))
+        materialize(construct_graph(batch_df, strict=strict).triples,
+                    output_path, n_buckets=n_buckets, mode="append")
 
     return (docs_stream.writeStream
             .option("checkpointLocation", checkpoint_path)

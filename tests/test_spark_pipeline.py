@@ -94,9 +94,12 @@ def test_dedup_document_and_global(spark):
       xmlns:ex="http://e/">
       <rdf:Description rdf:about="http://a/"><ex:p>v</ex:p><ex:p>v</ex:p></rdf:Description>
     </rdf:RDF>"""
+    # extraction already collapses the in-document repeat, so the
+    # document-level duplicate is a second row of the same document
     doc2 = doc.replace("<ex:p>v</ex:p><ex:p>v</ex:p>", "<ex:p>v</ex:p>")
     docs = spark.createDataFrame(
-        [{"content": doc, "base_uri": ""}, {"content": doc2, "base_uri": ""}])
+        [{"content": doc, "base_uri": ""}, {"content": doc, "base_uri": ""},
+         {"content": doc2, "base_uri": ""}])
     triples = triples_channel(extract(docs))
     assert triples.count() == 3
     assert dedup_document(triples).count() == 2
@@ -181,7 +184,7 @@ def test_resumable_run_completes_and_is_idempotent(spark, docs_df, tmp_path):
 
 
 def test_in_udf_dedup_vs_shuffle_dedup_semantics(spark):
-    """extract(dedup=True) == per-document set semantics, shuffle-free; the
+    """extract() == per-document set semantics, shuffle-free; the
     explicit dedup_document operator additionally collapses *duplicate
     rows* of the same document — the documented seam between them."""
     doc = """<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -191,7 +194,7 @@ def test_in_udf_dedup_vs_shuffle_dedup_semantics(spark):
     docs = spark.createDataFrame(
         [{"content": doc, "base_uri": ""},
          {"content": doc, "base_uri": ""}])  # same document row twice
-    local = triples_channel(extract(docs, dedup=True))
+    local = triples_channel(extract(docs))
     assert local.count() == 2          # 1 per copy (in-doc dup collapsed)
     assert dedup_document(local).count() == 1  # row-duplicates collapsed
 
@@ -229,3 +232,39 @@ def test_salted_join_spreads_hot_key(spark):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", saved)
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
+_RESTART_SCRIPT = """
+from pyspark.sql import SparkSession
+from rdf_rdfxml_spark.operators.linking import (build_term_dictionary,
+                                                encode_triples)
+
+def encode_in_fresh_session():
+    spark = (SparkSession.builder.master("local[2]")
+             .config("spark.ui.enabled", "false")
+             .config("spark.sql.shuffle.partitions", "2").getOrCreate())
+    t = spark.createDataFrame(
+        [("http://a/", "iri", "http://p/", "v", "literal", None, None)],
+        "s string, s_kind string, p string, o string, o_kind string, "
+        "o_lang string, o_dt string")
+    n = encode_triples(t, build_term_dictionary(t)).count()
+    spark.stop()
+    return n
+
+print("ENCODED", encode_in_fresh_session(), encode_in_fresh_session())
+"""
+
+
+def test_encode_triples_survives_session_restart():
+    """encode_triples frees the previous call's persisted dictionary probe;
+    a probe left over from a stopped session must be dropped, not
+    unpersisted (its context is gone and unpersist() raises). Runs in a
+    subprocess because the shared test session must not be stopped."""
+    import pathlib
+    import subprocess
+    import sys
+    proc = subprocess.run([sys.executable, "-c", _RESTART_SCRIPT],
+                          capture_output=True, text=True, timeout=300,
+                          cwd=pathlib.Path(__file__).resolve().parents[1])
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "ENCODED 1 1" in proc.stdout

@@ -1,6 +1,8 @@
 """Streaming, multimodal plumbing, P/R scoring, CLI driver."""
 import subprocess
 import sys
+from collections import Counter
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +18,7 @@ from rdf_rdfxml_spark.streaming.stream import (
 )
 
 INPUT_COLS = ("repo", "path", "commit", "lang", "content", "base_uri")
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _docs_df(spark, rows):
@@ -55,6 +58,13 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
 
 def test_stream_construct_available_now(spark, tmp_path):
     rows = [r for r in corpus(2) if not r["negative"]]
+    # one statement written twice: a set, so one row on every path
+    rows.append({"repo": "r", "path": "repeat.rdf", "commit": "c",
+                 "lang": "rdfxml", "base_uri": "", "content": (
+                     '<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/'
+                     '22-rdf-syntax-ns#" xmlns:ex="http://e/">'
+                     '<rdf:Description rdf:about="http://a/"><ex:p>v</ex:p>'
+                     '<ex:p>v</ex:p></rdf:Description></rdf:RDF>')})
     src = str(tmp_path / "in")
     _docs_df(spark, rows).drop("base_uri").write.parquet(src)
     out = str(tmp_path / "out")
@@ -63,7 +73,7 @@ def test_stream_construct_available_now(spark, tmp_path):
                          out, ckpt).start()
     q.awaitTermination(120)
     triples = spark.read.parquet(out)
-    batch = construct_graph(_docs_df(spark, rows), dedup=False).triples
+    batch = construct_graph(_docs_df(spark, rows)).triples
     assert triples.count() == batch.count()
     # restart with no new files: no duplicates (checkpoint held)
     q2 = stream_construct(stream_documents(spark, src), out, ckpt).start()
@@ -197,6 +207,38 @@ def test_cli_end_to_end(spark, tmp_path):
     assert "statements/second." in proc.stdout
     assert spark.read.parquet(out).count() > 0
     assert spark.read.parquet(err).count() > 0  # negative fixtures
+
+    # resume forwards every pipeline flag: its output equals the library
+    # pipeline run with the same options
+    out_r, err_r = str(tmp_path / "resumed"), str(tmp_path / "resumed_err")
+    proc = subprocess.run(
+        [sys.executable, "-m", "rdf_rdfxml_spark.cli", "--input", src,
+         "--output", out_r, "--errors-output", err_r, "--master", "local[4]",
+         "--buckets", "4", "--resume-manifest", str(tmp_path / "manifest"),
+         "--canonicalize", "--no-strict", "--repartition", "2"],
+        capture_output=True, text=True, cwd=REPO, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "Resume run:" in proc.stdout
+    g = construct_graph(spark.read.parquet(src), strict=False,
+                        canonicalize=True)
+    t_cols = ["s", "s_kind", "p", "o", "o_kind", "o_lang", "o_dt", "doc_sha"]
+    e_cols = ["doc_sha", "repo", "path", "commit", "error"]
+    for got, want, cols in ((out_r, g.triples, t_cols),
+                            (err_r, g.errors, e_cols)):
+        assert (Counter(map(tuple, spark.read.parquet(got).select(*cols)
+                            .collect()))
+                == Counter(map(tuple, want.select(*cols).collect())))
+    assert any(p.name.startswith("unit=") for p in (tmp_path / "resumed")
+               .iterdir())
+
+    # resume writes parquet only: other formats are refused, not ignored
+    proc = subprocess.run(
+        [sys.executable, "-m", "rdf_rdfxml_spark.cli", "--input", src,
+         "--output", str(tmp_path / "nt"), "--format", "ntriples",
+         "--resume-manifest", str(tmp_path / "manifest2")],
+        capture_output=True, text=True, cwd=REPO, timeout=300)
+    assert proc.returncode == 2
+    assert "--resume-manifest" in proc.stderr
 
 
 def test_dist_zip_importable(tmp_path):
