@@ -379,11 +379,11 @@ def q_entity_linking(spark, sf_dir):
 
 
 def q_entity_linking_salted(spark, sf_dir):
-    # The skew-safe production join: dictionary exploded salt_factor ways,
-    # fact side picks a deterministic salt — must be value-identical to the
-    # broadcast path (same oracle as entity_linking). Two round-5
-    # amortizations of the round-4 regression (detection re-ran the full
-    # parse per call, 1.56 → 2.06 s):
+    # The skew-safe production join (graph.salted_join): hot dictionary
+    # rows replicate, hot fact rows pick a deterministic salt — must be
+    # value-identical to the broadcast path (same oracle as
+    # entity_linking). Two round-5 amortizations of the round-4
+    # regression (detection re-ran the full parse per call, 1.56 → 2.06 s):
     # * the extraction output is persisted once per call (bounded: the
     #   previous call's handle freed first) — in production the fact
     #   side is the MATERIALIZED triple table (D4 parquet), so the
@@ -403,8 +403,7 @@ def q_entity_linking_salted(spark, sf_dir):
         from rdf_rdfxml_spark.operators.linking import detect_hot_keys
         hot = _SALTED_HOT_CACHE[sf_dir] = detect_hot_keys(t)
     d = build_term_dictionary(t, dense_ids=True)
-    return (encode_triples(t, d, broadcast_threshold=None, salt_factor=8,
-                           hot_keys=hot)
+    return (encode_triples(t, d, broadcast_threshold=None, hot_keys=hot)
             .select("s_id", "p_id", "o_id"))
 
 
@@ -416,7 +415,7 @@ def q_entity_linking_hashids(spark, sf_dir):
     # (null) ids.
     t = triples_channel(_parse(spark, sf_dir, D.xml_reify_expr()))
     d = build_term_dictionary(t)  # xxhash64 ids
-    enc = encode_triples(t, d, broadcast_threshold=None, salt_factor=4)
+    enc = encode_triples(t, d, broadcast_threshold=None)
     return enc.agg(
         F.count("*").alias("n_triples"),
         F.countDistinct("s_id").alias("n_distinct_s"),

@@ -27,12 +27,11 @@ def salted_join(probe: DataFrame, build: DataFrame, key: str, *,
                 salt_factor: int = 8, hot_keys: list | None = None,
                 hot_support: float = 0.05,
                 how: str = "inner") -> DataFrame:
-    """Hot-key-targeted salted equi-join for skewed graph traversals —
-    the generic form of the ``encode_triples`` dictionary-salt pattern
-    (linking.py), for joins like the two-hop ``object = subject``
-    self-join where one hub node holds most of the probe rows (the
-    shape real KGs have: a handful of entities referenced by 90% of
-    documents).
+    """Hot-key-targeted salted equi-join — the one key-salting kernel:
+    ``encode_triples``' dictionary joins (linking.py) and the skewed
+    graph traversals, like the two-hop ``object = subject`` self-join
+    where one hub node holds most of the probe rows (the shape real KGs
+    have: a handful of entities referenced by 90% of documents).
 
     Only heavy-hitter keys salt: ``build`` rows for hot keys replicate
     ``salt_factor`` ways, ``probe`` rows for hot keys take a

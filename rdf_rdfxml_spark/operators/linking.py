@@ -14,12 +14,12 @@ Skew is structural here: at 10¹²-file scale a handful of IRIs
 Mitigations, in order:
 
 * dictionaries are usually small relative to the fact table → **broadcast
-  join** below ``broadcast_threshold`` rows (no shuffle of the triple table
-  at all);
-* above the threshold, **salted repartition join**: the *build* side is
-  exploded ``salt_factor`` ways and the probe side picks a deterministic
-  salt from a sharded hash, so one hot key spreads over ``salt_factor``
-  reducers (SparkER-style key salting);
+  join** at or under ``broadcast_threshold`` rows, measured on the
+  checkpointed dictionary (no shuffle of the triple table at all);
+* above the threshold, :func:`graph.salted_join` — the one hot-key
+  salting kernel (SparkER-style): hot keys' dictionary rows replicate
+  and hot probe rows pick a deterministic row-derived salt, so one hot
+  key spreads over 8 reducers (its default salt factor);
 * AQE skew-join splitting stays on as backstop
   (``spark.sql.adaptive.skewJoin.enabled``).
 
@@ -33,10 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-#: At most one persisted dictionary probe cache is resident at a time;
-#: freed on the next encode_triples call (see broadcast probe below).
-_DICT_PROBE_CACHE: list = []
+from .graph import salted_join
+from .materialize import observe_rows
 
 
 def term_key(kind_col, value_col, lang_col=None, dt_col=None):
@@ -105,144 +103,58 @@ def encode_triples(
     dictionary: DataFrame,
     *,
     broadcast_threshold: int | None = 10_000_000,
-    salt_factor: int = 0,
-    dict_count: int | None = None,
     hot_keys: list[str] | None = None,
-    hot_support: float = 0.05,
 ) -> DataFrame:
     """Encode (s, p, o) to (s_id, p_id, o_id) via the term dictionary.
 
-    ``broadcast_threshold``: when set, the dictionary is broadcast (three
-    map-side joins, zero shuffle of the fact table) **only if it actually
-    fits**: the build side is counted — ``limit(threshold+1).count()``, so
-    the probe never scans past the threshold — and an over-sized dictionary
-    falls through to the salted path instead of OOMing the driver. Pass
-    ``dict_count`` when the caller already knows the cardinality (skips the
-    probe job), or ``None`` threshold to force the shuffle path.
+    ``broadcast_threshold``: when set, the slim ``(term_id, tk)``
+    dictionary is checkpointed eagerly and counted by an ``Observation``
+    on that same job, so the size check costs no extra pass. At or under
+    the threshold the three joins broadcast the checkpoint (map-side,
+    zero shuffle of the fact table); an over-sized dictionary falls
+    through to the salted join instead of OOMing the driver. ``None``
+    forces the salted join.
 
-    ``salt_factor > 0``: HOT-KEY-TARGETED salted join for the skewed
-    non-broadcast case. Only heavy-hitter keys are salted: the probe side
-    gives hot rows a row-derived salt in ``[0, salt_factor)`` and the
-    build side replicates ONLY the hot keys' dictionary rows
-    ``salt_factor`` ways (everything else keeps salt 0) — so one hot key
-    (``rdf:type``-grade skew) spreads over ``salt_factor`` reducers while
-    the dictionary shuffle stays ≈1×. Salting the WHOLE build side — the
-    naive variant — was measured 3.5× slower than the unsalted join on a
-    90%-hot 2M-row corpus, because it ships ``salt_factor`` copies of a
-    multi-million-term dictionary through all three joins (PERF.md §18).
+    The salted join is :func:`graph.salted_join`, one per position: only
+    heavy-hitter term keys salt, so one ``rdf:type``-grade key spreads
+    over 8 reducers while the dictionary shuffle stays ≈1×
+    (salting the WHOLE build side was measured 3.5× slower, PERF.md §18).
 
-    ``hot_keys``: explicit heavy-hitter term keys; when ``None`` they are
-    detected with one ``freqItems`` pass (lossy counting, no shuffle)
-    at ``hot_support`` frequency. The detected set only shapes the
-    physical distribution — the join RESULT is identical for any hot
-    set, so approximate detection is safe. Used automatically (factor 8)
-    on broadcast fall-through.
+    ``hot_keys``: heavy-hitter term keys; when ``None`` they are detected
+    once by :func:`detect_hot_keys` and shared by the three joins. The
+    set only shapes the physical distribution — the join RESULT is
+    identical for any hot set, so ``[]`` gives the plain shuffle join.
     """
     dict_slim = dictionary.select(
         "term_id", term_key(F.col("kind"), F.col("value"),
                             F.col("lang"), F.col("dt")).alias("tk"))
+    out = (triples
+           .withColumn("_sk", term_key(F.col("s_kind"), F.col("s")))
+           .withColumn("_pk", term_key(F.lit("iri"), F.col("p")))
+           .withColumn("_ok", term_key(F.col("o_kind"), F.col("o"),
+                                       F.col("o_lang"), F.col("o_dt"))))
+    positions = (("s_id", "_sk"), ("p_id", "_pk"), ("o_id", "_ok"))
 
     if broadcast_threshold is not None:
-        probe_n = dict_count
-        if probe_n is None:
-            # Persist so the probe count and the three subsequent broadcast
-            # joins share ONE computation of the distinct-terms aggregate
-            # (measured: without it each BroadcastExchange recomputes the
-            # whole dictionary — ReuseExchange does not fire across the
-            # three builds). Cache lifetime is BOUNDED, not session-long:
-            # each call frees the previous call's cache (at most one
-            # dictionary stays resident past its use — round-2 ADVICE).
-            # Callers that already know the cardinality pass ``dict_count``
-            # and no cache is created. A stopped session's probe is just
-            # dropped: its storage is gone and unpersist() would raise.
-            while _DICT_PROBE_CACHE:
-                stale = _DICT_PROBE_CACHE.pop()
-                if stale.sparkSession.sparkContext._jsc is not None:
-                    stale.unpersist()
-            dict_slim = dict_slim.persist()
-            _DICT_PROBE_CACHE.append(dict_slim)
-            probe_n = dict_slim.limit(broadcast_threshold + 1).count()
-        if probe_n > broadcast_threshold:
-            # documented fall-through: too big to broadcast → salted join
-            broadcast_threshold = None
-            if salt_factor <= 0:
-                salt_factor = 8
+        # The checkpoint is the one computation of the distinct-terms
+        # aggregate: the size check and all three joins read it.
+        dict_slim, obs = observe_rows(dict_slim)
+        dict_slim = dict_slim.localCheckpoint(eager=True)
+        if obs.get["n"] <= broadcast_threshold:
+            d = F.broadcast(dict_slim)
+            for pos, key in positions:
+                dd = d.alias(f"dict_{pos}")
+                out = (out.join(dd, F.col(key) == F.col(f"dict_{pos}.tk"),
+                                "left")
+                       .withColumn(pos, F.col(f"dict_{pos}.term_id"))
+                       .drop(F.col(f"dict_{pos}.term_id"))
+                       .drop(F.col(f"dict_{pos}.tk")))
+            return out.drop("_sk", "_pk", "_ok")
 
-    s_key = term_key(F.col("s_kind"), F.col("s"))
-    p_key = term_key(F.lit("iri"), F.col("p"))
-    o_key = term_key(F.col("o_kind"), F.col("o"), F.col("o_lang"),
-                     F.col("o_dt"))
-
-    fact = (triples
-            .withColumn("_sk", s_key)
-            .withColumn("_pk", p_key)
-            .withColumn("_ok", o_key))
-
-    if broadcast_threshold is not None:
-        # The three joins reference the SAME broadcast subtree (alias only,
-        # renames applied above the join) so canonicalized plans match and
-        # Spark reuses ONE BroadcastExchange — the dictionary aggregate is
-        # computed and shipped once, not three times (a rename below the
-        # exchange defeats ReuseExchange; and no persist is needed, so
-        # nothing leaks into executor storage).
-        d = F.broadcast(dict_slim)
-        out = fact
-        for pos, key_col in (("s_id", "_sk"), ("p_id", "_pk"),
-                             ("o_id", "_ok")):
-            alias = f"dict_{pos}"
-            dd = d.alias(alias)
-            out = (out.join(dd, F.col(key_col) == F.col(f"{alias}.tk"),
-                            "left")
-                   .withColumn(pos, F.col(f"{alias}.term_id"))
-                   .drop(F.col(f"{alias}.term_id"))
-                   .drop(F.col(f"{alias}.tk")))
-        return out.drop("_sk", "_pk", "_ok")
-
-    if salt_factor > 0:
-        if hot_keys is None:
-            hot_keys = detect_hot_keys(triples, hot_support=hot_support)
-        if hot_keys:
-            # isin compiles to InSet (hash lookup) above ~10 literals; an
-            # array_contains literal array is a per-row LINEAR string scan
-            # and measurably slowed every probe task (PERF.md §18)
-            _keys = list(hot_keys)
-
-            def _is_hot(col):
-                return F.col(col).isin(_keys)
-        else:
-            def _is_hot(col):
-                return F.lit(False)
-        # build side: replicate ONLY hot terms salt_factor ways
-        d_salted = dict_slim.withColumn(
-            "salt", F.explode(F.when(
-                _is_hot("tk"),
-                F.array(*[F.lit(i) for i in range(salt_factor)]))
-                .otherwise(F.array(F.lit(0)))))
-        out = fact
-        for pos, key_col in (("s_id", "_sk"), ("p_id", "_pk"), ("o_id", "_ok")):
-            # The salt must vary WITHIN a hot key or it spreads nothing:
-            # derive it from the whole row's term keys (deterministic per
-            # row — no rand(), so task retries stay idempotent), not from
-            # the join key alone. (A key-derived salt maps every row of
-            # the hot key to one shard — the exact skew it exists to fix;
-            # caught by test_salted_join_spreads_hot_key.) Non-hot rows
-            # keep salt 0 and meet the single un-replicated build copy.
-            probe = out.withColumn(
-                "salt",
-                F.when(_is_hot(key_col),
-                       F.pmod(F.xxhash64(F.col("_sk"), F.col("_pk"),
-                                         F.col("_ok"), F.lit(pos)),
-                              F.lit(salt_factor)).cast("int"))
-                .otherwise(F.lit(0)))
-            out = (probe.join(
-                d_salted.withColumnRenamed("term_id", pos),
-                (probe[key_col] == d_salted["tk"])
-                & (probe["salt"] == d_salted["salt"]), "left")
-                .drop("tk").drop(d_salted["salt"]).drop("salt"))
-        return out.drop("_sk", "_pk", "_ok")
-
-    out = fact
-    for pos, key_col in (("s_id", "_sk"), ("p_id", "_pk"), ("o_id", "_ok")):
-        out = (out.join(dict_slim.withColumnRenamed("term_id", pos),
-                        out[key_col] == dict_slim["tk"], "left").drop("tk"))
+    if hot_keys is None:
+        hot_keys = detect_hot_keys(triples)
+    for pos, key in positions:
+        out = salted_join(out, dict_slim.selectExpr(f"term_id AS {pos}",
+                                                    f"tk AS {key}"),
+                          key, hot_keys=hot_keys, how="left")
     return out.drop("_sk", "_pk", "_ok")

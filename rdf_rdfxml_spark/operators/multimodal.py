@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     BinaryType, IntegerType, StringType, StructField, StructType,
 )
 
+from .sketch import _cache_reset_and_persist
+
 MEDIA_SCHEMA = StructType([
     StructField("media_id", StringType(), False),
     StructField("kind", StringType(), False),        # image|audio|video
@@ -1378,15 +1380,9 @@ def decode_gif(payload: bytes) -> np.ndarray:
 
 DHASH_BITS = 48                              # 6x9 grid -> 6x8 comparisons
 
-#: Bounded persisted-signature cache (linking.py's pattern — ReuseExchange
-#: does not fire across the join's consumers). Depth > 1 (round-7 review):
-#: eviction happens at DataFrame-CONSTRUCTION time, so a composed query
-#: that builds several candidate operators before running any of them
-#: must not evict a handle whose persist has not materialized yet — a few
-#: resident handles cover every composed query in the repo while staying
-#: bounded (oldest-first eviction, fixed-width sketch rows only).
+#: Bounded persisted-signature cache (sketch._cache_reset_and_persist —
+#: ReuseExchange does not fire across the join's consumers).
 _SIG_CACHE: list = []
-_SIG_CACHE_DEPTH = 4
 
 
 def _band_explode(sig: DataFrame, hash_col: str, bits: int,
@@ -1570,17 +1566,14 @@ def _hamming_lsh_pairs(sig: DataFrame, hash_col: str, bits: int, *,
     unconditional guarantee.
 
     The signature input is PERSISTED for the duration of the join
-    (bounded cache, linking.py's pattern — freed on the next call):
+    (bounded cache, sketch._cache_reset_and_persist):
     the physical plan otherwise recomputes the upstream mapInArrow
     DECODE stage once per consumer (left side, right side, and both
     cap aggregates = 4×), and for media the decode IS the dominant
     cost. The cached rows are fixed-width (media_id, hash) — model-
     sized relative to the payloads they replace."""
     assert bits % n_bands == 0 and radius <= n_bands - 1
-    while len(_SIG_CACHE) >= _SIG_CACHE_DEPTH:
-        _SIG_CACHE.pop(0).unpersist()
-    sig = sig.persist()
-    _SIG_CACHE.append(sig)
+    sig = _cache_reset_and_persist(sig, _SIG_CACHE)
     bands = _band_explode(sig, hash_col, bits, n_bands)
     if max_bucket is not None:
         ok = (bands.groupBy("band_id", "band_value").count()

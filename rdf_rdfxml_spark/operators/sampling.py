@@ -32,7 +32,9 @@ U32 = 1 << 32
 def _u32_expr(salt: str, id_col: str) -> str:
     """The portable uniform hash: first 8 md5 hex chars as a 32-bit int
     (Spark ``conv``; DuckDB mirrors with ``::UBIGINT``)."""
-    assert "'" not in salt and "\\" not in salt, salt  # SQL-literal-safe
+    if "'" in salt or "\\" in salt:   # interpolated as a SQL literal
+        raise ValueError(f"salt must not contain quotes or backslashes: "
+                         f"{salt!r}")
     return (f"CAST(conv(substring(md5(concat('{salt}', ':', "
             f"CAST({id_col} AS STRING))), 1, 8), 16, 10) AS BIGINT)")
 
@@ -50,6 +52,13 @@ def _duckdb_cut(rate) -> int:
     from decimal import ROUND_HALF_UP, Decimal
     return int((Decimal(str(rate)) * U32).quantize(
         Decimal(1), rounding=ROUND_HALF_UP))
+
+
+def _split_cut(heldout_frac: float) -> int:
+    """The held-out threshold ``int(frac * 2^32)`` (float product,
+    truncated): the one integer :func:`holdout_split` and
+    :func:`split_oracle_sql` both interpolate, so they cannot drift."""
+    return int(heldout_frac * U32)
 
 
 def stratified_sample(docs: DataFrame, rates: dict, *,
@@ -88,7 +97,7 @@ def holdout_split(docs: DataFrame, heldout_frac: float, *,
     and because the hash is keyed on the document id, the split is
     stable under corpus growth (new docs never reshuffle old ones)."""
     assert 0.0 <= heldout_frac <= 1.0
-    cut = int(heldout_frac * U32)
+    cut = _split_cut(heldout_frac)
     return docs.withColumn(
         "split",
         F.expr(f"CASE WHEN {_u32_expr(salt, id_col)} < {cut} "
@@ -370,7 +379,7 @@ def split_oracle_sql(heldout_frac: float, *, id_col: str = "doc_id",
                      salt: str = "split:v1",
                      table: str = "documents") -> str:
     """DuckDB twin of :func:`holdout_split` (per-split count + id-sum)."""
-    cut = int(heldout_frac * U32)
+    cut = _split_cut(heldout_frac)
     u = (f"CAST(('0x' || substring(md5('{salt}' || ':' || "
          f"CAST({id_col} AS STRING)), 1, 8))::VARCHAR::UBIGINT AS BIGINT)")
     return f"""

@@ -49,27 +49,32 @@ MINHASH_P = 4294967311  # prime > 2^32
 
 SIMHASH_BITS = 48
 
-#: Bounded signature-table cache (linking.py's pattern): the candidate
-#: joins consume their signature/band stage 2-4× (left side, right side,
-#: and the mega-bucket aggregates) and ReuseExchange does not fire across
-#: the rename projections, so without a persist the document-local
-#: mapInArrow SIGNATURE pass — the dominant cost — recomputes per
-#: consumer (measured 4.8 s → 2.7 s on the sf0.1 minhash band join).
-#: Bounded depth > 1 (round-7 review): eviction happens at DataFrame-
-#: CONSTRUCTION time, so a composed query that builds several candidate
-#: operators lazily before running any of them must not evict a handle
-#: whose persist has not materialized yet. Oldest-first eviction; the
-#: cached rows are fixed-width sketches, so a few resident handles stay
-#: model-sized.
+#: Bounded signature-table cache: the candidate joins consume their
+#: signature/band stage 2-4× (left side, right side, and the mega-bucket
+#: aggregates) and ReuseExchange does not fire across the rename
+#: projections, so without a persist the document-local mapInArrow
+#: SIGNATURE pass — the dominant cost — recomputes per consumer (measured
+#: 4.8 s → 2.7 s on the sf0.1 minhash band join). Shared with
+#: multimodal's ``_SIG_CACHE`` through :func:`_cache_reset_and_persist`.
 _SKETCH_CACHE: list = []
-_SKETCH_CACHE_DEPTH = 4
 
 
-def _cache_reset_and_persist(df: DataFrame) -> DataFrame:
-    while len(_SKETCH_CACHE) >= _SKETCH_CACHE_DEPTH:
-        _SKETCH_CACHE.pop(0).unpersist()
+def _cache_reset_and_persist(df: DataFrame,
+                             cache: list = _SKETCH_CACHE) -> DataFrame:
+    """Persist ``df`` and track it in ``cache``, evicting oldest first
+    past 4 resident handles. Depth > 1 (round-7 review): eviction happens
+    at DataFrame-CONSTRUCTION time, so a composed query that builds
+    several candidate operators lazily before running any of them must
+    not evict a handle whose persist has not materialized yet; the cached
+    rows are fixed-width sketches, so a few handles stay model-sized.
+    Handles from a stopped session are dropped without ``unpersist()``:
+    their storage is gone and the call would raise."""
+    cache[:] = [h for h in cache
+                if h.sparkSession.sparkContext._jsc is not None]
+    while len(cache) >= 4:
+        cache.pop(0).unpersist()
     df = df.persist()
-    _SKETCH_CACHE.append(df)
+    cache.append(df)
     return df
 
 # The DuckDB oracles explode shingle positions with a constant

@@ -17,7 +17,7 @@ import duckdb
 import pytest
 
 from rdf_rdfxml_spark.operators.sampling import (
-    U32, _duckdb_cut, sample_oracle_sql, stratified_sample,
+    U32, _duckdb_cut, _u32_expr, sample_oracle_sql, stratified_sample,
 )
 
 
@@ -84,6 +84,13 @@ def test_sample_oracle_sql_unchanged_for_quote_free_values():
     # round): quote-free strata/salt render byte-identically.
     sql = sample_oracle_sql({"en": 0.8, "de": 0.1}, default_rate=0.05)
     assert "''" not in sql
+
+
+def test_u32_salt_with_quote_raises():
+    # ValueError, not assert: ``python -O`` strips asserts, which would
+    # reopen the quote-injection path
+    with pytest.raises(ValueError):
+        _u32_expr("o'neill", "doc_id")
 
 
 def test_kcore_raises_without_fixpoint(spark):

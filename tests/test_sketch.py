@@ -501,3 +501,41 @@ def test_kcore_empty_when_no_core(spark):
     el = [("a", "b"), ("b", "c")]
     df = spark.createDataFrame(el, "src string, dst string")
     assert kcore(df, 3).count() == 0
+
+
+_CACHE_RESTART_SCRIPT = """
+from pyspark.sql import SparkSession
+from rdf_rdfxml_spark.operators import multimodal, sketch
+
+def fill_caches_in_fresh_session():
+    spark = (SparkSession.builder.master("local[2]")
+             .config("spark.ui.enabled", "false")
+             .config("spark.sql.shuffle.partitions", "2").getOrCreate())
+    sig = spark.createDataFrame([("a", 1), ("b", 3)],
+                                "media_id string, h long")
+    for _ in range(5):   # more calls than the cache depth: evictions run
+        sketch._cache_reset_and_persist(spark.range(10)).count()
+        multimodal._hamming_lsh_pairs(sig, "h", 8, n_bands=2,
+                                      radius=1).count()
+    spark.stop()
+
+fill_caches_in_fresh_session()
+fill_caches_in_fresh_session()
+print("CACHED", len(sketch._SKETCH_CACHE), len(multimodal._SIG_CACHE))
+"""
+
+
+def test_bounded_caches_survive_session_restart():
+    """The bounded persist caches (sketch's and multimodal's) evict their
+    oldest handle on the next call; a handle left over from a stopped
+    session must be dropped, not unpersisted (its context is gone and
+    unpersist() raises). Runs in a subprocess because the shared test
+    session must not be stopped."""
+    import pathlib
+    import subprocess
+    import sys
+    proc = subprocess.run([sys.executable, "-c", _CACHE_RESTART_SCRIPT],
+                          capture_output=True, text=True, timeout=300,
+                          cwd=pathlib.Path(__file__).resolve().parents[1])
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "CACHED 4 4" in proc.stdout

@@ -109,13 +109,18 @@ def test_dedup_document_and_global(spark):
 def test_linking_roundtrip_broadcast_and_salted(spark, graph):
     d = build_term_dictionary(graph.triples)
     n = graph.triples.count()
-    for kwargs in ({"broadcast_threshold": 10_000},
-                   {"broadcast_threshold": None, "salt_factor": 4},
-                   {"broadcast_threshold": None}):
+    rows = []
+    for kwargs in ({},                                    # broadcast
+                   {"broadcast_threshold": None},         # detected hot keys
+                   {"broadcast_threshold": None, "hot_keys": []}):  # plain
         enc = encode_triples(graph.triples, d, **kwargs)
         assert enc.count() == n
         assert enc.filter(
             "s_id is null or p_id is null or o_id is null").count() == 0
+        rows.append(sorted(enc.select("s", "p", "o", "s_id", "p_id",
+                                      "o_id").collect()))
+    # the join strategy shapes only the physical plan, never the result
+    assert rows[0] == rows[1] == rows[2]
     # ids are stable functions of the term → same term, same id everywhere
     dup = (d.groupBy("term_id").count().filter("count > 1").count())
     assert dup == 0
@@ -138,13 +143,8 @@ def test_broadcast_falls_through_to_salted_when_oversized(spark, graph):
     # unmeasured build side.
     plan = enc._jdf.queryExecution().executedPlan().toString()
     assert "salt" in plan
-    # a caller-supplied count above threshold routes the same way
-    enc2 = encode_triples(graph.triples, d, broadcast_threshold=3,
-                          dict_count=1_000_000)
-    assert "salt" in enc2._jdf.queryExecution().executedPlan().toString()
     # under the threshold: plain broadcast, no salt machinery
-    enc3 = encode_triples(graph.triples, d, broadcast_threshold=10_000,
-                          dict_count=50)
+    enc3 = encode_triples(graph.triples, d, broadcast_threshold=10_000)
     plan3 = enc3._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan3 and "salt" not in plan3
 
@@ -203,7 +203,7 @@ def test_salted_join_spreads_hot_key(spark):
     """D2 skew evidence: with a 90%-hot object term (the rdf:type shape of
     web-scale linking), the salted join must spread the hot key's probe
     rows across ~salt_factor shuffle partitions, where the plain shuffle
-    join serializes them into one."""
+    join (no hot keys) serializes them into one."""
     n = 20_000
     hot = spark.range(n).selectExpr(
         "concat('http://s/', id) AS s", "'iri' AS s_kind",
@@ -221,9 +221,9 @@ def test_salted_join_spreads_hot_key(spark):
             return (enc.filter("o = 'http://hot/one'")
                     .select(F.spark_partition_id().alias("pid"))
                     .distinct().count())
-        plain = encode_triples(hot, d, broadcast_threshold=None)
-        salted = encode_triples(hot, d, broadcast_threshold=None,
-                                salt_factor=8)
+        plain = encode_triples(hot, d, broadcast_threshold=None,
+                               hot_keys=[])
+        salted = encode_triples(hot, d, broadcast_threshold=None)
         assert hot_partitions(plain) == 1       # one reducer owns the key
         assert hot_partitions(salted) >= 4      # spread over salt shards
         # and the salted result is still value-complete

@@ -52,7 +52,7 @@ def main():
     print("=" * 72)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    encode_triples(triples, d, broadcast_threshold=None, salt_factor=4) \
+    encode_triples(triples, d, broadcast_threshold=None) \
         .explain("formatted")
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")

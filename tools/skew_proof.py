@@ -8,10 +8,13 @@ whose object column is 90% ONE IRI (the reference's hot intern-cache
 path, reader.rb:692), encodes it through all three paths —
 
   * broadcast   (the default: dictionary fits, zero fact shuffle)
-  * unsalted    shuffle join, AQE skew splitting ON (the backstop)
-  * unsalted    shuffle join, AQE skew splitting OFF (the naive plan)
-  * salted      salt_factor=8 repartition join (AQE skew OFF, so the
-                salting itself is what's measured)
+  * unsalted    ``hot_keys=[]`` shuffle join, AQE skew splitting ON
+                (the backstop)
+  * unsalted    ``hot_keys=[]`` shuffle join, AQE skew splitting OFF
+                (the naive plan)
+  * salted      graph.salted_join with detected hot keys, 8 salts (AQE
+                skew OFF, so the salting itself is what's measured)
+  * salted+hint the same with caller-supplied hot keys
 
 — and records wall time plus the per-task duration distribution of the
 heaviest new stage (Spark REST API taskSummary quantiles). Evidence
@@ -91,19 +94,18 @@ def main():
         before = set(_stages(ui, app_id))
         t0 = time.time()
         if variant == "broadcast":
-            out = encode_triples(fact, d, dict_count=n_terms)
+            out = encode_triples(fact, d)
         elif variant.startswith("unsalted"):
             out = encode_triples(fact, d, broadcast_threshold=None,
-                                 salt_factor=0)
+                                 hot_keys=[])
         elif variant == "salted+hint":
             # caller-supplied heavy hitters (the rdf:type case — known a
             # priori) skip the freqItems detection pass
             hot = ["\x00".join(["iri", "http://example.org/HOT", "", ""])]
             out = encode_triples(fact, d, broadcast_threshold=None,
-                                 salt_factor=8, hot_keys=hot)
+                                 hot_keys=hot)
         else:
-            out = encode_triples(fact, d, broadcast_threshold=None,
-                                 salt_factor=8)
+            out = encode_triples(fact, d, broadcast_threshold=None)
         assert out.filter("o_id IS NULL").count() == 0
         wall = time.time() - t0
         after = _stages(ui, app_id)
