@@ -22,7 +22,6 @@ DTD entities are expanded by expat natively (the reference enables
 
 from __future__ import annotations
 
-import os
 import re
 
 from xml.parsers import expat
@@ -214,24 +213,13 @@ def _decode_declared(data: bytes) -> str:
         raise XMLParseError(f"cannot decode declared encoding {enc}: {e}")
 
 
-def parse_document(content, library: str | None = None) -> Element:
+def parse_document(content) -> Element:
     """Parse an XML document string/bytes into the mini-DOM; raise
     :class:`XMLParseError` on malformed input.
 
-    ``library`` selects the adapter — ``"expat"`` (C-backed, the default,
-    the reference's nokogiri role) or ``"python"`` (the pure-Python
-    fallback, :mod:`.purexml`, the reference's rexml role;
-    reader.rb:143-157). Defaults to ``$RDFXML_SPARK_XML_LIBRARY`` or
-    expat. Both adapters produce the same tree and typed error and are
-    differentially tested against each other (tests/test_purexml.py).
+    expat is the one adapter: the reference's optional rexml fallback
+    (reader.rb:143-157) has no counterpart, as CPython ships pyexpat.
     """
-    lib = library or os.environ.get("RDFXML_SPARK_XML_LIBRARY", "expat")
-    if lib == "python":
-        from .purexml import parse_document_py
-        return parse_document_py(content)
-    if lib != "expat":
-        raise ValueError(f"unknown XML library {lib!r} "
-                         "(expected 'expat' or 'python')")
     parser = expat.ParserCreate(namespace_separator=_SEP)
     parser.namespace_prefixes = True
     parser.ordered_attributes = True

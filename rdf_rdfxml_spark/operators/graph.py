@@ -483,8 +483,8 @@ def bfs_depths(edges: DataFrame, source: str, *,
     and stamps the round number — narrow (node) rows only, one COUNT
     scalar per round, ``localCheckpoint`` on the accumulated visited
     set to bound lineage (the iterative-stage rule). Rounds =
-    eccentricity of the source, structure-bound like :func:`kcore`'s
-    peel depth; ``max_depth`` is the loud backstop.
+    eccentricity of the source + 1, structure-bound like :func:`kcore`'s
+    peel depth; ``max_depth`` bounds the reported depths (loudly).
 
     Dedup/cleanup contract matches the other graph ops: self-loops
     dropped, parallel/bidirectional duplicates collapse.
@@ -499,7 +499,9 @@ def bfs_depths(edges: DataFrame, source: str, *,
                                                    "depth long")
     frontier = visited.select("node")
     completed = False
-    for r in range(1, max_depth + 1):
+    # Round max_depth + 1 is the completion proof: it must discover
+    # nothing, so max_depth bounds the depths reported.
+    for r in range(1, max_depth + 2):
         nxt = (adj.join(frontier.selectExpr("node AS u"), "u",
                         "left_semi")
                .selectExpr("w AS node").distinct()

@@ -39,6 +39,16 @@ def _u32_expr(salt: str, id_col: str) -> str:
             f"CAST({id_col} AS STRING))), 1, 8), 16, 10) AS BIGINT)")
 
 
+def _rate_sql(rate) -> str:
+    """``str(rate)`` as the oracle interpolates it; refused in scientific
+    notation, which DuckDB reads as a DOUBLE, not a DECIMAL."""
+    lit = str(rate)
+    if "e" in lit.lower():
+        raise ValueError(f"rate {lit} is in scientific notation; the "
+                         "DuckDB threshold seam needs a plain decimal")
+    return lit
+
+
 def _duckdb_cut(rate) -> int:
     """The keep threshold ``rate * 2^32`` exactly as the (frozen) DuckDB
     oracle computes it from the interpolated literal: ``str(rate)``
@@ -50,7 +60,7 @@ def _duckdb_cut(rate) -> int:
     filter and any future caller share the oracle's exact integer
     (pinned vs live DuckDB by tests/test_sampling_seam.py)."""
     from decimal import ROUND_HALF_UP, Decimal
-    return int((Decimal(str(rate)) * U32).quantize(
+    return int((Decimal(_rate_sql(rate)) * U32).quantize(
         Decimal(1), rounding=ROUND_HALF_UP))
 
 
@@ -358,11 +368,11 @@ def sample_oracle_sql(rates: dict, *, stratum_col: str = "source",
     gated oracle text is unchanged); the Spark side's driver-computed
     :func:`_duckdb_cut` integer equals this SQL's
     ``CAST(rate * 2^32 AS BIGINT)`` by construction."""
-    expr = f"CAST({default_rate} * {U32} AS BIGINT)"
+    expr = f"CAST({_rate_sql(default_rate)} * {U32} AS BIGINT)"
     for stratum, rate in sorted(rates.items()):
         sv = str(stratum).replace("'", "''")
         expr = (f"CASE WHEN {stratum_col} = '{sv}' THEN "
-                f"CAST({rate} * {U32} AS BIGINT) ELSE {expr} END")
+                f"CAST({_rate_sql(rate)} * {U32} AS BIGINT) ELSE {expr} END")
     s = salt.replace("'", "''")
     u = (f"CAST(('0x' || substring(md5('{s}' || ':' || "
          f"CAST({id_col} AS STRING)), 1, 8))::VARCHAR::UBIGINT AS BIGINT)")

@@ -4,14 +4,14 @@ rule's correctness metric; SURVEY.md §2.5 set ops).
 Blank-node isomorphism is handled by canonical relabeling on *both* sides
 (the reference compares via graph isomorphism, spec/suite_spec.rb:44-47;
 our D1 ids are deterministic, golden sets use ``_:bN`` labels). At test
-scale the relabeling runs per-document inside an Arrow-batched grouped-map
+scale the relabeling runs per-document inside an ``applyInArrow`` grouped-map
 stage — per-document graphs are small, so the canonical form is cheap and
 the scoring join is a plain set intersect on canonical triple strings.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -19,16 +19,15 @@ from pyspark.sql import functions as F
 from ..functions.nt import canonicalize_bnodes
 
 
-def _rows_to_terms(pdf: pd.DataFrame):
-    triples = []
-    for r in pdf.itertuples(index=False):
-        s = (r.s_kind, r.s)
-        if r.o_kind == "literal":
-            o = ("literal", r.o, r.o_lang, r.o_dt)
-        else:
-            o = (r.o_kind, r.o)
-        triples.append((s, r.p, o))
-    return triples
+_TERM_COLS = ("s", "s_kind", "p", "o", "o_kind", "o_lang", "o_dt")
+
+
+def _rows_to_terms(table: pa.Table):
+    return [((s_kind, s), p,
+             ("literal", o, o_lang, o_dt) if o_kind == "literal"
+             else (o_kind, o))
+            for s, s_kind, p, o, o_kind, o_lang, o_dt in zip(
+                *(table.column(c).to_pylist() for c in _TERM_COLS))]
 
 
 def canonical_lines(triples_df: DataFrame,
@@ -36,16 +35,15 @@ def canonical_lines(triples_df: DataFrame,
     """(group, canonical NT line) — one row per triple after per-group
     canonical bnode relabeling."""
 
-    def canon(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        lines = canonicalize_bnodes(_rows_to_terms(pdf))
-        return pd.DataFrame({group_col: [key[0]] * len(lines),
-                             "line": list(lines)})
+    def canon(key: tuple, table: pa.Table) -> pa.Table:
+        lines = list(canonicalize_bnodes(_rows_to_terms(table)))
+        return pa.table({group_col: [key[0].as_py()] * len(lines),
+                         "line": lines})
 
     return (triples_df
-            .select(group_col, "s", "s_kind", "p", "o", "o_kind",
-                    "o_lang", "o_dt")
+            .select(group_col, *_TERM_COLS)
             .groupBy(group_col)
-            .applyInPandas(canon, schema=f"{group_col} string, line string"))
+            .applyInArrow(canon, schema=f"{group_col} string, line string"))
 
 
 def pr_score(produced: DataFrame, golden: DataFrame,

@@ -37,6 +37,16 @@ def test_declared_encoding_bytes_roundtrip(enc, text):
     assert _one_literal(data) == text
 
 
+@pytest.mark.parametrize("codec", [
+    "utf-16-le",   # no BOM, no decl: detected from the leading '<'
+    "utf-16",      # the codec writes a BOM
+])
+def test_undeclared_encoding_bytes_roundtrip(codec):
+    data = DOC.replace(' encoding="{enc}"', "").format(
+        text="café 世").encode(codec)
+    assert _one_literal(data) == "café 世"
+
+
 def test_str_input_with_stale_decl_is_not_reinterpreted():
     # Already-decoded text carrying an old ISO-8859-1 decl: the decl must
     # not make expat mis-decode our UTF-8 re-encoding (mojibake guard).

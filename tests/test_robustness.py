@@ -3,8 +3,10 @@ error isolation is the task-safety contract), and oversized documents hit
 the fail-soft cap with lineage preserved."""
 import string
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
+from rdf_rdfxml_spark.functions.xmldom import XMLParseError, parse_document
 from rdf_rdfxml_spark.parser.grammar import parse_rdfxml
 
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -105,6 +107,53 @@ def test_external_entities_never_fetched():
     values = [o[1] for _s, _p, o in triples]
     assert not any("root:" in v for v in values)
     assert values in ([""], [])  # substituted empty or rejected, never read
+
+
+@pytest.mark.parametrize("doc", [
+    pytest.param("<a><b></a>", id="tag-mismatch"),
+    pytest.param("<a", id="truncated"),
+    pytest.param("<a/><b/>", id="multiple-roots"),
+    pytest.param("<a x='1' x='2'/>", id="duplicate-attribute"),
+    pytest.param("<a xmlns:p='u' p:x='1' p:x='2'/>",
+                 id="duplicate-expanded-attribute"),
+    pytest.param("<p:a/>", id="undeclared-prefix"),
+    pytest.param("<a>]]></a>", id="cdata-close-in-content"),
+    pytest.param("<a>&undef;</a>", id="undefined-entity"),
+    pytest.param("<a>\x01</a>", id="invalid-char"),
+    pytest.param("<a><!-- -- --></a>", id="double-hyphen-in-comment"),
+    pytest.param("<a y=<1/>", id="lt-in-attribute"),
+    pytest.param("junk<a/>", id="junk-in-prolog"),
+    pytest.param("<a/>trailing", id="junk-in-epilog"),
+    pytest.param("<1bad/>", id="bad-name-start"),
+])
+def test_malformed_xml_raises(doc):
+    """Well-formedness violations are typed XMLParseErrors (the error
+    channel's input), never a lax tree."""
+    with pytest.raises(XMLParseError):
+        parse_document(doc)
+
+
+def test_deep_nesting_iterative():
+    """A 5000-deep document parses without RecursionError: expat's
+    callbacks keep an explicit element stack."""
+    root = parse_document("<r>" + "<a>" * 5000 + "</a>" * 5000 + "</r>")
+    depth, el = 0, root
+    while el.children:
+        (el,) = el.children
+        depth += 1
+    assert depth == 5000
+
+
+def test_internal_entities_expand():
+    """Internal DTD entities expand in place; one holding balanced markup
+    expands structurally; one holding unbalanced markup is malformed."""
+    el = parse_document('<!DOCTYPE r [<!ENTITY who "world">]>'
+                        '<r>hello &who;</r>')
+    assert el.children[0].value == "hello world"
+    el = parse_document('<!DOCTYPE r [<!ENTITY m "<b>x</b>y">]><r>&m;</r>')
+    assert [c.is_element for c in el.children] == [True, False]
+    with pytest.raises(XMLParseError):
+        parse_document('<!DOCTYPE r [<!ENTITY m "<b>">]><r>&m;</r>')
 
 
 # --- codec fuzzing -----------------------------------------------------------

@@ -23,12 +23,27 @@ from rdf_rdfxml_spark.operators.sampling import (
 
 def test_duckdb_cut_matches_duckdb_cast():
     con = duckdb.connect()
-    for rate in [0.8, 0.5, 0.25, 0.1, 0.05, 0.0, 1.0, 1e-9, 0.123456789,
+    for rate in [0.8, 0.5, 0.25, 0.1, 0.05, 0.0, 1.0, 0.123456789,
                  0.3333333333333333, 0.30000000000000004, 0.999999999,
-                 2 ** -32, 1 - 2 ** -32, 0.7, 0.9, 0.01, 0.001]:
+                 1 - 2 ** -32, 0.7, 0.9, 0.01, 0.001, 0.0001]:
         duck = con.execute(
             f"SELECT CAST({rate} * {U32} AS BIGINT)").fetchone()[0]
         assert _duckdb_cut(rate) == duck, rate
+
+
+@pytest.mark.parametrize("rate", [1.5 / 2 ** 32, 1e-9, 2 ** -32, 1e-05])
+def test_scientific_notation_rate_raises(rate):
+    # str(rate) is scientific notation below 1e-4; DuckDB reads that
+    # literal as a DOUBLE, not a DECIMAL, so the exact-decimal cut would
+    # silently disagree (1.5 / 2**32: _duckdb_cut said 1, DuckDB 2).
+    # Both sides of the seam refuse the rate instead.
+    assert "e" in str(rate)
+    with pytest.raises(ValueError, match="scientific notation"):
+        _duckdb_cut(rate)
+    with pytest.raises(ValueError, match="scientific notation"):
+        sample_oracle_sql({"en": rate})
+    with pytest.raises(ValueError, match="scientific notation"):
+        sample_oracle_sql({"en": 0.5}, default_rate=rate)
 
 
 def test_gated_rates_agree_with_frozen_oracle_thresholds():
@@ -115,6 +130,7 @@ def test_bfs_depths_raises_when_frontier_alive(spark):
         "src string, dst string")
     with pytest.raises(ValueError, match="frontier"):
         bfs_depths(df, "n0", max_depth=2)
+    # max_depth bounds the reported depths: the depth-3 chain fits in 3
     got = {r["node"]: r["depth"] for r in
-           bfs_depths(df, "n0", max_depth=4).collect()}
+           bfs_depths(df, "n0", max_depth=3).collect()}
     assert got == {"n0": 0, "n1": 1, "n2": 2, "n3": 3}
