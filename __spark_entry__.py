@@ -374,8 +374,7 @@ def q_entity_linking(spark, sf_dir):
     t = t.persist()
     _LINKING_T_CACHE.append(t)
     d = build_term_dictionary(t, dense_ids=True)
-    return (encode_triples(t, d, broadcast_threshold=100_000)
-            .select("s_id", "p_id", "o_id"))
+    return encode_triples(t, d).select("s_id", "p_id", "o_id")
 
 
 def q_entity_linking_salted(spark, sf_dir):
@@ -403,19 +402,19 @@ def q_entity_linking_salted(spark, sf_dir):
         from rdf_rdfxml_spark.operators.linking import detect_hot_keys
         hot = _SALTED_HOT_CACHE[sf_dir] = detect_hot_keys(t)
     d = build_term_dictionary(t, dense_ids=True)
-    return (encode_triples(t, d, broadcast_threshold=None, hot_keys=hot)
+    return (encode_triples(t, d, hot_keys=hot)
             .select("s_id", "p_id", "o_id"))
 
 
 def q_entity_linking_hashids(spark, sf_dir):
     # The at-scale id scheme (xxhash64 term ids — no global sort). DuckDB
     # cannot reproduce xxhash64, so the oracle checks the *invariants* the
-    # encoding must preserve: row count through the salted join, id-space
+    # encoding must preserve: row count through the linking joins, id-space
     # cardinality per position (bijectivity of term → id), and no unmatched
     # (null) ids.
     t = triples_channel(_parse(spark, sf_dir, D.xml_reify_expr()))
     d = build_term_dictionary(t)  # xxhash64 ids
-    enc = encode_triples(t, d, broadcast_threshold=None)
+    enc = encode_triples(t, d)
     return enc.agg(
         F.count("*").alias("n_triples"),
         F.countDistinct("s_id").alias("n_distinct_s"),

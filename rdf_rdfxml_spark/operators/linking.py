@@ -13,13 +13,18 @@ Skew is structural here: at 10¹²-file scale a handful of IRIs
 (``rdf:type``, top vocabulary terms) dominate the object/predicate columns.
 Mitigations, in order:
 
-* dictionaries are usually small relative to the fact table → **broadcast
-  join** at or under ``broadcast_threshold`` rows, measured on the
-  checkpointed dictionary (no shuffle of the triple table at all);
-* above the threshold, :func:`graph.salted_join` — the one hot-key
-  salting kernel (SparkER-style): hot keys' dictionary rows replicate
-  and hot probe rows pick a deterministic row-derived salt, so one hot
-  key spreads over 8 reducers (its default salt factor);
+* dictionaries are usually small relative to the fact table → the three
+  joins are plain left equi-joins in the caller's plan, so Spark's byte
+  threshold broadcasts the dictionary (``autoBroadcastJoinThreshold`` at
+  planning, AQE's runtime threshold on the materialized dictionary
+  stage) — no shuffle of the triple table, and no size probe of our own:
+  one plan lets exchange reuse share the parse and any shuffle between
+  the fact side and the dictionary side;
+* caller-supplied ``hot_keys`` route each join through
+  :func:`graph.salted_join` — the one hot-key salting kernel
+  (SparkER-style): hot keys' dictionary rows replicate and hot probe
+  rows pick a deterministic row-derived salt, so one hot key spreads
+  over 8 reducers (its default salt factor);
 * AQE skew-join splitting stays on as backstop
   (``spark.sql.adaptive.skewJoin.enabled``).
 
@@ -34,7 +39,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .graph import salted_join
-from .materialize import observe_rows
 
 
 def term_key(kind_col, value_col, lang_col=None, dt_col=None):
@@ -55,7 +59,9 @@ def build_term_dictionary(triples: DataFrame, dense_ids: bool = False) -> DataFr
     # 3-way self-union planned three parallel scans of the (usually
     # cached) triple table, tripling the stage's task count for the
     # same rows (round 8: 51 → 17 tasks on the bench corpus; same
-    # distinct-term set by construction).
+    # distinct-term set by construction). ``term_key`` reads a NULL
+    # lang/dt as '', so '' is folded to NULL before the dedup: one
+    # dictionary row per join key.
     terms = triples.selectExpr(
         "inline(array("
         "named_struct('kind', s_kind, 'value', s, "
@@ -63,7 +69,7 @@ def build_term_dictionary(triples: DataFrame, dense_ids: bool = False) -> DataFr
         "named_struct('kind', 'iri', 'value', p, "
         "'lang', CAST(NULL AS STRING), 'dt', CAST(NULL AS STRING)), "
         "named_struct('kind', o_kind, 'value', o, "
-        "'lang', o_lang, 'dt', o_dt)))"
+        "'lang', NULLIF(o_lang, ''), 'dt', NULLIF(o_dt, ''))))"
     ).dropDuplicates(["kind", "value", "lang", "dt"])
     if dense_ids:
         # Compact 0..N-1 ids; global sort — test/compaction use only.
@@ -102,28 +108,27 @@ def encode_triples(
     triples: DataFrame,
     dictionary: DataFrame,
     *,
-    broadcast_threshold: int | None = 10_000_000,
     hot_keys: list[str] | None = None,
 ) -> DataFrame:
     """Encode (s, p, o) to (s_id, p_id, o_id) via the term dictionary.
 
-    ``broadcast_threshold``: when set, the slim ``(term_id, tk)``
-    dictionary is checkpointed eagerly and counted by an ``Observation``
-    on that same job, so the size check costs no extra pass. At or under
-    the threshold the three joins broadcast the checkpoint (map-side,
-    zero shuffle of the fact table); an over-sized dictionary falls
-    through to the salted join instead of OOMing the driver. ``None``
-    forces the salted join.
+    The three position joins are left equi-joins on the canonical term
+    key, planned inside the caller's job: nothing runs until the caller's
+    action, and in that one plan Spark reuses the exchanges the fact side
+    and the dictionary share (the parse runs once), and one broadcast of
+    the dictionary serves all three positions when it is under Spark's
+    byte threshold. Reuse does not reach through an in-memory ``cache()``
+    of ``triples`` (AQE plans each cached scan as its own stage, so the
+    dictionary aggregate then runs once per position); a stored or
+    checkpointed triple table shares it.
 
-    The salted join is :func:`graph.salted_join`, one per position: only
-    heavy-hitter term keys salt, so one ``rdf:type``-grade key spreads
-    over 8 reducers while the dictionary shuffle stays ≈1×
-    (salting the WHOLE build side was measured 3.5× slower, PERF.md §18).
-
-    ``hot_keys``: heavy-hitter term keys; when ``None`` they are detected
-    once by :func:`detect_hot_keys` and shared by the three joins. The
-    set only shapes the physical distribution — the join RESULT is
-    identical for any hot set, so ``[]`` gives the plain shuffle join.
+    ``hot_keys``: heavy-hitter term keys (see :func:`detect_hot_keys`).
+    When non-empty each position goes through :func:`graph.salted_join`:
+    only those keys salt, so one ``rdf:type``-grade key spreads over 8
+    reducers while the dictionary shuffle stays ≈1× (salting the WHOLE
+    build side was measured 3.5× slower, PERF.md §18). The set only
+    shapes the physical distribution — the join RESULT is identical for
+    any hot set.
     """
     dict_slim = dictionary.select(
         "term_id", term_key(F.col("kind"), F.col("value"),
@@ -133,28 +138,8 @@ def encode_triples(
            .withColumn("_pk", term_key(F.lit("iri"), F.col("p")))
            .withColumn("_ok", term_key(F.col("o_kind"), F.col("o"),
                                        F.col("o_lang"), F.col("o_dt"))))
-    positions = (("s_id", "_sk"), ("p_id", "_pk"), ("o_id", "_ok"))
-
-    if broadcast_threshold is not None:
-        # The checkpoint is the one computation of the distinct-terms
-        # aggregate: the size check and all three joins read it.
-        dict_slim, obs = observe_rows(dict_slim)
-        dict_slim = dict_slim.localCheckpoint(eager=True)
-        if obs.get["n"] <= broadcast_threshold:
-            d = F.broadcast(dict_slim)
-            for pos, key in positions:
-                dd = d.alias(f"dict_{pos}")
-                out = (out.join(dd, F.col(key) == F.col(f"dict_{pos}.tk"),
-                                "left")
-                       .withColumn(pos, F.col(f"dict_{pos}.term_id"))
-                       .drop(F.col(f"dict_{pos}.term_id"))
-                       .drop(F.col(f"dict_{pos}.tk")))
-            return out.drop("_sk", "_pk", "_ok")
-
-    if hot_keys is None:
-        hot_keys = detect_hot_keys(triples)
-    for pos, key in positions:
-        out = salted_join(out, dict_slim.selectExpr(f"term_id AS {pos}",
-                                                    f"tk AS {key}"),
-                          key, hot_keys=hot_keys, how="left")
+    for pos, key in (("s_id", "_sk"), ("p_id", "_pk"), ("o_id", "_ok")):
+        d = dict_slim.selectExpr(f"term_id AS {pos}", f"tk AS {key}")
+        out = (salted_join(out, d, key, hot_keys=hot_keys, how="left")
+               if hot_keys else out.join(d, key, "left"))
     return out.drop("_sk", "_pk", "_ok")

@@ -8,9 +8,11 @@ from pyspark.sql import functions as F
 
 from rdf_rdfxml_spark.operators.dedup import dedup_document, dedup_global
 from rdf_rdfxml_spark.operators.extract import extract, triples_channel, errors_channel
-from rdf_rdfxml_spark.operators.linking import build_term_dictionary, encode_triples
+from rdf_rdfxml_spark.operators.linking import (
+    build_term_dictionary, detect_hot_keys, encode_triples,
+)
 from rdf_rdfxml_spark.operators.materialize import (
-    assign_units, pending_units, record_units, resumable_run,
+    assign_units, materialize, pending_units, record_units, resumable_run,
 )
 from rdf_rdfxml_spark.operators.metrics import corpus_metrics, partition_metrics
 from rdf_rdfxml_spark.plans.pipeline import construct_graph
@@ -106,13 +108,37 @@ def test_dedup_document_and_global(spark):
     assert dedup_global(triples).count() == 1
 
 
+def _last_execution(spark) -> int:
+    """Id of the newest SQL execution in the UI status store (-1: none)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+
+def _plans_since(spark, last: int) -> list[list[str]]:
+    """Final-plan node names of each SQL execution newer than ``last``,
+    from the UI status store once every listener event so far has been
+    delivered. A reused exchange is an edge there, not a second node."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    plans = []
+    for i in range(execs.size() - 1, -1, -1):
+        eid = execs.apply(i).executionId()
+        if eid <= last:
+            break
+        nodes = store.planGraph(eid).allNodes()
+        plans.append([nodes.apply(j).name() for j in range(nodes.size())])
+    return plans
+
+
 def test_linking_roundtrip_broadcast_and_salted(spark, graph):
     d = build_term_dictionary(graph.triples)
     n = graph.triples.count()
     rows = []
-    for kwargs in ({},                                    # broadcast
-                   {"broadcast_threshold": None},         # detected hot keys
-                   {"broadcast_threshold": None, "hot_keys": []}):  # plain
+    for kwargs in ({},                                          # default
+                   {"hot_keys": detect_hot_keys(graph.triples)},  # salted
+                   {"hot_keys": []}):                   # empty hot set
         enc = encode_triples(graph.triples, d, **kwargs)
         assert enc.count() == n
         assert enc.filter(
@@ -126,27 +152,67 @@ def test_linking_roundtrip_broadcast_and_salted(spark, graph):
     assert dup == 0
 
 
-def test_broadcast_falls_through_to_salted_when_oversized(spark, graph):
-    """The broadcast decision must be real: a dictionary bigger than the
-    threshold routes to the salted join (same results, no driver OOM risk)
-    instead of broadcasting on faith (round-1 verdict footgun #3)."""
-    d = build_term_dictionary(graph.triples)
-    n = graph.triples.count()
-    enc = encode_triples(graph.triples, d, broadcast_threshold=3)
-    assert enc.count() == n
-    assert enc.filter(
-        "s_id is null or p_id is null or o_id is null").count() == 0
-    # fall-through routed to the *salted* join (salt keys in the plan).
-    # NB: AQE may still physically broadcast a genuinely tiny salted side —
-    # that's Spark's own size-measured decision, exactly the backstop we
-    # want; what must not happen is an unconditional broadcast of an
-    # unmeasured build side.
-    plan = enc._jdf.queryExecution().executedPlan().toString()
-    assert "salt" in plan
-    # under the threshold: plain broadcast, no salt machinery
-    enc3 = encode_triples(graph.triples, d, broadcast_threshold=10_000)
-    plan3 = enc3._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan3 and "salt" not in plan3
+def test_dictionary_broadcast_follows_spark_threshold(spark, graph,
+                                                      tmp_path):
+    """The broadcast decision is Spark's byte threshold, never a
+    broadcast past it: with the threshold off the joins shuffle and give
+    the same rows; under the default session the dictionary of a stored
+    triple table is broadcast once and that one broadcast serves all
+    three positions."""
+    graph.triples.write.parquet(str(tmp_path / "stored"))
+    stored = spark.read.parquet(str(tmp_path / "stored"))
+    d = build_term_dictionary(stored)
+
+    def encoded_rows():
+        last = _last_execution(spark)
+        rows = sorted(encode_triples(stored, d).select(
+            "s", "p", "o", "s_id", "p_id", "o_id").collect())
+        (plan,) = _plans_since(spark, last)
+        return rows, plan
+
+    rows, plan = encoded_rows()
+    assert plan.count("BroadcastHashJoin") == 3
+    assert plan.count("BroadcastExchange") == 1
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        rows_off, plan_off = encoded_rows()
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert "BroadcastHashJoin" not in plan_off
+    assert "BroadcastExchange" not in plan_off
+    assert rows_off == rows
+
+
+def test_linked_chain_parses_once(spark, docs_df, tmp_path):
+    """extract → dedup_global → dictionary → encode → materialize is one
+    job: exchange reuse shares the parse and the dedup shuffle between
+    the fact side and the dictionary side, so exactly one SQL execution
+    runs the grammar, and its final plan holds one MapInArrow."""
+    last = _last_execution(spark)
+    t = dedup_global(construct_graph(docs_df).triples)
+    assert materialize(encode_triples(t, build_term_dictionary(t)),
+                       str(tmp_path / "linked"), n_buckets=4) > 0
+    (parse,) = [p for p in _plans_since(spark, last) if "MapInArrow" in p]
+    assert "Execute InsertIntoHadoopFsRelationCommand" in parse
+    assert parse.count("MapInArrow") == 1
+
+
+@pytest.mark.parametrize("dense_ids", [False, True])
+def test_empty_and_null_lang_are_one_term(spark, dense_ids):
+    """``term_key`` reads a NULL lang as '', so a literal stored with
+    lang '' and the same literal with lang NULL are one term: one
+    dictionary row and one id, and each triple encodes to one row."""
+    t = spark.createDataFrame(
+        [("http://a/", "iri", "http://p/", "v", "literal", "", None),
+         ("http://b/", "iri", "http://p/", "v", "literal", None, None)],
+        "s string, s_kind string, p string, o string, o_kind string, "
+        "o_lang string, o_dt string")
+    d = build_term_dictionary(t, dense_ids=dense_ids)
+    assert d.count() == d.select("term_id").distinct().count() == 4
+    enc = encode_triples(t, d)
+    assert enc.count() == 2
+    assert enc.filter("o_id IS NULL").count() == 0
+    assert enc.select("o_id").distinct().count() == 1
 
 
 def test_dense_ids_are_contiguous(spark, graph):
@@ -221,9 +287,8 @@ def test_salted_join_spreads_hot_key(spark):
             return (enc.filter("o = 'http://hot/one'")
                     .select(F.spark_partition_id().alias("pid"))
                     .distinct().count())
-        plain = encode_triples(hot, d, broadcast_threshold=None,
-                               hot_keys=[])
-        salted = encode_triples(hot, d, broadcast_threshold=None)
+        plain = encode_triples(hot, d)
+        salted = encode_triples(hot, d, hot_keys=detect_hot_keys(hot))
         assert hot_partitions(plain) == 1       # one reducer owns the key
         assert hot_partitions(salted) >= 4      # spread over salt shards
         # and the salted result is still value-complete
@@ -256,9 +321,9 @@ print("ENCODED", encode_in_fresh_session(), encode_in_fresh_session())
 
 
 def test_encode_triples_survives_session_restart():
-    """encode_triples frees the previous call's persisted dictionary probe;
-    a probe left over from a stopped session must be dropped, not
-    unpersisted (its context is gone and unpersist() raises). Runs in a
+    """encode_triples keeps no state between calls: encoding again in a
+    new session after the first one stopped must work (a handle cached
+    from a stopped session would raise once touched). Runs in a
     subprocess because the shared test session must not be stopped."""
     import pathlib
     import subprocess

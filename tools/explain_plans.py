@@ -17,7 +17,7 @@ def main():
 
     from rdf_rdfxml_spark.operators.extract import extract, triples_channel
     from rdf_rdfxml_spark.operators.linking import (
-        build_term_dictionary, encode_triples,
+        build_term_dictionary, detect_hot_keys, encode_triples,
     )
     from rdf_rdfxml_spark.plans.pipeline import default_session
 
@@ -41,18 +41,18 @@ def main():
     d = build_term_dictionary(triples).localCheckpoint()
 
     print("=" * 72)
-    print("3. entity linking — broadcast path (no fact-table shuffle)")
+    print("3. entity linking — default plan: Spark broadcasts the "
+          "dictionary under its byte threshold (no fact-table shuffle)")
     print("=" * 72)
-    encode_triples(triples, d, broadcast_threshold=10_000_000) \
-        .explain("formatted")
+    encode_triples(triples, d).explain("formatted")
 
     print("=" * 72)
-    print("4. entity linking — salted shuffle path (skewed keys; "
+    print("4. entity linking — salted shuffle path (caller hot_keys; "
           "auto-broadcast disabled to show the at-scale plan)")
     print("=" * 72)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    encode_triples(triples, d, broadcast_threshold=None) \
+    encode_triples(triples, d, hot_keys=detect_hot_keys(triples)) \
         .explain("formatted")
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")

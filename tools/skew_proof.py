@@ -7,11 +7,11 @@ docstring) was value-checked and unit-tested for spread, but never
 whose object column is 90% ONE IRI (the reference's hot intern-cache
 path, reader.rb:692), encodes it through all three paths —
 
-  * broadcast   (the default: dictionary fits, zero fact shuffle)
-  * unsalted    ``hot_keys=[]`` shuffle join, AQE skew splitting ON
-                (the backstop)
-  * unsalted    ``hot_keys=[]`` shuffle join, AQE skew splitting OFF
-                (the naive plan)
+  * broadcast   (the default plan with Spark's broadcast threshold
+                raised so the dictionary fits: zero fact shuffle)
+  * unsalted    the default plan as a shuffle join (no ``hot_keys``),
+                AQE skew splitting ON (the backstop)
+  * unsalted    the same, AQE skew splitting OFF (the naive plan)
   * salted      graph.salted_join with detected hot keys, 8 salts (AQE
                 skew OFF, so the salting itself is what's measured)
   * salted+hint the same with caller-supplied hot keys
@@ -52,7 +52,7 @@ def main():
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     sys.path.insert(0, "/root/repo")
     from rdf_rdfxml_spark.operators.linking import (
-        build_term_dictionary, encode_triples,
+        build_term_dictionary, detect_hot_keys, encode_triples,
     )
     from pyspark.sql import SparkSession
 
@@ -63,7 +63,7 @@ def main():
              .config("spark.sql.adaptive.enabled", "true")
              # statistics-based broadcast stays OFF so the unsalted and
              # salted variants measure real shuffle joins; the broadcast
-             # variant uses encode_triples' explicit hint, which overrides
+             # variant raises the threshold for its own run
              .config("spark.sql.autoBroadcastJoinThreshold", "-1")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
@@ -91,21 +91,19 @@ def main():
         skew_on = variant == "unsalted+aqeskew"
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled",
                        str(skew_on).lower())
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
+                       "1g" if variant == "broadcast" else "-1")
         before = set(_stages(ui, app_id))
         t0 = time.time()
-        if variant == "broadcast":
-            out = encode_triples(fact, d)
-        elif variant.startswith("unsalted"):
-            out = encode_triples(fact, d, broadcast_threshold=None,
-                                 hot_keys=[])
-        elif variant == "salted+hint":
+        if variant == "salted+hint":
             # caller-supplied heavy hitters (the rdf:type case — known a
             # priori) skip the freqItems detection pass
             hot = ["\x00".join(["iri", "http://example.org/HOT", "", ""])]
-            out = encode_triples(fact, d, broadcast_threshold=None,
-                                 hot_keys=hot)
+            out = encode_triples(fact, d, hot_keys=hot)
+        elif variant == "salted":
+            out = encode_triples(fact, d, hot_keys=detect_hot_keys(fact))
         else:
-            out = encode_triples(fact, d, broadcast_threshold=None)
+            out = encode_triples(fact, d)
         assert out.filter("o_id IS NULL").count() == 0
         wall = time.time() - t0
         after = _stages(ui, app_id)
