@@ -2343,13 +2343,9 @@ def q_events_sessionize(spark, sf_dir):
 
 
 def q_events_windowed(spark, sf_dir):
-    e = _events(spark, sf_dir)
-    return (e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"),
-                 F.sum(F.round(F.col("value") * 100).cast("long"))
-                 .alias("value_cents"))
-            .select(F.unix_timestamp(F.col("w.start")).alias("window_start"),
-                    "event_type", "n", "value_cents"))
+    # the watermark is a no-op on a static table
+    from rdf_rdfxml_spark.streaming.stream import windowed_event_counts
+    return windowed_event_counts(_events(spark, sf_dir))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

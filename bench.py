@@ -1,100 +1,92 @@
-"""Benchmark entry (driver contract + BASELINE.md scaling protocol).
+"""Benchmark entry: the headline queries, and the N vs 4N scaling run.
 
-Default run: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line
+Default run: the ``kg_construct`` flagship plus the headline queries at
+$SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS] (default: every CPU this
+process may run on). Prints ONE JSON line
   {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {name: sec}, "sf": ..., plus throughput extras}.
+   "queries": {name: min sec of this run's samples}, "sf": ..., ...}
+and writes each query's min, median and samples to
+perf_data/bench_last_run.json. Every number comes from this run alone.
 
-``--scaling``: runs the KG-construction pipeline at local[8] and local[32]
-on the same corpus and reports throughput at both + efficiency
-(= (rate_32 / rate_8) / 4) per the BASELINE.md sandbox protocol.
+``--scaling``: runs the KG-construction pipeline at local[N] and
+local[4N], N = cpus // 4, each in its own process pinned to that many
+CPUs, and reports throughput at both + efficiency
+(= (rate_4N / rate_N) / 4) per the BASELINE.md sandbox protocol.
+
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_N (timed
+runs per headline query, default 2), SPARK_GRAFT_BENCH_REPLICATE (corpus
+copies for kg_construct, default 40).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
-
-def _code_state() -> str:
-    """Hash of every source file that affects bench results — the key
-    for the quiet-window ledger (perf_data/bench_windows.json). Windows
-    recorded at a different code state never merge, so a committed
-    quiet-window number can only ever describe the exact code the
-    driver is measuring."""
-    import hashlib
-    root = os.path.dirname(os.path.abspath(__file__))
-    h = hashlib.sha256()
-    paths = [os.path.join(root, "__spark_entry__.py"),
-             os.path.join(root, "bench.py")]
-    for dirpath, _dirs, files in sorted(os.walk(
-            os.path.join(root, "rdf_rdfxml_spark"))):
-        for f in sorted(files):
-            if f.endswith(".py"):
-                paths.append(os.path.join(dirpath, f))
-    for p in sorted(paths):
-        h.update(p.encode())
-        with open(p, "rb") as fh:
-            h.update(fh.read())
-    return h.hexdigest()[:16]
+HEADLINE = ["rdfxml_extract_basic", "rdfxml_reification",
+            "rdfxml_error_channel", "rdfxml_write", "triples_dedup_global",
+            "entity_linking", "entity_linking_salted", "dedup_exact",
+            "minhash_lsh", "dedup_verified_pairs", "simhash",
+            "ann_cosine_topk", "ann_lsh_bucketed",
+            "dedup_embedding_bucketed", "text_quality", "events_windowed"]
+MAX_LINE = 1800   # the driver keeps only the last ~2 kB of stdout
 
 
-def _windows_path(local: bool = False) -> str:
-    name = "bench_windows_local.json" if local else "bench_windows.json"
-    return os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "perf_data", name)
+def build_headline(samples: dict[str, list[float]], *, total: float,
+                   sf: str, cpus: int, kg_triples: int, write_rows: int,
+                   kg_skew: float, loadavg: list[float]) -> tuple[str, dict]:
+    """The stdout JSON line and the side-file record, from this run's
+    per-query ``samples`` (seconds) and facts alone. Each ``queries`` value
+    is the minimum of its samples; the side file adds the median and the
+    samples themselves."""
+    queries = {q: min(s) for q, s in samples.items()}
+    kg_rate = kg_triples / queries["kg_construct"]
+    head = {
+        "metric": "total_bench_sec",
+        "value": total,
+        "unit": "sec",
+        "queries": queries,
+        "sf": sf,
+        "kg_triples": kg_triples,
+        "kg_triples_per_sec": round(kg_rate),
+        "kg_skew_ratio_docs_per_partition": round(kg_skew, 3),
+        "kg_docs_per_sec": round(kg_rate / 5),  # 5 triples/doc
+        "write_docs_per_sec": round(write_rows / queries["rdfxml_write"]),
+        "cpus": cpus,
+        "loadavg": loadavg,
+        "queries_sum_best_sec": round(sum(queries.values()), 3),
+    }
+    side = {**head, "query_stats": {
+        q: {"min": queries[q], "median": round(statistics.median(s), 3),
+            "samples": list(s)} for q, s in samples.items()}}
+    line = json.dumps(head)
+    if len(line) > MAX_LINE:
+        # never fail the run over line length: the queries stay in the side
+        # file, and the rest of the line still parses
+        head = {k: v for k, v in head.items() if k != "queries"}
+        head["truncated"] = "queries dropped; see perf_data/"
+        line = json.dumps(head)
+        print(f"[bench] headline exceeded {MAX_LINE} bytes; queries moved "
+              f"to the side file", file=sys.stderr)
+    return line, side
 
 
-def _load_windows(code_state: str) -> list:
-    """Quiet-window results for THIS code state (others are stale by
-    construction and ignored), from BOTH ledgers: the committed one
-    (quiet windows recorded as a round's last step) and the gitignored
-    local one (driver/bench runs append there so a driver bench run
-    never dirties the tree — round-6 verdict "What's wrong" #3)."""
-    out = []
-    for local in (False, True):
-        try:
-            with open(_windows_path(local)) as fh:
-                out.extend(w for w in json.load(fh)
-                           if w.get("code_state") == code_state)
-        except Exception:
-            pass
-    return out
+def scaling_levels(cpus: int) -> tuple[int, int]:
+    """N and 4N for ``--scaling``: N = cpus // 4, so 4N is every CPU when
+    ``cpus`` is a multiple of 4."""
+    if cpus < 4:
+        raise SystemExit(f"bench.py --scaling needs at least 4 CPUs "
+                         f"(N = cpus // 4), got {cpus}")
+    return cpus // 4, cpus // 4 * 4
 
 
-def _append_window(entry: dict):
-    """Best-effort append of this run to the LOCAL (gitignored) window
-    ledger; promotion into the committed ledger is a deliberate
-    round-end step (CLAUDE.md), never a side effect of running bench."""
-    try:
-        try:
-            with open(_windows_path(local=True)) as fh:
-                all_w = json.load(fh)
-        except Exception:
-            all_w = []
-        all_w.append(entry)
-        # keep the ledger bounded: only the 12 most recent entries
-        with open(_windows_path(local=True), "w") as fh:
-            json.dump(all_w[-12:], fh, indent=1)
-    except Exception as e:
-        print(f"[bench] window ledger append failed: {e}",
-              file=sys.stderr)
-
-
-def _mk_session(cpus: int, shuffle_partitions: int | None = None):
-    from pyspark.sql import SparkSession
-    sp = shuffle_partitions or max(2 * cpus, 8)
-    return (SparkSession.builder.appName("rdf-rdfxml-bench")
-            .master(f"local[{cpus}]")
-            .config("spark.sql.shuffle.partitions", str(sp))
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.skewJoin.enabled", "true")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-            .config("spark.driver.memory", "24g")
-            .getOrCreate())
+def _mk_session(cpus: int):
+    from rdf_rdfxml_spark.plans.pipeline import default_session
+    return default_session(app="rdf-rdfxml-bench", master=f"local[{cpus}]",
+                           shuffle_partitions=max(2 * cpus, 8))
 
 
 def _bench_docs(spark, sf_dir: str, replicate: int):
@@ -119,7 +111,7 @@ def _bench_docs(spark, sf_dir: str, replicate: int):
                 "'0' AS commit"))
 
 
-def _run_kg(spark, sf_dir: str, replicate: int, parallelism: int):
+def _run_kg(spark, sf_dir: str, replicate: int):
     from rdf_rdfxml_spark.plans.pipeline import construct_graph
     docs = _bench_docs(spark, sf_dir, replicate)
     # input already balanced upstream (cheap pre-derivation repartition)
@@ -130,70 +122,71 @@ def _run_kg(spark, sf_dir: str, replicate: int, parallelism: int):
     return wall, n_triples
 
 
+def _report(name: str, samples: list[float]) -> None:
+    print(f"[bench] {name}: min={min(samples)}s median="
+          f"{round(statistics.median(samples), 3)}s samples={samples}",
+          file=sys.stderr)
+
+
+def _scaling(sf_dir: str, sf: str, cpus: int, replicate: int) -> dict:
+    """Interleaved N/4N/N/4N child visits, best rate per level; every
+    sample is reported next to it."""
+    import subprocess
+    levels = scaling_levels(cpus)
+    out = {"protocol": "BASELINE.md two-parallelism scaling "
+                       "(process-isolated, CPU-affinity-pinned, "
+                       f"N={levels[0]} vs 4N={levels[1]} cores)",
+           "sf": sf, "replicate": replicate * 3}
+    rates, samples = {}, {}
+    for n in levels * 2:
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__),
+             "--scaling-run", str(n)],
+            capture_output=True, text=True, timeout=1800,
+            env=dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir,
+                     SPARK_GRAFT_BENCH_REPLICATE=str(replicate)))
+        res = json.loads(proc.stdout.strip().splitlines()[-1])
+        rate = res["triples"] / res["wall"]
+        samples.setdefault(n, []).append(round(rate))
+        if n not in rates or rate > rates[n]:
+            rates[n] = rate
+            out[f"local{n}_sec"] = round(res["wall"], 2)
+            out[f"local{n}_triples_per_sec"] = round(rate)
+        out["n_triples"] = res["triples"]
+    out["samples_triples_per_sec"] = {str(k): v for k, v in samples.items()}
+    out["scaling_efficiency"] = round(
+        (rates[levels[1]] / rates[levels[0]]) / 4, 3)
+    return out
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     sf = sf_dir.rstrip("/").split("sf")[-1]
     replicate = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICATE", "40"))
 
     if "--scaling-run" in sys.argv:
         # Child: one parallelism level in a fresh process whose whole tree
         # (this driver, the JVM it launches, every Python worker) is pinned
-        # to exactly N cores before the JVM exists.
+        # to exactly n CPUs before the JVM exists.
         n = int(sys.argv[sys.argv.index("--scaling-run") + 1])
-        os.sched_setaffinity(0, set(range(n)))
+        os.sched_setaffinity(0, sorted(os.sched_getaffinity(0))[:n])
         spark = _mk_session(n)
         spark.sparkContext.setLogLevel("ERROR")
-        _run_kg(spark, sf_dir, 2, n)  # warm-up (JIT, Python workers)
+        _run_kg(spark, sf_dir, 2)  # warm-up (JIT, Python workers)
         # best-of-2 inside the child; the parent additionally interleaves
-        # child visits per level (noisy-neighbor host, see main())
+        # child visits per level
         wall = None
         for _ in range(2):
-            w, n_triples = _run_kg(spark, sf_dir, replicate * 3, n)
+            w, n_triples = _run_kg(spark, sf_dir, replicate * 3)
             wall = w if wall is None else min(wall, w)
         print(json.dumps({"n": n, "wall": wall, "triples": n_triples}))
         spark.stop()
         return
 
     if "--scaling" in sys.argv:
-        # Honest N vs 4N in local mode: each level runs in its own process
-        # pinned to N cores (otherwise local[8]'s JVM + Python workers
-        # overflow onto the idle 24 cores, or a reused JVM keeps the old
-        # affinity); a 3× larger corpus amortizes per-session fixed costs.
-        import subprocess
-        levels = [int(x) for x in os.environ.get(
-            "SPARK_GRAFT_SCALING_LEVELS", "2,8").split(",")]
-        out = {"protocol": "BASELINE.md two-parallelism scaling "
-                           "(process-isolated, CPU-affinity-pinned, "
-                           f"N={levels[0]} vs 4N={levels[1]} cores)",
-               "sf": sf, "replicate": replicate * 3}
-        # Interleaved A/B/A/B visits, max rate per level: the host carries
-        # intermittent external load (observed: identical jobs 3.3s vs
-        # 14.2s minutes apart), so single-visit ratios are unstable; the
-        # per-leg best approximates the uncontended machine both legs
-        # would see on a quiet cluster. All samples are reported.
-        rates, samples = {}, {}
-        for n in levels * 2:
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__),
-                 "--scaling-run", str(n)],
-                capture_output=True, text=True, timeout=1800,
-                env=dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir,
-                         SPARK_GRAFT_BENCH_REPLICATE=str(replicate)))
-            res = json.loads(proc.stdout.strip().splitlines()[-1])
-            rate = res["triples"] / res["wall"]
-            samples.setdefault(n, []).append(round(rate))
-            if n not in rates or rate > rates[n]:
-                rates[n] = rate
-                out[f"local{n}_sec"] = round(res["wall"], 2)
-                out[f"local{n}_triples_per_sec"] = round(rate)
-            out["n_triples"] = res["triples"]
-        out["samples_triples_per_sec"] = {str(k): v
-                                          for k, v in samples.items()}
-        ratio = levels[1] / levels[0]
-        out["scaling_efficiency"] = round(
-            (rates[levels[1]] / rates[levels[0]]) / ratio, 3)
-        print(json.dumps(out))
+        print(json.dumps(_scaling(sf_dir, sf, cpus, replicate)))
         return
 
     spark = _mk_session(cpus)
@@ -201,42 +194,17 @@ def main():
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as E
 
-    # Window context (round-5 verdict #3): the host carries neighbor
-    # load this process can't control (observed 6× wall inflation);
-    # record load-avg so a judge can see WHICH window a number came
-    # from, and merge best-across-windows against the committed quiet
-    # ledger below — per-query samples land in the JSON, not just
-    # stderr, so quiet/loaded claims are artifact-backed.
-    code_state = _code_state()
     loadavg_start = round(os.getloadavg()[0], 2)
-
     # warm-up: spin executors + Python workers before timing
     spark.range(1000).selectExpr("sum(id)").collect()
-    _run_kg(spark, sf_dir, 1, cpus)
+    _run_kg(spark, sf_dir, 1)
 
-    queries = {}
-    query_samples = {}
+    samples = {"kg_construct": []}
     t_all0 = time.time()
-
-    # Best-of-2 per measurement: the sandbox host carries neighbor load we
-    # can't see (observed load-avg 9+ with zero own processes; 3.3s vs
-    # 14.2s for the identical kg job minutes apart) — min-of-N is the
-    # standard noisy-neighbor mitigation and still an honest number.
-    best_kg = None
-    kg_samples = []
     for _ in range(3):
-        wall, n_triples = _run_kg(spark, sf_dir, replicate, cpus)
-        print(f"[bench] kg attempt: {wall:.2f}s", file=sys.stderr)
-        kg_samples.append(round(wall, 3))
-        if best_kg is None or wall < best_kg:
-            best_kg = wall
-    if os.environ.get("SPARK_GRAFT_KG_ONLY"):
-        print(json.dumps({"kg_only": best_kg}))
-        spark.stop()
-        return
-    queries["kg_construct"] = round(best_kg, 3)
-    query_samples["kg_construct"] = kg_samples
-    kg_rate = n_triples / best_kg
+        wall, n_triples = _run_kg(spark, sf_dir, replicate)
+        samples["kg_construct"].append(round(wall, 3))
+    _report("kg_construct", samples["kg_construct"])
 
     # BASELINE.md protocol step 5: per-partition balance evidence — the
     # scaling gate depends on even task sizing, so record max/median
@@ -245,105 +213,29 @@ def main():
     from rdf_rdfxml_spark.operators.metrics import skew_ratio
     kg_skew = skew_ratio(extract(_bench_docs(spark, sf_dir, replicate)))
 
-    headline = ["rdfxml_extract_basic", "rdfxml_reification",
-                "rdfxml_error_channel", "rdfxml_write",
-                "triples_dedup_global",
-                "entity_linking", "entity_linking_salted", "dedup_exact",
-                "minhash_lsh", "dedup_verified_pairs", "simhash",
-                "ann_cosine_topk", "ann_lsh_bucketed",
-                "dedup_embedding_bucketed", "text_quality",
-                "events_windowed"]
     qmap = {**E.queries(), **E.extra_queries()}  # simhash/write are extras
-    # Per-attempt samples go to stderr so a committed bench log carries
-    # the dispersion evidence (round-3 verdict: the quiet-window claims
-    # for the regressed entries existed only as prose). N via env.
     attempts = int(os.environ.get("SPARK_GRAFT_BENCH_N", "2"))
     rows_of = {}
-    for name in headline:
-        samples = []
+    for name in HEADLINE:
+        samples[name] = []
         for _ in range(attempts):
             t0 = time.time()
             rows_of[name] = qmap[name](spark, sf_dir).count()
-            samples.append(round(time.time() - t0, 3))
-        queries[name] = round(min(samples), 3)
-        query_samples[name] = samples
-        print(f"[bench] {name}: {queries[name]}s  samples="
-              f"{[round(s, 2) for s in samples]}", file=sys.stderr)
+            samples[name].append(round(time.time() - t0, 3))
+        _report(name, samples[name])
 
     total = round(time.time() - t_all0, 3)
-    loadavg_end = round(os.getloadavg()[0], 2)
-
-    # This run as a window entry (contributed to the ledger for future
-    # rounds; ~28 own Spark tasks mean loadavg >> cpus implies external
-    # load during the window).
-    this_window = {
-        "code_state": code_state,
-        "loadavg": [loadavg_start, loadavg_end],
-        "queries": dict(queries),
-        "query_samples": dict(query_samples),
-    }
-
-    # Best-across-windows: merge per-query minima over every COMMITTED
-    # window at this exact code state plus this run. A quiet-window
-    # number recorded for the same code can never contradict the
-    # headline — it IS the headline, with provenance.
-    windows = _load_windows(code_state)
-    merged = dict(queries)
-    merged_samples = {k: list(v) for k, v in query_samples.items()}
-    for wdw in windows:
-        for name, val in wdw.get("queries", {}).items():
-            if name in merged:
-                merged[name] = min(merged[name], val)
-            else:
-                merged[name] = val
-            merged_samples.setdefault(name, []).extend(
-                wdw.get("query_samples", {}).get(name, [val]))
-    _append_window(this_window)
-
-    best_kg_merged = merged.get("kg_construct", queries["kg_construct"])
-    kg_rate_merged = n_triples / best_kg_merged
-    headline_json = {
-        "metric": "total_bench_sec",
-        "value": total,                # this window's wall (comparable
-                                       # to every prior round's value)
-        "unit": "sec",
-        "queries": merged,
-        "sf": sf,
-        "kg_triples": n_triples,
-        "kg_triples_per_sec": round(kg_rate_merged),
-        "kg_skew_ratio_docs_per_partition": round(kg_skew, 3),
-        "kg_docs_per_sec": round(kg_rate_merged / 5),  # 5 triples/doc
-        "write_docs_per_sec": round(rows_of["rdfxml_write"]
-                                    / merged["rdfxml_write"]),
-        "cpus": cpus,
-        "code_state": code_state,
-        "loadavg": [loadavg_start, loadavg_end],
-        "windows_merged": len(windows) + 1,
-        "queries_sum_best_sec": round(sum(merged.values()), 3),
-    }
-    # Provenance (per-attempt samples, this-window raw numbers) goes to a
-    # side file: the driver captures only the LAST ~2 kB of stdout, so the
-    # final line must stay compact or the headline never reaches the judge
-    # (round-6 verdict "What's wrong" #1 — BENCH_r06 parsed:null).
+    line, side = build_headline(
+        samples, total=total, sf=sf, cpus=cpus, kg_triples=n_triples,
+        write_rows=rows_of["rdfxml_write"], kg_skew=kg_skew,
+        loadavg=[loadavg_start, round(os.getloadavg()[0], 2)])
     try:
-        side = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+        path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                             "perf_data", "bench_last_run.json")
-        with open(side, "w") as fh:
-            json.dump({**headline_json,
-                       "this_window_queries": queries,
-                       "query_samples": merged_samples}, fh, indent=1)
-    except Exception as e:
+        with open(path, "w") as fh:
+            json.dump(side, fh, indent=1)
+    except OSError as e:
         print(f"[bench] side-file write failed: {e}", file=sys.stderr)
-    line = json.dumps(headline_json)
-    if len(line) > 1800:
-        # Never fail the run over line length: drop the biggest optional
-        # field so the driver's ~2 kB tail capture still parses, and
-        # say so on stderr (the full dict is in the side file either way).
-        headline_json.pop("queries", None)
-        headline_json["truncated"] = "queries dropped; see perf_data/"
-        line = json.dumps(headline_json)
-        print(f"[bench] headline exceeded 1800 bytes; queries moved to "
-              f"side file", file=sys.stderr)
     print(line)
     spark.stop()
 

@@ -59,18 +59,19 @@ def materialize(triples: DataFrame, path: str, *, n_buckets: int = 256,
 
 @contextmanager
 def errors_alongside(g, errors_path: str | None, *,
-                     n_units: int | None = None):
+                     mode: str = "overwrite", n_units: int | None = None):
     """The ``with`` body writes ``g.triples``; then ``g.errors`` goes to
-    ``errors_path`` (``unit=U`` with ``n_units``). With an errors path the
-    extraction is persisted across both writes, so each document is parsed
-    once; without one nothing is cached."""
+    ``errors_path`` (``unit=U`` with ``n_units``) in :func:`materialize`'s
+    ``mode``. With an errors path the extraction is persisted across both
+    writes, so each document is parsed once; without one nothing is
+    cached."""
     if errors_path is None:
         yield
         return
     g.extracted.persist()
     try:
         yield
-        _write(g.errors, errors_path, "overwrite", n_units)
+        _write(g.errors, errors_path, mode, n_units)
     finally:
         g.extracted.unpersist()
 

@@ -23,16 +23,6 @@ def partition_metrics(extracted: DataFrame) -> DataFrame:
                  F.sum((F.col("rec") == "error").cast("long")).alias("errors")))
 
 
-def corpus_metrics(extracted: DataFrame) -> DataFrame:
-    """One-row rollup: docs, docs_with_errors, triples, errors."""
-    return extracted.agg(
-        F.countDistinct("doc_sha").alias("docs"),
-        F.countDistinct(F.when(F.col("rec") == "error",
-                               F.col("doc_sha"))).alias("docs_with_errors"),
-        F.sum((F.col("rec") == "triple").cast("long")).alias("triples"),
-        F.sum((F.col("rec") == "error").cast("long")).alias("errors"))
-
-
 def skew_ratio(extracted: DataFrame) -> float:
     """max/median docs-per-partition — balance check for the repartition
     strategy (BASELINE.md protocol step 5)."""

@@ -447,44 +447,6 @@ def synth_media(spark, n: int = 64) -> DataFrame:
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resample to (height, width, 3) — pure numpy index
-    math, deterministic (the half-pixel-center convention)."""
-    h, w, _ = img.shape
-    ys = np.minimum(((np.arange(height) + 0.5) * h / height).astype(int),
-                    h - 1)
-    xs = np.minimum(((np.arange(width) + 0.5) * w / width).astype(int),
-                    w - 1)
-    return img[ys][:, xs]
-
-
-def resize_images(media: DataFrame, *, width: int = 8, height: int = 8,
-                  payload_col: str = "payload") -> DataFrame:
-    """Arrow-batched image resize: decode (PPM/BMP) → nearest-neighbor
-    resample → re-encode as PPM. Per-item failures → ``error`` (same
-    isolation contract as every UDF stage)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, outs, errors = [], [], []
-            for mid, payload in zip(pdf["media_id"].values,
-                                    pdf[payload_col].values):
-                ids.append(mid)
-                try:
-                    img = decode_image(bytes(payload or b""))
-                    outs.append(encode_ppm(resize_nearest(img, width,
-                                                          height)))
-                    errors.append(None)
-                except Exception as e:  # per-item isolation
-                    outs.append(None)
-                    errors.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame({"media_id": ids, "payload": outs,
-                                "error": errors})
-
-    return media.select("media_id", payload_col).mapInPandas(
-        batches, schema="media_id string, payload binary, error string")
-
-
 def split_ppm_frames(payload: bytes) -> list:
     """Parse a PPM-sequence container (consecutive binary PPM images —
     the uncompressed 'video' format this environment can produce without

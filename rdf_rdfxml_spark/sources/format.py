@@ -55,9 +55,3 @@ def detect(documents: DataFrame, *, content_col: str = "content",
     return documents.withColumn(
         "format", F.when(pred, F.lit("rdfxml")).otherwise(F.lit("unknown")))
 
-
-def rdfxml_only(documents: DataFrame, **kwargs) -> DataFrame:
-    """Pre-filter for the extraction stage — cheap JVM-side routing before
-    any Python runs (mixed-format corpora at scale)."""
-    return detect(documents, **kwargs).filter(
-        F.col("format") == "rdfxml").drop("format")

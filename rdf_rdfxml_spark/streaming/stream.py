@@ -7,8 +7,8 @@ streaming here means *incremental ingest of new documents*: a
 stream checkpoint keeping restarts from re-ingesting committed files.
 
 Also provides the watermarked windowed aggregation over the ``events``
-table — the standard late-data pattern (the batch-equivalent query is
-oracle-checked as ``events_windowed`` in ``__spark_entry__``).
+table — the standard late-data pattern (oracle-checked on the static
+table as ``events_windowed`` in ``__spark_entry__``).
 """
 
 from __future__ import annotations
@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.materialize import materialize
+from ..operators.materialize import errors_alongside, materialize
 from ..plans.pipeline import construct_graph
 from ..schema import DOCUMENTS_SCHEMA
 
@@ -32,15 +32,18 @@ def stream_documents(spark: SparkSession, input_path: str,
 
 
 def stream_construct(docs_stream: DataFrame, output_path: str,
-                     checkpoint_path: str, *, strict: bool = True,
-                     n_buckets: int = 16):
-    """documents stream → triples parquet, via foreachBatch of the batch
-    pipeline entry (one code path for batch and streaming — the UDF and
-    its semantics are identical)."""
+                     checkpoint_path: str, *, errors_path: str | None = None,
+                     n_buckets: int = 16, **graph_opts):
+    """documents stream → triples parquet (and error rows to
+    ``errors_path``), via foreachBatch of the batch pipeline entry
+    ``construct_graph(**graph_opts)`` → :func:`materialize`: one code path
+    for batch and streaming, so a document gives the same rows on both."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        materialize(construct_graph(batch_df, strict=strict).triples,
-                    output_path, n_buckets=n_buckets, mode="append")
+        g = construct_graph(batch_df, **graph_opts)
+        with errors_alongside(g, errors_path, mode="append"):
+            materialize(g.triples, output_path, n_buckets=n_buckets,
+                        mode="append")
 
     return (docs_stream.writeStream
             .option("checkpointLocation", checkpoint_path)
@@ -61,20 +64,6 @@ def windowed_event_counts(events: DataFrame, *, watermark: str = "2 hours",
                  .alias("value_cents"))
             .select(F.unix_timestamp(F.col("w.start")).alias("window_start"),
                     "event_type", "n", "value_cents"))
-
-
-def stream_dedup_documents(docs_stream: DataFrame, *,
-                           watermark: str = "1 hour",
-                           ts_col: str = "ingested_at") -> DataFrame:
-    """Streaming exact dedup: drop documents whose content hash was already
-    seen within the watermark horizon (`dropDuplicatesWithinWatermark` —
-    state is bounded by the watermark instead of growing forever, which is
-    the only tractable contract for an unbounded crawl stream; cross-
-    horizon dedup belongs to the batch `dedup_exact`/manifest layer)."""
-    hashed = docs_stream.withColumn("content_sha",
-                                    F.sha2(F.col("content"), 256))
-    return (hashed.withWatermark(ts_col, watermark)
-            .dropDuplicatesWithinWatermark(["content_sha"]))
 
 
 def stream_neardup_flags(docs_stream: DataFrame, *,

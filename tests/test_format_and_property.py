@@ -15,7 +15,7 @@ RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 # --- format detection (Spark) --------------------------------------------------
 
 def test_detect_and_filter(spark):
-    from rdf_rdfxml_spark.sources.format import detect, rdfxml_only
+    from rdf_rdfxml_spark.sources.format import detect
     rows = [
         {"path": "a.rdf", "lang": "xml", "content": "<x/>"},             # ext
         {"path": "b.owl", "lang": "", "content": "<y/>"},                # ext
@@ -30,7 +30,6 @@ def test_detect_and_filter(spark):
     assert got == {"a.rdf": "rdfxml", "b.owl": "rdfxml", "c.txt": "rdfxml",
                    "d.txt": "rdfxml", "e.txt": "rdfxml", "f.txt": "unknown",
                    "g.txt": "unknown"}
-    assert rdfxml_only(spark.createDataFrame(rows)).count() == 5
 
 
 # --- property-based round trip --------------------------------------------------

@@ -1,8 +1,8 @@
 """One document, one result on every path: the plain pipeline
 (construct_graph → materialize), the resumable run and the streaming
-ingest give the same triples, and plain and resume the same error rows —
-also after a resumable run crashes between its data write and its
-manifest write."""
+ingest give the same triples and the same error rows under the same
+options — also after a resumable run crashes between its data write and
+its manifest write."""
 from collections import Counter
 
 import pytest
@@ -87,12 +87,13 @@ def test_plain_resume_and_stream_agree(spark, docs_path, tmp_path,
     assert r_triples == triples
     assert r_errors == errors
 
-    if not canonicalize:   # the stream takes the default options
-        out = str(tmp_path / "streamed")
-        stream_construct(
-            stream_documents(spark, docs_path, max_files_per_trigger=1),
-            out, str(tmp_path / "ckpt")).start().awaitTermination(120)
-        assert _bag(spark.read.parquet(out), TRIPLE_COLS) == triples
+    out, err = str(tmp_path / "streamed"), str(tmp_path / "streamed_errors")
+    stream_construct(
+        stream_documents(spark, docs_path, max_files_per_trigger=1),
+        out, str(tmp_path / "ckpt"), errors_path=err,
+        canonicalize=canonicalize).start().awaitTermination(120)
+    assert _bag(spark.read.parquet(out), TRIPLE_COLS) == triples
+    assert _bag(spark.read.parquet(err), ERROR_COLS) == errors
 
 
 def test_resume_after_crash_before_manifest_equals_one_shot(

@@ -28,34 +28,6 @@ def _docs_df(spark, rows):
 
 # --- streaming ---------------------------------------------------------------
 
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    import datetime as dt
-    from rdf_rdfxml_spark.streaming.stream import stream_dedup_documents
-    t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-    rows = [
-        ("r", "p1", "c", "x", "<same/>", t0),
-        ("r", "p2", "c", "x", "<same/>", t0 + dt.timedelta(minutes=5)),
-        ("r", "p3", "c", "x", "<other/>", t0 + dt.timedelta(minutes=6)),
-    ]
-    src = str(tmp_path / "dd_in")
-    spark.createDataFrame(
-        rows, "repo string, path string, commit string, lang string, "
-              "content string, ingested_at timestamp").write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (spark.readStream.schema(schema).parquet(src))
-    out = str(tmp_path / "dd_out")
-    ckpt = str(tmp_path / "dd_ckpt")
-    q = (stream_dedup_documents(stream).writeStream
-         .option("checkpointLocation", ckpt)
-         .format("parquet").option("path", out)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    # one row per distinct content within the watermark horizon
-    assert got.count() == 2
-    assert {r["content"] for r in got.collect()} == {"<same/>", "<other/>"}
-
-
 def test_stream_construct_available_now(spark, tmp_path):
     rows = [r for r in corpus(2) if not r["negative"]]
     # one statement written twice: a set, so one row on every path
@@ -273,31 +245,6 @@ def test_dist_zip_importable(tmp_path):
         env={"PATH": "/usr/bin:/bin", "PYTHONPATH": ""})
     assert r.returncode == 0, r.stderr
     assert r.stdout.strip().startswith("OK")
-
-
-def test_resize_images_real(spark):
-    import numpy as np
-    from rdf_rdfxml_spark.operators.multimodal import (
-        decode_ppm, resize_images, resize_nearest,
-    )
-    media = synth_media(spark, 8)
-    rows = {r["media_id"]: r for r in
-            resize_images(media, width=4, height=4).collect()}
-    assert all(r["error"] is None for r in rows.values())
-    img = decode_ppm(bytes(rows["m0000"]["payload"]))
-    assert img.shape == (4, 4, 3)
-    # resample math is deterministic and matches the local function
-    src = decode_ppm(bytes(
-        {r["media_id"]: r for r in media.collect()}["m0000"]["payload"]))
-    assert (img == resize_nearest(src, 4, 4)).all()
-    # undecodable payload isolated
-    bad = media.withColumn(
-        "payload", F.when(F.col("media_id") == "m0001",
-                          F.lit(bytearray(b"\x89PNG")))
-        .otherwise(F.col("payload")))
-    got = {r["media_id"]: r for r in resize_images(bad).collect()}
-    assert got["m0001"]["payload"] is None
-    assert "NotImplementedError" in got["m0001"]["error"]
 
 
 def test_sample_frames_real(spark):
