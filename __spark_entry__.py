@@ -833,8 +833,8 @@ def q_dedup_embedding_trained(spark, sf_dir):
         with_neardup_twins,
     )
     # k ∝ N cell sizing (round 5, same regime as the bucketed query and
-    # scale_proof's recall legs): max(8, N/25) on the TWINNED corpus,
-    # mirrored in the oracle's GREATEST(8, COUNT(*)//25).
+    # tools/scale_legs.py's recall group): max(8, N/25) on the TWINNED
+    # corpus, mirrored in the oracle's GREATEST(8, COUNT(*)//25).
     emb = with_neardup_twins(load_embeddings(spark, sf_dir))
     _, centroids = kmeans_cells(emb, k=max(8, emb.count() // 25),
                                 iters=2)

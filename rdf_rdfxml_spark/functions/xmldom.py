@@ -45,10 +45,6 @@ class Text:
     is_element = False
     is_text = True
 
-    @property
-    def is_blank(self) -> bool:
-        return not self.value.strip()
-
 
 #: (ns, local) → expanded name memo. Element names repeat massively
 #: within and across documents, so the concat happens once per distinct
@@ -95,17 +91,9 @@ class Element:
         # after construction.
         self.uri = _expanded_name(ns, local)
 
-    @property
-    def name(self) -> str:
-        return self.local
-
     # -- structure -------------------------------------------------------------
     def element_children(self):
         return [c for c in self.children if c.is_element]
-
-    def text_children(self):
-        """Non-blank text children (NodeProxy#text?, nokogiri.rb:88-90)."""
-        return [c for c in self.children if c.is_text and not c.is_blank]
 
     def inner_text(self) -> str:
         """Concatenated text of all text descendants (Nokogiri inner_text)."""
@@ -145,14 +133,6 @@ class Element:
             if a_ns == ns and a_local == local:
                 return value
         return None
-
-    @property
-    def xml_lang(self):
-        return self.attr(XML_NS, "lang")
-
-    @property
-    def xml_base(self):
-        return self.attr(XML_NS, "base")
 
 
 #: expat triplet-name → (ns, local, prefix) memo; same boundedness

@@ -200,7 +200,8 @@ def train_coarse_quantizer(centroids: list, *, k_coarse: int | None = None,
     twins at sf0.001 (a vector straddling a coarse boundary probed the
     wrong coarse cells). Centroids that track the fine-centroid
     distribution shrink boundary volume — recall vs brute force is
-    re-measured in tests/test_ann.py and tools/scale_proof.py.
+    re-measured in tests/test_ann.py and the ``recall`` group of
+    tools/scale_legs.py.
     """
     import math
 

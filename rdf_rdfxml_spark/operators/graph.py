@@ -92,7 +92,8 @@ def connected_components(edges: DataFrame, *, max_iters: int = 25,
     to convergence, = component diameter bound) — the attribution
     telemetry for scale runs: wall growth is rounds × per-round join
     cost, so recording rounds separates diameter growth from fan-out
-    growth (tools/scale_proof.py, round-5 verdict #2).
+    growth (the ``text_dedup`` group of tools/scale_legs.py, round-5
+    verdict #2).
 
     ``hot_keys`` (round 6, VERDICT #5): hub node ids whose symmetrized
     degree dominates — the per-round ``join(labels, on src)`` is the

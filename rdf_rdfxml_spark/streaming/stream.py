@@ -103,22 +103,75 @@ def stream_neardup_flags(docs_stream: DataFrame, *,
     (a key that receives data in the same batch as its would-be timeout
     is handed its old state, not hasTimedOut).
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
     from ..operators.sketch import minhash_bands
 
     bands = minhash_bands(
         docs_stream.select("doc_id", "text", F.col(ts_col)),
         n_hashes=n_hashes, n_bands=n_bands, shingle=shingle,
         passthrough=ts_col).withWatermark(ts_col, watermark)
+    return _band_state_flags(bands, "band_hash", id_col="doc_id",
+                             id_type="long", ts_col=ts_col,
+                             horizon_seconds=horizon_seconds)
 
-    state_schema = "first_doc long, first_ts long, last_ts long"
-    out_schema = "doc_id long, band_id int, dup_of long"
-    update = _neardup_update_fn(horizon_seconds, ts_col, "doc_id", int)
 
-    return (bands.groupBy("band_id", "band_hash")
+def _band_state_flags(bands: DataFrame, band_col: str, *, id_col: str,
+                      id_type: str, ts_col: str,
+                      horizon_seconds: int) -> DataFrame:
+    """The band→state tail of every streaming near-dup flagger: group
+    ``bands`` by ``(band_id, band_col)`` and run the shared epoch state
+    function (:func:`_neardup_update_fn`) under an event-time timeout.
+    Output rows ``(id_col, band_id, dup_of)``; ``id_type`` is the SQL
+    type of the id (``long`` or ``string``)."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    update = _neardup_update_fn(horizon_seconds, ts_col, id_col,
+                                int if id_type == "long" else str)
+    return (bands.groupBy("band_id", band_col)
             .applyInPandasWithState(
-                update, out_schema, state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout))
+                update, f"{id_col} {id_type}, band_id int, dup_of {id_type}",
+                f"first_doc {id_type}, first_ts long, last_ts long",
+                "append", GroupStateTimeout.EventTimeTimeout))
+
+
+def _signature_bands(stream: DataFrame, signature, *, id_col: str,
+                     id_type: str, src_col: str, ts_col: str, n_bands: int,
+                     width: int, watermark: str) -> DataFrame:
+    """Per-row band emission of the signature-based flaggers (media and
+    embedding): ``signature(cell)`` runs on each row's ``src_col`` value
+    inside one in-stream mapInArrow stage (an exception drops the row —
+    isolation), and the signature is split into ``n_bands`` contiguous
+    ``width``-bit band values, one output row per band."""
+    import pyarrow as pa
+
+    def fn(it):
+        pa_id = pa.int64() if id_type == "long" else pa.string()
+        for rb in it:
+            ids = rb.column(rb.schema.get_field_index(id_col))
+            cells = rb.column(rb.schema.get_field_index(src_col))
+            ts = rb.column(rb.schema.get_field_index(ts_col))
+            out_id, out_band, out_val, out_idx = [], [], [], []
+            for k in range(rb.num_rows):
+                try:
+                    h = signature(cells[k].as_py())
+                except Exception:   # isolation: bad item -> no signature
+                    continue
+                item = ids[k].as_py()
+                for b in range(n_bands):
+                    out_id.append(item)
+                    out_band.append(b)
+                    out_val.append((h >> (b * width)) % (1 << width))
+                    out_idx.append(k)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(out_id, type=pa_id),
+                 pa.array(out_band, type=pa.int32()),
+                 pa.array(out_val, type=pa.int64()),
+                 ts.take(pa.array(out_idx, type=pa.int32()))],
+                names=[id_col, "band_id", "band_value", ts_col])
+
+    return (stream.select(id_col, src_col, F.col(ts_col))
+            .mapInArrow(fn, schema=f"{id_col} {id_type}, band_id int, "
+                                   f"band_value long, {ts_col} timestamp")
+            .withWatermark(ts_col, watermark))
 
 
 def _neardup_update_fn(horizon_seconds: int, ts_col: str, id_col: str,
@@ -253,50 +306,14 @@ def stream_media_neardup_flags(media_stream: DataFrame, signature, *,
     stage (exceptions drop the item — isolation), bands split by
     contiguous bit ranges, then the shared epoch-deterministic stateful
     flagger keyed by ``(band_id, band_value)``."""
-    import pyarrow as pa
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    width = bits // n_bands
-
-    def fn(it):
-        for rb in it:
-            mids = rb.column(rb.schema.get_field_index("media_id"))
-            payloads = rb.column(rb.schema.get_field_index(payload_col))
-            ts = rb.column(rb.schema.get_field_index(ts_col))
-            out_id, out_band, out_val, out_idx = [], [], [], []
-            for k in range(rb.num_rows):
-                payload = payloads[k].as_py() or b""
-                try:
-                    h = signature(bytes(payload))
-                except Exception:   # isolation: bad item -> no signature
-                    continue
-                mid = mids[k].as_py()
-                for b in range(n_bands):
-                    out_id.append(mid)
-                    out_band.append(b)
-                    out_val.append((h >> (b * width)) % (1 << width))
-                    out_idx.append(k)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, type=pa.string()),
-                 pa.array(out_band, type=pa.int32()),
-                 pa.array(out_val, type=pa.int64()),
-                 ts.take(pa.array(out_idx, type=pa.int32()))],
-                names=["media_id", "band_id", "band_value", ts_col])
-
-    bands = media_stream.select("media_id", payload_col,
-                                F.col(ts_col)).mapInArrow(
-        fn, schema=f"media_id string, band_id int, band_value long, "
-                   f"{ts_col} timestamp").withWatermark(ts_col, watermark)
-
-    state_schema = "first_doc string, first_ts long, last_ts long"
-    out_schema = "media_id string, band_id int, dup_of string"
-    update = _neardup_update_fn(horizon_seconds, ts_col, "media_id", str)
-
-    return (bands.groupBy("band_id", "band_value")
-            .applyInPandasWithState(
-                update, out_schema, state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout))
+    bands = _signature_bands(
+        media_stream, lambda p: signature(bytes(p or b"")),
+        id_col="media_id", id_type="string", src_col=payload_col,
+        ts_col=ts_col, n_bands=n_bands, width=bits // n_bands,
+        watermark=watermark)
+    return _band_state_flags(bands, "band_value", id_col="media_id",
+                             id_type="string", ts_col=ts_col,
+                             horizon_seconds=horizon_seconds)
 
 
 def stream_decontaminate_flags(docs_stream: DataFrame, eval_grams, *,
@@ -389,55 +406,25 @@ def stream_embedding_neardup_flags(emb_stream: DataFrame, planes, *,
     most n_bands flags, so output is linear in arrivals even when a
     band bucket is enormous (no pair explosion by construction).
     """
-    import pyarrow as pa
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     n_bits = len(planes)
     assert n_bits % n_bands == 0
-    width = n_bits // n_bands
     bl = emb_stream.sparkSession.sparkContext.broadcast(
         [[float(x) for x in p] for p in planes])
 
-    def fn(it):
-        ps = bl.value
-        for rb in it:
-            ids = rb.column(rb.schema.get_field_index(id_col))
-            vecs = rb.column(rb.schema.get_field_index(vec_col))
-            ts = rb.column(rb.schema.get_field_index(ts_col))
-            out_id, out_band, out_val, out_idx = [], [], [], []
-            for k in range(rb.num_rows):
-                v = vecs[k].as_py() or []
-                sig = 0
-                for i, p in enumerate(ps):
-                    s = 0.0
-                    for a, b in zip(v, p):  # sequential fold — see doc
-                        s += float(a) * float(b)
-                    if s >= 0.0:
-                        sig |= 1 << i
-                vid = ids[k].as_py()
-                for b in range(n_bands):
-                    out_id.append(vid)
-                    out_band.append(b)
-                    out_val.append((sig >> (b * width)) % (1 << width))
-                    out_idx.append(k)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, type=pa.int64()),
-                 pa.array(out_band, type=pa.int32()),
-                 pa.array(out_val, type=pa.int64()),
-                 ts.take(pa.array(out_idx, type=pa.int32()))],
-                names=[id_col, "band_id", "band_value", ts_col])
+    def sign_bits(v) -> int:
+        sig = 0
+        for i, p in enumerate(bl.value):
+            s = 0.0
+            for a, b in zip(v or [], p):  # sequential fold — see doc
+                s += float(a) * float(b)
+            if s >= 0.0:
+                sig |= 1 << i
+        return sig
 
-    bands = (emb_stream.select(id_col, vec_col, F.col(ts_col))
-             .mapInArrow(fn, schema=f"{id_col} long, band_id int, "
-                                    f"band_value long, {ts_col} timestamp")
-             .withWatermark(ts_col, watermark))
-
-    state_schema = "first_doc long, first_ts long, last_ts long"
-    out_schema = f"{id_col} long, band_id int, dup_of long"
-    update = _neardup_update_fn(horizon_seconds, ts_col, id_col, int)
-
-    return (bands.groupBy("band_id", "band_value")
-            .applyInPandasWithState(
-                update, out_schema, state_schema, "append",
-                GroupStateTimeout.EventTimeTimeout))
+    bands = _signature_bands(
+        emb_stream, sign_bits, id_col=id_col, id_type="long",
+        src_col=vec_col, ts_col=ts_col, n_bands=n_bands,
+        width=n_bits // n_bands, watermark=watermark)
+    return _band_state_flags(bands, "band_value", id_col=id_col,
+                             id_type="long", ts_col=ts_col,
+                             horizon_seconds=horizon_seconds)

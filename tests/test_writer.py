@@ -2,10 +2,12 @@
 golden graph → write RDF/XML → re-parse → isomorphic,
 spec/writer_spec.rb:685-706).
 """
+from pathlib import Path
+
 import pytest
 
 from rdf_rdfxml_spark.parser.grammar import parse_rdfxml
-from rdf_rdfxml_spark.functions.nt import isomorphic, triple_to_nt
+from rdf_rdfxml_spark.functions.nt import isomorphic, parse_nt, triple_to_nt
 from rdf_rdfxml_spark.sources.fixtures import corpus
 from rdf_rdfxml_spark.writer.serialize import serialize_graph
 
@@ -52,6 +54,23 @@ def test_roundtrip_doap():
     assert not errors
     reparsed, xml = _roundtrip(triples)
     assert isomorphic(reparsed, triples), xml
+
+
+def test_doap_style_golden_and_roundtrip():
+    """In-repo DOAP-style document against its hand-written golden:
+    nested typed descriptions, rdf:resource (absolute, relative and
+    fragment), plain, language-tagged and typed literals, a property
+    attribute, anonymous bnodes and five namespaces."""
+    data = Path(__file__).parent / "data"
+    triples, errors = parse_rdfxml(
+        (data / "doap_style.rdf").read_text(),
+        base_uri="https://example.org/widget/doap", doc_key="d")
+    assert not errors
+    gold = parse_nt((data / "doap_style.nt").read_text())
+    assert len(triples) == len(gold) == 28
+    assert isomorphic(triples, gold), sorted(map(triple_to_nt, triples))
+    reparsed, xml = _roundtrip(triples)
+    assert isomorphic(reparsed, gold), xml
 
 
 def test_typed_subject_uses_type_element():

@@ -14,6 +14,7 @@ evidence for the extras the driver never sees).
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
@@ -81,11 +82,13 @@ def main():
     only = set(args[1:])
     assert not any(a.startswith("-") for a in only), only
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from rdf_rdfxml_spark.plans.pipeline import default_session
 
-    spark = default_session(app="oracle-check", master="local[8]",
+    spark = default_session(app="oracle-check",
+                            master=f"local[{len(os.sched_getaffinity(0))}]",
                             shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 

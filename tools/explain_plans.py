@@ -6,9 +6,10 @@ Usage: python tools/explain_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main():
@@ -21,7 +22,8 @@ def main():
     )
     from rdf_rdfxml_spark.plans.pipeline import default_session
 
-    spark = default_session(app="explain", master="local[4]",
+    spark = default_session(app="explain",
+                            master=f"local[{len(os.sched_getaffinity(0))}]",
                             shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

@@ -28,7 +28,9 @@ a value-identity check (ranks / components equal across variants —
 salting never changes results; pagerank's per-round 1e-9 rounding
 absorbs the reordered partial sums).
 
-Usage: python tools/iterative_skew_proof.py [n_edges]  (default 4_000_000)
+Usage: PYSPARK_SUBMIT_ARGS="--driver-memory 12g pyspark-shell" \
+         python tools/iterative_skew_proof.py [n_edges]
+  (default 4_000_000; the driver heap is a launch-time setting)
 Evidence lands in PERF.md §21 + perf_data/iterative_skew.json.
 """
 
@@ -40,7 +42,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from skew_proof import _stages, _task_summary  # noqa: E402
 
@@ -86,27 +88,23 @@ def _measure(spark, ui, app_id, fn):
 
 def main():
     n_edges = int(sys.argv[1]) if len(sys.argv) > 1 else 4_000_000
-    from pyspark.sql import SparkSession
     from rdf_rdfxml_spark.operators.graph import (
         connected_components, pagerank,
     )
+    from rdf_rdfxml_spark.plans.pipeline import default_session
 
-    spark = (SparkSession.builder.appName("iterative-skew-proof")
-             .master("local[8]")
-             .config("spark.driver.memory", "12g")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.adaptive.enabled", "true")
-             # ranks/labels must NOT auto-broadcast: at scale the node
-             # table is data-sized — the per-round shuffle join is the
-             # thing under test
-             .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-             .getOrCreate())
+    cpus = len(os.sched_getaffinity(0))
+    spark = default_session(app="iterative-skew-proof",
+                            master=f"local[{cpus}]", shuffle_partitions=32)
+    # ranks/labels must NOT auto-broadcast: at scale the node table is
+    # data-sized — the per-round shuffle join is the thing under test
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.setLogLevel("ERROR")
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
     out = {"n_edges": n_edges, "protocol":
            "interleaved A/B rounds, best-of-2, all samples printed; "
-           "local[8], 32 shuffle partitions, auto-broadcast off"}
+           f"local[{cpus}], 32 shuffle partitions, auto-broadcast off"}
 
     # --- pagerank: hub holds 90% of OUT-edges -------------------------
     # node 0 = hub; dst uniform over 100k nodes; 10% uniform srcs

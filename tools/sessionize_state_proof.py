@@ -32,7 +32,9 @@ one watermark+batch-span horizon. State is bounded by keys active per
 horizon, which that corpus made equal to all of them; the time-shifted
 corpus separates the two quantities.
 
-Usage: python tools/sessionize_state_proof.py   (~2 min; quiet host)
+Usage: PYSPARK_SUBMIT_ARGS="--driver-memory 8g pyspark-shell" \
+         python tools/sessionize_state_proof.py
+  (~2 min; quiet host; the driver heap is a launch-time setting)
 Evidence lands in BASELINE.md (round-5 section).
 """
 
@@ -45,7 +47,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPLICATE = 10
@@ -53,17 +55,16 @@ N_FILES = 30
 
 
 def main():
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
+    from rdf_rdfxml_spark.plans.pipeline import default_session
     from rdf_rdfxml_spark.streaming.sessionize import (
         sessionize_batch, sessionize_stream,
     )
 
-    spark = (SparkSession.builder.appName("sessionize-state-proof")
-             .master("local[8]")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.driver.memory", "8g")
-             .getOrCreate())
+    spark = default_session(
+        app="sessionize-state-proof",
+        master=f"local[{len(os.sched_getaffinity(0))}]",
+        shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
 
     base = os.path.join(tempfile.gettempdir(), "rdfxml_spark_scratch",

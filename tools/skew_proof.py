@@ -20,7 +20,9 @@ path, reader.rb:692), encodes it through all three paths —
 heaviest new stage (Spark REST API taskSummary quantiles). Evidence
 lands in PERF.md §18.
 
-Usage: python tools/skew_proof.py [n_rows]  (default 2_000_000)
+Usage: PYSPARK_SUBMIT_ARGS="--driver-memory 8g pyspark-shell" \
+         python tools/skew_proof.py [n_rows]
+  (default 2_000_000; the driver heap is a launch-time setting)
 Quiet host only (CLAUDE.md noisy-neighbor protocol): interleaved
 variant order A/B/C/D repeated, all samples printed, best-of per
 variant reported.
@@ -29,9 +31,12 @@ variant reported.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _stages(ui: str, app_id: str) -> dict:
@@ -50,22 +55,18 @@ def _task_summary(ui: str, app_id: str, stage_id: int, attempt: int):
 
 def main():
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
-    sys.path.insert(0, "/root/repo")
     from rdf_rdfxml_spark.operators.linking import (
         build_term_dictionary, detect_hot_keys, encode_triples,
     )
-    from pyspark.sql import SparkSession
+    from rdf_rdfxml_spark.plans.pipeline import default_session
 
-    spark = (SparkSession.builder.appName("skew-proof")
-             .master("local[8]")
-             .config("spark.driver.memory", "8g")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.adaptive.enabled", "true")
-             # statistics-based broadcast stays OFF so the unsalted and
-             # salted variants measure real shuffle joins; the broadcast
-             # variant raises the threshold for its own run
-             .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-             .getOrCreate())
+    spark = default_session(
+        app="skew-proof", master=f"local[{len(os.sched_getaffinity(0))}]",
+        shuffle_partitions=32)
+    # statistics-based broadcast stays OFF so the unsalted and salted
+    # variants measure real shuffle joins; the broadcast variant raises
+    # the threshold for its own run
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.setLogLevel("ERROR")
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId

@@ -28,7 +28,9 @@ Pass criteria (printed + asserted):
     dup_of = the epoch's first doc) — the event-time-deterministic
     semantics are batching-invariant on both legs.
 
-Usage: python tools/stream_neardup_state_proof.py   (~4 min; quiet host)
+Usage: PYSPARK_SUBMIT_ARGS="--driver-memory 8g pyspark-shell" \
+         python tools/stream_neardup_state_proof.py
+  (~4 min; quiet host; the driver heap is a launch-time setting)
 Evidence lands in BASELINE.md (round-6 section) +
 perf_data/stream_neardup_state_10x.json.
 """
@@ -43,7 +45,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 HORIZON_S = 3600
@@ -52,21 +54,20 @@ BASE_TS = 1700000000
 
 
 def main():
-    from pyspark.sql import SparkSession, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
     from rdf_rdfxml_spark.operators.sketch import minhash_bands
+    from rdf_rdfxml_spark.plans.pipeline import default_session
     from rdf_rdfxml_spark.streaming.stream import stream_neardup_flags
 
-    spark = (SparkSession.builder.appName("neardup-state-proof")
-             .master("local[8]")
-             .config("spark.sql.shuffle.partitions", "16")
-             .config("spark.driver.memory", "8g")
-             # keep every batch's progress: the 10x leg runs 100
-             # microbatches and the default recent-progress buffer also
-             # holds 100 — one short and the peak could clip silently
-             .config("spark.sql.streaming.numRecentProgressUpdates",
-                     "250")
-             .getOrCreate())
+    spark = default_session(
+        app="neardup-state-proof",
+        master=f"local[{len(os.sched_getaffinity(0))}]",
+        shuffle_partitions=16)
+    # keep every batch's progress: the 10x leg runs 100 microbatches and
+    # the default recent-progress buffer also holds 100 — one short and
+    # the peak could clip silently
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "250")
     spark.sparkContext.setLogLevel("ERROR")
 
     base = os.path.join(tempfile.gettempdir(), "rdfxml_spark_scratch",

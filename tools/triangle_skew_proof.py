@@ -32,7 +32,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = len(os.sched_getaffinity(0))
 ATTEMPTS = int(os.environ.get("SPARK_GRAFT_BENCH_N", "3"))
 
 
@@ -51,10 +51,12 @@ def _edges(spark, n: int):
 def main():
     from pyspark.sql import functions as F
 
-    from bench import _mk_session
     from rdf_rdfxml_spark.operators.graph import triangle_counts
+    from rdf_rdfxml_spark.plans.pipeline import default_session
 
-    spark = _mk_session(CPUS)
+    spark = default_session(app="triangle-skew-proof",
+                            master=f"local[{CPUS}]",
+                            shuffle_partitions=max(2 * CPUS, 8))
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
 

@@ -26,7 +26,9 @@ Every variant is count-verified identical. Per-variant: wall, the
 heaviest stage's per-task duration quantiles (Spark REST taskSummary),
 straggler ratio = max/median task. Evidence lands in PERF.md §20.
 
-Usage: python tools/twohop_skew_proof.py [n_rows]  (default 8_000_000)
+Usage: PYSPARK_SUBMIT_ARGS="--driver-memory 12g pyspark-shell" \
+         python tools/twohop_skew_proof.py [n_rows]
+  (default 8_000_000; the driver heap is a launch-time setting)
 """
 
 from __future__ import annotations
@@ -37,26 +39,24 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from skew_proof import _stages, _task_summary  # noqa: E402
 
 
 def main():
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 8_000_000
-    from pyspark.sql import SparkSession
     from rdf_rdfxml_spark.operators.graph import salted_join
+    from rdf_rdfxml_spark.plans.pipeline import default_session
 
-    spark = (SparkSession.builder.appName("twohop-skew-proof")
-             .master("local[8]")
-             .config("spark.driver.memory", "12g")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.adaptive.enabled", "true")
-             # hop2 must NOT auto-broadcast: at scale it is the full
-             # triple table (broadcasting it is exactly what a real
-             # cluster cannot do), so the shuffle join is what's measured
-             .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-             .getOrCreate())
+    spark = default_session(
+        app="twohop-skew-proof",
+        master=f"local[{len(os.sched_getaffinity(0))}]",
+        shuffle_partitions=32)
+    # hop2 must NOT auto-broadcast: at scale it is the full triple table
+    # (broadcasting it is exactly what a real cluster cannot do), so the
+    # shuffle join is what's measured
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.sparkContext.setLogLevel("ERROR")
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
