@@ -13,6 +13,9 @@ throughput line ("Parsed N statements in S seconds @ R statements/second.",
 script/parse:42), N observed on the write job. ``--resume-manifest`` runs
 ``resumable_run`` with the same options: parquet only, nested
 ``unit=U/bucket=B`` (errors ``unit=U``), N counting this invocation's rows.
+Parquet writes rebalance on their partition columns, so each partition
+directory holds one file per AQE-sized partition: ``--buckets`` sets the
+pruning grain, not the file size.
 """
 
 from __future__ import annotations

@@ -4,10 +4,15 @@ Triples are written as Parquet partitioned by a hash bucket of the subject
 (``bucket=B``, ``pmod(xxhash64(s), n_buckets)``): subject-co-located
 partitions make downstream graph joins (s↔s merges, star queries)
 partition-prunable, and hashing avoids the skew a ``repo`` partition would
-have at 10¹²-file scale (one giant repo ≠ one giant partition). Bucket
-count is the knob to keep files near the 128 MB–1 GB sweet spot.
-:func:`materialize` is the one triples writer (CLI, resume, streaming); it
-returns the rows written, counted by an ``Observation`` on the write job.
+have at 10¹²-file scale (one giant repo ≠ one giant partition). Every
+write rebalances on its partition columns (the REBALANCE hint) just before
+``partitionBy``, so a ``bucket=B`` directory holds one file per AQE-sized
+partition rather than one per upstream scan task: AQE sizes the
+partitions (``advisoryPartitionSizeInBytes``) and splits an oversized
+bucket into files near that size. File size therefore comes from AQE; the
+bucket count sets only the pruning grain. :func:`materialize` is the one
+triples writer (CLI, resume, streaming); it returns the rows written,
+counted by an ``Observation`` on the write job.
 
 Resume protocol (D5): documents are assigned to deterministic work units
 ``unit = (first 60 bits of sha256(content)) mod n_units`` — a pure function
@@ -23,7 +28,6 @@ after a crash at any point, the re-run leaves exactly the one-shot output.
 
 from __future__ import annotations
 
-import time
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -42,7 +46,9 @@ def _write(df: DataFrame, path: str, mode: str, n_units: int | None,
     if n_units:   # resume layout: overwrite only the units df carries
         df = df.withColumn("unit", unit_expr(F.col("doc_sha"), n_units))
         cols = ("unit",) + cols
-    w = df.write.mode(mode).option(
+    # one file per partition directory per AQE-sized partition; never a
+    # fixed count, which would make one task per bucket at any scale
+    w = df.hint("rebalance", *cols).write.mode(mode).option(
         "partitionOverwriteMode", "dynamic" if n_units else "static")
     (w.partitionBy(*cols) if cols else w).parquet(path)
 
@@ -102,8 +108,10 @@ def pending_units(spark: SparkSession, documents_with_units: DataFrame,
 
 def record_units(spark: SparkSession, units: list[int],
                  manifest_path: str) -> None:
-    rows = [(int(u), int(time.time())) for u in units]
-    spark.createDataFrame(rows, "unit int, completed_at long") \
+    """Append ``units`` to the manifest (one ``unit int`` column; manifests
+    that also carry an older ``completed_at`` column still resume, since
+    :func:`pending_units` reads ``unit`` alone)."""
+    spark.createDataFrame([(int(u),) for u in units], "unit int") \
         .write.mode("append").parquet(manifest_path)
 
 

@@ -2,8 +2,12 @@
 (construct_graph → materialize), the resumable run and the streaming
 ingest give the same triples and the same error rows under the same
 options — also after a resumable run crashes between its data write and
-its manifest write."""
+its manifest write. Every write leaves one file per partition
+directory, and a manifest written before the ``unit``-only schema still
+resumes."""
+import re
 from collections import Counter
+from pathlib import Path
 
 import pytest
 
@@ -122,3 +126,54 @@ def test_resume_after_crash_before_manifest_equals_one_shot(
     want_triples, want_errors = _plain(spark, docs_path, tmp_path)
     assert triples == want_triples
     assert errors == want_errors
+
+
+def _files_per_dir(root):
+    """{partition directory relative to ``root``: its parquet file count}."""
+    root = Path(root)
+    return dict(Counter(str(f.parent.relative_to(root))
+                        for f in root.rglob("*.parquet")))
+
+
+def test_each_partition_directory_holds_one_file(spark, docs_path, tmp_path):
+    """Writes rebalance on their partition columns: the fixture corpus is
+    three scan partitions, yet every ``bucket=B``, ``unit=U/bucket=B`` and
+    errors ``unit=U`` directory (and the plain errors directory) holds
+    exactly one file, not one per upstream task."""
+    _plain(spark, docs_path, tmp_path)
+    _resumed(spark, docs_path, tmp_path, "resumed")
+    layouts = {name: _files_per_dir(tmp_path / name) for name in
+               ("plain", "plain_errors", "resumed", "resumed_errors")}
+    assert set(layouts["plain"]) == {f"bucket={b}" for b in range(4)}
+    assert list(layouts["plain_errors"]) == ["."]
+    assert all(re.fullmatch(r"unit=\d+/bucket=\d+", d)
+               for d in layouts["resumed"])
+    assert all(re.fullmatch(r"unit=\d+", d)
+               for d in layouts["resumed_errors"])
+    for name, layout in layouts.items():
+        assert set(layout.values()) == {1}, (name, layout)
+
+
+def test_resume_over_old_schema_manifest(spark, docs_path, tmp_path):
+    """A manifest that also carries the older ``completed_at`` column
+    still resumes: its units are skipped, the rest run, and the mixed
+    manifest then leaves nothing pending."""
+    n_units = RESUME["n_units"]
+    docs = spark.read.parquet(docs_path)
+    all_units = sorted(r["unit"] for r in mat.assign_units(docs, n_units)
+                       .select("unit").distinct().collect())
+    done = all_units[:len(all_units) // 2]
+    manifest = str(tmp_path / "old_manifest")
+    spark.createDataFrame([(u, 0) for u in done],
+                          "unit int, completed_at long") \
+        .write.parquet(manifest)
+
+    out = str(tmp_path / "old")
+    stats = mat.resumable_run(spark, docs, out, manifest, **RESUME)
+    assert stats["units_total"] == len(all_units) - len(done)
+    want, _ = _plain(spark, docs_path, tmp_path)
+    pending = Counter({t: n for t, n in want.items()
+                       if int(t[-1][:15], 16) % n_units not in done})
+    assert _bag(spark.read.parquet(out), TRIPLE_COLS) == pending
+    again = mat.resumable_run(spark, docs, out, manifest, **RESUME)
+    assert again["units_total"] == 0

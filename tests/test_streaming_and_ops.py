@@ -174,7 +174,7 @@ def test_cli_end_to_end(spark, tmp_path):
         [sys.executable, "-m", "rdf_rdfxml_spark.cli", "--input", src,
          "--output", out, "--errors-output", err, "--master", "local[4]",
          "--buckets", "4"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300)
+        capture_output=True, text=True, cwd=REPO, timeout=300)
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "statements/second." in proc.stdout
     assert spark.read.parquet(out).count() > 0
@@ -223,7 +223,7 @@ def test_dist_zip_importable(tmp_path):
     import subprocess as sp
     import sys as _sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(REPO / "tools"))
     import package as pkg
     zip_path = tmp_path / "rdf_rdfxml_spark.zip"
     pkg.build(zip_path)
@@ -241,7 +241,7 @@ def test_dist_zip_importable(tmp_path):
          "t, e = m.parse_rdfxml('<x/>', doc_key='z'); "
          "el = xmldom.parse_document('<a/>'); "
          "print('OK', len(e))"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO,
         env={"PATH": "/usr/bin:/bin", "PYTHONPATH": ""})
     assert r.returncode == 0, r.stderr
     assert r.stdout.strip().startswith("OK")
@@ -802,7 +802,7 @@ def test_cli_rdfxml_format(spark, tmp_path):
         [sys.executable, "-m", "rdf_rdfxml_spark.cli", "--input", src,
          "--output", out, "--format", "rdfxml", "--no-strict",
          "--master", "local[4]"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300)
+        capture_output=True, text=True, cwd=REPO, timeout=300)
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "statements/second." in proc.stdout
     got = spark.read.parquet(out)
