@@ -2186,7 +2186,7 @@ def _training_corpus_oracle() -> str:
     noncanon AS (SELECT node FROM comp WHERE node != component),
     k2 AS (SELECT * FROM k1
            WHERE doc_id NOT IN (SELECT node FROM noncanon)),
-    k3 AS (SELECT * FROM k2
+    k3 AS MATERIALIZED (SELECT * FROM k2
            WHERE len(string_split(text, ' ')) >= 20
              AND len(list_distinct(string_split(text, ' '))) /
                  CAST(len(string_split(text, ' ')) AS DOUBLE) >= 0.3),

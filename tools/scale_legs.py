@@ -1,7 +1,11 @@
 """Scale legs: each group measures one operator family on a corpus that
 grows by an integer scale factor, with the same plans at every scale, and
 reports per op the min, the median and every sample plus the wall ratio
-of each scale to the first.
+of each scale to the first. Each group also declares the invariant its
+protocol keeps (what must scale by k, stay fixed or hold at every
+scale); the runner checks it after the last scale, and a broken
+invariant makes the run exit non-zero naming the group, field and scale:
+a wall ratio from a leg whose work does not scale explains nothing.
 
 Usage: SPARK_GRAFT_SF_DIR=DIR python tools/scale_legs.py GROUP...
            [--scales lo,hi[,...]]
@@ -12,28 +16,45 @@ Usage: SPARK_GRAFT_SF_DIR=DIR python tools/scale_legs.py GROUP...
   --scales  comma-separated, strictly increasing integer scale factors.
 
 Env: SPARK_GRAFT_SF_DIR (required: a scale-factor directory holding
-documents.parquet and embeddings.parquet), SPARK_GRAFT_BENCH_N (timed
-attempts per op, default 3). The session is local[<CPUs this process may
-run on>]; pin the process with ``taskset`` to measure fewer cores.
+documents.parquet, embeddings.parquet and events.parquet),
+SPARK_GRAFT_BENCH_N (timed attempts per op, default 3). The session is
+local[<CPUs this process may run on>]; pin the process with ``taskset``
+to measure fewer cores. The streaming state groups run up to 30·scale
+micro-batches in the one Spark driver; give large legs driver heap at
+launch (``PYSPARK_SUBMIT_ARGS="--driver-memory 8g pyspark-shell"``).
 
-Corpora grow by one of two replication protocols:
+Corpora grow by one of three replication protocols:
 
-* rotation (``rotated_documents`` / ``rotated_embeddings``): replica r
-  rotates the alphabet by r (``translate``) or the vector dimensions by r.
-  Both are bijections, so near-dup structure within a replica is exactly
-  preserved. Rotated texts share almost no shingles across replicas
-  (sf0.01: minhash pairs 25 at 1x, 270 at 10x, not the ~45x a plain copy
-  gives); rotated vectors stay correlated (IVF pairs 59 at 1x, 4,056 at
-  10x).
-* copymark (``copymark_documents`` / ``copied_embeddings``): copy k
-  offsets the id by k·10^9 and appends the token ``copymark<k>`` to the
-  text, so texts stay distinct while sharing nearly all n-grams — the
-  adversarial case for decontamination, span and line dedup. Vectors are
-  copied with offset ids only.
+* rotation (``rotated_documents``): replica r rotates the alphabet by r
+  (``translate``), a bijection, so near-dup structure within a replica
+  is exactly preserved and replicas share almost no shingles (sf0.01:
+  minhash pairs 25 at 1x, 270 at 10x).
+* signed permutation (``signed_permuted``): replica r maps every vector
+  by one orthogonal map seeded by r, a permutation of the dimensions
+  plus sign flips, so every within-replica cosine is exactly preserved.
+  The sf embeddings are i.i.d., so across replicas cosines are as
+  random as within one: pairs above a fixed threshold grow like the
+  number of vector pairs (k²), and no map that keeps the dimensions can
+  avoid that (for isotropic vectors the mean squared cross-replica
+  cosine is 1/d under any orthogonal map). Near-dup twins (``recall``)
+  are made per replica, so there are 50·k positives.
+* copymark (``copymark_documents``): copy k offsets the id by k·10^9 and
+  appends the token ``copymark<k>`` to the text, so texts stay distinct
+  while sharing nearly all n-grams — the adversarial case for
+  decontamination, span and line dedup.
 
-Scale 1 is the table itself under either protocol. Prints one JSON line
-and one ``[scale]`` stderr line per op. Timings are only comparable
-within one run on a quiet host.
+Scale 1 is the table itself under every protocol. The two streaming
+state groups (``sessionize_state``, ``neardup_state``) replicate into
+disjoint keys and disjoint event-time windows, so the stream is k times
+as long at the same instantaneous rate, and share one driver
+(``stream_state``): the leg is written as ts-ordered files, their count
+proportional to scale so every micro-batch spans the same event time
+(state expires at batch boundaries; a fixed file count measures the
+batching, not the operator), then streamed one file per micro-batch
+under ``availableNow`` with a fresh checkpoint and output per timed
+attempt; every batch's ``stateOperators`` metrics are read, none
+dropped. Prints one JSON line and one ``[scale]`` stderr line per op.
+Timings are only comparable within one run on a quiet host.
 """
 
 from __future__ import annotations
@@ -44,6 +65,7 @@ import os
 import statistics
 import string
 import sys
+import tempfile
 import time
 from dataclasses import dataclass
 from functools import reduce
@@ -65,6 +87,7 @@ from rdf_rdfxml_spark.operators.metrics import skew_ratio  # noqa: E402
 from rdf_rdfxml_spark.plans.pipeline import (  # noqa: E402
     construct_graph, default_session,
 )
+from rdf_rdfxml_spark.streaming import sessionize, stream  # noqa: E402
 
 
 # ---------------------------------------------------------------- runner --
@@ -141,7 +164,56 @@ class Group:
     scales: tuple[int, ...]
     corpus: Callable      # (spark, sf_dir, scale, spread) -> {name: frame}
     ops: tuple[Op, ...]
+    # results at all scales -> [(field, scale, why)] violations
+    invariant: Callable[[dict], list]
     persist: bool = True  # persist + count every frame for the leg
+
+
+class Broken(RuntimeError):
+    """A group broke its invariant; ``out`` holds its results."""
+
+    def __init__(self, out: dict, violations: list[str]):
+        super().__init__("; ".join(violations))
+        self.out = out
+
+
+def _field(leg: dict, path: str):
+    """``op.field`` of one leg's results, or a corpus count ``n_<frame>``."""
+    op, _, field = path.partition(".")
+    return leg[op][field] if field else leg[op]
+
+
+def keeps(*checks):
+    """Invariant from ``(field, ok, rule)`` checks: ``ok(v, first, k)``
+    must hold at every scale for the field's value ``v`` there, its value
+    ``first`` at the first scale and the scale ratio ``k``."""
+    def violations(out: dict) -> list:
+        s0 = out["scales"][0]
+        bad = []
+        for path, ok, rule in checks:
+            first = _field(out[f"{s0}x"], path)
+            for s in out["scales"]:
+                v = _field(out[f"{s}x"], path)
+                if not ok(v, first, s / s0):
+                    got = "" if isinstance(v, dict) else f"{v!r} "
+                    bad.append((path, s, f"{got}breaks '{rule}'"))
+        return bad
+    return violations
+
+
+def linear(path: str, tol: float = 0.0):
+    """``path`` scales by k, within ``tol`` of k × its first value."""
+    return (path, lambda v, first, k: abs(v - k * first) <= tol * k * first,
+            f"k × first ± {tol:.0%}")
+
+
+def fixed(path: str):
+    return (path, lambda v, first, k: v == first, "same at every scale")
+
+
+def holds(path: str, ok, rule: str):
+    """``ok(v)`` at every scale."""
+    return (path, lambda v, first, k: ok(v), rule)
 
 
 def run_group(spark, group: Group, scales, sf_dir: str,
@@ -173,6 +245,10 @@ def run_group(spark, group: Group, scales, sf_dir: str,
                   f"min={out[f'{scales[0]}x'][op]['min_s']}s -> {s} "
                   f"min={out[s][op]['min_s']}s ({ratios[op]}x)",
                   file=sys.stderr)
+    bad = [f"{group.name}.{path} at {s}x: {why}"
+           for path, s, why in group.invariant(out)]
+    if bad:
+        raise Broken(out, bad)
     return out
 
 
@@ -200,14 +276,17 @@ def _embeddings(spark, sf_dir: str):
         "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS v")
 
 
-def rotated_embeddings(spark, sf_dir: str, scale: int):
-    return _copies(
-        _embeddings(spark, sf_dir), scale,
-        lambda b, r: b.selectExpr(
-            f"vec_id + {r} * 10000000 AS vec_id",
-            "v" if r == 0 else
-            f"concat(slice(v, {r + 1}, size(v) - {r}), slice(v, 1, {r})) "
-            "AS v"))
+def signed_permuted(base, scale: int):
+    """Replica r maps every vector by one orthogonal map seeded by r: the
+    dimensions in xxhash64(r, i) order, each sign-flipped when
+    xxhash64(r, i, 1) is odd."""
+    return _copies(base, scale, lambda b, r: b.selectExpr(
+        f"vec_id + {r} * 10000000 AS vec_id",
+        "v" if r == 0 else
+        "transform(array_sort(transform(sequence(0, size(v) - 1), "
+        f"i -> named_struct('h', xxhash64({r}, i), 'i', i))), "
+        f"x -> IF((xxhash64({r}, x.i, 1) & 1) = 0, v[x.i], -v[x.i])) "
+        "AS v"))
 
 
 def copymark_documents(spark, sf_dir: str, scale: int):
@@ -220,14 +299,6 @@ def copymark_documents(spark, sf_dir: str, scale: int):
                              F.lit(f" copymark{k}")).alias("text")))
 
 
-def copied_embeddings(spark, sf_dir: str, scale: int):
-    return _copies(
-        _embeddings(spark, sf_dir), scale,
-        lambda b, k: b.select(
-            (F.col("vec_id") + F.lit(k * 1_000_000_000)).alias("vec_id"),
-            "v"))
-
-
 def _lined(docs):
     """Every document framed by a per-language header and a shared
     footer: the boilerplate that line dedup removes. Every copy shares
@@ -238,6 +309,51 @@ def _lined(docs):
                  F.lit(" home about contact\n\n"), F.col("text"),
                  F.lit("\nPowered by ExampleCMS\nCOPYRIGHT "),
                  F.col("lang")).alias("text"))
+
+
+def shifted_events(spark, sf_dir: str, scale: int):
+    """Replica r: user ids + 10,000·r, timestamps + 31·r days — disjoint
+    keys in disjoint windows, the same concurrency as the table. Every
+    replica, the first too, casts ``ts`` to TIMESTAMP: a watermark needs
+    it."""
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return reduce(lambda a, b: a.unionByName(b), [ev.selectExpr(
+        f"user_id + {10000 * r} AS user_id",
+        f"CAST(ts + make_interval(0,0,0,{31 * r},0,0,0) AS TIMESTAMP) AS ts",
+        "value") for r in range(scale)])
+
+
+HORIZON_S = 3600
+
+
+def ingested_documents(spark, sf_dir: str, scale: int):
+    """Rotated documents arriving one per 21 s, replica r 32·r hours
+    later (disjoint buckets in disjoint windows), plus every 5th
+    document re-ingested 2 min later under a new id: the in-horizon
+    duplicate the near-dup flags exist for."""
+    d = rotated_documents(spark, sf_dir, scale)
+    t = ("1700000000 + (doc_id DIV 10000000) * 115200"
+         " + (doc_id % 10000000) * 21")
+    return d.selectExpr("doc_id", "text",
+                        f"CAST({t} AS TIMESTAMP) AS ingested_at").unionByName(
+        d.filter("doc_id % 5 = 0").selectExpr(
+            "doc_id + 1000000 AS doc_id", "text",
+            f"CAST({t} + 120 AS TIMESTAMP) AS ingested_at"))
+
+
+def _hub_cliques(spark, n: int):
+    """n nodes in 5-cliques plus one hub linked to every node: the
+    celebrity-entity shape. After (degree, id) orientation every node's
+    out-degree is at most 5, so oriented wedges are 4 per node, while the
+    naive hub wedge count is C(n, 2)."""
+    ids = spark.range(n).select(F.col("id").alias("i"))
+    clique = ids.selectExpr(
+        "concat('d', i) AS src",
+        "explode(filter(transform(sequence(1, 4), x -> i - (i % 5) + "
+        f"(i % 5 + x) % 5), j -> j > i AND j < {n})) AS jj") \
+        .selectExpr("src", "concat('d', jj) AS dst")
+    return clique.unionByName(
+        ids.selectExpr("'h' AS src", "concat('d', i) AS dst"))
 
 
 # ------------------------------------------------------------------- ops --
@@ -303,10 +419,15 @@ def _centroids(leg):
 
 
 def _ivf_dedup(leg):
+    """Also records the cosine work: Σ C(m, 2) over the probed cells
+    (``nprobe=4``, the op's default), the per-cell all-pairs the dedup
+    evaluates."""
     e, c = leg.frames["vectors"], _centroids(leg)
     pairs = leg.time(lambda: ann.dedup_embedding_bucketed(
         e, centroids=c, n_cells=len(c)).count())
-    return {"pairs": pairs, "cells": 8 * leg.scale}
+    work = (ann.ivf_assign(e, centroids=c, nprobe=4).groupBy("cell_id")
+            .count().selectExpr("sum(count * (count - 1) DIV 2)").first())
+    return {"pairs": pairs, "cells": 8 * leg.scale, "cell_pairs": work[0]}
 
 
 def _true_pairs(leg) -> set:
@@ -456,6 +577,132 @@ def _modality_op(name: str):
     return run
 
 
+def _triangles(leg):
+    """Timed triangle count, then the oriented wedge rows (the join
+    input) and the largest oriented out-degree, next to the naive hub
+    wedge count they replace and the closed form: 20 triangles per
+    5-clique with the hub, 3 memberships each."""
+    e, n = leg.frames["edges"], 20_000 * leg.scale
+    total = leg.time(lambda: int(graph.triangle_counts(e).agg(
+        F.sum("n_triangles")).collect()[0][0]))
+    und = (e.selectExpr("least(src, dst) AS a", "greatest(src, dst) AS b")
+           .filter("a <> b").distinct())
+    deg = (und.selectExpr("a AS node").unionAll(und.selectExpr("b AS node"))
+           .groupBy("node").count())
+    w = (und.join(deg.selectExpr("node AS a", "count AS da"), "a")
+         .join(deg.selectExpr("node AS b", "count AS db"), "b")
+         .selectExpr("CASE WHEN da < db OR (da = db AND a < b) THEN a "
+                     "ELSE b END AS u")
+         .groupBy("u").count()
+         .selectExpr("sum(count * (count - 1) DIV 2) AS wedges",
+                     "max(count) AS outdeg").first())
+    return {"oriented_wedges": int(w["wedges"]),
+            "max_oriented_outdeg": int(w["outdeg"]),
+            "naive_hub_wedges": n * (n - 1) // 2,
+            "triangle_memberships_sum": total,
+            "expected_memberships": (n // 5) * 20 * 3}
+
+
+def _ts_files(df, ts: str, n: int, path: str):
+    """``df`` as ``n`` files in ``ts`` order, one append each: split at
+    the ``ntile(n)`` bounds of ``ts``, written in order so file mtimes
+    follow event time (a file stream lists new files by mtime)."""
+    bounds = (df.selectExpr(f"ntile({n}) OVER (ORDER BY {ts}) AS b", ts)
+              .groupBy("b").agg(F.max(ts).alias("hi"))
+              .orderBy("b").collect())
+    lo = None
+    for row in bounds:
+        part = df.filter(F.col(ts) <= row["hi"])
+        if lo is not None:
+            part = part.filter(F.col(ts) > lo)
+        part.coalesce(1).write.mode("append").parquet(path)
+        lo = row["hi"]
+        time.sleep(0.05)  # distinct mtimes
+
+
+def stream_state(frame: str, ts: str, files: int, query, check):
+    """Op over a stateful streaming operator, the one driver of the state
+    groups: ``frame`` goes out as ``files``·scale ts-ordered files and
+    streams one file per micro-batch under ``availableNow`` through
+    ``query``; each timed attempt writes a fresh checkpoint and output.
+    Returns every batch's state metrics and ``check(frame, output)``."""
+    def run(leg):
+        df = leg.frames[frame]
+        spark = df.sparkSession
+        n = files * leg.scale
+        # the progress buffer (100 by default) must hold every batch: n
+        # data batches and the no-data batches that fire timeouts
+        spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
+                       str(2 * n + 2))
+        with tempfile.TemporaryDirectory(prefix="scale_legs_") as tmp:
+            _ts_files(df, ts, n, f"{tmp}/in")
+            runs: list = []
+
+            def attempt():
+                out = f"{tmp}/out{len(runs)}"
+                q = (query(spark.readStream.schema(df.schema)
+                           .option("maxFilesPerTrigger", 1)
+                           .parquet(f"{tmp}/in"))
+                     .writeStream.format("parquet").option("path", out)
+                     .option("checkpointLocation", f"{tmp}/ckpt{len(runs)}")
+                     .trigger(availableNow=True).start())
+                runs.append(out)
+                q.awaitTermination()
+                return q.recentProgress
+
+            progress = leg.time(attempt)
+            batches = [{"batch": p["batchId"],
+                        "rows_in": p["numInputRows"],
+                        "state_rows": op["numRowsTotal"],
+                        "updated": op["numRowsUpdated"],
+                        "removed": op["numRowsRemoved"]}
+                       for p in progress for op in p["stateOperators"]]
+            if [b["batch"] for b in batches] != list(range(len(batches))):
+                raise RuntimeError("streaming progress lost a batch")
+            result = check(df, spark.read.parquet(runs[-1]))
+        return {"n_batches": len(batches),
+                "peak_state_rows": max(b["state_rows"] for b in batches),
+                "final_state_rows": batches[-1]["state_rows"],
+                "state_removed_total": sum(b["removed"] for b in batches),
+                **result, "batches": batches}
+    return run
+
+
+def _sessions(events, out):
+    """Emitted sessions, the batch sessionizer's count on the same
+    events and the users."""
+    batch = sessionize.sessionize_batch(events.selectExpr(
+        "user_id", "ts", "value", "CAST(0 AS LONG) AS event_id")).count()
+    return {"n_users": events.select("user_id").distinct().count(),
+            "emitted_sessions": out.count(), "batch_sessions": batch}
+
+
+def _epoch_flags(docs, out):
+    """The stream's flags against the batch epoch rule: per band bucket
+    in (ts, doc_id) order, an arrival more than the horizon after the
+    previous one opens an epoch, and every row of an epoch but its first
+    document is flagged with ``dup_of`` = that document."""
+    b = sketch.minhash_bands(docs, passthrough="ingested_at").selectExpr(
+        "doc_id", "band_id", "band_hash",
+        "CAST(unix_timestamp(ingested_at) AS LONG) AS ts")
+    w = Window.partitionBy("band_id", "band_hash").orderBy("ts", "doc_id")
+    e = (b.withColumn("prev_ts", F.lag("ts").over(w))
+         .withColumn("brk", F.expr(
+             f"CASE WHEN prev_ts IS NULL OR ts > prev_ts + {HORIZON_S} "
+             "THEN 1 ELSE 0 END"))
+         .withColumn("epoch", F.sum("brk").over(
+             w.rowsBetween(Window.unboundedPreceding, 0))))
+    want = (e.withColumn("first_doc", F.expr(
+        "min_by(doc_id, struct(ts, doc_id))").over(
+        Window.partitionBy("band_id", "band_hash", "epoch")))
+        .filter("doc_id != first_doc")
+        .selectExpr("doc_id", "band_id", "first_doc AS dup_of"))
+    got = out.select("doc_id", "band_id", "dup_of").distinct()
+    return {"flags": got.count(),
+            "flags_match_batch_rule": got.subtract(want).isEmpty()
+            and want.subtract(got).isEmpty()}
+
+
 # ----------------------------------------------------------------- table --
 
 def _spread(documents):
@@ -466,15 +713,16 @@ def _spread(documents):
 
 def _vectors(twins: bool):
     def corpus(spark, sf_dir, scale, spread):
-        v = rotated_embeddings(spark, sf_dir, scale).repartition(spread)
-        return {"vectors": ann.with_neardup_twins(v) if twins else v}
+        e = _embeddings(spark, sf_dir)
+        e = ann.with_neardup_twins(e) if twins else e
+        return {"vectors": signed_permuted(e, scale).repartition(spread)}
     return corpus
 
 
 def _lm_pq_corpus(spark, sf_dir, scale, spread):
     return {"docs": copymark_documents(spark, sf_dir, scale)
             .repartition(spread),
-            "vectors": copied_embeddings(spark, sf_dir, scale)
+            "vectors": signed_permuted(_embeddings(spark, sf_dir), scale)
             .repartition(spread)}
 
 
@@ -483,13 +731,27 @@ def _media(spark, sf_dir, scale, spread):
             for name, ((n, nb), synth, *_) in _MODALITIES.items()}
 
 
+PAIRS = 0.25     # tolerance for data-dependent pair counts
+
+
+def _conserved(r) -> bool:
+    return r["emitted_sessions"] + r["final_state_rows"] == \
+        r["batch_sessions"]
+
+
+STATE = (       # the state groups' clauses besides their own
+    holds("state.state_removed_total", lambda v: v > 0,
+          "timeouts remove state"),
+    ("state.peak_state_rows", lambda v, first, k: v < 2 * first,
+     "peak state < 2 × first: it tracks the horizon, not the keys"))
+
 GROUPS = (
     # kg_construct over 40·scale bench replicas; the corpus is not
     # persisted, so every sample derives the XML and parses it
     Group("flagship", (1, 10),
           lambda spark, sf_dir, scale, spread:
           {"docs": _bench_docs(spark, sf_dir, 40 * scale)},
-          (Op("kg", _kg),), persist=False),
+          (Op("kg", _kg),), keeps(linear("kg.triples")), persist=False),
     Group("text_dedup", (1, 10), _spread(rotated_documents), (
         Op("minhash", counted("pairs", sketch.minhash_candidates)),
         Op("verify", counted("pairs", lambda d: sketch.verify_candidates(
@@ -497,13 +759,23 @@ GROUPS = (
         Op("components", _components), Op("containment", _containment),
         Op("simhash", counted("rows", sketch.simhash)),
         Op("winnow", counted("fps", sketch.winnow_fingerprints)),
-        Op("tfidf", counted("rows", curation.tfidf_keywords)))),
+        Op("tfidf", counted("rows", curation.tfidf_keywords))),
+        keeps(linear("n_docs"), linear("simhash.rows"),
+              linear("tfidf.rows"), linear("winnow.fps", 0.1),
+              linear("minhash.pairs", PAIRS), linear("verify.pairs", PAIRS),
+              linear("components.nodes", PAIRS),
+              linear("containment.pairs", PAIRS),
+              linear("containment.cand_pairs", PAIRS))),
+    # output pairs grow like k² on i.i.d. vectors (module docstring); the
+    # cosine work over cells of constant size grows like k
     Group("ivf_dedup", (1, 10), _vectors(twins=False),
-          (Op("ivf_dedup", _ivf_dedup),)),
+          (Op("ivf_dedup", _ivf_dedup),),
+          keeps(linear("n_vectors"), linear("ivf_dedup.cell_pairs", PAIRS))),
     # recall and precision against numpy brute force, flat vs two-level
     Group("recall", (1, 10), _vectors(twins=True), (
         Op("prod_dedup", _prod_dedup),
-        Op("prod_dedup_twolevel", _prod_dedup_twolevel))),
+        Op("prod_dedup_twolevel", _prod_dedup_twolevel)),
+        keeps(linear("n_vectors"), linear("prod_dedup.true_pairs"))),
     Group("corpus_ops", (1, 10),
           lambda spark, sf_dir, scale, spread:
           {"docs": copymark_documents(spark, sf_dir, scale)}, (
@@ -513,7 +785,10 @@ GROUPS = (
         Op("manifest", counted("n_chunks", lambda d: packing.chunk_manifest(
             d.select("doc_id", "text"), context_len=512, bucket_size=64))),
         Op("mix_plan", counted("n_strata", lambda d: sampling.mix_plan(
-            d.select("lang", "text"), stratum_col="lang"))))),
+            d.select("lang", "text"), stratum_col="lang")))),
+        keeps(linear("n_docs"), linear("decontaminate.n_flagged"),
+              linear("pack.n_rows"), linear("manifest.n_chunks", 0.1),
+              fixed("mix_plan.n_strata"))),
     # spans at full duplication: every fingerprint of a copy is shared;
     # BPE makes one corpus pass, then vocabulary-sized merges
     Group("span_bpe", (10, 100), _spread(
@@ -525,7 +800,8 @@ GROUPS = (
         Op("dup_span_removal", summed(spans.dup_span_removal,
                                       clean_chars="sum(clean_chars)")),
         Op("bpe_train", counted("n_merges", lambda d: bpe.bpe_train_merges(
-            d, n_merges=10))))),
+            d, n_merges=10)))),
+        keeps(linear("n_docs"), fixed("bpe_train.n_merges"))),
     Group("lm_pq_lines", (10, 100), _lm_pq_corpus, (
         Op("bigram_lm_scores", summed(lm.bigram_lm_scores,
                                       ppm_sum="sum(mean_bigram_ppm)",
@@ -539,7 +815,16 @@ GROUPS = (
         Op("hll_state", _hll_state),
         Op("ann_pq_topk", summed(ann.ann_pq_topk, "vectors",
                                  adc_sum="sum(adc_l2sq)",
-                                 n_rows="count(1)")))),
+                                 n_rows="count(1)"))),
+        keeps(linear("n_docs"), linear("n_vectors"),
+              linear("bigram_lm_scores.n_bigrams", 0.05),
+              linear("line_dedup.n_removed"),
+              linear("line_dedup.clean_chars", 0.05),
+              fixed("hll_state.nonzero_buckets"), fixed("ann_pq_topk.n_rows"),
+              # top-k distances shrink only like N^(-2/d) on i.i.d.
+              # vectors; a steep fall means the neighbours are copies
+              ("ann_pq_topk.adc_sum", lambda v, first, k: v >= 0.75 * first,
+               "adc_sum >= 0.75 × first"))),
     Group("kcore_ccnet", (10, 100), _spread(copymark_documents), (
         Op("kcore", summed(
             lambda d: graph.kcore(_kcore_edges(d, hub=False), 4),
@@ -555,10 +840,49 @@ GROUPS = (
             value_sum="sum(value)", n="min(n)")),
         Op("bfs_depths", summed(
             lambda d: graph.bfs_depths(_bfs_edges(d), "R"),
-            n_reached="count(1)", max_depth="max(depth)")))),
+            n_reached="count(1)", max_depth="max(depth)"))),
+        keeps(linear("n_docs"), linear("kcore.core_nodes"),
+              linear("kcore.deg_sum"), linear("kcore_hub.deg_sum"),
+              linear("kcore_hub.core_nodes", 0.01),
+              linear("ccnet_stats.n_docs"),
+              linear("ccnet_stats.clean_chars", 0.05),
+              linear("token_quantiles.n"),
+              linear("bfs_depths.n_reached", 0.01),
+              fixed("bfs_depths.max_depth"))),
     # scale multiplies the bases, so cluster size stays 3
     Group("modality_neardup", (1, 10), _media,
-          tuple(Op(m, _modality_op(m)) for m in _MODALITIES)),
+          tuple(Op(m, _modality_op(m)) for m in _MODALITIES),
+          keeps(*[c for m in _MODALITIES for c in (
+              linear(f"n_{m}"), linear(f"{m}.n_pairs", 0.1))])),
+    # 5-cliques + a full-degree hub over 20,000·scale nodes
+    Group("triangle", (1, 10),
+          lambda spark, sf_dir, scale, spread:
+          {"edges": _hub_cliques(spark, 20_000 * scale).repartition(spread)},
+          (Op("triangles", _triangles),),
+          keeps(linear("n_edges"), linear("triangles.oriented_wedges"),
+                fixed("triangles.max_oriented_outdeg"),
+                holds("triangles", lambda r: r["triangle_memberships_sum"]
+                      == r["expected_memberships"], "the closed form"))),
+    # sessionize_stream over disjoint users in disjoint 31-day windows
+    Group("sessionize_state", (1, 10), lambda spark, sf_dir, scale, spread:
+          {"events": shifted_events(spark, sf_dir, scale)},
+          (Op("state", stream_state("events", "ts", 30,
+                                    sessionize.sessionize_stream,
+                                    _sessions)),),
+          keeps(linear("n_events"), linear("state.n_users"), *STATE,
+                holds("state", _conserved,
+                      "emitted + open sessions = batch sessions"))),
+    # stream_neardup_flags over rotated replicas in disjoint 32 h windows
+    Group("neardup_state", (1, 10), lambda spark, sf_dir, scale, spread:
+          {"docs": ingested_documents(spark, sf_dir, scale)},
+          (Op("state", stream_state(
+              "docs", "ingested_at", 10,
+              lambda s: stream.stream_neardup_flags(
+                  s, horizon_seconds=HORIZON_S),
+              _epoch_flags)),),
+          keeps(linear("n_docs"), linear("state.flags", PAIRS), *STATE,
+                holds("state.flags_match_batch_rule", bool,
+                      "flags = the batch epoch rule"))),
 )
 BY_NAME = {g.name: g for g in GROUPS}
 
@@ -595,13 +919,20 @@ def main(argv=None):
 
     out = {"sf": sf_dir.rstrip("/").split("sf")[-1], "cpus": n,
            "attempts": attempts, "groups": {}}
+    broken = []
     for name in args.groups:
         g = BY_NAME[name]
-        out["groups"][name] = run_group(spark, g, args.scales or g.scales,
-                                        sf_dir, attempts)
+        try:
+            out["groups"][name] = run_group(
+                spark, g, args.scales or g.scales, sf_dir, attempts)
+        except Broken as e:
+            out["groups"][name] = e.out
+            broken.append(str(e))
     out["loadavg"] = [loadavg, round(os.getloadavg()[0], 2)]
     print(json.dumps(out))
     spark.stop()
+    if broken:
+        sys.exit("scale_legs.py: invariant broken: " + "; ".join(broken))
 
 
 if __name__ == "__main__":
