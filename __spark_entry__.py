@@ -12,8 +12,11 @@ blank-node ids and the doc_sha lineage invariant.
 
 from __future__ import annotations
 
+import contextlib
 import os
 from collections.abc import Callable
+from functools import partial
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -26,11 +29,22 @@ from rdf_rdfxml_spark.operators.linking import (
     build_term_dictionary, encode_triples,
 )
 from rdf_rdfxml_spark.operators import ann as _ANN
-from rdf_rdfxml_spark.operators import graph as _G
-from rdf_rdfxml_spark.operators import sketch as _SK
+from rdf_rdfxml_spark.operators import bpe as _BPE
 from rdf_rdfxml_spark.operators import curation as _CUR
+from rdf_rdfxml_spark.operators import decontam as _DEC
+from rdf_rdfxml_spark.operators import distinct_sketch as _DS
+from rdf_rdfxml_spark.operators import graph as _G
+from rdf_rdfxml_spark.operators import lines as _LN
+from rdf_rdfxml_spark.operators import lm as _LM
+from rdf_rdfxml_spark.operators import multimodal as _MM
+from rdf_rdfxml_spark.operators import packing as _PK
+from rdf_rdfxml_spark.operators import quantiles as _QT
+from rdf_rdfxml_spark.operators import sampling as _SA
+from rdf_rdfxml_spark.operators import sketch as _SK
+from rdf_rdfxml_spark.operators import spans as _SP
 from rdf_rdfxml_spark.operators import textlang as _TL
 from rdf_rdfxml_spark.plans.pipeline import construct_graph
+from rdf_rdfxml_spark.streaming import stream as _ST
 from rdf_rdfxml_spark.sources import documents as D
 from rdf_rdfxml_spark.sources.fixtures import corpus
 from rdf_rdfxml_spark.streaming.sessionize import ORACLE_SQL as _SESSIONIZE_ORACLE
@@ -71,6 +85,18 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
+def _spread_docs(spark: SparkSession, sf_dir: str, *cols: str,
+                 sized: bool = False) -> DataFrame:
+    """The documents table (only ``cols``, when given) spread for a
+    compute-bound stage: 2×cores tasks, or ``_sized_spread`` tasks."""
+    docs = _docs(spark, sf_dir)
+    if cols:
+        docs = docs.select(*cols)
+    return docs.repartition(
+        _sized_spread(spark, _table_rows(sf_dir)) if sized
+        else 2 * spark.sparkContext.defaultParallelism)
+
+
 _TABLE_ROWS_CACHE: dict = {}
 
 
@@ -108,11 +134,59 @@ def _parse(spark: SparkSession, sf_dir: str, content_expr: str,
     # spread the RAW rows, then derive the fat XML column — the exchange
     # ships ~300-byte table rows instead of built documents (the
     # _bench_docs pattern)
-    docs = (_docs(spark, sf_dir)
-            .repartition(_sized_spread(spark, _table_rows(sf_dir)))
-            .selectExpr(f"({content_expr}) AS content",
-                        "'http://example.org/' AS base_uri"))
+    docs = _spread_docs(spark, sf_dir, sized=True).selectExpr(
+        f"({content_expr}) AS content", "'http://example.org/' AS base_uri")
     return extract(docs, strict=strict)
+
+
+def _two_round_stream(spark: SparkSession, name: str, rows: DataFrame,
+                      key: str, mid, flags) -> DataFrame:
+    """Drive the streaming stage ``flags`` over ``rows`` as two
+    availableNow rounds through ONE checkpoint: the rows with
+    ``key <= mid`` first, then the rest after a restart, so the second
+    round restores state from the checkpoint — cross-batch pairing and
+    restart recovery are both under the oracle. The split is ingest-
+    ordered, so any bucket spanning both rounds has its minimum in the
+    first. Returns the sink read back."""
+    base = _scratch(name)
+    in_dir, out_dir, ckpt = (os.path.join(base, d)
+                             for d in ("in", "out", "ckpt"))
+    for half in (f"{key} <= {mid}", f"{key} > {mid}"):
+        rows.filter(half).repartition(4).write.mode("append") \
+            .parquet(in_dir)
+        stream = spark.readStream.schema(rows.schema).parquet(in_dir)
+        (flags(stream).writeStream.option("checkpointLocation", ckpt)
+         .trigger(availableNow=True)
+         .start(out_dir, format="parquet", outputMode="append")
+         .awaitTermination())
+    return spark.read.parquet(out_dir)
+
+
+@contextlib.contextmanager
+def _persisting():
+    """``keep(df)`` persists ``df`` until the block exits — for the
+    survivor-count pipelines, whose survivor sets each persist before
+    their count so the lineage runs once, and whose result is a
+    constant row of driver ints."""
+    cached = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        cached.append(df.persist())
+        return cached[-1]
+
+    try:
+        yield keep
+    finally:
+        for df in cached:
+            df.unpersist()
+
+
+def _exact_dedup(docs: DataFrame) -> DataFrame:
+    """Keep the minimum doc_id per content hash (the oracles' ``canon``
+    and ``k1`` CTEs)."""
+    canon = (docs.groupBy(F.md5("text").alias("h"))
+             .agg(F.min("doc_id").alias("doc_id")).select("doc_id"))
+    return docs.join(canon, "doc_id", "left_semi")
 
 
 # --------------------------------------------------------------------------
@@ -142,8 +216,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # queries — Spark side
 # --------------------------------------------------------------------------
 
-def q_extract_basic(spark, sf_dir):
-    return (triples_channel(_parse(spark, sf_dir, D.xml_basic_expr()))
+def q_triples(content_expr: Callable[[], str], spark, sf_dir):
+    """The triples of the corpus rendered by ``content_expr`` (one of
+    the ``sources.documents.xml_*_expr`` builders)."""
+    return (triples_channel(_parse(spark, sf_dir, content_expr()))
             .select(*TRIPLE_COLS))
 
 
@@ -155,7 +231,6 @@ def q_stream_ingest(spark, sf_dir):
     # trigger(availableNow), then the materialized triples are read back.
     # One extraction code path for batch and streaming, so rows + schema +
     # value-hash must match the batch oracle exactly.
-    from rdf_rdfxml_spark.streaming.stream import stream_construct
     # scratch OUTSIDE the repo tree (round-3 verdict nit: driver queries
     # must not leave filesystem side effects under the repo); fixed name
     # wiped on entry so repeated gate/bench runs don't accumulate
@@ -169,44 +244,9 @@ def q_stream_ingest(spark, sf_dir):
     docs.repartition(4).write.parquet(in_dir)
     stream = (spark.readStream.schema(docs.schema)
               .option("maxFilesPerTrigger", 2).parquet(in_dir))
-    q = stream_construct(stream, out_dir, ckpt).start()
+    q = _ST.stream_construct(stream, out_dir, ckpt).start()
     q.awaitTermination()
     return spark.read.parquet(out_dir).select(*TRIPLE_COLS)
-
-
-def q_extract_containers(spark, sf_dir):
-    return (triples_channel(_parse(spark, sf_dir, D.xml_container_expr()))
-            .select(*TRIPLE_COLS))
-
-
-def q_extract_collection(spark, sf_dir):
-    return (triples_channel(_parse(spark, sf_dir, D.xml_collection_expr()))
-            .select(*TRIPLE_COLS))
-
-
-def q_extract_reification(spark, sf_dir):
-    return (triples_channel(_parse(spark, sf_dir, D.xml_reify_expr()))
-            .select(*TRIPLE_COLS))
-
-
-def q_extract_nested_bnode(spark, sf_dir):
-    return (triples_channel(_parse(spark, sf_dir, D.xml_nested_expr()))
-            .select(*TRIPLE_COLS))
-
-
-def q_extract_xmlliteral(spark, sf_dir):
-    return (triples_channel(_parse(spark, sf_dir, D.xml_xmlliteral_expr()))
-            .select(*TRIPLE_COLS))
-
-
-def q_extract_xmlbase(spark, sf_dir):
-    return (triples_channel(_parse(spark, sf_dir, D.xml_xmlbase_expr()))
-            .select(*TRIPLE_COLS))
-
-
-def q_extract_nodeid(spark, sf_dir):
-    return (triples_channel(_parse(spark, sf_dir, D.xml_nodeid_expr()))
-            .select(*TRIPLE_COLS))
 
 
 def q_roundtrip(spark, sf_dir):
@@ -310,11 +350,14 @@ def _w3c_oracle() -> str:
             f"      {values}) AS t(test_id, n_triples, has_errors)")
 
 
+def _sniff_expr() -> str:
+    return (f"CASE WHEN doc_id % 5 = 0 THEN '<notrdf/>' "
+            f"ELSE ({D.xml_basic_expr()}) END")
+
+
 def q_format_sniff(spark, sf_dir):
     # S1: content sniff /<(\w+:)?RDF/ (format.rb:40-51)
-    docs = _docs(spark, sf_dir).selectExpr(
-        f"CASE WHEN doc_id % 5 = 0 THEN '<notrdf/>' "
-        f"ELSE ({D.xml_basic_expr()}) END AS content")
+    docs = _docs(spark, sf_dir).selectExpr(f"{_sniff_expr()} AS content")
     return docs.select(
         F.sum(F.col("content").rlike(r"<(\w+:)?RDF").cast("long"))
         .alias("n_rdf"),
@@ -326,9 +369,8 @@ def q_namespace_stats(spark, sf_dir):
     # stats over the corpus — every generated document declares exactly
     # rdf + ex, which the oracle can state in closed form.
     from rdf_rdfxml_spark.operators.extract import document_prefixes
-    docs = (_docs(spark, sf_dir)
-            .repartition(_sized_spread(spark, _table_rows(sf_dir)))
-            .selectExpr(f"({D.xml_basic_expr()}) AS content"))
+    docs = _spread_docs(spark, sf_dir, sized=True).selectExpr(
+        f"({D.xml_basic_expr()}) AS content")
     return (document_prefixes(docs)
             .groupBy("prefix", "ns")
             .agg(F.countDistinct("doc_sha").alias("n_docs")))
@@ -361,18 +403,21 @@ _LINKING_T_CACHE: list = []
 _SALTED_HOT_CACHE: dict = {}
 
 
-def q_entity_linking(spark, sf_dir):
-    # Same production framing as the salted variant: the dictionary
-    # build and the probe both scan the fact side, which in production
-    # is the MATERIALIZED triple table (D4) — the bench mirrors that by
-    # persisting the extraction output once per call (bounded: the
-    # previous handle is freed first, shared cache with the salted
-    # query).
+def _linking_facts(spark, sf_dir):
+    """The reification triples, persisted: the dictionary build and the
+    probe both scan the fact side, which in production is the
+    MATERIALIZED triple table (D4) — persisting the extraction output
+    once per call mirrors that. Bounded: the previous call's handle is
+    freed first (one cache shared by both linking queries)."""
     t = triples_channel(_parse(spark, sf_dir, D.xml_reify_expr()))
     while _LINKING_T_CACHE:
         _LINKING_T_CACHE.pop().unpersist()
-    t = t.persist()
-    _LINKING_T_CACHE.append(t)
+    _LINKING_T_CACHE.append(t.persist())
+    return _LINKING_T_CACHE[-1]
+
+
+def q_entity_linking(spark, sf_dir):
+    t = _linking_facts(spark, sf_dir)
     d = build_term_dictionary(t, dense_ids=True)
     return encode_triples(t, d).select("s_id", "p_id", "o_id")
 
@@ -381,22 +426,11 @@ def q_entity_linking_salted(spark, sf_dir):
     # The skew-safe production join (graph.salted_join): hot dictionary
     # rows replicate, hot fact rows pick a deterministic salt — must be
     # value-identical to the broadcast path (same oracle as
-    # entity_linking). Two round-5 amortizations of the round-4
-    # regression (detection re-ran the full parse per call, 1.56 → 2.06 s):
-    # * the extraction output is persisted once per call (bounded: the
-    #   previous call's handle freed first) — in production the fact
-    #   side is the MATERIALIZED triple table (D4 parquet), so the
-    #   dictionary-build / detection / probe scans are cheap re-reads,
-    #   and the persist mirrors that;
-    # * hot keys are detected ONCE per corpus and cached
-    #   (linking.detect_hot_keys) — the hot set only shapes the physical
-    #   salt distribution, never the join result, so a cached set is
-    #   always value-safe.
-    t = triples_channel(_parse(spark, sf_dir, D.xml_reify_expr()))
-    while _LINKING_T_CACHE:
-        _LINKING_T_CACHE.pop().unpersist()
-    t = t.persist()
-    _LINKING_T_CACHE.append(t)
+    # entity_linking). Hot keys are detected ONCE per corpus and cached
+    # (linking.detect_hot_keys) — the hot set only shapes the physical
+    # salt distribution, never the join result, so a cached set is
+    # always value-safe.
+    t = _linking_facts(spark, sf_dir)
     hot = _SALTED_HOT_CACHE.get(sf_dir)
     if hot is None:
         from rdf_rdfxml_spark.operators.linking import detect_hot_keys
@@ -463,13 +497,12 @@ def q_kg_two_hop_salted(spark, sf_dir):
     # freqItems detects no hub and the plan degenerates to salt-0
     # everywhere; the skewed-regime evidence is PERF.md §20
     # (straggler 77x → 1.4 on a 90%-hub graph).
-    from rdf_rdfxml_spark.operators.graph import salted_join
     t = triples_channel(_parse(spark, sf_dir, D.xml_nested_expr()))
     hop1 = (t.filter(f"p = '{VOC}meta'")
             .selectExpr("s AS doc", "o AS mid"))
     hop2 = (t.filter(f"p = '{VOC}origin'")
             .selectExpr("s AS mid", "o AS origin"))
-    return salted_join(hop1, hop2, "mid").select("doc", "origin")
+    return _G.salted_join(hop1, hop2, "mid").select("doc", "origin")
 
 
 def q_ann_pq_topk(spark, sf_dir):
@@ -478,8 +511,7 @@ def q_ann_pq_topk(spark, sf_dir):
     # exact Lloyd iterations on the shifted int8 domain, 4-bit codes,
     # integer ADC ranking — training, encode, and ranking replay
     # bit-for-bit in the oracle, no float rounding contract at all.
-    from rdf_rdfxml_spark.operators.ann import ann_pq_topk, load_embeddings
-    return ann_pq_topk(load_embeddings(spark, sf_dir))
+    return _ANN.ann_pq_topk(_ANN.load_embeddings(spark, sf_dir))
 
 
 def q_corpus_lm_scores(spark, sf_dir):
@@ -487,10 +519,8 @@ def q_corpus_lm_scores(spark, sf_dir):
     # under an add-one-smoothed bigram LM trained on the corpus itself,
     # kept integer-exact (rational ppm + BIGINT DIV, no libm-log seam)
     # so the oracle replays the whole train+score bit-for-bit.
-    from rdf_rdfxml_spark.operators.lm import bigram_lm_scores
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return bigram_lm_scores(docs)
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text")
+    return _LM.bigram_lm_scores(docs)
 
 
 def q_kg_triangles(spark, sf_dir):
@@ -500,7 +530,6 @@ def q_kg_triangles(spark, sf_dir):
     # PLUS a global hub 'h' linked to every node (degree N), and the
     # orientation makes the hub a wedge TARGET only, so the wedge join
     # fan-out stays bounded by the √m rank bound, not by the hub degree.
-    from rdf_rdfxml_spark.operators.graph import triangle_counts
     docs = _docs(spark, sf_dir).select("doc_id")
     a = docs.selectExpr("doc_id AS i")
     b = docs.selectExpr("doc_id AS j")
@@ -508,7 +537,7 @@ def q_kg_triangles(spark, sf_dir):
               .selectExpr("concat('d', i) AS src",
                           "concat('d', j) AS dst"))
     hub = docs.selectExpr("'h' AS src", "concat('d', doc_id) AS dst")
-    return triangle_counts(clique.unionByName(hub))
+    return _G.triangle_counts(clique.unionByName(hub))
 
 
 def q_kg_pagerank(spark, sf_dir):
@@ -518,7 +547,6 @@ def q_kg_pagerank(spark, sf_dir):
     # an exact unrolled-CTE twin). Edge set: a deterministic synthetic
     # link graph over the document IRIs (each doc links to two affine
     # neighbors mod N) — derivable identically in SQL.
-    from rdf_rdfxml_spark.operators.graph import pagerank
     docs = _docs(spark, sf_dir).select("doc_id")
     n = _table_rows(sf_dir)  # footer count — same N, no sizing job
     edges = (docs.selectExpr(
@@ -527,12 +555,11 @@ def q_kg_pagerank(spark, sf_dir):
         .unionByName(docs.selectExpr(
             "concat('d', doc_id) AS src",
             f"concat('d', (doc_id * 3 + 2) % {n}) AS dst")))
-    return (pagerank(edges)
+    return (_G.pagerank(edges)
             .selectExpr("node", "round(rank, 6) AS rank_r"))
 
 
 def _pagerank_oracle() -> str:
-    from rdf_rdfxml_spark.operators.graph import pagerank_oracle_sql
     edges = """
       SELECT 'd' || CAST(doc_id AS VARCHAR) AS src,
              'd' || CAST((doc_id * 7 + 1) %
@@ -544,7 +571,7 @@ def _pagerank_oracle() -> str:
                   (SELECT COUNT(*) FROM documents) AS VARCHAR)
       FROM documents"""
     return ("SELECT node, ROUND(rank, 6) AS rank_r FROM ("
-            + pagerank_oracle_sql(edges) + ") t")
+            + _G.pagerank_oracle_sql(edges) + ") t")
 
 
 def q_lineage_invariant(spark, sf_dir):
@@ -632,12 +659,8 @@ def q_dedup_verified_pairs(spark, sf_dir):
     # exact-jaccard verification computed ONLY for candidate pairs —
     # shingle sets are built via a semi-join on candidate ids, so the
     # verification cost is O(candidates), not O(corpus²).
-    from rdf_rdfxml_spark.operators.sketch import (
-        minhash_candidates, verify_candidates,
-    )
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(_sized_spread(spark, _table_rows(sf_dir)))
-    return verify_candidates(docs, minhash_candidates(docs))
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text", sized=True)
+    return _SK.verify_candidates(docs, _SK.minhash_candidates(docs))
 
 
 def q_minhash_lsh(spark, sf_dir):
@@ -649,10 +672,8 @@ def q_minhash_lsh(spark, sf_dir):
     # signature stage is CPU-bound, so spread it across the cluster first
     # (cheap: ~300-byte rows; task count via the _sized_spread floor).
     # At 100 TB the scan is already partitioned.
-    from rdf_rdfxml_spark.operators.sketch import minhash_candidates
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(_sized_spread(spark, _table_rows(sf_dir)))
-    return minhash_candidates(docs)
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text", sized=True)
+    return _SK.minhash_candidates(docs)
 
 
 def q_dedup_components(spark, sf_dir):
@@ -660,11 +681,8 @@ def q_dedup_components(spark, sf_dir):
     # (hash-min label propagation; DuckDB twin is a recursive-CTE closure
     # over the same pair set). The dedup decision is per component: keep
     # the canonical (minimum) doc id.
-    from rdf_rdfxml_spark.operators.graph import component_stats
-    from rdf_rdfxml_spark.operators.sketch import minhash_candidates
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(_sized_spread(spark, _table_rows(sf_dir)))
-    return component_stats(minhash_candidates(docs))
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text", sized=True)
+    return _G.component_stats(_SK.minhash_candidates(docs))
 
 
 def q_kg_pagerank_salted(spark, sf_dir):
@@ -675,7 +693,6 @@ def q_kg_pagerank_salted(spark, sf_dir):
     # reordered partial sums (PERF.md §22). The gate corpus is uniform,
     # so the designated hot nodes simply exercise the replicate/spread
     # machinery end-to-end.
-    from rdf_rdfxml_spark.operators.graph import pagerank
     docs = _docs(spark, sf_dir).select("doc_id")
     n = _table_rows(sf_dir)  # footer count — same N, no sizing job
     edges = (docs.selectExpr(
@@ -684,7 +701,7 @@ def q_kg_pagerank_salted(spark, sf_dir):
         .unionByName(docs.selectExpr(
             "concat('d', doc_id) AS src",
             f"concat('d', (doc_id * 3 + 2) % {n}) AS dst")))
-    return (pagerank(edges, hot_keys=["d0", "d1"])
+    return (_G.pagerank(edges, hot_keys=["d0", "d1"])
             .selectExpr("node", "round(rank, 6) AS rank_r"))
 
 
@@ -692,23 +709,19 @@ def q_dedup_components_salted(spark, sf_dir):
     # Salted per-round label propagation (round 6) — same oracle as
     # dedup_components (value identity is the contract; PERF.md §22
     # carries the 90%-hub straggler evidence).
-    from rdf_rdfxml_spark.operators.graph import component_stats
-    from rdf_rdfxml_spark.operators.sketch import minhash_candidates
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(_sized_spread(spark, _table_rows(sf_dir)))
-    return component_stats(minhash_candidates(docs), hot_keys=[0, 1])
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text", sized=True)
+    return _G.component_stats(_SK.minhash_candidates(docs), hot_keys=[0, 1])
 
 
 def q_simhash(spark, sf_dir):
     # 48-bit SimHash, document-local in mapInArrow (the round-1 plan
     # shuffled a 16×-bit-exploded token stream through two aggregations).
-    from rdf_rdfxml_spark.operators.sketch import simhash
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     # task-count floor, not 2×cores: the signature pass is ~10 ms fixed
     # overhead per Python task and the corpus is small (PERF.md §19;
     # measured round 8: 64 tasks 0.64 s vs 17 tasks 0.39 s)
     docs = docs.repartition(_sized_spread(spark, _table_rows(sf_dir)))
-    return simhash(docs)
+    return _SK.simhash(docs)
 
 
 def q_simhash_candidates(spark, sf_dir):
@@ -722,10 +735,8 @@ def q_simhash_candidates(spark, sf_dir):
     # of the guarantee under the cap). (Pairs beyond the radius are
     # only found best-effort; filtering wider than n_bands-1 would
     # misrepresent the output as complete — round-2 ADVICE.)
-    from rdf_rdfxml_spark.operators.sketch import simhash_candidates
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(_sized_spread(spark, _table_rows(sf_dir)))
-    return simhash_candidates(docs).filter("hamming <= 3")
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text", sized=True)
+    return _SK.simhash_candidates(docs).filter("hamming <= 3")
 
 
 def q_ann_cosine_topk(spark, sf_dir):
@@ -769,15 +780,12 @@ def q_ann_lsh_bucketed(spark, sf_dir):
     # Random-hyperplane LSH buckets + exact-cosine top-k *within* the
     # query's bucket (round 1 stopped at bucket histograms; this returns
     # actual neighbors — the probe-search half of the operator).
-    from rdf_rdfxml_spark.operators.ann import (
-        load_embeddings, lsh_bucket_topk,
-    )
     # per-row work here is 4 plane cosines — task dispatch dominates past
     # a few hundred rows/task, so size tasks instead of 2×cores
     # (measured round 8: 0.80 s at 8 partitions vs 1.05 s at 64)
-    emb = load_embeddings(spark, sf_dir, spread=_sized_spread(
+    emb = _ANN.load_embeddings(spark, sf_dir, spread=_sized_spread(
         spark, _table_rows(sf_dir, "embeddings")))
-    return lsh_bucket_topk(emb)
+    return _ANN.lsh_bucket_topk(emb)
 
 
 def q_dedup_embedding_bucketed(spark, sf_dir):
@@ -793,9 +801,6 @@ def q_dedup_embedding_bucketed(spark, sf_dir):
     # at the 0.4 demo threshold is measured and stated in PERF.md §21
     # (production-threshold recall 1.0 lives in the trained/twolevel
     # queries, re-proven at 10x/30x this round).
-    from rdf_rdfxml_spark.operators.ann import (
-        dedup_embedding_bucketed, load_embeddings,
-    )
     n_vec = _table_rows(sf_dir, "embeddings")  # parquet footer count
     n_cells = max(8, n_vec // 25)
     # Round 8: hand the operator its untrained centroids pre-collected
@@ -812,9 +817,9 @@ def q_dedup_embedding_bucketed(spark, sf_dir):
              .selectExpr("vec_id AS cell_id",
                          "transform(embedding, x -> CAST(x AS DOUBLE)) "
                          "AS cv").collect()]
-    emb = load_embeddings(spark, sf_dir, spread=_sized_spread(
+    emb = _ANN.load_embeddings(spark, sf_dir, spread=_sized_spread(
         spark, n_vec, rows_per_task=125))
-    return dedup_embedding_bucketed(emb, n_cells=n_cells, nprobe=4,
+    return _ANN.dedup_embedding_bucketed(emb, n_cells=n_cells, nprobe=4,
                                     centroids=cents)
 
 
@@ -828,17 +833,13 @@ def q_dedup_embedding_trained(spark, sf_dir):
     # otherwise be vacuous). The oracle recomputes twins + training +
     # assignment + pair math in SQL; recall vs brute force at 0.7 is
     # tests/test_ann.py.
-    from rdf_rdfxml_spark.operators.ann import (
-        dedup_embedding_bucketed, kmeans_cells, load_embeddings,
-        with_neardup_twins,
-    )
     # k ∝ N cell sizing (round 5, same regime as the bucketed query and
     # tools/scale_legs.py's recall group): max(8, N/25) on the TWINNED
     # corpus, mirrored in the oracle's GREATEST(8, COUNT(*)//25).
-    emb = with_neardup_twins(load_embeddings(spark, sf_dir))
-    _, centroids = kmeans_cells(emb, k=max(8, emb.count() // 25),
+    emb = _ANN.with_neardup_twins(_ANN.load_embeddings(spark, sf_dir))
+    _, centroids = _ANN.kmeans_cells(emb, k=max(8, emb.count() // 25),
                                 iters=2)
-    return dedup_embedding_bucketed(emb, centroids=centroids,
+    return _ANN.dedup_embedding_bucketed(emb, centroids=centroids,
                                     threshold=0.7)
 
 
@@ -852,18 +853,14 @@ def q_dedup_embedding_twolevel(spark, sf_dir):
     # ranking stays on the ROUND(cos,6)+id contract, so the oracle
     # replicates the full two-level path — coarse training included —
     # in SQL.
-    from rdf_rdfxml_spark.operators.ann import (
-        dedup_embedding_twolevel, kmeans_cells, load_embeddings,
-        train_coarse_quantizer, with_neardup_twins,
-    )
     # k ∝ N cell sizing (round 5), k' = floor(sqrt(len(centroids)))
     # inside train_coarse_quantizer — the oracle computes both from its
     # own table/fine counts.
-    emb = with_neardup_twins(load_embeddings(spark, sf_dir))
-    _, centroids = kmeans_cells(emb, k=max(8, emb.count() // 25),
+    emb = _ANN.with_neardup_twins(_ANN.load_embeddings(spark, sf_dir))
+    _, centroids = _ANN.kmeans_cells(emb, k=max(8, emb.count() // 25),
                                 iters=2)
-    coarse = train_coarse_quantizer(centroids)
-    return dedup_embedding_twolevel(emb, centroids, threshold=0.7,
+    coarse = _ANN.train_coarse_quantizer(centroids)
+    return _ANN.dedup_embedding_twolevel(emb, centroids, threshold=0.7,
                                     coarse_centroids=coarse)
 
 
@@ -872,10 +869,7 @@ def q_ann_quantized_topk(spark, sf_dir):
     # dot products (no cross-engine float seams in the compare). The
     # quantized baseline twin of ann_cosine_topk; recall vs exact float
     # top-k is measured in tests/test_ann.py.
-    from rdf_rdfxml_spark.operators.ann import (
-        ann_quantized_topk, load_embeddings,
-    )
-    return ann_quantized_topk(load_embeddings(spark, sf_dir))
+    return _ANN.ann_quantized_topk(_ANN.load_embeddings(spark, sf_dir))
 
 
 def q_ann_ivf_topk(spark, sf_dir):
@@ -927,54 +921,28 @@ def q_ann_ivf_trained(spark, sf_dir):
     # per-iteration 1e-6 centroid rounding as the cross-engine float
     # contract) — upgrades the data-derived centroids the other ANN
     # queries use; the oracle recomputes the whole algorithm in SQL.
-    from rdf_rdfxml_spark.operators.ann import (
-        ann_ivf_trained_stats, load_embeddings,
-    )
-    return ann_ivf_trained_stats(load_embeddings(spark, sf_dir))
+    return _ANN.ann_ivf_trained_stats(_ANN.load_embeddings(spark, sf_dir))
 
 
 def q_stream_neardup(spark, sf_dir):
     # Streaming near-dup candidate generation end-to-end, MULTI-BATCH
     # (round-3 verdict next-round #6): MinHash bands in-stream (mapInArrow
     # with the ingest timestamp passed through) → applyInPandasWithState
-    # keyed by band bucket → parquet sink. The corpus is split by ingest
-    # time into two halves driven through the SAME checkpoint as two
-    # separate availableNow rounds — the second round restores band-bucket
-    # state from the checkpoint, so cross-batch pairing AND restart
-    # recovery are both under the oracle. Because the split is
-    # ts-ordered, any bucket spanning both batches has its minimum
-    # established in batch 1, making the two-round union equal to the
-    # single-pass relational rule "every doc except the bucket minimum by
+    # keyed by band bucket → parquet sink, over two ts-ordered halves
+    # (_two_round_stream). The two-round union equals the single-pass
+    # relational rule "every doc except the bucket minimum by
     # (ts, doc_id), paired with the minimum" — which the DuckDB oracle
     # computes. (Bucket epochs expire 1 h past their last event —
     # event-time-deterministic since round 5, driven end-to-end by
     # test_stream_neardup_horizon_expiry; the synthetic
     # ts = 1700000000 + doc_id keeps the sf0.01 gate corpus well inside
     # one epoch, so the oracle needs no expiry arm.)
-    from rdf_rdfxml_spark.streaming.stream import stream_neardup_flags
-    base = _scratch("stream_neardup")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
     docs = _docs(spark, sf_dir).selectExpr(
         "doc_id", "text",
         "timestamp_seconds(1700000000 + doc_id) AS ingested_at")
     mid = docs.agg(F.max("doc_id")).first()[0] // 2
-    docs.filter(F.col("doc_id") <= mid).repartition(4).write.parquet(in_dir)
-
-    def run_round():
-        stream = spark.readStream.schema(docs.schema).parquet(in_dir)
-        q = (stream_neardup_flags(stream)
-             .writeStream.option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start(out_dir, format="parquet", outputMode="append"))
-        q.awaitTermination()
-
-    run_round()
-    (docs.filter(F.col("doc_id") > mid).repartition(4)
-     .write.mode("append").parquet(in_dir))
-    run_round()  # restart from checkpoint; picks up only the new files
-    return (spark.read.parquet(out_dir)
+    return (_two_round_stream(spark, "stream_neardup", docs, "doc_id", mid,
+                              _ST.stream_neardup_flags)
             .selectExpr("doc_id", "CAST(band_id AS INT) AS band_id",
                         "dup_of"))
 
@@ -982,18 +950,8 @@ def q_stream_neardup(spark, sf_dir):
 def q_stream_embedding_neardup(spark, sf_dir):
     # Streaming EMBEDDING near-dup (round 7): 16 sign bits vs the first
     # 16 embeddings as hyperplanes (data-derived, like ann_lsh_bucketed)
-    # -> 4 contiguous 4-bit bands -> the shared epoch state function.
-    # Same two-round checkpoint protocol as the other stream_* cells;
-    # the oracle replays the sign bits in SQL (list_dot_product's
-    # sequential fold == the stage's left-fold dot, the proven ANN
-    # parity shape) and applies the MIN(vec_id) epoch rule.
-    from rdf_rdfxml_spark.streaming.stream import (
-        stream_embedding_neardup_flags,
-    )
-    base = _scratch("stream_emb_neardup")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
+    # -> 4 contiguous 4-bit bands -> the shared epoch state function,
+    # through the two-round checkpoint protocol of _two_round_stream.
     emb = (spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
            .selectExpr("vec_id", "embedding",
                        "timestamp_seconds(1700000000 + vec_id) "
@@ -1002,57 +960,28 @@ def q_stream_embedding_neardup(spark, sf_dir):
               emb.orderBy("vec_id").limit(16).select("embedding")
               .collect()]
     mid = emb.agg(F.max("vec_id")).first()[0] // 2
-    emb.filter(F.col("vec_id") <= mid).repartition(4).write.parquet(in_dir)
-
-    def run_round():
-        stream = spark.readStream.schema(emb.schema).parquet(in_dir)
-        q = (stream_embedding_neardup_flags(stream, planes)
-             .writeStream.option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start(out_dir, format="parquet", outputMode="append"))
-        q.awaitTermination()
-
-    run_round()
-    (emb.filter(F.col("vec_id") > mid).repartition(4)
-     .write.mode("append").parquet(in_dir))
-    run_round()  # restart from checkpoint; picks up only the new files
-    return (spark.read.parquet(out_dir)
-            .selectExpr("vec_id", "CAST(band_id AS INT) AS band_id",
-                        "dup_of"))
+    return (_two_round_stream(
+        spark, "stream_emb_neardup", emb, "vec_id", mid,
+        lambda s: _ST.stream_embedding_neardup_flags(s, planes))
+        .selectExpr("vec_id", "CAST(band_id AS INT) AS band_id", "dup_of"))
 
 
-def stream_embedding_neardup_oracle_sql(*, n_planes: int = 16,
-                                        n_bands: int = 4) -> str:
-    """DuckDB twin of q_stream_embedding_neardup: sign bits from
-    list_dot_product (same sequential fold as the stage), contiguous
-    bit-bands, and the per-bucket MIN(vec_id) epoch rule (ts is
-    monotone in vec_id and the gate corpus spans < 1 h, so the bucket
-    minimum is the epoch first). POW(2, plane_id) relies on the dense
-    vec_id 0..15 plane slice — the same assumption lsh_topk_oracle_sql
-    pins."""
-    width = n_planes // n_bands
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+#: The sign bits of q_stream_embedding_neardup as ``sig(id, h)``:
+#: list_dot_product's sequential fold == the stage's left-fold dot (the
+#: proven ANN parity shape). POW(2, plane_id) relies on the dense
+#: vec_id 0..15 plane slice — the same assumption lsh_topk_oracle_sql
+#: pins. ts is monotone in vec_id and the gate corpus spans < 1 h, so
+#: the bucket minimum is the epoch first.
+_EMBEDDING_SIGN_BITS = """
+    e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     planes AS (SELECT vec_id AS plane_id, v AS pv FROM e
-               ORDER BY vec_id LIMIT {n_planes}),
+               ORDER BY vec_id LIMIT 16),
     sig AS (
-      SELECT e.vec_id,
+      SELECT e.vec_id AS id,
              CAST(SUM(CASE WHEN list_dot_product(e.v, p.pv) >= 0
                       THEN CAST(POW(2, p.plane_id) AS BIGINT)
-                      ELSE 0 END) AS BIGINT) AS s
-      FROM e, planes p GROUP BY e.vec_id),
-    bands AS (
-      SELECT vec_id, CAST(b AS INTEGER) AS band_id,
-             (s >> CAST(b * {width} AS INTEGER)) % {2 ** width}
-               AS band_value
-      FROM sig, generate_series(0, {n_bands - 1}) AS g(b)),
-    firsts AS (
-      SELECT band_id, band_value, MIN(vec_id) AS first_id
-      FROM bands GROUP BY band_id, band_value)
-    SELECT b.vec_id, b.band_id, f.first_id AS dup_of
-    FROM bands b JOIN firsts f
-      ON f.band_id = b.band_id AND f.band_value = b.band_value
-    WHERE b.vec_id != f.first_id"""
+                      ELSE 0 END) AS BIGINT) AS h
+      FROM e, planes p GROUP BY e.vec_id)"""
 
 
 def q_stream_decontaminate(spark, sf_dir):
@@ -1060,40 +989,19 @@ def q_stream_decontaminate(spark, sf_dir):
     # ingest — every arriving document is flagged with its distinct
     # blocked-8-gram count in one STATELESS in-stream mapInArrow stage
     # (blocklist driver-collected + broadcast; no watermark, no state
-    # store, no shuffle). Two availableNow rounds drive a ts-split
-    # corpus through one checkpoint, so restart/exactly-once is under
-    # the oracle too; since the stage is stateless, the two-round union
-    # trivially equals the batch rule, which the DuckDB oracle computes
-    # (same SQL as corpus_decontaminate).
-    from rdf_rdfxml_spark.operators.decontam import eval_ngram_set
-    from rdf_rdfxml_spark.streaming.stream import (
-        stream_decontaminate_flags,
-    )
-    base = _scratch("stream_decontam")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
+    # store, no shuffle), through the two-round protocol of
+    # _two_round_stream; since the stage is stateless, the two-round
+    # union trivially equals the batch rule, which the DuckDB oracle
+    # computes (same SQL as corpus_decontaminate).
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    grams = [r["gram"] for r in eval_ngram_set(
+    grams = [r["gram"] for r in _DEC.eval_ngram_set(
         docs.filter("doc_id % 10 = 3"), n=8).collect()]
     mid = docs.agg(F.max("doc_id")).first()[0] // 2
-    docs.filter(F.col("doc_id") <= mid).repartition(4).write.parquet(in_dir)
-
-    def run_round():
-        stream = spark.readStream.schema(docs.schema).parquet(in_dir)
-        q = (stream_decontaminate_flags(stream, grams, n=8)
-             .writeStream.option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start(out_dir, format="parquet", outputMode="append"))
-        q.awaitTermination()
-
-    run_round()
-    (docs.filter(F.col("doc_id") > mid).repartition(4)
-     .write.mode("append").parquet(in_dir))
-    run_round()  # restart from checkpoint; picks up only the new files
-    return (spark.read.parquet(out_dir)
-            .filter("n_hit_ngrams > 0")
-            .select("doc_id", "n_hit_ngrams"))
+    return (_two_round_stream(
+        spark, "stream_decontam", docs, "doc_id", mid,
+        lambda s: _ST.stream_decontaminate_flags(s, grams, n=8))
+        .filter("n_hit_ngrams > 0")
+        .select("doc_id", "n_hit_ngrams"))
 
 
 _SAMPLE_RATES = {"en": 0.8, "zh": 0.5, "es": 0.25, "de": 0.1}
@@ -1106,9 +1014,8 @@ def q_corpus_sample(spark, sf_dir):
     # portable, zero shuffle until this per-stratum rollup; the oracle
     # replays the identical hash so every keep decision is value-checked
     # (id_sum pins the exact row set, not just counts).
-    from rdf_rdfxml_spark.operators.sampling import stratified_sample
     docs = _docs(spark, sf_dir).select("doc_id", "lang")
-    kept = stratified_sample(docs, _SAMPLE_RATES, stratum_col="lang",
+    kept = _SA.stratified_sample(docs, _SAMPLE_RATES, stratum_col="lang",
                              default_rate=0.05)
     return (kept.groupBy(F.col("lang").alias("stratum"))
             .agg(F.count("*").alias("n_kept"),
@@ -1119,9 +1026,8 @@ def q_holdout_split(spark, sf_dir):
     # Deterministic train/held-out split (round 7): id-keyed hash
     # threshold, stable under corpus growth (new docs never reshuffle
     # old assignments) — the property a 100 TB eval split depends on.
-    from rdf_rdfxml_spark.operators.sampling import holdout_split
     docs = _docs(spark, sf_dir).select("doc_id")
-    return (holdout_split(docs, 0.1).groupBy("split")
+    return (_SA.holdout_split(docs, 0.1).groupBy("split")
             .agg(F.count("*").alias("n_docs"),
                  F.sum("doc_id").alias("id_sum")))
 
@@ -1134,10 +1040,9 @@ def q_corpus_decontaminate(spark, sf_dir):
     # guaranteed present: the slice itself plus its near-dup copies).
     # Broadcast blocklist, generator explode, no raw-string shuffle;
     # the oracle rebuilds the identical n-grams in DuckDB.
-    from rdf_rdfxml_spark.operators.decontam import decontaminate
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     eval_texts = docs.filter("doc_id % 10 = 3")
-    return decontaminate(docs, eval_texts, n=8)
+    return _DEC.decontaminate(docs, eval_texts, n=8)
 
 
 def q_corpus_token_packing(spark, sf_dir):
@@ -1147,9 +1052,8 @@ def q_corpus_token_packing(spark, sf_dir):
     # tiny per-bucket sums, never the corpus (packing.py docstring).
     # The oracle is the plain window-cumsum formulation; value
     # equality proves the distributed scan exact.
-    from rdf_rdfxml_spark.operators.packing import pack_token_chunks
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    return pack_token_chunks(docs, context_len=512, bucket_size=64)
+    return _PK.pack_token_chunks(docs, context_len=512, bucket_size=64)
 
 
 def q_corpus_mix_plan(spark, sf_dir):
@@ -1157,9 +1061,8 @@ def q_corpus_mix_plan(spark, sf_dir):
     # token counts -> sqrt-temperature sampling weights in exact ppm +
     # token allocation under a 1M budget. Integer-exact cross-engine
     # (floor(sqrt*1000) then pure BIGINT math — no libm-pow seam).
-    from rdf_rdfxml_spark.operators.sampling import mix_plan
     docs = _docs(spark, sf_dir).select("lang", "text")
-    return mix_plan(docs, stratum_col="lang", alpha="sqrt",
+    return _SA.mix_plan(docs, stratum_col="lang", alpha="sqrt",
                     token_budget=1_000_000)
 
 
@@ -1169,145 +1072,84 @@ def q_chunk_manifest(spark, sf_dir):
     # contributions — the "which documents feed chunk k" range query.
     # Fan-out is total_tokens/context_len + n_docs (linear); the oracle
     # replays the overlap arithmetic over a guarded constant series.
-    from rdf_rdfxml_spark.operators.packing import chunk_manifest
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    return chunk_manifest(docs, context_len=512, bucket_size=64)
+    return _PK.chunk_manifest(docs, context_len=512, bucket_size=64)
 
 
-def q_corpus_assembly_stats(spark, sf_dir):
+def q_corpus_assembly_stats(span_clean: bool, spark, sf_dir):
     # The end-to-end TRAINING-RUN ASSEMBLY pipeline (round 7), composing
-    # the new hygiene/assembly operators the way a real data job chains
-    # them: exact dedup (keep min doc_id per content hash) → eval-set
+    # the hygiene/assembly operators the way a real data job chains
+    # them: exact dedup (keep min doc_id per content hash) → [with
+    # ``span_clean``: duplicated-SPAN removal, cutting cross-doc
+    # boilerplate out of the survivors' text, so the packed budget
+    # reflects deduplicated BYTES — the Lee-et-al. pipeline] → eval-set
     # decontamination (drop every doc sharing an 8-gram with the
     # benchmark slice) → holdout split (keep the train side) → token
     # packing of the survivors. One row of per-stage survivor counts +
     # the final token/chunk budget; the oracle composes each stage's SQL
     # twin over the same intermediate sets.
-    #
-    # Same persist discipline as training_corpus_stats: each survivor
-    # set persists before its count so the lineage runs once, and
-    # everything unpersists before the constant result row returns.
-    from rdf_rdfxml_spark.operators.decontam import decontaminate
-    from rdf_rdfxml_spark.operators.packing import pack_token_chunks
-    from rdf_rdfxml_spark.operators.sampling import holdout_split
-    docs = (_docs(spark, sf_dir).select("doc_id", "text")
-            .repartition(2 * spark.sparkContext.defaultParallelism)
-            .persist())
-    cached = [docs]
-    try:
+    with _persisting() as keep:
+        docs = keep(_spread_docs(spark, sf_dir, "doc_id", "text"))
         n_input = docs.count()
-        canon = (docs.groupBy(F.md5("text").alias("h"))
-                 .agg(F.min("doc_id").alias("doc_id")).select("doc_id"))
-        k1 = docs.join(canon, "doc_id", "left_semi").persist()
-        cached.append(k1)
-        n_exact = k1.count()
-        flagged = decontaminate(k1, docs.filter("doc_id % 10 = 3"), n=8)
-        k2 = k1.join(flagged, "doc_id", "left_anti").persist()
-        cached.append(k2)
-        n_decontam = k2.count()
-        k3 = (holdout_split(k2, 0.1).filter("split = 'train'")
-              .select("doc_id", "text").persist())
-        cached.append(k3)
-        n_train = k3.count()
-        packed = pack_token_chunks(k3, context_len=512, bucket_size=64)
+        k1 = keep(_exact_dedup(docs))
+        counts = [n_input, k1.count()]
+        if span_clean:
+            def n_chars(df):
+                return df.agg(F.sum(F.length("text").cast("long"))) \
+                    .collect()[0][0] or 0
+            chars_before = n_chars(k1)
+            k1 = keep(_SP.dup_span_removal(k1)
+                      .select("doc_id", F.col("clean_text").alias("text")))
+            counts.append(int(chars_before - n_chars(k1)))
+        flagged = _DEC.decontaminate(k1, docs.filter("doc_id % 10 = 3"), n=8)
+        k2 = keep(k1.join(flagged, "doc_id", "left_anti"))
+        k3 = keep(_SA.holdout_split(k2, 0.1).filter("split = 'train'")
+                  .select("doc_id", "text"))
+        counts += [k2.count(), k3.count()]
+        packed = _PK.pack_token_chunks(k3, context_len=512, bucket_size=64)
         row = packed.agg(
             F.sum("n_tokens").alias("t"),
             F.max(F.when(F.col("n_tokens") > 0,
                          F.col("last_chunk"))).alias("lc")).collect()[0]
-        total_tokens = int(row["t"] or 0)
-        n_chunks = int(row["lc"]) + 1 if row["lc"] is not None else 0
-    finally:
-        for df in cached:
-            df.unpersist()
+        counts += [int(row["t"] or 0),
+                   int(row["lc"]) + 1 if row["lc"] is not None else 0]
+    span = "span_chars_removed long, " if span_clean else ""
     return spark.createDataFrame(
-        [(n_input, n_exact, n_decontam, n_train, total_tokens, n_chunks)],
-        "n_input long, n_after_exact long, n_after_decontam long, "
+        [tuple(counts)],
+        f"n_input long, n_after_exact long, {span}n_after_decontam long, "
         "n_train long, total_tokens long, n_chunks long")
 
 
-def q_corpus_assembly_spanclean_stats(spark, sf_dir):
-    # The assembly chain with SUB-document hygiene inserted (round 7):
-    # exact dedup → duplicated-SPAN removal (cut cross-doc boilerplate
-    # out of the survivors' text) → eval-set decontamination → holdout
-    # split → token packing. Compared to corpus_assembly_stats, the
-    # packed token budget now reflects deduplicated BYTES, not just
-    # deduplicated documents — the Lee-et-al. pipeline end-to-end. The
-    # oracle splices the span-removal CTE chain between the same stage
-    # twins over identical intermediate sets.
-    from rdf_rdfxml_spark.operators.decontam import decontaminate
-    from rdf_rdfxml_spark.operators.packing import pack_token_chunks
-    from rdf_rdfxml_spark.operators.sampling import holdout_split
-    from rdf_rdfxml_spark.operators.spans import dup_span_removal
-    docs = (_docs(spark, sf_dir).select("doc_id", "text")
-            .repartition(2 * spark.sparkContext.defaultParallelism)
-            .persist())
-    cached = [docs]
-    try:
-        n_input = docs.count()
-        canon = (docs.groupBy(F.md5("text").alias("h"))
-                 .agg(F.min("doc_id").alias("doc_id")).select("doc_id"))
-        k1 = docs.join(canon, "doc_id", "left_semi").persist()
-        cached.append(k1)
-        n_exact = k1.count()
-        chars_before = k1.agg(
-            F.sum(F.length("text").cast("long"))).collect()[0][0] or 0
-        k1c = (dup_span_removal(k1)
-               .select("doc_id", F.col("clean_text").alias("text"))
-               .persist())
-        cached.append(k1c)
-        chars_after = k1c.agg(
-            F.sum(F.length("text").cast("long"))).collect()[0][0] or 0
-        flagged = decontaminate(k1c, docs.filter("doc_id % 10 = 3"), n=8)
-        k2 = k1c.join(flagged, "doc_id", "left_anti").persist()
-        cached.append(k2)
-        n_decontam = k2.count()
-        k3 = (holdout_split(k2, 0.1).filter("split = 'train'")
-              .select("doc_id", "text").persist())
-        cached.append(k3)
-        n_train = k3.count()
-        packed = pack_token_chunks(k3, context_len=512, bucket_size=64)
-        row = packed.agg(
-            F.sum("n_tokens").alias("t"),
-            F.max(F.when(F.col("n_tokens") > 0,
-                         F.col("last_chunk"))).alias("lc")).collect()[0]
-        total_tokens = int(row["t"] or 0)
-        n_chunks = int(row["lc"]) + 1 if row["lc"] is not None else 0
-    finally:
-        for df in cached:
-            df.unpersist()
-    return spark.createDataFrame(
-        [(n_input, n_exact, int(chars_before - chars_after), n_decontam,
-          n_train, total_tokens, n_chunks)],
-        "n_input long, n_after_exact long, span_chars_removed long, "
-        "n_after_decontam long, n_train long, total_tokens long, "
-        "n_chunks long")
-
-
-def _corpus_assembly_spanclean_oracle() -> str:
-    from rdf_rdfxml_spark.operators.decontam import oracle_gram_list
-    from rdf_rdfxml_spark.operators.sampling import U32
-    from rdf_rdfxml_spark.operators.spans import dup_span_removal_ctes
-    grams = oracle_gram_list(8)
-    cut = int(0.1 * U32)
+def _corpus_assembly_oracle(span_clean: bool) -> str:
+    grams = _DEC.oracle_gram_list(8)
+    cut = int(0.1 * _SA.U32)
     u = ("CAST(('0x' || substring(md5('split:v1' || ':' || "
          "CAST(doc_id AS STRING)), 1, 8))::VARCHAR::UBIGINT AS BIGINT)")
+    src, span_cte, span_col = "k1", "", ""
+    if span_clean:
+        src = "k1c"
+        span_cte = f"""
+    {_SP.dup_span_removal_ctes(table='k1', out='k1c')},"""
+        span_col = """
+      (SELECT CAST(SUM(len(k1.text)) AS BIGINT) FROM k1)
+        - (SELECT CAST(SUM(len(k1c.text)) AS BIGINT) FROM k1c)
+        AS span_chars_removed,"""
     return f"""
     WITH canon AS (
       SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
     k1 AS (SELECT d.doc_id, d.text FROM documents d
-           JOIN canon c ON c.doc_id = d.doc_id),
-    {dup_span_removal_ctes(table='k1', out='k1c')},
+           JOIN canon c ON c.doc_id = d.doc_id),{span_cte}
     dg AS (
       SELECT doc_id, unnest({grams}) AS gram
       FROM (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-                                       t -> t <> '') AS toks FROM k1c)),
+                                       t -> t <> '') AS toks FROM {src})),
     eg AS (
       SELECT DISTINCT unnest({grams}) AS gram
       FROM (SELECT list_filter(string_split(lower(text), ' '),
                                t -> t <> '') AS toks
             FROM documents WHERE doc_id % 10 = 3)),
     contam AS (SELECT DISTINCT doc_id FROM dg JOIN eg USING (gram)),
-    k2 AS (SELECT * FROM k1c
+    k2 AS (SELECT * FROM {src}
            WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
     k3 AS (SELECT * FROM k2 WHERE NOT ({u} < {cut})),
     tok AS (SELECT CAST(len(list_filter(string_split(text, ' '),
@@ -1315,10 +1157,7 @@ def _corpus_assembly_spanclean_oracle() -> str:
             FROM k3)
     SELECT
       (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_input,
-      (SELECT CAST(COUNT(*) AS BIGINT) FROM k1) AS n_after_exact,
-      (SELECT CAST(SUM(len(k1.text)) AS BIGINT) FROM k1)
-        - (SELECT CAST(SUM(len(k1c.text)) AS BIGINT) FROM k1c)
-        AS span_chars_removed,
+      (SELECT CAST(COUNT(*) AS BIGINT) FROM k1) AS n_after_exact,{span_col}
       (SELECT CAST(COUNT(*) AS BIGINT) FROM k2) AS n_after_decontam,
       (SELECT CAST(COUNT(*) AS BIGINT) FROM k3) AS n_train,
       (SELECT CAST(COALESCE(SUM(n), 0) AS BIGINT) FROM tok)
@@ -1328,262 +1167,72 @@ def _corpus_assembly_spanclean_oracle() -> str:
        FROM tok) AS n_chunks"""
 
 
-def _corpus_assembly_oracle() -> str:
-    from rdf_rdfxml_spark.operators.decontam import oracle_gram_list
-    from rdf_rdfxml_spark.operators.sampling import U32
-    grams = oracle_gram_list(8)
-    cut = int(0.1 * U32)
-    u = ("CAST(('0x' || substring(md5('split:v1' || ':' || "
-         "CAST(doc_id AS STRING)), 1, 8))::VARCHAR::UBIGINT AS BIGINT)")
-    return f"""
-    WITH canon AS (
-      SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-    k1 AS (SELECT d.doc_id, d.text FROM documents d
-           JOIN canon c ON c.doc_id = d.doc_id),
-    g AS (
-      SELECT doc_id, unnest({grams}) AS gram
-      FROM (SELECT doc_id, list_filter(string_split(lower(text), ' '),
-                                       t -> t <> '') AS toks FROM k1)),
-    eg AS (
-      SELECT DISTINCT unnest({grams}) AS gram
-      FROM (SELECT list_filter(string_split(lower(text), ' '),
-                               t -> t <> '') AS toks
-            FROM documents WHERE doc_id % 10 = 3)),
-    contam AS (SELECT DISTINCT doc_id FROM g JOIN eg USING (gram)),
-    k2 AS (SELECT * FROM k1
-           WHERE doc_id NOT IN (SELECT doc_id FROM contam)),
-    k3 AS (SELECT * FROM k2 WHERE NOT ({u} < {cut})),
-    tok AS (SELECT CAST(len(list_filter(string_split(text, ' '),
-                                        t -> t <> '')) AS BIGINT) AS n
-            FROM k3)
-    SELECT
-      (SELECT CAST(COUNT(*) AS BIGINT) FROM documents) AS n_input,
-      (SELECT CAST(COUNT(*) AS BIGINT) FROM k1) AS n_after_exact,
-      (SELECT CAST(COUNT(*) AS BIGINT) FROM k2) AS n_after_decontam,
-      (SELECT CAST(COUNT(*) AS BIGINT) FROM k3) AS n_train,
-      (SELECT CAST(COALESCE(SUM(n), 0) AS BIGINT) FROM tok)
-        AS total_tokens,
-      (SELECT CAST(CASE WHEN COALESCE(SUM(n), 0) > 0
-                        THEN (SUM(n) + 511) // 512 ELSE 0 END AS BIGINT)
-       FROM tok) AS n_chunks"""
+class _Media(NamedTuple):
+    synth: Callable          # (spark, n) -> synthetic near-dup table
+    n: int                   # items: n // 3 bases x 3 re-encodes
+    candidates: Callable     # batch capped Hamming-LSH pairs
+    stream_flags: Callable   # streaming band-bucket flagger
 
 
-def q_stream_image_neardup(spark, sf_dir):
-    # Streaming IMAGE near-dup (round 7): decode + dHash + Hamming band
-    # split in ONE in-stream mapInArrow stage → the shared epoch-
-    # deterministic stateful flagger, driven MULTI-BATCH through one
-    # checkpoint exactly like the text twin (two availableNow rounds
-    # over a ts-ordered split, so cross-batch pairing + restart recovery
-    # are both under the oracle). Corpus: the synthetic near-dup media
-    # table (PPM/PNG/WebP-VP8L re-encodes) with ts monotone in the item
-    # index, so "bucket minimum by (ts, media_id)" = MIN(media_id) and
-    # the relational rule is SQL-expressible. State per live bucket is
-    # ONE (media_id, ts) pair; each arrival emits at most n_bands flags
-    # — no quadratic shape exists in this path, so it needs no
-    # mega-bucket cap (unlike the batch self-join).
-    from rdf_rdfxml_spark.operators.multimodal import synth_neardup_media
-    from rdf_rdfxml_spark.streaming.stream import (
-        stream_image_neardup_flags,
-    )
-    base = _scratch("stream_image_neardup")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    media = synth_neardup_media(spark, 48).selectExpr(
+#: The decoded near-dup modalities (round 6-7): dHash over the REAL
+#: image decode path (PPM/PNG/WebP-VP8L payloads of the same pixels), a
+#: 48-bit gain-invariant spectral-derivative fingerprint over the real
+#: audio decode path (WAV-PCM / FLAC / Ogg-FLAC re-encodes), and a
+#: per-frame dHash bit-majority over the real frame splitter
+#: (PPM-seq / baseline MJPEG / animated-WebP re-encodes of the same
+#: footage). Each runs the same Hamming-LSH banding as simhash.
+_MEDIA = {
+    "image": _Media(_MM.synth_neardup_media, 48,
+                    _MM.image_neardup_candidates,
+                    _ST.stream_image_neardup_flags),
+    "audio": _Media(_MM.synth_neardup_audio, 36,
+                    _MM.audio_neardup_candidates,
+                    _ST.stream_audio_neardup_flags),
+    "video": _Media(_MM.synth_neardup_video, 24,
+                    _MM.video_neardup_candidates,
+                    _ST.stream_video_neardup_flags),
+}
+
+
+def q_media_neardup(kind: str, spark, sf_dir):
+    # Perceptual near-dup candidate pairs over the deterministic
+    # synthetic near-dup table of one modality; the oracle inlines
+    # sequentially-computed signatures and runs the SAME capped banding
+    # join in DuckDB, so the distributed join is value-checked.
+    m = _MEDIA[kind]
+    return m.candidates(m.synth(spark, m.n).repartition(8))
+
+
+def _media_pairs_oracle(kind: str) -> str:
+    return _SK.hamming_pairs_oracle_sql(
+        _MM.neardup_sig_cte(kind, _MEDIA[kind].n), bits=48)
+
+
+def q_stream_media_neardup(kind: str, spark, sf_dir):
+    # Streaming media near-dup (round 7): decode + signature + Hamming
+    # band split in ONE in-stream mapInArrow stage → the shared epoch-
+    # deterministic stateful flagger, through the two-round checkpoint
+    # protocol of _two_round_stream. ts is monotone in the item index,
+    # so "bucket minimum by (ts, media_id)" = MIN(media_id) and the
+    # relational rule is SQL-expressible. State per live bucket is ONE
+    # (media_id, ts) pair; each arrival emits at most n_bands flags — no
+    # quadratic shape exists in this path, so it needs no mega-bucket
+    # cap (unlike the batch self-join).
+    m = _MEDIA[kind]
+    media = m.synth(spark, m.n).selectExpr(
         "media_id", "payload",
         "timestamp_seconds(1700000000 + CAST(substring(media_id, 2) "
         "AS INT)) AS ingested_at")
-    (media.filter("substring(media_id, 2) <= '0023'")
-     .repartition(4).write.parquet(in_dir))
-
-    def run_round():
-        stream = spark.readStream.schema(media.schema).parquet(in_dir)
-        q = (stream_image_neardup_flags(stream)
-             .writeStream.option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start(out_dir, format="parquet", outputMode="append"))
-        q.awaitTermination()
-
-    run_round()
-    (media.filter("substring(media_id, 2) > '0023'")
-     .repartition(4).write.mode("append").parquet(in_dir))
-    run_round()  # restart from checkpoint; picks up only the new files
-    return (spark.read.parquet(out_dir)
+    return (_two_round_stream(spark, f"stream_{kind}_neardup", media,
+                              "substring(media_id, 2)",
+                              "'%04d'" % (m.n // 2 - 1), m.stream_flags)
             .selectExpr("media_id", "CAST(band_id AS INT) AS band_id",
                         "dup_of"))
 
 
-def stream_image_neardup_oracle_sql(n: int = 48, n_base: int = 16, *,
-                                    n_bands: int = 4) -> str:
-    """DuckDB twin of the availableNow semantics of
-    q_stream_image_neardup: per (band_id, band_value) bucket, every
-    item except the bucket minimum, paired with that minimum (ts is
-    monotone in media_id, so min-by-(ts, id) = MIN(media_id)). Hashes
-    inlined through the same decode + dhash48 path as the batch image
-    oracle."""
-    from rdf_rdfxml_spark.operators.multimodal import (
-        DHASH_BITS, decode_image, dhash48, synth_neardup_media_item,
-    )
-    width = DHASH_BITS // n_bands
-    rows = []
-    for i in range(n):
-        media_id, _mime, payload = synth_neardup_media_item(i, n_base)
-        rows.append(f"('{media_id}', {dhash48(decode_image(payload))})")
-    values = ",\n      ".join(rows)
-    return f"""
-    WITH sig AS (SELECT * FROM (VALUES
-      {values}) AS t(media_id, dhash)),
-    bands AS (
-      SELECT media_id, CAST(b AS INTEGER) AS band_id,
-             (dhash >> CAST(b * {width} AS INTEGER)) % {2 ** width}
-               AS band_value
-      FROM sig, generate_series(0, {n_bands - 1}) AS g(b)),
-    firsts AS (
-      SELECT band_id, band_value, MIN(media_id) AS first_id
-      FROM bands GROUP BY band_id, band_value)
-    SELECT b.media_id, b.band_id, f.first_id AS dup_of
-    FROM bands b JOIN firsts f
-      ON f.band_id = b.band_id AND f.band_value = b.band_value
-    WHERE b.media_id != f.first_id"""
-
-
-def q_stream_audio_neardup(spark, sf_dir):
-    # Streaming AUDIO near-dup (round 7): the gain-invariant spectral
-    # fingerprint through the generic streaming media engine — same
-    # multi-batch checkpoint protocol and relational oracle rule as
-    # q_stream_image_neardup (see that query's comment).
-    from rdf_rdfxml_spark.operators.multimodal import synth_neardup_audio
-    from rdf_rdfxml_spark.streaming.stream import (
-        stream_audio_neardup_flags,
-    )
-    base = _scratch("stream_audio_neardup")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    media = synth_neardup_audio(spark, 36).selectExpr(
-        "media_id", "payload",
-        "timestamp_seconds(1700000000 + CAST(substring(media_id, 2) "
-        "AS INT)) AS ingested_at")
-    (media.filter("substring(media_id, 2) <= '0017'")
-     .repartition(4).write.parquet(in_dir))
-
-    def run_round():
-        stream = spark.readStream.schema(media.schema).parquet(in_dir)
-        q = (stream_audio_neardup_flags(stream)
-             .writeStream.option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start(out_dir, format="parquet", outputMode="append"))
-        q.awaitTermination()
-
-    run_round()
-    (media.filter("substring(media_id, 2) > '0017'")
-     .repartition(4).write.mode("append").parquet(in_dir))
-    run_round()
-    return (spark.read.parquet(out_dir)
-            .selectExpr("media_id", "CAST(band_id AS INT) AS band_id",
-                        "dup_of"))
-
-
-def stream_audio_neardup_oracle_sql(n: int = 36, n_base: int = 12, *,
-                                    n_bands: int = 4) -> str:
-    """DuckDB twin of q_stream_audio_neardup's availableNow semantics
-    (the audio instance of stream_image_neardup_oracle_sql's rule)."""
-    from rdf_rdfxml_spark.operators.multimodal import (
-        _decode_audio_checked, audio_fingerprint48,
-        synth_neardup_audio_item,
-    )
-    width = 48 // n_bands
-    rows = []
-    for i in range(n):
-        media_id, payload = synth_neardup_audio_item(i, n_base)
-        samples, rate = _decode_audio_checked(payload)
-        rows.append(f"('{media_id}', "
-                    f"{audio_fingerprint48(samples, rate)})")
-    values = ",\n      ".join(rows)
-    return f"""
-    WITH sig AS (SELECT * FROM (VALUES
-      {values}) AS t(media_id, afp)),
-    bands AS (
-      SELECT media_id, CAST(b AS INTEGER) AS band_id,
-             (afp >> CAST(b * {width} AS INTEGER)) % {2 ** width}
-               AS band_value
-      FROM sig, generate_series(0, {n_bands - 1}) AS g(b)),
-    firsts AS (
-      SELECT band_id, band_value, MIN(media_id) AS first_id
-      FROM bands GROUP BY band_id, band_value)
-    SELECT b.media_id, b.band_id, f.first_id AS dup_of
-    FROM bands b JOIN firsts f
-      ON f.band_id = b.band_id AND f.band_value = b.band_value
-    WHERE b.media_id != f.first_id"""
-
-
-def q_stream_video_neardup(spark, sf_dir):
-    # Streaming VIDEO near-dup (round 7): frame-majority signature
-    # through the generic streaming media engine — same multi-batch
-    # checkpoint protocol and relational oracle rule as the image/audio
-    # streaming twins; completes the streaming dedup matrix.
-    from rdf_rdfxml_spark.operators.multimodal import synth_neardup_video
-    from rdf_rdfxml_spark.streaming.stream import (
-        stream_video_neardup_flags,
-    )
-    base = _scratch("stream_video_neardup")
-    in_dir = os.path.join(base, "in")
-    out_dir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    media = synth_neardup_video(spark, 24).selectExpr(
-        "media_id", "payload",
-        "timestamp_seconds(1700000000 + CAST(substring(media_id, 2) "
-        "AS INT)) AS ingested_at")
-    (media.filter("substring(media_id, 2) <= '0011'")
-     .repartition(4).write.parquet(in_dir))
-
-    def run_round():
-        stream = spark.readStream.schema(media.schema).parquet(in_dir)
-        q = (stream_video_neardup_flags(stream)
-             .writeStream.option("checkpointLocation", ckpt)
-             .trigger(availableNow=True)
-             .start(out_dir, format="parquet", outputMode="append"))
-        q.awaitTermination()
-
-    run_round()
-    (media.filter("substring(media_id, 2) > '0011'")
-     .repartition(4).write.mode("append").parquet(in_dir))
-    run_round()
-    return (spark.read.parquet(out_dir)
-            .selectExpr("media_id", "CAST(band_id AS INT) AS band_id",
-                        "dup_of"))
-
-
-def stream_video_neardup_oracle_sql(n: int = 24, n_base: int = 8, *,
-                                    n_bands: int = 4,
-                                    every: int = 2) -> str:
-    """DuckDB twin of q_stream_video_neardup's availableNow semantics
-    (the video instance of stream_image_neardup_oracle_sql's rule)."""
-    from rdf_rdfxml_spark.operators.multimodal import (
-        DHASH_BITS, synth_neardup_video_item, video_signature48,
-    )
-    width = DHASH_BITS // n_bands
-    rows = []
-    for i in range(n):
-        media_id, _mime, payload = synth_neardup_video_item(i, n_base)
-        rows.append(f"('{media_id}', "
-                    f"{video_signature48(payload, every=every)})")
-    values = ",\n      ".join(rows)
-    return f"""
-    WITH sig AS (SELECT * FROM (VALUES
-      {values}) AS t(media_id, vhash)),
-    bands AS (
-      SELECT media_id, CAST(b AS INTEGER) AS band_id,
-             (vhash >> CAST(b * {width} AS INTEGER)) % {2 ** width}
-               AS band_value
-      FROM sig, generate_series(0, {n_bands - 1}) AS g(b)),
-    firsts AS (
-      SELECT band_id, band_value, MIN(media_id) AS first_id
-      FROM bands GROUP BY band_id, band_value)
-    SELECT b.media_id, b.band_id, f.first_id AS dup_of
-    FROM bands b JOIN firsts f
-      ON f.band_id = b.band_id AND f.band_value = b.band_value
-    WHERE b.media_id != f.first_id"""
+def _stream_media_oracle(kind: str) -> str:
+    return _SK.first_in_bucket_oracle_sql(
+        _MM.neardup_sig_cte(kind, _MEDIA[kind].n), "media_id", bits=48)
 
 
 def q_containment_pairs(spark, sf_dir):
@@ -1591,10 +1240,8 @@ def q_containment_pairs(spark, sf_dir):
     # doc-inside-doc duplication that jaccard misses. Shuffles only
     # (doc_id, fp) longs + fixed-width pair rows; boilerplate
     # fingerprints capped (mega-bucket control, declared bound).
-    from rdf_rdfxml_spark.operators.sketch import containment_pairs
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return containment_pairs(docs)
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text")
+    return _SK.containment_pairs(docs)
 
 
 def q_pii_scrub(spark, sf_dir):
@@ -1602,25 +1249,22 @@ def q_pii_scrub(spark, sf_dir):
     # zero shuffle. The synthetic docs carry no PII, so a deterministic
     # PII-bearing text is derived per doc (same expression in the
     # oracle); counts + scrubbed-text md5 make the gate value-exact.
-    from rdf_rdfxml_spark.operators.curation import pii_scrub, pii_texts
-    spark_expr, _ = pii_texts()
-    return pii_scrub(_docs(spark, sf_dir), text_expr=spark_expr)
+    spark_expr, _ = _CUR.pii_texts()
+    return _CUR.pii_scrub(_docs(spark, sf_dir), text_expr=spark_expr)
 
 
 def q_repetition_stats(spark, sf_dir):
     # Gopher-style repetition/quality signals (dup-word / dup-2gram /
     # top-word fractions, mean word length, composite keep flag) — pure
     # column expressions, zero shuffle.
-    from rdf_rdfxml_spark.operators.curation import repetition_stats
-    return repetition_stats(_docs(spark, sf_dir))
+    return _CUR.repetition_stats(_docs(spark, sf_dir))
 
 
 def q_vocab_stats(spark, sf_dir):
     # Corpus Zipf-head profile: top-20 terms by document frequency with
     # total term frequency — one vocab-keyed aggregate fed by per-doc
     # distinct-term rows (no token-stream shuffle).
-    from rdf_rdfxml_spark.operators.curation import vocab_stats
-    return vocab_stats(_docs(spark, sf_dir))
+    return _CUR.vocab_stats(_docs(spark, sf_dir))
 
 
 def q_tfidf_keywords(spark, sf_dir):
@@ -1628,8 +1272,7 @@ def q_tfidf_keywords(spark, sf_dir):
     # doubles, no libm-log parity seam). tf is computed with pure column
     # exprs over distinct terms; only (doc_id, term, tf) rows reach the
     # df aggregate and the top-k window.
-    from rdf_rdfxml_spark.operators.curation import tfidf_keywords
-    return tfidf_keywords(_docs(spark, sf_dir))
+    return _CUR.tfidf_keywords(_docs(spark, sf_dir))
 
 
 def q_text_quality(spark, sf_dir):
@@ -1674,20 +1317,16 @@ def q_doc_winnowing(spark, sf_dir):
     # Winnowing (rolling k-gram hash, window minima): the containment-
     # search fingerprint — any shared substring of length >= k+w-1 yields
     # a shared fingerprint. Document-local (mapInArrow, zero shuffle).
-    from rdf_rdfxml_spark.operators.sketch import winnow_fingerprints
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(_sized_spread(spark, _table_rows(sf_dir)))
-    return winnow_fingerprints(docs)
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text", sized=True)
+    return _SK.winnow_fingerprints(docs)
 
 
 def q_lang_id_trigram(spark, sf_dir):
     # Character-trigram profile language-ID (Cavnar-Trenkle family) —
     # replaces the two-stopword placeholder signal; profiles are literal
     # constants shared with the oracle SQL.
-    from rdf_rdfxml_spark.operators.textlang import langid_trigram
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(_sized_spread(spark, _table_rows(sf_dir)))
-    return langid_trigram(docs)
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text", sized=True)
+    return _TL.langid_trigram(docs)
 
 
 def q_doc_fingerprint(spark, sf_dir):
@@ -1704,20 +1343,16 @@ def q_dup_span_stats(spark, sf_dir):
     # character ranges verbatim-shared with >= 1 other document, plus
     # the duplicated char mass. Whole-doc dedup says WHICH docs are
     # copies; this says WHERE inside each doc the copied bytes live.
-    from rdf_rdfxml_spark.operators.spans import dup_span_stats
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return dup_span_stats(docs)
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text")
+    return _SP.dup_span_stats(docs)
 
 
 def q_dup_span_removal(spark, sf_dir):
     # The transform half of the span pair: physically rebuild each document
     # with its duplicated spans cut out (kept-piece substring + ordered
     # concat, all JVM-side). Value-exact on the cleaned STRINGS.
-    from rdf_rdfxml_spark.operators.spans import dup_span_removal
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return dup_span_removal(docs)
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text")
+    return _SP.dup_span_removal(docs)
 
 
 def q_selfrep_spans(spark, sf_dir):
@@ -1725,10 +1360,8 @@ def q_selfrep_spans(spark, sf_dir):
     # each doc the self-repeated bytes live (the surgical cousin of the
     # Gopher-ratio repetition_stats filter, which can only keep or drop
     # the whole doc). Entirely per-doc after the anchor stage.
-    from rdf_rdfxml_spark.operators.spans import self_dup_span_stats
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return self_dup_span_stats(docs)
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text")
+    return _SP.self_dup_span_stats(docs)
 
 
 #: Deterministic "lined" web-page corpus derived from the flat documents
@@ -1758,20 +1391,18 @@ def q_corpus_boilerplate_lines(spark, sf_dir):
     # CCNet-style line-level boilerplate inventory (operators/lines.py):
     # every line body shared by >= min_df distinct documents, with its
     # document frequency. Two partial-aggregating stages, no UDF.
-    from rdf_rdfxml_spark.operators.lines import boilerplate_lines
     docs = _lined_docs(spark, sf_dir)
     docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return boilerplate_lines(docs)
+    return _LN.boilerplate_lines(docs)
 
 
 def q_corpus_line_dedup(spark, sf_dir):
     # The transform half: rebuild every page with its boilerplate lines
     # removed (ordered reassembly, blank lines kept). Value-exact on
     # the cleaned STRINGS, like corpus_dup_span_removal.
-    from rdf_rdfxml_spark.operators.lines import line_dedup
     docs = _lined_docs(spark, sf_dir)
     docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return line_dedup(docs)
+    return _LN.line_dedup(docs)
 
 
 def q_corpus_source_quota(spark, sf_dir):
@@ -1779,10 +1410,8 @@ def q_corpus_source_quota(spark, sf_dir):
     # uniform quota of 10 docs per source via the two-phase salted
     # top-k-per-key (operators/sampling.py source_quota — the hot
     # domain never lands on one task).
-    from rdf_rdfxml_spark.operators.sampling import source_quota
-    docs = _docs(spark, sf_dir)
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return source_quota(docs, 10)
+    docs = _spread_docs(spark, sf_dir)
+    return _SA.source_quota(docs, 10)
 
 
 def q_corpus_token_quantiles(spark, sf_dir):
@@ -1791,10 +1420,8 @@ def q_corpus_token_quantiles(spark, sf_dir):
     # partial-agg value histogram (mergeable — union = add counts),
     # universe-sized cumulative window, integer cross-multiplied
     # inverse-CDF rule — no floats, no approximation.
-    from rdf_rdfxml_spark.operators.quantiles import exact_quantiles
-    docs = _docs(spark, sf_dir)
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return exact_quantiles(
+    docs = _spread_docs(spark, sf_dir)
+    return _QT.exact_quantiles(
         docs, "size(filter(split(text, ' '), t -> t <> ''))")
 
 
@@ -1802,10 +1429,8 @@ def q_corpus_source_quantiles(spark, sf_dir):
     # The per-domain form of the histogram quantiles — "the p95 token
     # cut PER SOURCE": per-stratum histograms and keyed windows, no
     # SinglePartition anywhere.
-    from rdf_rdfxml_spark.operators.quantiles import grouped_quantiles
-    docs = _docs(spark, sf_dir)
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return grouped_quantiles(
+    docs = _spread_docs(spark, sf_dir)
+    return _QT.grouped_quantiles(
         docs, "size(filter(split(text, ' '), t -> t <> ''))",
         qs=(25, 50, 95))
 
@@ -1816,11 +1441,10 @@ def q_kg_bfs(spark, sf_dir):
     # bit_length(k), ~9 frontier rounds at sf0.01): the traversal
     # primitive, frontier-join + anti-join per round, chained-level
     # oracle with a loud completeness guard.
-    from rdf_rdfxml_spark.operators.graph import bfs_depths
     d = _docs(spark, sf_dir).select("doc_id").filter("doc_id >= 1")
     edges = d.selectExpr("concat('n', doc_id DIV 2) AS src",
                          "concat('n', doc_id) AS dst")
-    return bfs_depths(edges, "n0")
+    return _G.bfs_depths(edges, "n0")
 
 
 def q_corpus_mix_execute(spark, sf_dir):
@@ -1829,10 +1453,8 @@ def q_corpus_mix_execute(spark, sf_dir):
     # (sqrt-temperature up-weighting; a stratum whose alloc exceeds
     # supply keeps everything). Closes the plan → realized-sample loop
     # begun by corpus_mix_plan; rates never exist as floats.
-    from rdf_rdfxml_spark.operators.sampling import mix_execute
-    docs = _docs(spark, sf_dir)
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return mix_execute(docs, token_budget=100_000)
+    docs = _spread_docs(spark, sf_dir)
+    return _SA.mix_execute(docs, token_budget=100_000)
 
 
 def q_kg_kcore(spark, sf_dir):
@@ -1844,7 +1466,6 @@ def q_kg_kcore(spark, sf_dir):
     # + 1 clique anchor (peel round 3); fixpoint at round 4. The
     # oracle replays the synchronous peel as chained MATERIALIZED
     # levels with a loud non-convergence error() guard.
-    from rdf_rdfxml_spark.operators.graph import kcore
     d = _docs(spark, sf_dir).select("doc_id")
     cl = (d.alias("x").join(
         d.alias("y"),
@@ -1863,7 +1484,7 @@ def q_kg_kcore(spark, sf_dir):
                           "concat('k', doc_id) AS dst"))
     edges = cl.unionByName(ch).unionByName(t1) \
         .unionByName(t2).unionByName(anchor)
-    return kcore(edges, 4)
+    return _G.kcore(edges, 4)
 
 
 KCORE_EDGES_SQL = """
@@ -1903,15 +1524,12 @@ def q_corpus_ccnet_stats(spark, sf_dir):
     # NTILE the (unchanged) oracle replays: the rank reproduces the
     # (desc ppm, asc doc_id) NTILE ordering exactly.
     from pyspark.sql import Window
-    from rdf_rdfxml_spark.operators.lines import line_dedup
-    from rdf_rdfxml_spark.operators.lm import bigram_lm_scores
     lined = _lined_docs(spark, sf_dir)
     lined = lined.repartition(2 * spark.sparkContext.defaultParallelism)
-    cleaned = line_dedup(lined)
-    scores = bigram_lm_scores(
+    cleaned = _LN.line_dedup(lined)
+    scores = _LM.bigram_lm_scores(
         cleaned.select("doc_id", F.col("clean_text").alias("text")))
-    from rdf_rdfxml_spark.operators.quantiles import ntile_desc_by_histogram
-    b = ntile_desc_by_histogram(scores, "mean_bigram_ppm", "doc_id",
+    b = _QT.ntile_desc_by_histogram(scores, "mean_bigram_ppm", "doc_id",
                                 n_buckets=3)
     return (b.join(cleaned.select("doc_id", "clean_chars"), "doc_id")
             .groupBy("bucket")
@@ -1926,10 +1544,8 @@ def q_corpus_kmv_distinct(spark, sf_dir):
     # KMV/bottom-k distinct sketch: distinct 16-gram estimate from k
     # smallest 60-bit hashes (state = k longs, union = min-k). The
     # exact count rides along for accuracy reporting.
-    from rdf_rdfxml_spark.operators.distinct_sketch import kmv_distinct
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return kmv_distinct(docs)
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text")
+    return _DS.kmv_distinct(docs)
 
 
 def q_corpus_hll_distinct(spark, sf_dir):
@@ -1937,10 +1553,8 @@ def q_corpus_hll_distinct(spark, sf_dir):
     # registers via partial-agg groupBy(bucket).max(rho) — the textbook
     # mergeable-sketch plan (m-row exchange, zero data-sized shuffles,
     # no distinct pass anywhere in the estimate path).
-    from rdf_rdfxml_spark.operators.distinct_sketch import hll_distinct
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return hll_distinct(docs)
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text")
+    return _DS.hll_distinct(docs)
 
 
 def q_corpus_bpe_merges(spark, sf_dir):
@@ -1949,19 +1563,15 @@ def q_corpus_bpe_merges(spark, sf_dir):
     # then vocabulary-sized iterations (pair hash-agg + global top-1 +
     # JVM-side fold merge; only the winning pair reaches the driver per
     # step). The oracle replays every merge level in generated SQL.
-    from rdf_rdfxml_spark.operators.bpe import bpe_train_merges
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return bpe_train_merges(docs, n_merges=10)
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text")
+    return _BPE.bpe_train_merges(docs, n_merges=10)
 
 
 def q_corpus_bpe_vocab(spark, sf_dir):
     # Encode-side consequence of the learned merges: the corpus subword
     # vocabulary (token, total freq) after applying all 10 BPE merges.
-    from rdf_rdfxml_spark.operators.bpe import bpe_vocab
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return bpe_vocab(docs, n_merges=10)
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text")
+    return _BPE.bpe_vocab(docs, n_merges=10)
 
 
 def q_corpus_bpe_token_count(spark, sf_dir):
@@ -1969,10 +1579,8 @@ def q_corpus_bpe_token_count(spark, sf_dir):
     # learned BPE segmentation (encode = lookup into the trained word
     # table, since training ran on this corpus). Whitespace token_count
     # is what packing budgets with; this is what a dataloader sees.
-    from rdf_rdfxml_spark.operators.bpe import bpe_token_counts
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    docs = docs.repartition(2 * spark.sparkContext.defaultParallelism)
-    return bpe_token_counts(docs, n_merges=10)
+    docs = _spread_docs(spark, sf_dir, "doc_id", "text")
+    return _BPE.bpe_token_counts(docs, n_merges=10)
 
 
 def q_audio_features(spark, sf_dir):
@@ -1982,23 +1590,17 @@ def q_audio_features(spark, sf_dir):
     # feature UDF; the oracle recomputes the same decodes sequentially at
     # SQL-generation time from the SAME synth helper, so the two cannot
     # drift. Value-exact: duration/rms/channels/rate per item.
-    from rdf_rdfxml_spark.operators.multimodal import (
-        audio_features, synth_audio,
-    )
-    return (audio_features(synth_audio(spark, 15).repartition(4))
+    return (_MM.audio_features(_MM.synth_audio(spark, 15).repartition(4))
             .select("media_id", "duration_ms", "rms", "channels",
                     "sample_rate"))
 
 
 def _audio_oracle() -> str:
-    from rdf_rdfxml_spark.operators.multimodal import (
-        _decode_audio_checked, synth_audio_item,
-    )
     import numpy as np
     rows = []
     for i in range(15):
-        media_id, payload = synth_audio_item(i)
-        samples, rate = _decode_audio_checked(payload)
+        media_id, payload = _MM.synth_audio_item(i)
+        samples, rate = _MM._decode_audio_checked(payload)
         dur = int(samples.shape[0] * 1000 // rate)
         rms = round(float(np.sqrt(
             np.mean(samples.astype(np.float64) ** 2))), 4)
@@ -2020,11 +1622,8 @@ def q_multimodal_features(spark, sf_dir):
     # same computation run sequentially at SQL-generation time — it checks
     # the *distributed plumbing* (Arrow round-trip, partition-invariance);
     # the decoders themselves are unit-tested against hand-built payloads.
-    from rdf_rdfxml_spark.operators.multimodal import (
-        extract_features, synth_media,
-    )
-    media = synth_media(spark, 64).repartition(8)
-    return (extract_features(media)
+    media = _MM.synth_media(spark, 64).repartition(8)
+    return (_MM.extract_features(media)
             .select("media_id", "feature", "n_bytes"))
 
 
@@ -2032,13 +1631,10 @@ def _video_oracle() -> str:
     # Same payloads as synth_video (shared synth_video_item), split with
     # the same container dispatch at SQL-generation time; the distributed
     # query must reproduce these constants through the real splitter.
-    from rdf_rdfxml_spark.operators.multimodal import (
-        split_video_frames, synth_video_item,
-    )
     rows = []
     for i in range(8):
-        media_id, _mime, payload = synth_video_item(i, 12)
-        fs = split_video_frames(payload)
+        media_id, _mime, payload = _MM.synth_video_item(i, 12)
+        fs = _MM.split_video_frames(payload)
         for f in range(0, len(fs), 4):
             rows.append(f"('{media_id}', {f}, {len(fs[f])})")
     values = ",\n      ".join(rows)
@@ -2057,61 +1653,14 @@ def _multimodal_oracle() -> str:
     # two can't drift), decoded sequentially at SQL-generation time; the
     # distributed query must reproduce these constants through the real
     # PPM/PNG decoders inside the Arrow-batched UDF.
-    from rdf_rdfxml_spark.operators.multimodal import (
-        decode_image, meanpool_fingerprint, synth_media_item,
-    )
     rows = []
     for i in range(64):
-        media_id, _mime, payload, _w, _h = synth_media_item(i)
-        fp = meanpool_fingerprint(decode_image(payload))
+        media_id, _mime, payload, _w, _h = _MM.synth_media_item(i)
+        fp = _MM.meanpool_fingerprint(_MM.decode_image(payload))
         rows.append(f"('{media_id}', '{fp}', {len(payload)})")
     values = ",\n      ".join(rows)
     return (f"SELECT * FROM (VALUES\n      {values})"
             " AS t(media_id, feature, n_bytes)")
-
-
-def q_image_neardup(spark, sf_dir):
-    # Perceptual image dedup (round-6 VERDICT item #2): dHash over the
-    # REAL decode path (PPM/PNG/WebP-VP8L payloads of the same pixels) +
-    # Hamming-LSH banding — the image twin of simhash_candidates. The
-    # corpus is the deterministic synthetic near-dup table (base /
-    # brightness-shift / noise variants across lossless re-encodes); the
-    # oracle inlines sequentially-computed hashes and runs the SAME
-    # banding join in DuckDB, so the distributed join is value-checked.
-    from rdf_rdfxml_spark.operators.multimodal import (
-        image_neardup_candidates, synth_neardup_media,
-    )
-    media = synth_neardup_media(spark, 48).repartition(8)
-    return image_neardup_candidates(media)
-
-
-def q_audio_neardup(spark, sf_dir):
-    # Audio near-dup (round 6): 48-bit spectral-derivative fingerprint
-    # (chromaprint-family, gain-invariant) through the REAL audio decode
-    # path (WAV-PCM / FLAC / Ogg-FLAC re-encodes of the same samples) +
-    # the same Hamming-LSH banding as images/text. With image_neardup
-    # and the text sketches this completes near-dup dedup across all
-    # three data modalities the engine decodes.
-    from rdf_rdfxml_spark.operators.multimodal import (
-        audio_neardup_candidates, synth_neardup_audio,
-    )
-    media = synth_neardup_audio(spark, 36).repartition(8)
-    return audio_neardup_candidates(media)
-
-
-def q_video_neardup(spark, sf_dir):
-    # Video near-dup (round 7 — the last modality gap): per-frame dHash
-    # through the REAL frame-splitting path (PPM-seq / baseline MJPEG /
-    # animated-WebP re-encodes of the same footage, so candidates span
-    # byte-disjoint AND pixel-approximate payloads) → per-video
-    # bit-majority signature → the capped Hamming-LSH banding shared
-    # with images/audio/text. Near-dup dedup now covers every modality
-    # the engine decodes.
-    from rdf_rdfxml_spark.operators.multimodal import (
-        synth_neardup_video, video_neardup_candidates,
-    )
-    media = synth_neardup_video(spark, 24).repartition(8)
-    return video_neardup_candidates(media)
 
 
 def q_training_corpus_stats(spark, sf_dir):
@@ -2123,53 +1672,34 @@ def q_training_corpus_stats(spark, sf_dir):
     # reuses an oracle-checked operator; the oracle composes their SQL
     # twins over the same intermediate sets.
     #
-    # Each survivor set is persisted before its count so the lineage runs
-    # ONCE: one scan of documents, one exact dedup, one MinHash+components
-    # pass (round-2 verdict "what's wrong" #2 — the unpersisted version
-    # re-ran the whole upstream chain for every .count(), ~4 redundant
-    # full passes at 100 TB). Counts are driver ints, so everything is
-    # unpersisted before returning the constant result row.
-    from rdf_rdfxml_spark.operators.graph import connected_components
-    from rdf_rdfxml_spark.operators.sketch import minhash_candidates
-    from rdf_rdfxml_spark.operators.textlang import langid_trigram
-    docs = (_docs(spark, sf_dir).select("doc_id", "text")
-            .repartition(2 * spark.sparkContext.defaultParallelism)
-            .persist())
-    cached = [docs]
-    try:
-        n_input = docs.count()
-        canon = (docs.groupBy(F.md5("text").alias("h"))
-                 .agg(F.min("doc_id").alias("doc_id")).select("doc_id"))
-        k1 = docs.join(canon, "doc_id", "left_semi").persist()
-        cached.append(k1)
-        n_exact = k1.count()
-        cc = connected_components(minhash_candidates(k1))
+    # Each survivor set is persisted before its count (_persisting) so
+    # the lineage runs ONCE: one scan of documents, one exact dedup, one
+    # MinHash+components pass (round-2 verdict "what's wrong" #2 — the
+    # unpersisted version re-ran the whole upstream chain for every
+    # .count(), ~4 redundant full passes at 100 TB).
+    with _persisting() as keep:
+        docs = keep(_spread_docs(spark, sf_dir, "doc_id", "text"))
+        k1 = keep(_exact_dedup(docs))
+        cc = _G.connected_components(_SK.minhash_candidates(k1))
         non_canonical = (cc.filter(F.col("node") != F.col("component"))
                          .select(F.col("node").alias("doc_id")))
-        k2 = k1.join(non_canonical, "doc_id", "left_anti").persist()
-        cached.append(k2)
-        n_neardup = k2.count()
-        k3 = k2.filter(
+        k2 = keep(k1.join(non_canonical, "doc_id", "left_anti"))
+        k3 = keep(k2.filter(
             "size(split(text, ' ')) >= 20 AND "
             "size(array_distinct(split(text, ' '))) / "
-            "CAST(size(split(text, ' ')) AS DOUBLE) >= 0.3").persist()
-        cached.append(k3)
-        n_quality = k3.count()
-        n_final = (langid_trigram(k3).filter("predicted = 'en'").count())
-    finally:
-        for df in cached:
-            df.unpersist()
+            "CAST(size(split(text, ' ')) AS DOUBLE) >= 0.3"))
+        counts = [df.count() for df in (docs, k1, k2, k3)]
+        counts.append(_TL.langid_trigram(k3)
+                      .filter("predicted = 'en'").count())
     return spark.createDataFrame(
-        [(n_input, n_exact, n_neardup, n_quality, n_final)],
+        [tuple(counts)],
         "n_input long, n_after_exact long, n_after_neardup long, "
         "n_after_quality long, n_final long")
 
 
 def _training_corpus_oracle() -> str:
-    from rdf_rdfxml_spark.operators.sketch import minhash_oracle_sql
-    from rdf_rdfxml_spark.operators.textlang import langid_oracle_sql
-    pairs = minhash_oracle_sql(table="k1")
-    langs = langid_oracle_sql(table="k3")
+    pairs = _SK.minhash_oracle_sql(table="k1")
+    langs = _TL.langid_oracle_sql(table="k3")
     return f"""
     WITH RECURSIVE
     canon AS (SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
@@ -2214,38 +1744,19 @@ def q_multimodal_corpus_stats(spark, sf_dir):
     # are n_bands fixed-width rows per item and the component
     # propagation); counts are driver ints so the composed result is a
     # constant row, like training_corpus_stats.
-    from rdf_rdfxml_spark.operators.graph import connected_components
-    from rdf_rdfxml_spark.operators.multimodal import (
-        audio_neardup_candidates, image_neardup_candidates,
-        synth_neardup_audio, synth_neardup_media, synth_neardup_video,
-        video_neardup_candidates,
-    )
-    # persist before the two counts so the documents scan runs once
-    # (the training_corpus_stats lesson — round-2 verdict)
-    docs = (_docs(spark, sf_dir).select("doc_id", "text").persist())
-    try:
-        n_docs = docs.count()
-        n_docs_exact = (docs.groupBy(F.md5("text").alias("h"))
-                        .agg(F.min("doc_id")).count())
-    finally:
-        docs.unpersist()
-
-    def kept(media, cand_fn, n_items):
+    with _persisting() as keep:
+        docs = keep(_docs(spark, sf_dir).select("doc_id", "text"))
+        counts = [docs.count(), _exact_dedup(docs).count()]
+    for m in _MEDIA.values():
         # survivors = items minus non-canonical component members
         # (media ids are fixed-width, so MIN over strings == numeric
         # min — the same canonical rule the oracle replays)
-        cc = connected_components(cand_fn(media).select("a", "b"))
-        return n_items - cc.filter("node != component").count()
-
-    imgs = synth_neardup_media(spark, 48).repartition(8)
-    n_img_kept = kept(imgs, image_neardup_candidates, 48)
-    auds = synth_neardup_audio(spark, 36).repartition(8)
-    n_aud_kept = kept(auds, audio_neardup_candidates, 36)
-    vids = synth_neardup_video(spark, 24).repartition(8)
-    n_vid_kept = kept(vids, video_neardup_candidates, 24)
+        cc = _G.connected_components(
+            m.candidates(m.synth(spark, m.n).repartition(8))
+            .select("a", "b"))
+        counts += [m.n, m.n - cc.filter("node != component").count()]
     return spark.createDataFrame(
-        [(n_docs, n_docs_exact, 48, n_img_kept, 36, n_aud_kept,
-          24, n_vid_kept)],
+        [tuple(counts)],
         "n_docs long, n_docs_after_exact long, "
         "n_images long, n_images_kept long, "
         "n_audio long, n_audio_kept long, "
@@ -2254,19 +1765,13 @@ def q_multimodal_corpus_stats(spark, sf_dir):
 
 def _multimodal_corpus_oracle() -> str:
     """Composed DuckDB twin of q_multimodal_corpus_stats: per-modality
-    candidate pairs via the SAME oracle builders the individual gates
+    candidate pairs via the SAME oracle builder the individual gates
     use, components via the training oracle's recursive-reach replay,
     canonical-member survivor counts, text stages over documents."""
-    from rdf_rdfxml_spark.operators.multimodal import (
-        audio_neardup_oracle_sql, image_neardup_oracle_sql,
-        video_neardup_oracle_sql,
-    )
     parts = []
-    for tag, sql, n in (("i", image_neardup_oracle_sql(48), 48),
-                        ("a", audio_neardup_oracle_sql(36), 36),
-                        ("v", video_neardup_oracle_sql(24), 24)):
+    for tag, kind in (("i", "image"), ("a", "audio"), ("v", "video")):
         parts.append(f"""
-    {tag}pairs AS (SELECT a, b FROM ({sql}) t),
+    {tag}pairs AS (SELECT a, b FROM ({_media_pairs_oracle(kind)}) t),
     {tag}sym AS (SELECT a AS src, b AS dst FROM {tag}pairs
              UNION SELECT b, a FROM {tag}pairs),
     {tag}reach(node, lbl) AS (
@@ -2300,11 +1805,8 @@ def q_video_frame_sample(spark, sf_dir):
     # (compressed video needs codecs this container lacks; the container
     # format is real and parsed, not faked): every 4th of 12 frames per
     # video → closed-form oracle (frames 0/4/8, fixed frame byte size).
-    from rdf_rdfxml_spark.operators.multimodal import (
-        sample_frames, synth_video,
-    )
-    vids = synth_video(spark, 8, frames=12).repartition(4)
-    return (sample_frames(vids, every=4)
+    vids = _MM.synth_video(spark, 8, frames=12).repartition(4)
+    return (_MM.sample_frames(vids, every=4)
             .selectExpr("media_id", "frame_index",
                         "CAST(length(frame) AS INT) AS n_bytes"))
 
@@ -2317,7 +1819,6 @@ def q_rdfxml_write(spark, sf_dir):
     # writer modes) + the pytest isomorphism battery. Plan shape: ONE
     # group-shuffle on doc_sha feeds the grouped-map render; no driver
     # collect anywhere (PERF.md §16).
-    from rdf_rdfxml_spark.operators.extract import extract
     from rdf_rdfxml_spark.writer.serialize import write_rdfxml
     # The corpus-rewrite plan, round 5: spread the INPUT (the sf corpus
     # is one parquet file = one scan partition, which serialized the
@@ -2327,8 +1828,7 @@ def q_rdfxml_write(spark, sf_dir):
     # the group exchange + sort entirely (PERF.md §19). Task count via
     # the _sized_spread floor (measured: 64 tasks 1.78 s vs 16 tasks
     # 0.89 s on the same 5k docs).
-    spread = _sized_spread(spark, _table_rows(sf_dir))
-    docs = _docs(spark, sf_dir).repartition(spread).selectExpr(
+    docs = _spread_docs(spark, sf_dir, sized=True).selectExpr(
         f"({D.xml_basic_expr()}) AS content",
         "'http://example.org/' AS base_uri")
     t = triples_channel(extract(docs)).select(
@@ -2344,168 +1844,7 @@ def q_events_sessionize(spark, sf_dir):
 
 def q_events_windowed(spark, sf_dir):
     # the watermark is a no-op on a static table
-    from rdf_rdfxml_spark.streaming.stream import windowed_event_counts
-    return windowed_event_counts(_events(spark, sf_dir))
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The driver-gated registry — kept at ≤50 entries because the driver's
-    correctness gate checks only the FIRST 50 (round-3 verdict: 9 of 59
-    silently fell outside the window, leaving the multimodal / composite-
-    curation / event flagships ungated). Consolidation, not coverage loss:
-    rdfxml_roundtrip now unions both writer modes, text_quality absorbs
-    token_count + doc_fingerprint, and the remaining baselines/variants
-    moved to :func:`extra_queries`, which tools/check_oracles.py still
-    verifies in full.
-    """
-    return {
-        "rdfxml_extract_basic": q_extract_basic,
-        "rdfxml_stream_ingest": q_stream_ingest,
-        "rdfxml_containers": q_extract_containers,
-        "rdfxml_collection": q_extract_collection,
-        "rdfxml_reification": q_extract_reification,
-        "rdfxml_nested_bnode": q_extract_nested_bnode,
-        "rdfxml_xmlliteral": q_extract_xmlliteral,
-        "rdfxml_xmlbase": q_extract_xmlbase,
-        "rdfxml_nodeid_shared": q_extract_nodeid,
-        "rdfxml_roundtrip": q_roundtrip,
-        "rdfxml_error_channel": q_error_channel,
-        "rdfxml_w3c_suite": q_w3c_suite,
-        "rdfxml_format_sniff": q_format_sniff,
-        "triples_dedup_global": q_dedup_global,
-        "iri_dictionary": q_iri_dictionary,
-        "entity_linking": q_entity_linking,
-        "entity_linking_salted": q_entity_linking_salted,
-        "predicate_stats": q_predicate_stats,
-        "kg_two_hop": q_kg_two_hop,
-        "kg_pagerank": q_kg_pagerank,
-        "lineage_invariant": q_lineage_invariant,
-        "resume_pending_units": q_resume_pending_units,
-        "extraction_metrics": q_extraction_metrics,
-        "dedup_exact": q_dedup_exact,
-        "dedup_verified_pairs": q_dedup_verified_pairs,
-        "minhash_lsh": q_minhash_lsh,
-        "dedup_components": q_dedup_components,
-        "simhash_candidates": q_simhash_candidates,
-        "ann_cosine_topk": q_ann_cosine_topk,
-        "ann_lsh_bucketed": q_ann_lsh_bucketed,
-        "dedup_embedding_bucketed": q_dedup_embedding_bucketed,
-        "dedup_embedding_trained": q_dedup_embedding_trained,
-        "dedup_embedding_twolevel": q_dedup_embedding_twolevel,
-        "ann_quantized_topk": q_ann_quantized_topk,
-        "ann_ivf_trained": q_ann_ivf_trained,
-        "stream_neardup": q_stream_neardup,
-        "containment_pairs": q_containment_pairs,
-        "pii_scrub": q_pii_scrub,
-        "repetition_stats": q_repetition_stats,
-        "tfidf_keywords": q_tfidf_keywords,
-        "vocab_stats": q_vocab_stats,
-        "text_quality": q_text_quality,
-        # round-7 rotation (COVERAGE.md §2.5): image_neardup_candidates
-        # takes lang_id_trigram's seat (training_corpus_stats partially
-        # subsumes lang-id; the displaced entry stays swept in extras)
-        "image_neardup_candidates": q_image_neardup,
-        "doc_winnowing": q_doc_winnowing,
-        "training_corpus_stats": q_training_corpus_stats,
-        "audio_features": q_audio_features,
-        "multimodal_features": q_multimodal_features,
-        "video_frame_sample": q_video_frame_sample,
-        "events_windowed": q_events_windowed,
-        "events_sessionize": q_events_sessionize,
-    }
-
-
-def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Oracle-twinned queries OUTSIDE the driver's 50-entry gate window:
-    declared brute-force baselines, portability variants, and entries
-    whose semantics a gated query now covers (see :func:`queries`).
-    tools/check_oracles.py verifies these with the same rows+schema+hash
-    compare; bench.py may time them."""
-    return {
-        "rdfxml_roundtrip_attrs": q_roundtrip_attr_folding,
-        "namespace_stats": q_namespace_stats,
-        "entity_linking_hashids": q_entity_linking_hashids,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_embedding_cosine": q_dedup_embedding_cosine,
-        "simhash": q_simhash,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "token_count": q_token_count,
-        "lang_id": q_lang_id,
-        "doc_fingerprint": q_doc_fingerprint,
-        "rdfxml_write": q_rdfxml_write,  # bench surface; rows-only check
-        # near-constant rollup twin — strong queries took its gate slot
-        "kg_degree_stats": q_kg_degree_stats,
-        # value-identical salted self-join (round 5; shares the
-        # kg_two_hop oracle — salting never changes the result)
-        "kg_two_hop_salted": q_kg_two_hop_salted,
-        # displaced by image_neardup_candidates in the round-7 rotation
-        # (COVERAGE.md §2.5); training_corpus_stats carries a lang-id
-        # stage, so the semantics stay partially gated too
-        "lang_id_trigram": q_lang_id_trigram,
-        # salted ITERATIVE paths (round 6) — share the unsalted oracles
-        "kg_pagerank_salted": q_kg_pagerank_salted,
-        "dedup_components_salted": q_dedup_components_salted,
-        # audio near-dup (round 6) — the third dedup modality
-        "audio_neardup_candidates": q_audio_neardup,
-        # video near-dup (round 7) — the last decoded modality
-        "video_neardup_candidates": q_video_neardup,
-        # composed multimodal curation pipeline (round 7) — text exact
-        # dedup + image/audio/video near-dup survivor counts in one row
-        "multimodal_corpus_stats": q_multimodal_corpus_stats,
-        # streaming image + audio near-dup (round 7) — the streaming x
-        # media cells of the dedup matrix, multi-batch through one
-        # checkpoint each
-        "stream_image_neardup": q_stream_image_neardup,
-        "stream_audio_neardup": q_stream_audio_neardup,
-        "stream_video_neardup": q_stream_video_neardup,
-        # deterministic corpus-mix composition (round 7)
-        "corpus_sample_stratified": q_corpus_sample,
-        "corpus_holdout_split": q_holdout_split,
-        # pre-training hygiene + stream assembly (round 7)
-        "corpus_decontaminate": q_corpus_decontaminate,
-        "corpus_token_packing": q_corpus_token_packing,
-        "corpus_chunk_manifest": q_chunk_manifest,
-        "corpus_mix_plan": q_corpus_mix_plan,
-        "corpus_assembly_stats": q_corpus_assembly_stats,
-        "stream_decontaminate": q_stream_decontaminate,
-        "stream_embedding_neardup": q_stream_embedding_neardup,
-        # duplicated-span detection + removal (round 7) — sub-document
-        # exact dedup, the Lee-et-al. complement to whole-doc near-dup
-        "corpus_dup_spans": q_dup_span_stats,
-        "corpus_dup_span_removal": q_dup_span_removal,
-        "corpus_selfrep_spans": q_selfrep_spans,
-        # BPE merge learning (round 7) — tokenizer TRAINING over the
-        # corpus, the inverse of vocab_stats' measurement direction
-        "corpus_bpe_merges": q_corpus_bpe_merges,
-        "corpus_bpe_vocab": q_corpus_bpe_vocab,
-        "corpus_bpe_token_count": q_corpus_bpe_token_count,
-        # triangle counting with degree-ordered orientation (round 7)
-        "kg_triangles": q_kg_triangles,
-        # integer-exact bigram-LM quality scoring (round 7)
-        "corpus_lm_scores": q_corpus_lm_scores,
-        # integer-exact product quantization ADC top-k (round 7)
-        "ann_pq_topk": q_ann_pq_topk,
-        # assembly chain WITH sub-document span hygiene (round 7)
-        "corpus_assembly_spanclean_stats": q_corpus_assembly_spanclean_stats,
-        # CCNet-style line-frequency boilerplate removal (round 7)
-        "corpus_boilerplate_lines": q_corpus_boilerplate_lines,
-        "corpus_line_dedup": q_corpus_line_dedup,
-        # per-domain quota cap via salted two-phase top-k (round 7)
-        "corpus_source_quota": q_corpus_source_quota,
-        # mergeable distinct-count sketches (round 7)
-        "corpus_kmv_distinct": q_corpus_kmv_distinct,
-        "corpus_hll_distinct": q_corpus_hll_distinct,
-        # the composed CCNet pipeline: line dedup → LM score → terciles
-        "corpus_ccnet_stats": q_corpus_ccnet_stats,
-        # iterative k-core peeling with a chained-level oracle
-        "kg_kcore": q_kg_kcore,
-        # the mixture plan executed as an exact-integer sample
-        "corpus_mix_execute": q_corpus_mix_execute,
-        # exact histogram-sketch quantiles + single-source BFS
-        "corpus_token_quantiles": q_corpus_token_quantiles,
-        "corpus_source_quantiles": q_corpus_source_quantiles,
-        "kg_bfs": q_kg_bfs,
-    }
+    return _ST.windowed_event_counts(_events(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -2588,141 +1927,8 @@ def _oracle_term_dictionary() -> str:
     FROM terms"""
 
 
-def oracle_sql() -> dict[str, str]:
-    """DuckDB twins for the driver-gated :func:`queries` (50 entries —
-    the registry sits exactly at the driver's 50-entry gate cap, so any
-    future gated addition must displace an entry into
-    :func:`extra_queries`; tools/check_oracles.py asserts the cap).
-    The rotation policy — what qualifies for a seat and what gets
-    displaced — is documented in COVERAGE.md §2.5."""
-    all_ = _all_oracle_sql()
-    return {k: all_[k] for k in queries() if k in all_}
-
-
-def extra_oracle_sql() -> dict[str, str]:
-    """DuckDB twins for :func:`extra_queries` — same compare contract,
-    checked locally by tools/check_oracles.py (the driver gate caps at
-    50 entries; these are the consolidated-away baselines/variants)."""
-    all_ = _all_oracle_sql()
-    return {k: all_[k] for k in extra_queries() if k in all_}
-
-
-def _all_oracle_sql() -> dict[str, str]:
-    sniff_expr = (f"CASE WHEN doc_id % 5 = 0 THEN '<notrdf/>' "
-                  f"ELSE ({D.xml_basic_expr()}) END")
-    oracles = {
-        "rdfxml_extract_basic": _oracle_basic_triples(),
-
-        # streaming ingest materializes the identical triple set — the
-        # batch oracle IS the streaming oracle (one extraction code path)
-        "rdfxml_stream_ingest": _oracle_basic_triples(),
-
-        "rdfxml_containers": _oracle_docs_cte(D.xml_container_expr()) + f""",
-    b AS (SELECT *, 'b:' || doc_sha || ':0' AS bn FROM d)
-    SELECT bn AS s, 'bnode' AS s_kind, '{RDF}type' AS p, '{RDF}Seq' AS o,
-           'iri' AS o_kind, {_NULL} AS o_lang, {_NULL} AS o_dt, doc_sha FROM b
-    UNION ALL SELECT bn, 'bnode', '{RDF}_1', lang, 'literal',
-           {_NULL}, {_NULL}, doc_sha FROM b
-    UNION ALL SELECT bn, 'bnode', '{RDF}_2', source, 'literal',
-           {_NULL}, {_NULL}, doc_sha FROM b
-    UNION ALL SELECT bn, 'bnode', '{RDF}_3',
-           'http://example.org/doc/' || CAST(doc_id AS STRING), 'iri',
-           {_NULL}, {_NULL}, doc_sha FROM b""",
-
-        "rdfxml_collection": _oracle_docs_cte(D.xml_collection_expr()) + f""",
-    b AS (SELECT *, 'b:' || doc_sha || ':0' AS b0,
-                 'b:' || doc_sha || ':1' AS b1 FROM d)
-    SELECT subj AS s, 'iri' AS s_kind, '{VOC}members' AS p, b0 AS o,
-           'bnode' AS o_kind, {_NULL} AS o_lang, {_NULL} AS o_dt, doc_sha FROM b
-    UNION ALL SELECT b0, 'bnode', '{RDF}first', 'http://example.org/m/a',
-           'iri', {_NULL}, {_NULL}, doc_sha FROM b
-    UNION ALL SELECT b0, 'bnode', '{RDF}rest', b1, 'bnode',
-           {_NULL}, {_NULL}, doc_sha FROM b
-    UNION ALL SELECT b1, 'bnode', '{RDF}first', 'http://example.org/m/b',
-           'iri', {_NULL}, {_NULL}, doc_sha FROM b
-    UNION ALL SELECT b1, 'bnode', '{RDF}rest', '{RDF}nil', 'iri',
-           {_NULL}, {_NULL}, doc_sha FROM b""",
-
-        "rdfxml_reification": _oracle_reify_triples(),
-
-        "rdfxml_nested_bnode": _oracle_docs_cte(D.xml_nested_expr()) + f""",
-    b AS (SELECT *, 'b:' || doc_sha || ':0' AS bn FROM d)
-    SELECT subj AS s, 'iri' AS s_kind, '{VOC}meta' AS p, bn AS o,
-           'bnode' AS o_kind, {_NULL} AS o_lang, {_NULL} AS o_dt, doc_sha FROM b
-    UNION ALL SELECT bn, 'bnode', '{VOC}origin', source, 'literal',
-           {_NULL}, {_NULL}, doc_sha FROM b""",
-
-        "rdfxml_xmlliteral": _oracle_docs_cte(D.xml_xmlliteral_expr()) + f"""
-    SELECT subj AS s, 'iri' AS s_kind, '{VOC}markup' AS p,
-           'a <ex:b xmlns:ex="{VOC}">c' || CAST(doc_id AS STRING)
-             || '</ex:b>' AS o,
-           'literal' AS o_kind, {_NULL} AS o_lang,
-           '{RDF}XMLLiteral' AS o_dt, doc_sha FROM d""",
-
-        "rdfxml_xmlbase": _oracle_docs_cte(D.xml_xmlbase_expr()) + f""",
-    b AS (SELECT *, 'http://example.org/dir/file.rdf#d'
-               || CAST(doc_id AS STRING) AS sid FROM d)
-    SELECT sid AS s, 'iri' AS s_kind, '{VOC}link' AS p,
-           'http://example.org/dir/rel/' || CAST(doc_id AS STRING) AS o,
-           'iri' AS o_kind, {_NULL} AS o_lang, {_NULL} AS o_dt, doc_sha FROM b
-    UNION ALL SELECT sid, 'iri', '{VOC}up', 'http://example.org/top', 'iri',
-           {_NULL}, {_NULL}, doc_sha FROM b""",
-
-        "rdfxml_nodeid_shared": _oracle_docs_cte(D.xml_nodeid_expr()) + f""",
-    b AS (SELECT *, 'b:' || doc_sha || ':0' AS bn FROM d)
-    SELECT subj AS s, 'iri' AS s_kind, '{VOC}knows' AS p, bn AS o,
-           'bnode' AS o_kind, {_NULL} AS o_lang, {_NULL} AS o_dt, doc_sha FROM b
-    UNION ALL SELECT bn, 'bnode', '{VOC}origin', source, 'literal',
-           {_NULL}, {_NULL}, doc_sha FROM b""",
-
-        # both writer modes (plain element literals + attribute folding)
-        # re-parse to the same triple set; the mode column discriminates
-        "rdfxml_roundtrip": _roundtrip_rt_cte() + """
-    SELECT m.mode, rt.* FROM rt CROSS JOIN
-      (SELECT 'plain' AS mode UNION ALL SELECT 'attrs') m""",
-
-        "dedup_embedding_cosine": """
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-    SELECT a.vec_id AS a, b.vec_id AS b,
-           ROUND(list_dot_product(a.v, b.v) /
-                 (sqrt(list_dot_product(a.v, a.v)) *
-                  sqrt(list_dot_product(b.v, b.v))), 4) AS sim_r
-    FROM e a, e b
-    WHERE a.vec_id < b.vec_id
-      AND list_dot_product(a.v, b.v) /
-          (sqrt(list_dot_product(a.v, a.v)) *
-           sqrt(list_dot_product(b.v, b.v))) >= 0.4""",
-
-        "rdfxml_error_channel": (
-            _oracle_docs_cte(D.xml_maybe_broken_expr())
-            + " SELECT doc_sha, CAST(1 AS BIGINT) AS n_errors FROM d"
-            " WHERE doc_id % 7 = 3"),
-
-        "rdfxml_w3c_suite": _w3c_oracle(),
-
-        "rdfxml_format_sniff": f"""
-    WITH c AS (SELECT ({sniff_expr}) AS content FROM documents)
-    SELECT CAST(SUM(CASE WHEN regexp_matches(content, '<(\\w+:)?RDF')
-                    THEN 1 ELSE 0 END) AS BIGINT) AS n_rdf,
-           CAST(COUNT(*) AS BIGINT) AS n_total FROM c""",
-
-        "namespace_stats": f"""
-    WITH n AS (SELECT CAST(COUNT(DISTINCT sha256(({D.xml_basic_expr()})))
-                      AS BIGINT) AS c FROM documents)
-    SELECT 'rdf' AS prefix, '{RDF}' AS ns, c AS n_docs FROM n
-    UNION ALL SELECT 'ex', '{VOC}', c FROM n""",
-
-        "triples_dedup_global": f"""
-    WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS c FROM documents)
-    SELECT '{RDF}type' AS p, c AS n FROM n
-    UNION ALL SELECT '{VOC}source', c FROM n
-    UNION ALL SELECT '{VOC}lang', c FROM n
-    UNION ALL SELECT '{VOC}chars', c FROM n
-    UNION ALL SELECT '{VOC}body', c FROM n""",
-
-        "iri_dictionary": _oracle_term_dictionary(),
-
-        "entity_linking": f"""WITH t AS ({_oracle_reify_triples()}),
+def _entity_linking_oracle() -> str:
+    return f"""WITH t AS ({_oracle_reify_triples()}),
     terms AS (
       SELECT DISTINCT kind, value, lang, dt FROM (
         SELECT s_kind AS kind, s AS value, {_NULL} AS lang, {_NULL} AS dt FROM t
@@ -2740,50 +1946,168 @@ def _all_oracle_sql() -> dict[str, str]:
          AND dp.lang IS NULL AND dp.dt IS NULL
     JOIN dict do_ ON do_.kind = t.o_kind AND do_.value = t.o
          AND COALESCE(do_.lang, '') = COALESCE(t.o_lang, '')
-         AND COALESCE(do_.dt, '') = COALESCE(t.o_dt, '')""",
+         AND COALESCE(do_.dt, '') = COALESCE(t.o_dt, '')"""
 
-        "entity_linking_hashids": f"""WITH t AS ({_oracle_reify_triples()})
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_triples,
-           CAST(COUNT(DISTINCT s_kind || '|' || s) AS BIGINT)
-             AS n_distinct_s,
-           CAST(COUNT(DISTINCT p) AS BIGINT) AS n_distinct_p,
-           CAST(COUNT(DISTINCT o_kind || '|' || o || '|' ||
-                COALESCE(o_lang, '') || '|' || COALESCE(o_dt, ''))
-             AS BIGINT) AS n_distinct_o,
-           CAST(0 AS BIGINT) AS n_null_ids
-    FROM t""",
 
-        "predicate_stats": f"""
+def _two_hop_oracle() -> str:
+    return _oracle_docs_cte(D.xml_nested_expr()) + """
+    SELECT subj AS doc, source AS origin FROM d"""
+
+
+def _components_oracle() -> str:
+    return _G.components_oracle_sql(_SK.minhash_oracle_sql())
+
+
+# stateless streaming arm == the batch rule, same SQL twin
+_decontaminate_oracle = partial(_DEC.decontaminate_oracle_sql, n=8,
+                                eval_pred="doc_id % 10 = 3")
+
+_ORACLE_N_TOKENS = "len(list_filter(string_split(text, ' '), t -> t <> ''))"
+
+
+# --------------------------------------------------------------------------
+# the registry
+# --------------------------------------------------------------------------
+
+class Query(NamedTuple):
+    """One row of the registry. ``run(spark, sf_dir)`` builds the Spark
+    side; ``oracle()`` builds its DuckDB twin over the same parquet
+    tables, and is called only when that name's oracle is asked for
+    (``None``: rows-only); ``gated`` rows form :func:`queries`, the
+    driver's correctness gate."""
+    name: str
+    run: Callable[[SparkSession, str], DataFrame]
+    oracle: Callable[[], str] | None
+    gated: bool
+
+
+#: Every oracle-twinned query, in registry order. The gated rows sit at
+#: the driver's 50-entry gate cap, so a new gated row must displace one
+#: into the extras; the rotation policy — what qualifies for a seat and
+#: what gets displaced — is COVERAGE.md §2.5. Removing a query is
+#: deleting its row (and any function only that row used).
+QUERIES: tuple[Query, ...] = (
+    # --- driver-gated -------------------------------------------------
+    Query("rdfxml_extract_basic", partial(q_triples, D.xml_basic_expr),
+          _oracle_basic_triples, True),
+    # streaming ingest materializes the identical triple set — the
+    # batch oracle IS the streaming oracle (one extraction code path)
+    Query("rdfxml_stream_ingest", q_stream_ingest,
+          _oracle_basic_triples, True),
+    Query("rdfxml_containers", partial(q_triples, D.xml_container_expr),
+          lambda: _oracle_docs_cte(D.xml_container_expr()) + f""",
+    b AS (SELECT *, 'b:' || doc_sha || ':0' AS bn FROM d)
+    SELECT bn AS s, 'bnode' AS s_kind, '{RDF}type' AS p, '{RDF}Seq' AS o,
+           'iri' AS o_kind, {_NULL} AS o_lang, {_NULL} AS o_dt, doc_sha FROM b
+    UNION ALL SELECT bn, 'bnode', '{RDF}_1', lang, 'literal',
+           {_NULL}, {_NULL}, doc_sha FROM b
+    UNION ALL SELECT bn, 'bnode', '{RDF}_2', source, 'literal',
+           {_NULL}, {_NULL}, doc_sha FROM b
+    UNION ALL SELECT bn, 'bnode', '{RDF}_3',
+           'http://example.org/doc/' || CAST(doc_id AS STRING), 'iri',
+           {_NULL}, {_NULL}, doc_sha FROM b""", True),
+    Query("rdfxml_collection", partial(q_triples, D.xml_collection_expr),
+          lambda: _oracle_docs_cte(D.xml_collection_expr()) + f""",
+    b AS (SELECT *, 'b:' || doc_sha || ':0' AS b0,
+                 'b:' || doc_sha || ':1' AS b1 FROM d)
+    SELECT subj AS s, 'iri' AS s_kind, '{VOC}members' AS p, b0 AS o,
+           'bnode' AS o_kind, {_NULL} AS o_lang, {_NULL} AS o_dt, doc_sha FROM b
+    UNION ALL SELECT b0, 'bnode', '{RDF}first', 'http://example.org/m/a',
+           'iri', {_NULL}, {_NULL}, doc_sha FROM b
+    UNION ALL SELECT b0, 'bnode', '{RDF}rest', b1, 'bnode',
+           {_NULL}, {_NULL}, doc_sha FROM b
+    UNION ALL SELECT b1, 'bnode', '{RDF}first', 'http://example.org/m/b',
+           'iri', {_NULL}, {_NULL}, doc_sha FROM b
+    UNION ALL SELECT b1, 'bnode', '{RDF}rest', '{RDF}nil', 'iri',
+           {_NULL}, {_NULL}, doc_sha FROM b""", True),
+    Query("rdfxml_reification", partial(q_triples, D.xml_reify_expr),
+          _oracle_reify_triples, True),
+    Query("rdfxml_nested_bnode", partial(q_triples, D.xml_nested_expr),
+          lambda: _oracle_docs_cte(D.xml_nested_expr()) + f""",
+    b AS (SELECT *, 'b:' || doc_sha || ':0' AS bn FROM d)
+    SELECT subj AS s, 'iri' AS s_kind, '{VOC}meta' AS p, bn AS o,
+           'bnode' AS o_kind, {_NULL} AS o_lang, {_NULL} AS o_dt, doc_sha FROM b
+    UNION ALL SELECT bn, 'bnode', '{VOC}origin', source, 'literal',
+           {_NULL}, {_NULL}, doc_sha FROM b""", True),
+    Query("rdfxml_xmlliteral", partial(q_triples, D.xml_xmlliteral_expr),
+          lambda: _oracle_docs_cte(D.xml_xmlliteral_expr()) + f"""
+    SELECT subj AS s, 'iri' AS s_kind, '{VOC}markup' AS p,
+           'a <ex:b xmlns:ex="{VOC}">c' || CAST(doc_id AS STRING)
+             || '</ex:b>' AS o,
+           'literal' AS o_kind, {_NULL} AS o_lang,
+           '{RDF}XMLLiteral' AS o_dt, doc_sha FROM d""", True),
+    Query("rdfxml_xmlbase", partial(q_triples, D.xml_xmlbase_expr),
+          lambda: _oracle_docs_cte(D.xml_xmlbase_expr()) + f""",
+    b AS (SELECT *, 'http://example.org/dir/file.rdf#d'
+               || CAST(doc_id AS STRING) AS sid FROM d)
+    SELECT sid AS s, 'iri' AS s_kind, '{VOC}link' AS p,
+           'http://example.org/dir/rel/' || CAST(doc_id AS STRING) AS o,
+           'iri' AS o_kind, {_NULL} AS o_lang, {_NULL} AS o_dt, doc_sha FROM b
+    UNION ALL SELECT sid, 'iri', '{VOC}up', 'http://example.org/top', 'iri',
+           {_NULL}, {_NULL}, doc_sha FROM b""", True),
+    Query("rdfxml_nodeid_shared", partial(q_triples, D.xml_nodeid_expr),
+          lambda: _oracle_docs_cte(D.xml_nodeid_expr()) + f""",
+    b AS (SELECT *, 'b:' || doc_sha || ':0' AS bn FROM d)
+    SELECT subj AS s, 'iri' AS s_kind, '{VOC}knows' AS p, bn AS o,
+           'bnode' AS o_kind, {_NULL} AS o_lang, {_NULL} AS o_dt, doc_sha FROM b
+    UNION ALL SELECT bn, 'bnode', '{VOC}origin', source, 'literal',
+           {_NULL}, {_NULL}, doc_sha FROM b""", True),
+    # both writer modes (plain element literals + attribute folding)
+    # re-parse to the same triple set; the mode column discriminates
+    Query("rdfxml_roundtrip", q_roundtrip,
+          lambda: _roundtrip_rt_cte() + """
+    SELECT m.mode, rt.* FROM rt CROSS JOIN
+      (SELECT 'plain' AS mode UNION ALL SELECT 'attrs') m""", True),
+    Query("rdfxml_error_channel", q_error_channel,
+          lambda: (_oracle_docs_cte(D.xml_maybe_broken_expr())
+            + " SELECT doc_sha, CAST(1 AS BIGINT) AS n_errors FROM d"
+            " WHERE doc_id % 7 = 3"), True),
+    Query("rdfxml_w3c_suite", q_w3c_suite,
+          _w3c_oracle, True),
+    Query("rdfxml_format_sniff", q_format_sniff,
+          lambda: f"""
+    WITH c AS (SELECT ({_sniff_expr()}) AS content FROM documents)
+    SELECT CAST(SUM(CASE WHEN regexp_matches(content, '<(\\w+:)?RDF')
+                    THEN 1 ELSE 0 END) AS BIGINT) AS n_rdf,
+           CAST(COUNT(*) AS BIGINT) AS n_total FROM c""", True),
+    Query("triples_dedup_global", q_dedup_global,
+          lambda: f"""
+    WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS c FROM documents)
+    SELECT '{RDF}type' AS p, c AS n FROM n
+    UNION ALL SELECT '{VOC}source', c FROM n
+    UNION ALL SELECT '{VOC}lang', c FROM n
+    UNION ALL SELECT '{VOC}chars', c FROM n
+    UNION ALL SELECT '{VOC}body', c FROM n""", True),
+    Query("iri_dictionary", q_iri_dictionary,
+          _oracle_term_dictionary, True),
+    Query("entity_linking", q_entity_linking, _entity_linking_oracle, True),
+    # the salted join must be value-identical to the broadcast path
+    Query("entity_linking_salted", q_entity_linking_salted,
+          _entity_linking_oracle, True),
+    Query("predicate_stats", q_predicate_stats,
+          lambda: f"""
     WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS c FROM documents)
     SELECT '{RDF}type' AS p, c AS n, c AS n_subjects FROM n
     UNION ALL SELECT '{VOC}source', c, c FROM n
     UNION ALL SELECT '{VOC}lang', c, c FROM n
     UNION ALL SELECT '{VOC}chars', c, c FROM n
-    UNION ALL SELECT '{VOC}body', c, c FROM n""",
-
-        "kg_degree_stats": """
-    WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS c FROM documents)
-    SELECT CAST(1 AS BIGINT) AS out_degree, c AS n_subjects FROM n
-    UNION ALL SELECT CAST(4 AS BIGINT), c FROM n""",
-
-        "kg_two_hop": _oracle_docs_cte(D.xml_nested_expr()) + """
-    SELECT subj AS doc, source AS origin FROM d""",
-
-        "kg_pagerank": _pagerank_oracle(),
-
-        "lineage_invariant": (
-            f"WITH src AS (SELECT ({D.xml_basic_expr()}) AS content"
+    UNION ALL SELECT '{VOC}body', c, c FROM n""", True),
+    Query("kg_two_hop", q_kg_two_hop, _two_hop_oracle, True),
+    Query("kg_pagerank", q_kg_pagerank,
+          _pagerank_oracle, True),
+    Query("lineage_invariant", q_lineage_invariant,
+          lambda: (f"WITH src AS (SELECT ({D.xml_basic_expr()}) AS content"
             " FROM documents) SELECT CAST(COUNT(DISTINCT sha256(content))"
-            " AS BIGINT) AS n_docs_lineage_ok FROM src"),
-
-        "resume_pending_units": f"""
+            " AS BIGINT) AS n_docs_lineage_ok FROM src"), True),
+    Query("resume_pending_units", q_resume_pending_units,
+          lambda: f"""
     WITH src AS (SELECT ({D.xml_basic_expr()}) AS content FROM documents),
     u AS (SELECT CAST(('0x' || substring(sha256(content), 1, 15))
                  ::VARCHAR::UBIGINT % 16 AS INTEGER) AS unit FROM src)
     SELECT unit, CAST(COUNT(*) AS BIGINT) AS n_docs
-    FROM u WHERE unit >= 8 GROUP BY unit""",
-
-        "extraction_metrics": f"""
+    FROM u WHERE unit >= 8 GROUP BY unit""", True),
+    Query("extraction_metrics", q_extraction_metrics,
+          lambda: f"""
     WITH src AS (SELECT doc_id,
                  ({D.xml_maybe_broken_expr()}) AS content FROM documents),
     u AS (SELECT doc_id, sha256(content) AS doc_sha,
@@ -2794,44 +2118,23 @@ def _all_oracle_sql() -> dict[str, str]:
              AS triples,
            CAST(SUM(CASE WHEN doc_id % 7 = 3 THEN 1 ELSE 0 END) AS BIGINT)
              AS errors
-    FROM u GROUP BY unit""",
-
-        "dedup_exact": """
+    FROM u GROUP BY unit""", True),
+    Query("dedup_exact", q_dedup_exact,
+          lambda: """
     SELECT md5(text) AS text_hash, CAST(COUNT(*) AS BIGINT) AS n_docs,
            MIN(doc_id) AS canonical_doc_id
-    FROM documents GROUP BY md5(text)""",
-
-        "dedup_ngram_jaccard": f"""
-    WITH {_SK.length_guard_cte("documents")},
-    sh AS (
-      SELECT DISTINCT doc_id, substring(text, CAST(i AS INTEGER), 5) AS sh
-      FROM documents, _lenguard,
-           generate_series(1, {_SK.ORACLE_SHINGLE_BOUND}) AS g(i)
-      WHERE _lenguard.ok = 1 AND doc_id < 100 AND i <= len(text) - 4),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT l.doc_id AS a, r.doc_id AS b, COUNT(*) AS i
-      FROM sh l JOIN sh r ON l.sh = r.sh AND l.doc_id < r.doc_id
-      GROUP BY l.doc_id, r.doc_id)
-    SELECT a, b, ROUND(i / CAST(sa.sz + sb.sz - i AS DOUBLE), 4) AS jacc_r
-    FROM inter JOIN sizes sa ON sa.doc_id = a
-               JOIN sizes sb ON sb.doc_id = b
-    WHERE i / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.12""",
-
-        "dedup_verified_pairs": _SK.verified_pairs_oracle_sql(),
-
-        "minhash_lsh": _SK.minhash_oracle_sql(),
-
-        "dedup_components": _G.components_oracle_sql(
-            _SK.minhash_oracle_sql()),
-
-        "simhash": _SK.simhash_oracle_sql(),
-
-        "simhash_candidates": (
-            "SELECT * FROM (" + _SK.simhash_candidates_oracle_sql()
-            + ") WHERE hamming <= 3"),
-
-        "ann_cosine_topk": """
+    FROM documents GROUP BY md5(text)""", True),
+    Query("dedup_verified_pairs", q_dedup_verified_pairs,
+          _SK.verified_pairs_oracle_sql, True),
+    Query("minhash_lsh", q_minhash_lsh,
+          _SK.minhash_oracle_sql, True),
+    Query("dedup_components", q_dedup_components,
+          _components_oracle, True),
+    Query("simhash_candidates", q_simhash_candidates,
+          lambda: ("SELECT * FROM (" + _SK.simhash_candidates_oracle_sql()
+            + ") WHERE hamming <= 3"), True),
+    Query("ann_cosine_topk", q_ann_cosine_topk,
+          lambda: """
     WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
                FROM embeddings WHERE vec_id < 10),
     c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS nv
@@ -2848,9 +2151,134 @@ def _all_oracle_sql() -> dict[str, str]:
           FROM s)
     SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rank,
            ROUND(sim, 4) AS sim_r
-    FROM r WHERE rnk <= 5""",
-
-        "ann_ivf_topk": """
+    FROM r WHERE rnk <= 5""", True),
+    Query("ann_lsh_bucketed", q_ann_lsh_bucketed,
+          _ANN.lsh_topk_oracle_sql, True),
+    Query("dedup_embedding_bucketed", q_dedup_embedding_bucketed,
+          partial(_ANN.dedup_bucketed_oracle_sql, n_cells="scaled"), True),
+    Query("dedup_embedding_trained", q_dedup_embedding_trained,
+          lambda: _ANN.dedup_trained_oracle_sql(
+              threshold=0.7, k="scaled",
+              table=_ANN.neardup_twins_table_sql()), True),
+    Query("dedup_embedding_twolevel", q_dedup_embedding_twolevel,
+          lambda: _ANN.dedup_twolevel_oracle_sql(
+              threshold=0.7, k="scaled", trained_coarse=True,
+              table=_ANN.neardup_twins_table_sql()), True),
+    Query("ann_quantized_topk", q_ann_quantized_topk,
+          _ANN.ann_quantized_oracle_sql, True),
+    Query("ann_ivf_trained", q_ann_ivf_trained,
+          _ANN.kmeans_oracle_sql, True),
+    Query("stream_neardup", q_stream_neardup,
+          _SK.stream_neardup_oracle_sql, True),
+    Query("containment_pairs", q_containment_pairs,
+          _SK.containment_oracle_sql, True),
+    Query("pii_scrub", q_pii_scrub,
+          _pii_scrub_oracle, True),
+    Query("repetition_stats", q_repetition_stats,
+          _CUR.repetition_oracle_sql, True),
+    Query("tfidf_keywords", q_tfidf_keywords,
+          _CUR.tfidf_oracle_sql, True),
+    Query("vocab_stats", q_vocab_stats,
+          _CUR.vocab_oracle_sql, True),
+    Query("text_quality", q_text_quality,
+          lambda: """
+    SELECT doc_id,
+      CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
+      CAST(len(list_distinct(string_split(text, ' '))) AS INTEGER)
+        AS n_distinct,
+      ROUND(len(list_distinct(string_split(text, ' '))) /
+            CAST(len(string_split(text, ' ')) AS DOUBLE), 4)
+        AS distinct_ratio,
+      CAST(len(list_filter(string_split(text, ' '),
+            x -> x IN ('the', 'a', 'of', 'to'))) AS INTEGER) AS n_stopwords,
+      CAST(length(text) AS INTEGER) AS n_chars_actual,
+      CAST(len(regexp_extract_all(text, '[a-z0-9]+')) AS INTEGER)
+        AS n_word_tokens,
+      CAST(len(regexp_extract_all(text, '[a-z]{4,}')) AS INTEGER)
+        AS n_long_tokens,
+      md5(lower(text)) AS fingerprint
+    FROM documents""", True),
+    # round-7 rotation (COVERAGE.md §2.5): image_neardup_candidates takes
+    # lang_id_trigram's seat (training_corpus_stats partially subsumes
+    # lang-id; the displaced entry stays swept in extras)
+    Query("image_neardup_candidates", partial(q_media_neardup, "image"),
+          partial(_media_pairs_oracle, "image"), True),
+    Query("doc_winnowing", q_doc_winnowing,
+          _SK.winnow_oracle_sql, True),
+    Query("training_corpus_stats", q_training_corpus_stats,
+          _training_corpus_oracle, True),
+    Query("audio_features", q_audio_features,
+          _audio_oracle, True),
+    Query("multimodal_features", q_multimodal_features,
+          _multimodal_oracle, True),
+    # 8 videos × frames {0,4,8}; each 8×6 PPM frame = 11-byte header
+    # ("P6\n8 6\n255\n") + 144 raster bytes
+    Query("video_frame_sample", q_video_frame_sample,
+          _video_oracle, True),
+    Query("events_windowed", q_events_windowed,
+          lambda: """
+    SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS window_start,
+           event_type, CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
+             AS value_cents
+    FROM events GROUP BY 1, 2""", True),
+    Query("events_sessionize", q_events_sessionize,
+          lambda: _SESSIONIZE_ORACLE, True),
+    # --- extras: outside the driver's gate window, verified in full by
+    # tools/check_oracles.py; bench.py may time them ------------------
+    # attribute-folding mode re-parses to the same set, minus the mode col
+    Query("rdfxml_roundtrip_attrs", q_roundtrip_attr_folding,
+          lambda: _roundtrip_rt_cte() + "\n    SELECT * FROM rt", False),
+    Query("namespace_stats", q_namespace_stats,
+          lambda: f"""
+    WITH n AS (SELECT CAST(COUNT(DISTINCT sha256(({D.xml_basic_expr()})))
+                      AS BIGINT) AS c FROM documents)
+    SELECT 'rdf' AS prefix, '{RDF}' AS ns, c AS n_docs FROM n
+    UNION ALL SELECT 'ex', '{VOC}', c FROM n""", False),
+    Query("entity_linking_hashids", q_entity_linking_hashids,
+          lambda: f"""WITH t AS ({_oracle_reify_triples()})
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_triples,
+           CAST(COUNT(DISTINCT s_kind || '|' || s) AS BIGINT)
+             AS n_distinct_s,
+           CAST(COUNT(DISTINCT p) AS BIGINT) AS n_distinct_p,
+           CAST(COUNT(DISTINCT o_kind || '|' || o || '|' ||
+                COALESCE(o_lang, '') || '|' || COALESCE(o_dt, ''))
+             AS BIGINT) AS n_distinct_o,
+           CAST(0 AS BIGINT) AS n_null_ids
+    FROM t""", False),
+    Query("dedup_ngram_jaccard", q_dedup_ngram_jaccard,
+          lambda: f"""
+    WITH {_SK.length_guard_cte("documents")},
+    sh AS (
+      SELECT DISTINCT doc_id, substring(text, CAST(i AS INTEGER), 5) AS sh
+      FROM documents, _lenguard,
+           generate_series(1, {_SK.ORACLE_SHINGLE_BOUND}) AS g(i)
+      WHERE _lenguard.ok = 1 AND doc_id < 100 AND i <= len(text) - 4),
+    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
+    inter AS (
+      SELECT l.doc_id AS a, r.doc_id AS b, COUNT(*) AS i
+      FROM sh l JOIN sh r ON l.sh = r.sh AND l.doc_id < r.doc_id
+      GROUP BY l.doc_id, r.doc_id)
+    SELECT a, b, ROUND(i / CAST(sa.sz + sb.sz - i AS DOUBLE), 4) AS jacc_r
+    FROM inter JOIN sizes sa ON sa.doc_id = a
+               JOIN sizes sb ON sb.doc_id = b
+    WHERE i / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.12""", False),
+    Query("dedup_embedding_cosine", q_dedup_embedding_cosine,
+          lambda: """
+    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
+    SELECT a.vec_id AS a, b.vec_id AS b,
+           ROUND(list_dot_product(a.v, b.v) /
+                 (sqrt(list_dot_product(a.v, a.v)) *
+                  sqrt(list_dot_product(b.v, b.v))), 4) AS sim_r
+    FROM e a, e b
+    WHERE a.vec_id < b.vec_id
+      AND list_dot_product(a.v, b.v) /
+          (sqrt(list_dot_product(a.v, a.v)) *
+           sqrt(list_dot_product(b.v, b.v))) >= 0.4""", False),
+    Query("simhash", q_simhash,
+          _SK.simhash_oracle_sql, False),
+    Query("ann_ivf_topk", q_ann_ivf_topk,
+          lambda: """
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     cent AS (SELECT vec_id AS cell_id, v AS cv FROM e WHERE vec_id < 8),
     scored AS (
@@ -2884,64 +2312,17 @@ def _all_oracle_sql() -> dict[str, str]:
           FROM sims)
     SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rank,
            ROUND(sim, 4) AS sim_r
-    FROM r WHERE rnk <= 3""",
-
-        "ann_lsh_bucketed": _ANN.lsh_topk_oracle_sql(),
-
-        "ann_quantized_topk": _ANN.ann_quantized_oracle_sql(),
-
-        "ann_ivf_trained": _ANN.kmeans_oracle_sql(),
-
-        "dedup_embedding_bucketed": _ANN.dedup_bucketed_oracle_sql(
-            n_cells="scaled"),
-
-        "dedup_embedding_trained": _ANN.dedup_trained_oracle_sql(
-            threshold=0.7, k="scaled",
-            table=_ANN.neardup_twins_table_sql()),
-
-        "dedup_embedding_twolevel": _ANN.dedup_twolevel_oracle_sql(
-            threshold=0.7, k="scaled", trained_coarse=True,
-            table=_ANN.neardup_twins_table_sql()),
-
-        "stream_neardup": _SK.stream_neardup_oracle_sql(),
-
-        "containment_pairs": _SK.containment_oracle_sql(),
-
-        "pii_scrub": _pii_scrub_oracle(),
-
-        "repetition_stats": _CUR.repetition_oracle_sql(),
-
-        "tfidf_keywords": _CUR.tfidf_oracle_sql(),
-
-        "vocab_stats": _CUR.vocab_oracle_sql(),
-
-        "text_quality": """
-    SELECT doc_id,
-      CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
-      CAST(len(list_distinct(string_split(text, ' '))) AS INTEGER)
-        AS n_distinct,
-      ROUND(len(list_distinct(string_split(text, ' '))) /
-            CAST(len(string_split(text, ' ')) AS DOUBLE), 4)
-        AS distinct_ratio,
-      CAST(len(list_filter(string_split(text, ' '),
-            x -> x IN ('the', 'a', 'of', 'to'))) AS INTEGER) AS n_stopwords,
-      CAST(length(text) AS INTEGER) AS n_chars_actual,
-      CAST(len(regexp_extract_all(text, '[a-z0-9]+')) AS INTEGER)
-        AS n_word_tokens,
-      CAST(len(regexp_extract_all(text, '[a-z]{4,}')) AS INTEGER)
-        AS n_long_tokens,
-      md5(lower(text)) AS fingerprint
-    FROM documents""",
-
-        "token_count": """
+    FROM r WHERE rnk <= 3""", False),
+    Query("token_count", q_token_count,
+          lambda: """
     SELECT doc_id,
       CAST(len(regexp_extract_all(text, '[a-z0-9]+')) AS INTEGER)
         AS n_word_tokens,
       CAST(len(regexp_extract_all(text, '[a-z]{4,}')) AS INTEGER)
         AS n_long_tokens
-    FROM documents""",
-
-        "lang_id": """
+    FROM documents""", False),
+    Query("lang_id", q_lang_id,
+          lambda: """
     SELECT doc_id,
       ROUND(len(list_filter(string_split(text, ' '),
             x -> x IN ('the', 'a'))) /
@@ -2950,133 +2331,132 @@ def _all_oracle_sql() -> dict[str, str]:
       CASE WHEN len(list_filter(string_split(text, ' '),
             x -> x IN ('the', 'a'))) > 0
            THEN 'en-like' ELSE 'other' END AS predicted
-    FROM documents""",
-
-        "doc_winnowing": _SK.winnow_oracle_sql(),
-
-        "lang_id_trigram": _TL.langid_oracle_sql(),
-
-        "doc_fingerprint": """
+    FROM documents""", False),
+    Query("doc_fingerprint", q_doc_fingerprint,
+          lambda: """
     SELECT doc_id, md5(lower(text)) AS fingerprint,
            CAST(length(text) AS INTEGER) AS n_chars_actual
-    FROM documents""",
-
-        "training_corpus_stats": _training_corpus_oracle(),
-
-        "audio_features": _audio_oracle(),
-
-        "multimodal_features": _multimodal_oracle(),
-
-        # 8 videos × frames {0,4,8}; each 8×6 PPM frame = 11-byte header
-        # ("P6\n8 6\n255\n") + 144 raster bytes
-        "video_frame_sample": _video_oracle(),
-
-        "events_windowed": """
-    SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS window_start,
-           event_type, CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
-             AS value_cents
-    FROM events GROUP BY 1, 2""",
-
-        "events_sessionize": _SESSIONIZE_ORACLE,
-    }
-    # attribute-folding mode re-parses to the same set, minus the mode col
-    oracles["rdfxml_roundtrip_attrs"] = (
-        _roundtrip_rt_cte() + "\n    SELECT * FROM rt")
-    # the salted join must be value-identical to the broadcast path
-    oracles["entity_linking_salted"] = oracles["entity_linking"]
-    oracles["kg_two_hop_salted"] = oracles["kg_two_hop"]
-    from rdf_rdfxml_spark.operators.multimodal import (
-        image_neardup_oracle_sql,
-    )
-    oracles["image_neardup_candidates"] = image_neardup_oracle_sql(48)
-    oracles["kg_pagerank_salted"] = oracles["kg_pagerank"]
-    oracles["dedup_components_salted"] = oracles["dedup_components"]
-    from rdf_rdfxml_spark.operators.multimodal import (
-        audio_neardup_oracle_sql,
-    )
-    oracles["audio_neardup_candidates"] = audio_neardup_oracle_sql(36)
-    from rdf_rdfxml_spark.operators.multimodal import (
-        video_neardup_oracle_sql,
-    )
-    oracles["video_neardup_candidates"] = video_neardup_oracle_sql(24)
-    oracles["multimodal_corpus_stats"] = _multimodal_corpus_oracle()
-    oracles["stream_image_neardup"] = stream_image_neardup_oracle_sql(48)
-    oracles["stream_audio_neardup"] = stream_audio_neardup_oracle_sql(36)
-    oracles["stream_video_neardup"] = stream_video_neardup_oracle_sql(24)
-    from rdf_rdfxml_spark.operators.sampling import (
-        sample_oracle_sql, split_oracle_sql,
-    )
-    oracles["corpus_sample_stratified"] = sample_oracle_sql(
-        _SAMPLE_RATES, stratum_col="lang", default_rate=0.05)
-    oracles["corpus_holdout_split"] = split_oracle_sql(0.1)
-    from rdf_rdfxml_spark.operators.decontam import (
-        decontaminate_oracle_sql,
-    )
-    oracles["corpus_decontaminate"] = decontaminate_oracle_sql(
-        n=8, eval_pred="doc_id % 10 = 3")
-    from rdf_rdfxml_spark.operators.packing import (
-        manifest_oracle_sql, pack_oracle_sql,
-    )
-    oracles["corpus_token_packing"] = pack_oracle_sql(context_len=512)
-    oracles["corpus_chunk_manifest"] = manifest_oracle_sql(context_len=512)
-    from rdf_rdfxml_spark.operators.sampling import mix_plan_oracle_sql
-    oracles["corpus_mix_plan"] = mix_plan_oracle_sql(
-        stratum_col="lang", alpha="sqrt", token_budget=1_000_000)
-    oracles["corpus_assembly_stats"] = _corpus_assembly_oracle()
-    oracles["corpus_assembly_spanclean_stats"] = \
-        _corpus_assembly_spanclean_oracle()
-    # stateless streaming arm == the batch rule, same SQL twin
-    oracles["stream_decontaminate"] = decontaminate_oracle_sql(
-        n=8, eval_pred="doc_id % 10 = 3")
-    oracles["stream_embedding_neardup"] = \
-        stream_embedding_neardup_oracle_sql()
-    from rdf_rdfxml_spark.operators.spans import (
-        dup_span_removal_oracle_sql, dup_span_stats_oracle_sql,
-        self_dup_span_stats_oracle_sql,
-    )
-    oracles["corpus_dup_spans"] = dup_span_stats_oracle_sql()
-    oracles["corpus_dup_span_removal"] = dup_span_removal_oracle_sql()
-    oracles["corpus_selfrep_spans"] = self_dup_span_stats_oracle_sql()
-    from rdf_rdfxml_spark.operators.bpe import (
-        bpe_oracle_sql, bpe_token_counts_oracle_sql, bpe_vocab_oracle_sql,
-    )
-    oracles["corpus_bpe_merges"] = bpe_oracle_sql(n_merges=10)
-    oracles["corpus_bpe_vocab"] = bpe_vocab_oracle_sql(n_merges=10)
-    oracles["corpus_bpe_token_count"] = \
-        bpe_token_counts_oracle_sql(n_merges=10)
-    from rdf_rdfxml_spark.operators.lm import bigram_lm_oracle_sql
-    oracles["corpus_lm_scores"] = bigram_lm_oracle_sql()
-    oracles["ann_pq_topk"] = _ANN.ann_pq_oracle_sql()
-    from rdf_rdfxml_spark.operators.graph import triangles_oracle_sql
-    oracles["kg_triangles"] = triangles_oracle_sql("""
+    FROM documents""", False),
+    # bench surface; rows-only check
+    Query("rdfxml_write", q_rdfxml_write,
+          None, False),
+    # near-constant rollup twin — strong queries took its gate slot
+    Query("kg_degree_stats", q_kg_degree_stats,
+          lambda: """
+    WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS c FROM documents)
+    SELECT CAST(1 AS BIGINT) AS out_degree, c AS n_subjects FROM n
+    UNION ALL SELECT CAST(4 AS BIGINT), c FROM n""", False),
+    # value-identical salted self-join (round 5; shares the kg_two_hop
+    # oracle — salting never changes the result)
+    Query("kg_two_hop_salted", q_kg_two_hop_salted,
+          _two_hop_oracle, False),
+    # displaced by image_neardup_candidates in the round-7 rotation
+    # (COVERAGE.md §2.5); training_corpus_stats carries a lang-id stage,
+    # so the semantics stay partially gated too
+    Query("lang_id_trigram", q_lang_id_trigram,
+          _TL.langid_oracle_sql, False),
+    # salted ITERATIVE paths (round 6) — share the unsalted oracles
+    Query("kg_pagerank_salted", q_kg_pagerank_salted,
+          _pagerank_oracle, False),
+    Query("dedup_components_salted", q_dedup_components_salted,
+          _components_oracle, False),
+    # audio (round 6) and video (round 7) near-dup
+    Query("audio_neardup_candidates", partial(q_media_neardup, "audio"),
+          partial(_media_pairs_oracle, "audio"), False),
+    Query("video_neardup_candidates", partial(q_media_neardup, "video"),
+          partial(_media_pairs_oracle, "video"), False),
+    # composed multimodal curation pipeline (round 7) — text exact dedup
+    # + image/audio/video near-dup survivor counts in one row
+    Query("multimodal_corpus_stats", q_multimodal_corpus_stats,
+          _multimodal_corpus_oracle, False),
+    # the streaming x media cells of the dedup matrix (round 7),
+    # multi-batch through one checkpoint each
+    Query("stream_image_neardup", partial(q_stream_media_neardup, "image"),
+          partial(_stream_media_oracle, "image"), False),
+    Query("stream_audio_neardup", partial(q_stream_media_neardup, "audio"),
+          partial(_stream_media_oracle, "audio"), False),
+    Query("stream_video_neardup", partial(q_stream_media_neardup, "video"),
+          partial(_stream_media_oracle, "video"), False),
+    # deterministic corpus-mix composition (round 7)
+    Query("corpus_sample_stratified", q_corpus_sample,
+          partial(_SA.sample_oracle_sql, _SAMPLE_RATES,
+                  stratum_col="lang", default_rate=0.05), False),
+    Query("corpus_holdout_split", q_holdout_split,
+          partial(_SA.split_oracle_sql, 0.1), False),
+    # pre-training hygiene + stream assembly (round 7)
+    Query("corpus_decontaminate", q_corpus_decontaminate,
+          _decontaminate_oracle, False),
+    Query("corpus_token_packing", q_corpus_token_packing,
+          partial(_PK.pack_oracle_sql, context_len=512), False),
+    Query("corpus_chunk_manifest", q_chunk_manifest,
+          partial(_PK.manifest_oracle_sql, context_len=512), False),
+    Query("corpus_mix_plan", q_corpus_mix_plan,
+          partial(_SA.mix_plan_oracle_sql, stratum_col="lang",
+                  alpha="sqrt", token_budget=1_000_000), False),
+    Query("corpus_assembly_stats", partial(q_corpus_assembly_stats, False),
+          partial(_corpus_assembly_oracle, False), False),
+    Query("stream_decontaminate", q_stream_decontaminate,
+          _decontaminate_oracle, False),
+    Query("stream_embedding_neardup", q_stream_embedding_neardup,
+          partial(_SK.first_in_bucket_oracle_sql, _EMBEDDING_SIGN_BITS,
+                  "vec_id", bits=16), False),
+    # duplicated-span detection + removal (round 7) — sub-document exact
+    # dedup, the Lee-et-al. complement to whole-doc near-dup
+    Query("corpus_dup_spans", q_dup_span_stats,
+          _SP.dup_span_stats_oracle_sql, False),
+    Query("corpus_dup_span_removal", q_dup_span_removal,
+          _SP.dup_span_removal_oracle_sql, False),
+    Query("corpus_selfrep_spans", q_selfrep_spans,
+          _SP.self_dup_span_stats_oracle_sql, False),
+    # BPE merge learning (round 7) — tokenizer TRAINING over the corpus,
+    # the inverse of vocab_stats' measurement direction
+    Query("corpus_bpe_merges", q_corpus_bpe_merges,
+          partial(_BPE.bpe_oracle_sql, n_merges=10), False),
+    Query("corpus_bpe_vocab", q_corpus_bpe_vocab,
+          partial(_BPE.bpe_vocab_oracle_sql, n_merges=10), False),
+    Query("corpus_bpe_token_count", q_corpus_bpe_token_count,
+          partial(_BPE.bpe_token_counts_oracle_sql, n_merges=10), False),
+    # triangle counting with degree-ordered orientation (round 7)
+    Query("kg_triangles", q_kg_triangles,
+          partial(_G.triangles_oracle_sql, """
       SELECT 'd' || CAST(d1.doc_id AS VARCHAR) AS src,
              'd' || CAST(d2.doc_id AS VARCHAR) AS dst
       FROM documents d1 JOIN documents d2
         ON d1.doc_id // 5 = d2.doc_id // 5 AND d1.doc_id < d2.doc_id
       UNION ALL
-      SELECT 'h', 'd' || CAST(doc_id AS VARCHAR) FROM documents""")
-    from rdf_rdfxml_spark.operators.lines import (
-        boilerplate_lines_oracle_sql, line_dedup_oracle_sql,
-    )
-    oracles["corpus_boilerplate_lines"] = boilerplate_lines_oracle_sql(
-        table="lined", prefix_cte=LINED_CTE)
-    oracles["corpus_line_dedup"] = line_dedup_oracle_sql(
-        table="lined", prefix_cte=LINED_CTE)
-    from rdf_rdfxml_spark.operators.sampling import source_quota_oracle_sql
-    oracles["corpus_source_quota"] = source_quota_oracle_sql(10)
-    from rdf_rdfxml_spark.operators.distinct_sketch import (
-        hll_distinct_oracle_sql, kmv_distinct_oracle_sql,
-    )
-    oracles["corpus_kmv_distinct"] = kmv_distinct_oracle_sql()
-    oracles["corpus_hll_distinct"] = hll_distinct_oracle_sql()
-    from rdf_rdfxml_spark.operators.lines import line_dedup_ctes
-    from rdf_rdfxml_spark.operators.lm import bigram_lm_ctes
-    oracles["corpus_ccnet_stats"] = f"""
+      SELECT 'h', 'd' || CAST(doc_id AS VARCHAR) FROM documents"""), False),
+    # integer-exact bigram-LM quality scoring (round 7)
+    Query("corpus_lm_scores", q_corpus_lm_scores,
+          _LM.bigram_lm_oracle_sql, False),
+    # integer-exact product quantization ADC top-k (round 7)
+    Query("ann_pq_topk", q_ann_pq_topk,
+          _ANN.ann_pq_oracle_sql, False),
+    # assembly chain WITH sub-document span hygiene (round 7)
+    Query("corpus_assembly_spanclean_stats",
+          partial(q_corpus_assembly_stats, True),
+          partial(_corpus_assembly_oracle, True), False),
+    # CCNet-style line-frequency boilerplate removal (round 7)
+    Query("corpus_boilerplate_lines", q_corpus_boilerplate_lines,
+          partial(_LN.boilerplate_lines_oracle_sql, table="lined",
+                  prefix_cte=LINED_CTE), False),
+    Query("corpus_line_dedup", q_corpus_line_dedup,
+          partial(_LN.line_dedup_oracle_sql, table="lined",
+                  prefix_cte=LINED_CTE), False),
+    # per-domain quota cap via salted two-phase top-k (round 7)
+    Query("corpus_source_quota", q_corpus_source_quota,
+          partial(_SA.source_quota_oracle_sql, 10), False),
+    # mergeable distinct-count sketches (round 7)
+    Query("corpus_kmv_distinct", q_corpus_kmv_distinct,
+          _DS.kmv_distinct_oracle_sql, False),
+    Query("corpus_hll_distinct", q_corpus_hll_distinct,
+          _DS.hll_distinct_oracle_sql, False),
+    # the composed CCNet pipeline: line dedup → LM score → terciles
+    Query("corpus_ccnet_stats", q_corpus_ccnet_stats,
+          lambda: f"""
     WITH {LINED_CTE}
-    {line_dedup_ctes(table="lined", out="ccnet_clean")},
+    {_LN.line_dedup_ctes(table="lined", out="ccnet_clean")},
     ccnet_docs AS (SELECT doc_id, text FROM ccnet_clean),
-    {bigram_lm_ctes(table="ccnet_docs", out="ccnet_lm")},
+    {_LM.bigram_lm_ctes(table="ccnet_docs", out="ccnet_lm")},
     ccnet_b AS (
       SELECT doc_id, n_bigrams, mean_bigram_ppm,
              NTILE(3) OVER (ORDER BY mean_bigram_ppm DESC, doc_id)
@@ -3089,27 +2469,53 @@ def _all_oracle_sql() -> dict[str, str]:
            CAST(MIN(b.mean_bigram_ppm) AS BIGINT) AS min_ppm,
            CAST(MAX(b.mean_bigram_ppm) AS BIGINT) AS max_ppm
     FROM ccnet_b b JOIN ccnet_clean c USING (doc_id)
-    GROUP BY b.bucket"""
-    from rdf_rdfxml_spark.operators.graph import kcore_oracle_sql
-    oracles["kg_kcore"] = kcore_oracle_sql(KCORE_EDGES_SQL, 4,
-                                           n_rounds=6)
-    from rdf_rdfxml_spark.operators.sampling import mix_execute_oracle_sql
-    oracles["corpus_mix_execute"] = mix_execute_oracle_sql(
-        token_budget=100_000)
-    from rdf_rdfxml_spark.operators.quantiles import (
-        exact_quantiles_oracle_sql,
-    )
-    oracles["corpus_token_quantiles"] = exact_quantiles_oracle_sql(
-        "len(list_filter(string_split(text, ' '), t -> t <> ''))")
-    from rdf_rdfxml_spark.operators.quantiles import (
-        grouped_quantiles_oracle_sql,
-    )
-    oracles["corpus_source_quantiles"] = grouped_quantiles_oracle_sql(
-        "len(list_filter(string_split(text, ' '), t -> t <> ''))",
-        qs=(25, 50, 95))
-    from rdf_rdfxml_spark.operators.graph import bfs_depths_oracle_sql
-    oracles["kg_bfs"] = bfs_depths_oracle_sql("""
+    GROUP BY b.bucket""", False),
+    # iterative k-core peeling with a chained-level oracle
+    Query("kg_kcore", q_kg_kcore,
+          partial(_G.kcore_oracle_sql, KCORE_EDGES_SQL, 4, n_rounds=6), False),
+    # the mixture plan executed as an exact-integer sample
+    Query("corpus_mix_execute", q_corpus_mix_execute,
+          partial(_SA.mix_execute_oracle_sql, token_budget=100_000), False),
+    # exact histogram-sketch quantiles + single-source BFS
+    Query("corpus_token_quantiles", q_corpus_token_quantiles,
+          partial(_QT.exact_quantiles_oracle_sql, _ORACLE_N_TOKENS), False),
+    Query("corpus_source_quantiles", q_corpus_source_quantiles,
+          partial(_QT.grouped_quantiles_oracle_sql, _ORACLE_N_TOKENS,
+                  qs=(25, 50, 95)), False),
+    Query("kg_bfs", q_kg_bfs,
+          partial(_G.bfs_depths_oracle_sql, """
       SELECT 'n' || CAST(doc_id // 2 AS VARCHAR) AS src,
              'n' || CAST(doc_id AS VARCHAR) AS dst
-      FROM documents WHERE doc_id >= 1""", "n0", n_rounds=12)
-    return oracles
+      FROM documents WHERE doc_id >= 1""", "n0", n_rounds=12), False),
+)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The driver-gated registry — kept at ≤50 entries because the driver's
+    correctness gate checks only the FIRST 50 (round-3 verdict: 9 of 59
+    silently fell outside the window). Consolidation, not coverage loss:
+    rdfxml_roundtrip unions both writer modes, text_quality absorbs
+    token_count + doc_fingerprint, and the remaining baselines/variants
+    are :func:`extra_queries`, which tools/check_oracles.py still
+    verifies in full."""
+    return {q.name: q.run for q in QUERIES if q.gated}
+
+
+def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Oracle-twinned queries OUTSIDE the driver's 50-entry gate window:
+    declared brute-force baselines, portability variants, and entries
+    whose semantics a gated query now covers (see :func:`queries`)."""
+    return {q.name: q.run for q in QUERIES if not q.gated}
+
+
+def oracle_sql() -> dict[str, str]:
+    """DuckDB twins for the driver-gated :func:`queries`; builds only
+    theirs."""
+    return {q.name: q.oracle() for q in QUERIES if q.gated and q.oracle}
+
+
+def extra_oracle_sql() -> dict[str, str]:
+    """DuckDB twins for :func:`extra_queries` — same compare contract,
+    checked locally by tools/check_oracles.py."""
+    return {q.name: q.oracle() for q in QUERIES
+            if not q.gated and q.oracle}

@@ -124,6 +124,28 @@ def ivf_assign(emb: DataFrame, *, n_cells: int = 8,
     return _ivf_assign_expr(emb, cent_list, nprobe)
 
 
+#: The per-row vector norm of the IVF assignments, and the guard that
+#: fails the job on a zero-norm vector, naming it: its cosine is
+#: undefined (a NaN that sort_array would rank last, or an anonymous
+#: DIVIDE_BY_ZERO under ANSI), with no place in the ranking.
+_NV = ("sqrt(aggregate(transform(v, x -> x * x), "
+       "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))")
+_NV_GUARD = ("IF(nv = 0, raise_error(concat('zero-norm vector: vec_id ', "
+             "CAST(vec_id AS STRING))), nv) AS nv")
+
+
+def _centroid_norm(cell_id: int, cv: list) -> float:
+    """Python left-fold + ``math.sqrt`` — bit-equal to the HOF norm;
+    a zero-norm centroid has no cosine, so it is refused."""
+    import math
+    s = 0.0
+    for x in cv:
+        s = s + x * x
+    if s == 0:
+        raise ValueError(f"zero-norm centroid: cell_id {cell_id}")
+    return math.sqrt(s)
+
+
 def _ivf_assign_expr(emb: DataFrame, cent_list: list,
                      nprobe: int) -> DataFrame:
     """Top-``nprobe`` cell assignment as ONE narrow projection over a
@@ -140,43 +162,27 @@ def _ivf_assign_expr(emb: DataFrame, cent_list: list,
     Centroid norms are Python left-fold + ``math.sqrt`` — bit-equal to
     the HOF aggregate + ``sqrt`` they replace (same fold order; sqrt is
     correctly rounded in both)."""
-    import math
     cids = [c for c, _v in cent_list]
     cvs = [v for _c, v in cent_list]
-    ncvs = []
-    for cv in cvs:
-        s = 0.0
-        for x in cv:
-            s = s + x * x
-        ncvs.append(math.sqrt(s))
+    ncvs = [_centroid_norm(c, v) for c, v in cent_list]
     cent1 = F.broadcast(emb.sparkSession.createDataFrame(
         [(cids, cvs, ncvs)],
         "cids array<int>, cvs array<array<double>>, ncvs array<double>"))
-    nv = ("sqrt(aggregate(transform(v, x -> x * x), "
-          "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))")
     dot = ("aggregate(zip_with(v, cv, (x, y) -> x * y), "
            "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
     # sort_array's natural struct order on (-c, cell_id) == the window's
     # (desc c, asc cell_id) — and unlike a comparator lambda it stays in
-    # codegen. (Edge note: a NaN cosine — only possible for a zero-norm
-    # vector — sorts last here, where the old window's DESC put NaN
-    # first; no gated corpus contains zero vectors.)
+    # codegen.
     probe = (f"slice(sort_array("
              f"transform(cvs, (cv, i) -> struct("
              f"-(({dot}) / (nv * ncvs[i])) AS nc, cids[i] AS cell_id))), "
              f"1, {nprobe})")
     return (emb.crossJoin(cent1)
-            .selectExpr("vec_id", "v", f"({nv}) AS nv",
+            .selectExpr("vec_id", "v", f"({_NV}) AS nv",
                         "cids", "cvs", "ncvs")
+            .selectExpr("vec_id", "v", _NV_GUARD, "cids", "cvs", "ncvs")
             .selectExpr("vec_id", "v", f"explode({probe}) AS _pr")
             .selectExpr("vec_id", "v", "_pr.cell_id AS cell_id"))
-
-
-_SORT_EDGE_NOTE = (
-    "sort_array on struct(-c, id) reproduces the rank window's "
-    "(desc c, asc id) order in codegen; NaN cosines (zero-norm vectors "
-    "only) sort last instead of the window's NaN-first — no gated "
-    "corpus contains zero vectors.")
 
 
 def train_coarse_quantizer(centroids: list, *, k_coarse: int | None = None,
@@ -255,7 +261,6 @@ def ivf_assign_two_level(emb: DataFrame, centroids: list, *,
     best fine cell outside its probed coarse cells is missed; recall vs
     the flat path is measured in tests/test_ann.py.
     """
-    import math
     spark = emb.sparkSession
     k = len(centroids)
     step = max(1, int(k ** 0.5))
@@ -265,6 +270,9 @@ def ivf_assign_two_level(emb: DataFrame, centroids: list, *,
                        for c, v in coarse_centroids]
     else:
         coarse_list = [(c, v) for c, v in cent_list if c % step == 0]
+    # centroid norms (refusing a zero one) before any cosine is taken
+    fine_ns = {c: _centroid_norm(c, v) for c, v in cent_list}
+    cq_ns = [_centroid_norm(c, v) for c, v in coarse_list]
 
     # fine→coarse routing (k×k' rows; rounded cosine, deterministic
     # ties). Still computed WITH SPARK EXPRESSIONS over the model-sized
@@ -290,21 +298,14 @@ def ivf_assign_two_level(emb: DataFrame, centroids: list, *,
     # identical (desc c, asc id) orderings, so the probed-cell set is
     # unchanged; centroid norms are Python left-fold + math.sqrt
     # (bit-equal to the HOF norm they replace).
-    def _norm(v):
-        s = 0.0
-        for x in v:
-            s = s + x * x
-        return math.sqrt(s)
-
     cq_ids = [c for c, _v in coarse_list]
     cq_vs = [v for _c, v in coarse_list]
-    cq_ns = [_norm(v) for v in cq_vs]
     # complete routes map (empty arrays for unrouted coarse ids, so the
     # flatten below never meets a NULL element)
     routes: dict = {c: [] for c in cq_ids}
     for cell_id, cv in cent_list:
         routes[routing[cell_id]].append(
-            (cell_id, cv, _norm(cv)))
+            (cell_id, cv, fine_ns[cell_id]))
     route_rows = [routes[c] for c in cq_ids]
     cent1 = F.broadcast(spark.createDataFrame(
         [(cq_ids, cq_vs, cq_ns, route_rows)],
@@ -312,17 +313,15 @@ def ivf_assign_two_level(emb: DataFrame, centroids: list, *,
         "cqns array<double>, "
         "routes array<array<struct<cell_id: int, cv: array<double>, "
         "ncv: double>>>"))
-    nv = ("sqrt(aggregate(transform(v, x -> x * x), "
-          "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x))")
 
     def _dot(a, b):
         return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
                 f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
 
     # sort_array's natural struct order on (-c, id) == the windows'
-    # (desc c, asc id) in codegen (see _SORT_EDGE_NOTE for the
-    # zero-norm NaN edge). Tie-break on the coarse ID (cid), as the
-    # window did; ci is the array position, kept only to index `routes`.
+    # (desc c, asc id) in codegen. Tie-break on the coarse ID (cid), as
+    # the window did; ci is the array position, kept only to index
+    # `routes`.
     probed = (f"slice(sort_array("
               f"transform(cqvs, (qv, i) -> struct("
               f"-round(({_dot('v', 'qv')}) / (nv * cqns[i]), 6) AS nc, "
@@ -335,7 +334,9 @@ def ivf_assign_two_level(emb: DataFrame, centroids: list, *,
                 f"-round(({_dot('v', 's.cv')}) / (nv * s.ncv), 6) AS nc, "
                 f"s.cell_id AS cell_id))), 1, {nprobe})")
     return (emb.crossJoin(cent1)
-            .selectExpr("vec_id", "v", f"({nv}) AS nv",
+            .selectExpr("vec_id", "v", f"({_NV}) AS nv",
+                        "cqids", "cqvs", "cqns", "routes")
+            .selectExpr("vec_id", "v", _NV_GUARD,
                         "cqids", "cqvs", "cqns", "routes")
             .selectExpr("vec_id", "v", f"explode({fine_sel}) AS _pr")
             .selectExpr("vec_id", "v", "_pr.cell_id AS cell_id"))

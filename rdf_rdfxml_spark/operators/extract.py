@@ -204,15 +204,34 @@ def errors_channel(extracted: DataFrame) -> DataFrame:
                     F.col("o").alias("error")))
 
 
+def namespace_declarations(content) -> dict:
+    """prefix (None: the default namespace) → namespace URI over every
+    declaration in one document, later declarations (document order)
+    winning; read from the XML DOM alone — no grammar pass, and an
+    explicit-stack walk, so nesting depth is never an error. A
+    malformed document declares nothing."""
+    from ..functions.xmldom import XMLParseError, parse_document
+    try:
+        stack = [parse_document(content)]
+    except XMLParseError:
+        return {}
+    px: dict = {}
+    while stack:
+        el = stack.pop()
+        for prefix, ns in el.ns_decls:
+            px[prefix] = ns
+        stack.extend(c for c in reversed(el.children) if c.is_element)
+    return px
+
+
 def document_prefixes(documents: DataFrame) -> DataFrame:
     """Distributed form of the reference's ``prefix()`` bookkeeping
     (reader.rb:199,217): one row per (document, prefix, namespace)
-    declaration seen during the parse. Feeds vocabulary/namespace stats
-    for KG pipelines (which vocabularies dominate a crawl, writer prefix
-    tables, dialect drift detection). Same mapInArrow grain as extract."""
+    declaration (later declarations of a prefix win). Feeds vocabulary/
+    namespace stats for KG pipelines (which vocabularies dominate a
+    crawl, writer prefix tables, dialect drift detection), via
+    :func:`namespace_declarations`. Same mapInArrow grain as extract."""
     import pyarrow as pa
-
-    from ..parser.grammar import parse_rdfxml as _parse
 
     def batches(it):
         import hashlib as _h
@@ -224,9 +243,7 @@ def document_prefixes(documents: DataFrame) -> DataFrame:
                 data = (content.encode("utf-8")
                         if isinstance(content, str) else content)
                 doc_sha = _h.sha256(data).hexdigest()
-                px: dict = {}
-                _parse(data, doc_key=doc_sha, strict=False, prefixes=px)
-                for prefix, ns in px.items():
+                for prefix, ns in namespace_declarations(data).items():
                     shas.append(doc_sha)
                     prefs.append(prefix if prefix is not None else "")
                     nss.append(ns)

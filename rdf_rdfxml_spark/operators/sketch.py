@@ -397,25 +397,78 @@ def stream_neardup_oracle_sql(*, n_hashes: int = 64, n_bands: int = 8,
                               shingle: int = 5,
                               table: str = "documents") -> str:
     """DuckDB twin of the availableNow single-batch semantics of
-    ``streaming.stream.stream_neardup_flags``: per (band_id, band_hash)
-    bucket, every document except the bucket minimum, paired with that
-    minimum (ingest ts is a monotone function of doc_id in the driver
-    query, so min-by-(ts, doc_id) = min(doc_id))."""
+    ``streaming.stream.stream_neardup_flags``: the MinHash bands of
+    :func:`minhash_oracle_sql` through :func:`first_in_bucket_oracle_sql`
+    (ingest ts is a monotone function of doc_id in the driver query, so
+    min-by-(ts, doc_id) = min(doc_id))."""
     pairs = minhash_oracle_sql(n_hashes=n_hashes, n_bands=n_bands,
                                shingle=shingle, table=table)
     # reuse the sig/bands CTE chain: strip the trailing pair-select
     bands_query = pairs[:pairs.rindex("SELECT DISTINCT")] + """
-    SELECT doc_id, band_id, band_hash FROM bands"""
+    SELECT doc_id AS id, band_id, band_hash AS band_value FROM bands"""
+    return first_in_bucket_oracle_sql(f"bands AS ({bands_query})", "doc_id")
+
+
+def _bit_bands_cte(name: str, *, bits: int, n_bands: int) -> str:
+    """CTE ``name(id, band_id, band_value, h)`` over ``sig(id, h)``: the
+    contiguous bit ranges of ``h`` — the SQL twin of the Spark band
+    split (multimodal._band_explode, stream._signature_bands)."""
+    width = bits // n_bands
+    return f"""{name} AS (
+      SELECT id, CAST(b AS INTEGER) AS band_id,
+             (h >> CAST(b * {width} AS INTEGER)) % {2 ** width}
+               AS band_value,
+             h
+      FROM sig, generate_series(0, {n_bands - 1}) AS g(b))"""
+
+
+def first_in_bucket_oracle_sql(ctes: str, id_col: str, *,
+                               bits: int | None = None,
+                               n_bands: int = 4) -> str:
+    """DuckDB twin of the streaming band-bucket flaggers under
+    availableNow semantics: per (band_id, band_value) bucket, every
+    item except the bucket minimum, paired with that minimum. ``ctes``
+    ends in ``sig(id, h)``, banded here by ``bits`` contiguous bits —
+    or, with ``bits=None``, already defines ``bands(id, band_id,
+    band_value)``. Output ``(<id_col>, band_id, dup_of)``."""
+    if bits is not None:
+        ctes += ",\n    " + _bit_bands_cte("bands", bits=bits,
+                                           n_bands=n_bands)
     return f"""
-    WITH b AS ({bands_query}),
+    WITH {ctes},
     firsts AS (
-      SELECT band_id, band_hash, MIN(doc_id) AS first_doc
-      FROM b GROUP BY band_id, band_hash)
-    SELECT b.doc_id, CAST(b.band_id AS INTEGER) AS band_id,
-           f.first_doc AS dup_of
-    FROM b JOIN firsts f
-      ON f.band_id = b.band_id AND f.band_hash = b.band_hash
-    WHERE b.doc_id != f.first_doc"""
+      SELECT band_id, band_value, MIN(id) AS first_id
+      FROM bands GROUP BY band_id, band_value)
+    SELECT b.id AS {id_col}, CAST(b.band_id AS INTEGER) AS band_id,
+           f.first_id AS dup_of
+    FROM bands b JOIN firsts f
+      ON f.band_id = b.band_id AND f.band_value = b.band_value
+    WHERE b.id != f.first_id"""
+
+
+def hamming_pairs_oracle_sql(sig: str, *, bits: int, n_bands: int = 4,
+                             radius: int = 3,
+                             max_bucket: int | None = 100) -> str:
+    """DuckDB twin of multimodal._hamming_lsh_pairs over the CTEs
+    ``sig`` ending in ``sig(id, h)``: contiguous-bit banding, the
+    mega-bucket cap, and the Hamming band join. Output ``(a, b,
+    hamming)`` with a < b and ``hamming <= radius``."""
+    return f"""
+    WITH {sig},
+    {_bit_bands_cte("bands0", bits=bits, n_bands=n_bands)},
+    ok AS (SELECT band_id, band_value FROM bands0
+           GROUP BY band_id, band_value
+           HAVING COUNT(*) <= {max_bucket if max_bucket is not None
+                               else 2 ** 62}),
+    bands AS (SELECT b.* FROM bands0 b JOIN ok
+              USING (band_id, band_value))
+    SELECT * FROM (
+      SELECT DISTINCT l.id AS a, r.id AS b,
+             CAST(bit_count(xor(l.h, r.h)) AS INTEGER) AS hamming
+      FROM bands l JOIN bands r
+        ON l.band_id = r.band_id AND l.band_value = r.band_value
+           AND l.id < r.id)
+    WHERE hamming <= {radius}"""
 
 
 #: token → (hexlen-prefix md5 int) memo per hexlen — simhash's token

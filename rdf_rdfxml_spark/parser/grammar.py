@@ -200,26 +200,24 @@ class DocumentParser:
 
     # -- entry (reader.rb:185-230) ----------------------------------------------
     def parse(self, content):
-        """Parse; returns the DOM root (or None on XML error) so callers
-        can collect namespace declarations (prefix bookkeeping)."""
+        """Parse one document into ``self.triples`` / ``self.errors``."""
         try:
             root = parse_document(content)
         except XMLParseError as e:
             self.error(f"XML parse error: {e}")
-            return None
+            return
         islands = find_rdf_islands(root)
         if not islands:
             # Root element processed as a node element (reader.rb:196-204).
             ec = EvaluationContext(self.base_uri)
             ec.extract_from_element(root)
             self.node_element(root, ec)
-            return root
+            return
         for island in islands:
             ec = EvaluationContext(self.base_uri)
             ec.extract_from_ancestors(island)
             for child in island.element_children():
                 self.node_element(child, ec.clone(child))
-        return root
 
     # -- productions -------------------------------------------------------------
     def node_element(self, el: Element, ec: EvaluationContext):
@@ -462,8 +460,7 @@ class DocumentParser:
 
 
 def parse_rdfxml(content, base_uri: str = "", doc_key: str = "doc",
-                 strict: bool = True, canonicalize: bool = False,
-                 prefixes: dict | None = None):
+                 strict: bool = True, canonicalize: bool = False):
     """Parse one RDF/XML document.
 
     Returns ``(triples, errors)`` where triples is a list of
@@ -474,18 +471,10 @@ def parse_rdfxml(content, base_uri: str = "", doc_key: str = "doc",
     ``canonicalize``: off-by-default literal canonicalization (reference
     reader option, reader.rb:128-129) — valid lexical forms of the core
     XSD numeric/boolean datatypes are rewritten to canonical form.
-
-    ``prefixes``: pass a dict to collect the namespace declarations seen
-    during the parse (prefix → namespace URI, later declarations win) —
-    the reference's ``prefix()`` bookkeeping (reader.rb:199,217).
     """
     parser = DocumentParser(doc_key, base_uri)
     try:
-        root = parser.parse(content)
-        if prefixes is not None and root is not None:
-            for el in root.iter_elements():
-                for prefix, uri in el.ns_decls:
-                    prefixes[prefix] = uri
+        parser.parse(content)
     except RecursionError:
         # A poison-pill document (hostile nesting) must land in the error
         # channel, not kill the Spark task — a retry would just die again.

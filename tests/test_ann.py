@@ -52,6 +52,43 @@ def test_ivf_assign_probe_count(spark):
     assert [r["count"] for r in per_vec] == [4]
 
 
+def _tiny_emb(spark, vecs):
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id int, v array<double>")
+
+
+@pytest.mark.parametrize("two_level", [False, True])
+def test_ivf_assign_refuses_zero_norm_vector(spark, two_level):
+    """A zero vector has no cosine: assignment fails loudly instead of
+    ranking a NaN."""
+    from pyspark.errors import PySparkException
+    from py4j.protocol import Py4JJavaError
+
+    from rdf_rdfxml_spark.operators.ann import ivf_assign_two_level
+    cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0]),
+             (3, [-1.0, 1.0])]
+    emb = _tiny_emb(spark, [[1.0, 2.0], [0.0, 0.0], [3.0, 1.0]])
+    a = (ivf_assign_two_level(emb, cents, nprobe=1) if two_level
+         else ivf_assign(emb, nprobe=1, centroids=cents))
+    with pytest.raises((PySparkException, Py4JJavaError),
+                       match="zero-norm vector: vec_id 1"):
+        a.collect()
+
+
+@pytest.mark.parametrize("two_level", [False, True])
+def test_ivf_assign_refuses_zero_norm_centroid(spark, two_level):
+    from rdf_rdfxml_spark.operators.ann import ivf_assign_two_level
+    cents = [(0, [1.0, 0.0]), (1, [0.0, 0.0])]
+    emb = _tiny_emb(spark, [[1.0, 2.0]])
+    with pytest.raises(ValueError, match="zero-norm centroid: cell_id 1"):
+        if two_level:
+            ivf_assign_two_level(emb, cents, nprobe=1,
+                                 coarse_centroids=[(0, [1.0, 0.0])])
+        else:
+            ivf_assign(emb, nprobe=1, centroids=cents)
+
+
 def test_lsh_topk_neighbors_share_bucket_and_rank(spark, vectors):
     ids, v = vectors
     rows = lsh_bucket_topk(load_embeddings(spark, SF_DIR)).collect()

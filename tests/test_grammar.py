@@ -458,12 +458,21 @@ def test_canonicalize_option_off_by_default_and_correct():
 
 
 def test_prefix_bookkeeping():
-    """Reference prefix() callback surface (reader.rb:199,217): namespace
-    declarations seen during the parse are collectable."""
+    """Reference prefix() callback surface (reader.rb:199,217): every
+    namespace declaration in a document is collectable — without the
+    grammar, so a document too deep for its recursion still yields
+    them, and a malformed one yields none."""
+    from rdf_rdfxml_spark.operators.extract import namespace_declarations
     doc = (f'<rdf:RDF xmlns:rdf="{RDF}" xmlns:a="http://a/">'
            f'<rdf:Description xmlns:b="http://b/" rdf:about="http://x/">'
            f'<b:p>v</b:p></rdf:Description></rdf:RDF>')
-    prefixes = {}
-    triples, errors = parse_rdfxml(doc, doc_key="d", prefixes=prefixes)
-    assert not errors and len(triples) == 1
-    assert prefixes == {"rdf": RDF, "a": "http://a/", "b": "http://b/"}
+    assert namespace_declarations(doc) == {
+        "rdf": RDF, "a": "http://a/", "b": "http://b/"}
+    deep = (f'<rdf:RDF xmlns:rdf="{RDF}" xmlns:e="http://e/">'
+            + '<e:x>' * 3000 + '</e:x>' * 3000 + '</rdf:RDF>')
+    _, errors = parse_rdfxml(deep, doc_key="d", strict=False)
+    assert any("recursion" in e for e in errors)
+    assert namespace_declarations(deep) == {"rdf": RDF, "e": "http://e/"}
+    assert namespace_declarations('<a xmlns:p="http://p/"><b></a>') == {}
+    later = '<a xmlns:p="http://1/"><b xmlns:p="http://2/"/><c/></a>'
+    assert namespace_declarations(later) == {"p": "http://2/"}

@@ -8,7 +8,9 @@ every twinned query stays verified locally even when outside the gate.
 
 Usage: python tools/check_oracles.py [--json FILE] [sf_dir] [query ...]
 --json writes a CORRECTNESS-style per-query artifact (committable
-evidence for the extras the driver never sees).
+evidence for the extras the driver never sees). Each entry also carries
+``spark_hash``, the Spark side's value hash, so two checkouts' runs can
+be compared query by query even where no oracle exists.
 """
 
 from __future__ import annotations
@@ -98,6 +100,7 @@ def main():
                 f"read_parquet('{sf_dir}/{t}.parquet')")
 
     qs = dict(entrymod.queries())
+    gated = set(qs)
     n_gated = len(qs)
     assert n_gated <= 50, (
         f"queries() has {n_gated} entries — the driver gate checks only "
@@ -116,13 +119,16 @@ def main():
             sdf = fn(spark, sf_dir)
             srows = sdf.collect()
             scols = sdf.columns
+            scols_l = [c.lower() for c in scols]
+            sh = value_hash([tuple(r) for r in srows], scols_l)
         except Exception as e:
             failures.append(name)
             results[name] = {"err": f"spark: {type(e).__name__}"}
             print(f"FAIL {name}: spark raised {type(e).__name__}: {str(e)[:200]}")
             continue
         if name not in oracles:
-            results[name] = {"rows_only": len(srows), "err": None}
+            results[name] = {"rows_only": len(srows), "spark_hash": sh,
+                             "gated": name in gated, "err": None}
             print(f"SKIP {name}: no oracle (rows-only: {len(srows)})")
             continue
         try:
@@ -131,10 +137,10 @@ def main():
             orows = res.fetchall()
         except Exception as e:
             failures.append(name)
-            results[name] = {"err": f"duckdb: {str(e)[:120]}"}
+            results[name] = {"err": f"duckdb: {str(e)[:120]}",
+                             "spark_hash": sh}
             print(f"FAIL {name}: duckdb raised: {str(e)[:200]}")
             continue
-        scols_l = [c.lower() for c in scols]
         problems = []
         if sorted(scols_l) != sorted(ocols):
             problems.append(f"columns {sorted(scols_l)} != {sorted(ocols)}")
@@ -149,7 +155,6 @@ def main():
         if len(srows) != len(orows):
             problems.append(f"rows {len(srows)} != {len(orows)}")
         if not problems:
-            sh = value_hash([tuple(r) for r in srows], scols_l)
             oh = value_hash(orows, ocols)
             if sh != oh:
                 problems.append("value hash mismatch")
@@ -170,7 +175,7 @@ def main():
                                     for p in problems),
             "hash_match": not problems,
             "spark_rows": len(srows), "oracle_rows": len(orows),
-            "gated": name in entrymod.queries(), "err": None,
+            "spark_hash": sh, "gated": name in gated, "err": None,
         }
         if problems:
             failures.append(name)
