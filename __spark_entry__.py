@@ -443,7 +443,7 @@ def q_entity_linking_salted(spark, sf_dir):
 def q_entity_linking_hashids(spark, sf_dir):
     # The at-scale id scheme (xxhash64 term ids — no global sort). DuckDB
     # cannot reproduce xxhash64, so the oracle checks the *invariants* the
-    # encoding must preserve: row count through the linking joins, id-space
+    # encoding must preserve: row count through the projection, id-space
     # cardinality per position (bijectivity of term → id), and no unmatched
     # (null) ids.
     t = triples_channel(_parse(spark, sf_dir, D.xml_reify_expr()))
@@ -823,6 +823,14 @@ def q_dedup_embedding_bucketed(spark, sf_dir):
                                     centroids=cents)
 
 
+def _twinned_cells(sf_dir):
+    """max(8, N/25) cells for the embeddings plus their near-dup twins,
+    from the parquet footer count: ``with_neardup_twins`` adds one twin
+    per ``vec_id < 50`` (sf0.01: 500 + 50 rows, k = 22)."""
+    n = _table_rows(sf_dir, "embeddings")
+    return max(8, (n + min(n, 50)) // 25)
+
+
 def q_dedup_embedding_trained(spark, sf_dir):
     # The full production shape (round-2 verdict next-round #2, sharpened
     # by round-3 #3): k-means-TRAINED centroids (deterministic Lloyd's,
@@ -837,8 +845,7 @@ def q_dedup_embedding_trained(spark, sf_dir):
     # tools/scale_legs.py's recall group): max(8, N/25) on the TWINNED
     # corpus, mirrored in the oracle's GREATEST(8, COUNT(*)//25).
     emb = _ANN.with_neardup_twins(_ANN.load_embeddings(spark, sf_dir))
-    _, centroids = _ANN.kmeans_cells(emb, k=max(8, emb.count() // 25),
-                                iters=2)
+    _, centroids = _ANN.kmeans_cells(emb, k=_twinned_cells(sf_dir), iters=2)
     return _ANN.dedup_embedding_bucketed(emb, centroids=centroids,
                                     threshold=0.7)
 
@@ -857,8 +864,7 @@ def q_dedup_embedding_twolevel(spark, sf_dir):
     # inside train_coarse_quantizer — the oracle computes both from its
     # own table/fine counts.
     emb = _ANN.with_neardup_twins(_ANN.load_embeddings(spark, sf_dir))
-    _, centroids = _ANN.kmeans_cells(emb, k=max(8, emb.count() // 25),
-                                iters=2)
+    _, centroids = _ANN.kmeans_cells(emb, k=_twinned_cells(sf_dir), iters=2)
     coarse = _ANN.train_coarse_quantizer(centroids)
     return _ANN.dedup_embedding_twolevel(emb, centroids, threshold=0.7,
                                     coarse_centroids=coarse)

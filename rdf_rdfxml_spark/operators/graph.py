@@ -28,8 +28,9 @@ def salted_join(probe: DataFrame, build: DataFrame, key: str, *,
                 hot_support: float = 0.05,
                 how: str = "inner") -> DataFrame:
     """Hot-key-targeted salted equi-join — the one key-salting kernel:
-    ``encode_triples``' dictionary joins (linking.py) and the skewed
-    graph traversals, like the two-hop ``object = subject`` self-join
+    ``encode_triples``' dictionary joins under dense ids (linking.py;
+    hash ids encode by projection, with no join) and the skewed graph
+    traversals, like the two-hop ``object = subject`` self-join
     where one hub node holds most of the probe rows (the shape real KGs
     have: a handful of entities referenced by 90% of documents).
 

@@ -1472,14 +1472,19 @@ def _signature_stage(media: DataFrame, sig_fn, out_col: str, *,
         fn, schema=f"media_id string, {out_col} long, error string")
 
 
+def image_signature48(payload: bytes) -> int:
+    """48-bit image signature: decode + dHash — the one definition the
+    batch stage, the stream stage and the oracles share."""
+    return dhash48(decode_image(payload))
+
+
 def image_dhash(media: DataFrame, *,
                 payload_col: str = "payload") -> DataFrame:
     """(media_id, payload) → (media_id, dhash, error): document-local
-    decode + 48-bit dHash through the shared :func:`_signature_stage`
-    engine."""
-    return _signature_stage(media,
-                            lambda p: dhash48(decode_image(p)),
-                            "dhash", payload_col=payload_col)
+    :func:`image_signature48` through the shared
+    :func:`_signature_stage` engine."""
+    return _signature_stage(media, image_signature48, "dhash",
+                            payload_col=payload_col)
 
 
 def image_neardup_candidates(media: DataFrame, *, n_bands: int = 4,
@@ -1673,17 +1678,20 @@ def synth_neardup_audio(spark, n: int = 36, n_base: int = 12) -> DataFrame:
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
+def audio_signature48(payload: bytes) -> int:
+    """48-bit audio signature: decode + spectral fingerprint — the one
+    definition the batch stage, the stream stage and the oracles share."""
+    samples, rate = _decode_audio_checked(payload)
+    return audio_fingerprint48(samples, rate)
+
+
 def audio_fingerprints(media: DataFrame, *,
                        payload_col: str = "payload") -> DataFrame:
-    """(media_id, payload) → (media_id, afp, error): decode + 48-bit
-    spectral fingerprint through the shared :func:`_signature_stage`
+    """(media_id, payload) → (media_id, afp, error):
+    :func:`audio_signature48` through the shared :func:`_signature_stage`
     engine (the audio twin of :func:`image_dhash`)."""
-
-    def sig(payload: bytes) -> int:
-        samples, rate = _decode_audio_checked(payload)
-        return audio_fingerprint48(samples, rate)
-
-    return _signature_stage(media, sig, "afp", payload_col=payload_col)
+    return _signature_stage(media, audio_signature48, "afp",
+                            payload_col=payload_col)
 
 
 def audio_neardup_candidates(media: DataFrame, *, n_bands: int = 4,
@@ -1814,9 +1822,8 @@ def synth_neardup_video(spark, n: int = 24, n_base: int = 8) -> DataFrame:
 #: near-dup modality → (synthetic item helper, payload signature): the
 #: signature each Spark stage computes, replayed by the oracles.
 _NEARDUP_SIGNATURES = {
-    "image": (synth_neardup_media_item, lambda p: dhash48(decode_image(p))),
-    "audio": (synth_neardup_audio_item,
-              lambda p: audio_fingerprint48(*_decode_audio_checked(p))),
+    "image": (synth_neardup_media_item, image_signature48),
+    "audio": (synth_neardup_audio_item, audio_signature48),
     "video": (synth_neardup_video_item, video_signature48),
 }
 

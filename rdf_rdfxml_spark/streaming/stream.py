@@ -248,9 +248,9 @@ def stream_image_neardup_flags(media_stream: DataFrame, *,
     property of the batch operator carries over per epoch (any pair
     within Hamming distance n_bands−1 ingested inside one horizon
     shares a band bucket and is flagged)."""
-    from ..operators.multimodal import decode_image, dhash48
+    from ..operators.multimodal import image_signature48
     return stream_media_neardup_flags(
-        media_stream, lambda p: dhash48(decode_image(p)),
+        media_stream, image_signature48,
         watermark=watermark, horizon_seconds=horizon_seconds,
         ts_col=ts_col, n_bands=n_bands, payload_col=payload_col)
 
@@ -264,16 +264,9 @@ def stream_audio_neardup_flags(media_stream: DataFrame, *,
     """Streaming AUDIO near-dup at ingest: the gain-invariant 48-bit
     spectral fingerprint through the real decode path, same machinery
     and semantics as :func:`stream_image_neardup_flags`."""
-    from ..operators.multimodal import (
-        _decode_audio_checked, audio_fingerprint48,
-    )
-
-    def sig(payload: bytes) -> int:
-        samples, rate = _decode_audio_checked(payload)
-        return audio_fingerprint48(samples, rate)
-
+    from ..operators.multimodal import audio_signature48
     return stream_media_neardup_flags(
-        media_stream, sig,
+        media_stream, audio_signature48,
         watermark=watermark, horizon_seconds=horizon_seconds,
         ts_col=ts_col, n_bands=n_bands, payload_col=payload_col)
 

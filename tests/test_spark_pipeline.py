@@ -4,12 +4,13 @@ scale, with golden-isomorphism checks per document.
 """
 import pytest
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from rdf_rdfxml_spark.operators.dedup import dedup_document, dedup_global
 from rdf_rdfxml_spark.operators.extract import extract, triples_channel, errors_channel
 from rdf_rdfxml_spark.operators.linking import (
-    build_term_dictionary, detect_hot_keys, encode_triples,
+    build_term_dictionary, detect_hot_keys, encode_triples, one_term_per_id,
 )
 from rdf_rdfxml_spark.operators.materialize import (
     assign_units, materialize, pending_units, record_units, resumable_run,
@@ -133,7 +134,7 @@ def _plans_since(spark, last: int) -> list[list[str]]:
 
 
 def test_linking_roundtrip_broadcast_and_salted(spark, graph):
-    d = build_term_dictionary(graph.triples)
+    d = build_term_dictionary(graph.triples, dense_ids=True)
     n = graph.triples.count()
     rows = []
     for kwargs in ({},                                          # default
@@ -158,10 +159,10 @@ def test_dictionary_broadcast_follows_spark_threshold(spark, graph,
     broadcast past it: with the threshold off the joins shuffle and give
     the same rows; under the default session the dictionary of a stored
     triple table is broadcast once and that one broadcast serves all
-    three positions."""
+    three positions. Dense ids: a hash dictionary has no join to plan."""
     graph.triples.write.parquet(str(tmp_path / "stored"))
     stored = spark.read.parquet(str(tmp_path / "stored"))
-    d = build_term_dictionary(stored)
+    d = build_term_dictionary(stored, dense_ids=True)
 
     def encoded_rows():
         last = _last_execution(spark)
@@ -213,6 +214,64 @@ def test_empty_and_null_lang_are_one_term(spark, dense_ids):
     assert enc.count() == 2
     assert enc.filter("o_id IS NULL").count() == 0
     assert enc.select("o_id").distinct().count() == 1
+
+
+def test_hash_ids_encode_without_join(spark, graph, tmp_path):
+    """Hash ids are a function of the term, so encoding is a projection:
+    the write plan holds no join and no broadcast, and the dictionary
+    never runs."""
+    t = graph.triples
+    last = _last_execution(spark)
+    assert materialize(encode_triples(t, build_term_dictionary(t)),
+                       str(tmp_path / "hashed"), n_buckets=4) > 0
+    plans = _plans_since(spark, last)
+    assert plans
+    for plan in plans:
+        assert not [n for n in plan if "Join" in n], plan
+        assert "BroadcastExchange" not in plan
+        assert "SortAggregate" not in plan     # the dictionary's aggregate
+
+
+def test_hash_ids_equal_dictionary_ids(graph):
+    """The projection gives every term the dictionary's ``term_id``."""
+    d = build_term_dictionary(graph.triples)
+    ids = {(r["kind"], r["value"], r["lang"] or "", r["dt"] or ""):
+           r["term_id"] for r in d.collect()}
+    assert len(ids) == len(set(ids.values()))
+    enc = encode_triples(graph.triples, d).collect()
+    assert enc
+    for r in enc:
+        assert r["s_id"] == ids[(r["s_kind"], r["s"], "", "")]
+        assert r["p_id"] == ids[("iri", r["p"], "", "")]
+        assert r["o_id"] == ids[(r["o_kind"], r["o"], r["o_lang"] or "",
+                                 r["o_dt"] or "")]
+
+
+def test_dictionary_raises_on_id_collision(spark):
+    """Two distinct terms on one id fail the dictionary, whose message
+    names the id and both terms; distinct ids pass."""
+    rows = spark.createDataFrame(
+        [(7, "iri\x00http://a/"), (7, "iri\x00http://b/"),
+         (7, "iri\x00http://a/"), (8, "iri\x00http://c/")],
+        "term_id long, term string")
+    with pytest.raises(SparkRuntimeException,
+                       match="term_id 7 holds two terms") as e:
+        one_term_per_id(rows).collect()
+    assert "http://a/" in str(e.value) and "http://b/" in str(e.value)
+    with pytest.raises(SparkRuntimeException, match="holds two terms"):
+        one_term_per_id(rows).count()      # pruning keeps the check
+    ok = one_term_per_id(rows.filter("term <> 'iri\x00http://b/'"))
+    assert sorted(ok.collect()) == [(7, "iri\x00http://a/"),
+                                    (8, "iri\x00http://c/")]
+
+
+def test_hot_keys_need_a_dense_dictionary(graph):
+    """A hash dictionary has no join to salt: ``hot_keys`` raises."""
+    d = build_term_dictionary(graph.triples)
+    for hot in (["iri\x00http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+                 "\x00\x00"], []):
+        with pytest.raises(ValueError, match="dense dictionary"):
+            encode_triples(graph.triples, d, hot_keys=hot)
 
 
 def test_dense_ids_are_contiguous(spark, graph):
@@ -277,7 +336,7 @@ def test_salted_join_spreads_hot_key(spark):
         "ELSE 'http://hot/one' END AS o",
         "'iri' AS o_kind", "CAST(NULL AS STRING) AS o_lang",
         "CAST(NULL AS STRING) AS o_dt")
-    d = build_term_dictionary(hot)
+    d = build_term_dictionary(hot, dense_ids=True)
     saved = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

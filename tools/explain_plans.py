@@ -1,5 +1,6 @@
 """Print the physical plans PERF.md cites — column pruning through the
-grammar UDF, filter pushdown, broadcast vs salted linking joins.
+grammar UDF, filter pushdown, hash-id linking as a projection and the
+salted dense-id linking join.
 
 Usage: python tools/explain_plans.py [sf_dir]
 """
@@ -40,21 +41,22 @@ def main():
 
     triples = triples_channel(
         extract(docs.selectExpr("text AS content"))).localCheckpoint()
-    d = build_term_dictionary(triples).localCheckpoint()
 
     print("=" * 72)
-    print("3. entity linking — default plan: Spark broadcasts the "
-          "dictionary under its byte threshold (no fact-table shuffle)")
+    print("3. entity linking — hash ids: a projection of xxhash64 term "
+          "keys (no join, no dictionary stage)")
     print("=" * 72)
-    encode_triples(triples, d).explain("formatted")
+    encode_triples(triples, build_term_dictionary(triples)) \
+        .explain("formatted")
 
     print("=" * 72)
-    print("4. entity linking — salted shuffle path (caller hot_keys; "
-          "auto-broadcast disabled to show the at-scale plan)")
+    print("4. entity linking — dense ids, salted shuffle path (caller "
+          "hot_keys; auto-broadcast disabled to show the at-scale plan)")
     print("=" * 72)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    encode_triples(triples, d, hot_keys=detect_hot_keys(triples)) \
+    dense = build_term_dictionary(triples, dense_ids=True).localCheckpoint()
+    encode_triples(triples, dense, hot_keys=detect_hot_keys(triples)) \
         .explain("formatted")
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")

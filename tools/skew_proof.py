@@ -5,7 +5,9 @@ The entity-linking dictionary join's skew story (linking.py module
 docstring) was value-checked and unit-tested for spread, but never
 *measured* under rdf:type-grade heat. This tool builds a fact table
 whose object column is 90% ONE IRI (the reference's hot intern-cache
-path, reader.rb:692), encodes it through all three paths —
+path, reader.rb:692) and a dense-id dictionary (``dense_ids=True``:
+only dense ids encode through joins; hash ids are a projection with
+nothing to salt), then encodes it through all three join paths —
 
   * broadcast   (the default plan with Spark's broadcast threshold
                 raised so the dictionary fits: zero fact shuffle)
@@ -83,7 +85,7 @@ def main():
         "CAST(NULL AS STRING) AS o_dt",
     ).persist()
     n = fact.count()
-    d = build_term_dictionary(fact).persist()
+    d = build_term_dictionary(fact, dense_ids=True).persist()
     n_terms = d.count()
     print(f"[skew] fact={n:,} rows, dict={n_terms:,} terms, "
           f"hot share=90% of objects", file=sys.stderr)
