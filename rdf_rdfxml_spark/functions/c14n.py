@@ -8,11 +8,15 @@ C14N rules, no self-closing tags, comments dropped — and the in-scope
 ``xml:lang`` (the parent context's language, a reference quirk) is injected
 onto top-level elements that don't override it. Text nodes pass through with
 canonical character escaping.
+
+:class:`LiteralWriter` renders from parse events as they arrive, keeping
+one stack entry per open element, so no tree is built and nothing recurses
+with the literal's depth.
 """
 
 from __future__ import annotations
 
-from .xmldom import XML_NS, Element, Text
+from .xmldom import XML_NS, split_name
 
 _TEXT_ESCAPES = [("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"), ("\r", "&#xD;")]
 _ATTR_ESCAPES = [("&", "&amp;"), ("<", "&lt;"), ('"', "&quot;"),
@@ -31,68 +35,71 @@ def _escape_attr(value: str) -> str:
     return value
 
 
-def _render_element(el: Element, rendered_ns: dict, extra_attrs) -> str:
-    """Serialize one element exclusively-canonically.
+class LiteralWriter:
+    """The exclusive-canonical string of one node list (the content of a
+    parseType="Literal" property element), fed start/end/text events."""
 
-    ``rendered_ns``: prefix -> uri already emitted in the output ancestor
-    chain ('' key is the default namespace, value '' meaning none).
-    ``extra_attrs``: [(ns, local, prefix, value)] injected attributes
-    (the inherited xml:lang on top-level elements), skipped when the element
-    carries its own.
-    """
-    # Visibly utilized namespaces: the element's own prefix + attr prefixes.
-    ns_out: dict[str, str] = {}
-    if el.prefix is not None:
-        if rendered_ns.get(el.prefix) != (el.ns or ""):
-            ns_out[el.prefix] = el.ns or ""
-    else:
-        default = el.ns or ""
-        if rendered_ns.get("", "") != default:
-            ns_out[""] = default
+    __slots__ = ("parts", "open", "lang_attr")
 
-    attrs = list(el.attrs)
-    for extra in extra_attrs:
-        if el.attr(extra[0], extra[1]) is None:
-            attrs.append(extra)
+    def __init__(self, language: str | None = None):
+        self.parts: list[str] = []
+        # [(qualified name, prefix -> uri already emitted in the output
+        # ancestor chain)]; the '' key is the default namespace.
+        self.open: list[tuple] = []
+        self.lang_attr = (XML_NS, "lang", "xml", language) \
+            if language else None
 
-    for a_ns, _local, a_prefix, _value in attrs:
-        if a_prefix is not None and a_prefix != "xml":
-            if rendered_ns.get(a_prefix) != (a_ns or ""):
-                ns_out[a_prefix] = a_ns or ""
-
-    child_rendered = dict(rendered_ns)
-    child_rendered.update(ns_out)
-
-    name = f"{el.prefix}:{el.local}" if el.prefix else el.local
-    parts = ["<", name]
-    for prefix in sorted(ns_out):
-        uri = _escape_attr(ns_out[prefix])
-        parts.append(f' xmlns="{uri}"' if prefix == ""
-                     else f' xmlns:{prefix}="{uri}"')
-    # C14N attribute order: (namespace URI, local name); unqualified first.
-    for a_ns, a_local, a_prefix, value in sorted(
-            attrs, key=lambda a: (a[0] or "", a[1])):
-        attr_name = f"{a_prefix}:{a_local}" if a_prefix else a_local
-        parts.append(f' {attr_name}="{_escape_attr(value)}"')
-    parts.append(">")
-    for child in el.children:
-        if child.is_text:
-            parts.append(_escape_text(child.value))
+    def start(self, name, attr_list) -> None:
+        """Open one element: an expat triplet name and flat attribute list
+        (:func:`~rdf_rdfxml_spark.functions.xmldom.expat_parse`)."""
+        ns, local, prefix, _uri = split_name(name)
+        attrs = [split_name(attr_list[i])[:3] + (attr_list[i + 1],)
+                 for i in range(0, len(attr_list), 2)]
+        if self.open:
+            rendered_ns = self.open[-1][1]
         else:
-            parts.append(_render_element(child, child_rendered, ()))
-    parts.append(f"</{name}>")
-    return "".join(parts)
-
-
-def c14nxl(children, language: str | None = None,
-           namespaces: dict | None = None) -> str:
-    """Canonicalize a node list (the children of a parseType="Literal"
-    property element) to its exclusive-canonical string form."""
-    lang_attr = ((XML_NS, "lang", "xml", language),) if language else ()
-    out = []
-    for node in children:
-        if node.is_text:
-            out.append(_escape_text(node.value))
+            rendered_ns = {}
+            # The inherited xml:lang goes on top-level elements that carry
+            # none of their own.
+            extra = self.lang_attr
+            if extra is not None and not any(
+                    a[0] == XML_NS and a[1] == "lang" for a in attrs):
+                attrs.append(extra)
+        # Visibly utilized namespaces: the element's own prefix + attr prefixes.
+        ns_out: dict[str, str] = {}
+        if prefix is not None:
+            if rendered_ns.get(prefix) != (ns or ""):
+                ns_out[prefix] = ns or ""
         else:
-            out.append(_render_element(node, {}, lang_attr))
-    return "".join(out)
+            default = ns or ""
+            if rendered_ns.get("", "") != default:
+                ns_out[""] = default
+        for a_ns, _local, a_prefix, _value in attrs:
+            if a_prefix is not None and a_prefix != "xml":
+                if rendered_ns.get(a_prefix) != (a_ns or ""):
+                    ns_out[a_prefix] = a_ns or ""
+
+        qname = f"{prefix}:{local}" if prefix else local
+        parts = self.parts
+        parts.append("<" + qname)
+        for p in sorted(ns_out):
+            uri = _escape_attr(ns_out[p])
+            parts.append(f' xmlns="{uri}"' if p == ""
+                         else f' xmlns:{p}="{uri}"')
+        # C14N attribute order: (namespace URI, local name); unqualified first.
+        for a_ns, a_local, a_prefix, value in sorted(
+                attrs, key=lambda a: (a[0] or "", a[1])):
+            attr_name = f"{a_prefix}:{a_local}" if a_prefix else a_local
+            parts.append(f' {attr_name}="{_escape_attr(value)}"')
+        parts.append(">")
+        self.open.append((qname, {**rendered_ns, **ns_out} if ns_out
+                          else rendered_ns))
+
+    def end(self) -> None:
+        self.parts.append(f"</{self.open.pop()[0]}>")
+
+    def text(self, data: str) -> None:
+        self.parts.append(_escape_text(data))
+
+    def value(self) -> str:
+        return "".join(self.parts)

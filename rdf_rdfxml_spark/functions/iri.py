@@ -58,10 +58,15 @@ def unsplit_iri(scheme, authority, path, query, fragment) -> str:
     return "".join(out)
 
 
+#: The scheme part of ``_RFC3986_RE`` on its own: ``has_scheme`` stops at
+#: the first ':' instead of splitting the whole reference.
+_SCHEME_RE = re.compile(r"[^:/?#]+:")
+
+
 def has_scheme(iri: str) -> bool:
     """True when the reference carries a scheme (the reference's
     ``RDF::URI#absolute?`` test used by ``uri()``/``base=``)."""
-    return _RFC3986_RE.match(iri).group(1) is not None
+    return _SCHEME_RE.match(iri) is not None
 
 
 def remove_dot_segments(path: str) -> str:

@@ -1,10 +1,15 @@
-"""Minimal namespace-aware XML DOM built on stdlib ``xml.parsers.expat``.
+"""expat configuration, charset handling and a minimal namespace-aware DOM.
 
-Fills the role of the reference's NodeProxy adapters
+The grammar (:mod:`rdf_rdfxml_spark.parser.grammar`) runs its productions
+in expat's callbacks through :func:`expat_parse`; nothing on the parse path
+builds a tree. :func:`parse_document` builds the mini-DOM that fills the
+role of the reference's NodeProxy adapters
 (``/root/reference/lib/rdf/rdfxml/reader/nokogiri.rb`` /
-``reader/rexml.rb``): a uniform per-element view exposing
+``reader/rexml.rb``); it is kept for the benchmark's traced ladder and the
+tests, which read a document's XML structure on its own. An
+:class:`Element` exposes
 
-* ``ns`` / ``local`` / ``prefix`` — the expanded element name,
+* ``ns`` / ``local`` / ``prefix`` / ``uri`` — the expanded element name,
 * ``ns_decls`` — the namespace declarations made **on this element**
   (NodeProxy#namespaces, nokogiri.rb:104-106),
 * ``attrs`` — document-order attributes as ``(ns, local, prefix, value)``
@@ -12,7 +17,7 @@ Fills the role of the reference's NodeProxy adapters
 * ``children`` — element + text children in document order (comments and
   processing instructions are dropped; CDATA merges into text, matching
   NodeProxy#text? at nokogiri.rb:88-90),
-* parent links (for ancestor context extraction, reader.rb:58-66).
+* ``parent``.
 
 expat is C-backed (same libexpat family nokogiri leans on via libxml2) and
 ships with CPython — no extra dependency inside Arrow UDF workers. Internal
@@ -30,6 +35,8 @@ XML_NS = "http://www.w3.org/XML/1998/namespace"
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 
 _SEP = "\x01"
+#: pyexpat stops the parse with this code when a handler raises.
+_ABORTED = expat.errors.codes[expat.errors.XML_ERROR_ABORTED]
 
 
 class XMLParseError(Exception):
@@ -46,25 +53,6 @@ class Text:
     is_text = True
 
 
-#: (ns, local) → expanded name memo. Element names repeat massively
-#: within and across documents, so the concat happens once per distinct
-#: name per worker instead of once per property access (round 8: the
-#: grammar reads ``el.uri`` several times per element). Bounded: cleared
-#: past 64k entries so a hostile corpus of unbounded distinct names
-#: can't grow worker memory.
-_URI_MEMO: dict = {}
-
-
-def _expanded_name(ns, local) -> str:
-    key = (ns, local)
-    u = _URI_MEMO.get(key)
-    if u is None:
-        if len(_URI_MEMO) > 65536:
-            _URI_MEMO.clear()
-        u = _URI_MEMO[key] = (ns if ns is not None else XML_NS) + local
-    return u
-
-
 class Element:
     __slots__ = (
         "ns", "local", "prefix", "attrs", "ns_decls", "children", "parent",
@@ -79,81 +67,37 @@ class Element:
         self.local = local
         self.prefix = prefix        # declared prefix or None
         self.attrs = []             # [(ns, local, prefix, value)] doc order
-        self.ns_decls = ()          # [(prefix|None, uri)] declared here —
-        #                             shared empty default (read-only when
-        #                             empty; producers assign a fresh list)
+        self.ns_decls = ()          # [(prefix|None, uri)] declared here
         self.children = []          # [Element|Text]
         self.parent = parent
-        # Expanded name as the reference computes it: namespace href +
-        # local name, defaulting to the XML namespace when unqualified
-        # (NodeProxy#uri, nokogiri.rb:169-173). Precomputed once — the
-        # value is a pure function of (ns, local), which never change
-        # after construction.
-        self.uri = _expanded_name(ns, local)
-
-    # -- structure -------------------------------------------------------------
-    def element_children(self):
-        return [c for c in self.children if c.is_element]
-
-    def inner_text(self) -> str:
-        """Concatenated text of all text descendants (Nokogiri inner_text)."""
-        ch = self.children
-        if len(ch) == 1 and ch[0].is_text:  # the common literal shape
-            return ch[0].value
-        out = []
-        stack = list(reversed(ch))
-        while stack:
-            node = stack.pop()
-            if node.is_text:
-                out.append(node.value)
-            else:
-                stack.extend(reversed(node.children))
-        return "".join(out)
-
-    def ancestors(self):
-        """Ancestor elements root-first (NodeProxy#ancestors)."""
-        chain = []
-        p = self.parent
-        while p is not None:
-            chain.append(p)
-            p = p.parent
-        chain.reverse()
-        return chain
-
-    def iter_elements(self):
-        """self + all element descendants, document order."""
-        yield self
-        for c in self.children:
-            if c.is_element:
-                yield from c.iter_elements()
-
-    # -- attribute helpers -----------------------------------------------------
-    def attr(self, ns, local):
-        for a_ns, a_local, _prefix, value in self.attrs:
-            if a_ns == ns and a_local == local:
-                return value
-        return None
+        # Expanded name as the reference computes it (NodeProxy#uri,
+        # nokogiri.rb:169-173).
+        self.uri = (ns if ns is not None else XML_NS) + local
 
 
-#: expat triplet-name → (ns, local, prefix) memo; same boundedness
-#: rationale as ``_URI_MEMO`` (names repeat, splits are pure).
-_SPLIT_MEMO: dict = {}
+#: expat triplet name → (ns, local, prefix, expanded name). Names repeat
+#: massively within and across documents, so each distinct name is split
+#: once per worker. Bounded: cleared past 64k entries so a hostile corpus
+#: of unbounded distinct names can't grow worker memory.
+_NAMES: dict = {}
 
 
-def _split_name(name: str):
-    """expat triplet name 'uri\\x01local\\x01prefix' | 'uri\\x01local' | 'local'."""
-    t = _SPLIT_MEMO.get(name)
+def split_name(name: str):
+    """expat triplet name 'uri\\x01local\\x01prefix' | 'uri\\x01local' |
+    'local' → ``(ns, local, prefix, uri)``. ``uri`` is the expanded name
+    as the reference computes it: namespace + local name, the XML
+    namespace when unqualified (NodeProxy#uri, nokogiri.rb:169-173)."""
+    t = _NAMES.get(name)
     if t is None:
         parts = name.split(_SEP)
-        if len(parts) == 3:
-            t = parts[0], parts[1], parts[2]
-        elif len(parts) == 2:
-            t = parts[0], parts[1], None
+        if len(parts) == 1:
+            t = None, name, None, XML_NS + name
         else:
-            t = None, parts[0], None
-        if len(_SPLIT_MEMO) > 65536:
-            _SPLIT_MEMO.clear()
-        _SPLIT_MEMO[name] = t
+            t = (parts[0], parts[1], parts[2] if len(parts) == 3 else None,
+                 parts[0] + parts[1])
+        if len(_NAMES) > 65536:
+            _NAMES.clear()
+        _NAMES[name] = t
     return t
 
 
@@ -168,10 +112,10 @@ def _normalize_charset(content):
     * **bytes**: passed through — expat honours the BOM and the XML decl
       natively (UTF-8/UTF-16/ISO-8859-1/ASCII built in; other *single-byte*
       charsets via pyexpat's Python-codec unknown-encoding handler). The
-      caller retries through here with ``force_decode=True`` only when
-      expat reports an encoding it cannot handle (multi-byte codecs like
-      shift_jis): the bytes are decoded with Python's codec for the
-      declared encoding and re-parsed as text.
+      caller retries through here only when expat reports an encoding it
+      cannot handle (multi-byte codecs like shift_jis): the bytes are
+      decoded with Python's codec for the declared encoding and re-parsed
+      as text.
     * **str**: already decoded — but a stale ``encoding="..."`` decl would
       make expat re-interpret our UTF-8 re-encoding as that charset
       (mojibake), so the decl's encoding is rewritten to UTF-8.
@@ -193,18 +137,54 @@ def _decode_declared(data: bytes) -> str:
         raise XMLParseError(f"cannot decode declared encoding {enc}: {e}")
 
 
-def parse_document(content) -> Element:
-    """Parse an XML document string/bytes into the mini-DOM; raise
-    :class:`XMLParseError` on malformed input.
+def expat_parse(content, start=None, end=None, text=None,
+                ns_start=None) -> None:
+    """Run expat over one document string/bytes, calling the handlers
+    given: ``start(name, attrs)`` with a triplet name (:func:`split_name`)
+    and a flat ``[name, value, ...]`` attribute list, ``end(name)``,
+    ``text(data)`` with adjacent character data merged, and
+    ``ns_start(prefix, uri)``.
 
-    expat is the one adapter: the reference's optional rexml fallback
-    (reader.rb:143-157) has no counterpart, as CPython ships pyexpat.
+    Malformed XML raises :class:`XMLParseError`; an exception raised in a
+    handler propagates unchanged. expat is the one adapter: the
+    reference's optional rexml fallback (reader.rb:143-157) has no
+    counterpart, as CPython ships pyexpat.
     """
     parser = expat.ParserCreate(namespace_separator=_SEP)
     parser.namespace_prefixes = True
     parser.ordered_attributes = True
     parser.buffer_text = True
+    if start is not None:
+        parser.StartElementHandler = start
+    if end is not None:
+        parser.EndElementHandler = end
+    if text is not None:
+        parser.CharacterDataHandler = text
+    if ns_start is not None:
+        parser.StartNamespaceDeclHandler = ns_start
+    normalized = _normalize_charset(content)
+    data = (normalized.encode("utf-8") if isinstance(normalized, str)
+            else normalized)
+    try:
+        parser.Parse(data, True)
+    except (expat.ExpatError, ValueError, LookupError) as e:
+        if parser.ErrorCode == _ABORTED:
+            raise                   # raised by a handler
+        if "encoding" not in str(e):
+            raise XMLParseError(str(e)) from e
+        # An encoding expat can't stream (ValueError "multi-byte encodings
+        # are not supported" for e.g. shift_jis, LookupError from the
+        # codec registry for unknown charset names) or that contradicts
+        # the bytes: decode with Python's codec for the declared encoding,
+        # retry as text (decl gets rewritten to UTF-8). expat settles the
+        # encoding before the root element, so no handler has run yet.
+        expat_parse(_decode_declared(data), start, end, text, ns_start)
 
+
+def parse_document(content) -> Element:
+    """Parse an XML document string/bytes into the mini-DOM; raise
+    :class:`XMLParseError` on malformed input. The grammar does not use
+    this tree; the benchmark's traced ladder and the tests do."""
     root_holder: list = []
     stack: list[Element] = []
     pending_ns: list = []
@@ -213,15 +193,14 @@ def parse_document(content) -> Element:
         pending_ns.append((prefix, uri or ""))
 
     def start_element(name, attr_list):
-        ns, local, prefix = _split_name(name)
+        ns, local, prefix, _uri = split_name(name)
         parent = stack[-1] if stack else None
         el = Element(ns, local, prefix, parent)
         if pending_ns:
             el.ns_decls = list(pending_ns)
             pending_ns.clear()
         for i in range(0, len(attr_list), 2):
-            a_ns, a_local, a_prefix = _split_name(attr_list[i])
-            el.attrs.append((a_ns, a_local, a_prefix, attr_list[i + 1]))
+            el.attrs.append(split_name(attr_list[i])[:3] + (attr_list[i + 1],))
         if parent is not None:
             parent.children.append(el)
         else:
@@ -232,43 +211,13 @@ def parse_document(content) -> Element:
         stack.pop()
 
     def characters(data):
-        if not stack:
-            return
         children = stack[-1].children
         if children and children[-1].is_text:
             children[-1].value += data
         else:
             children.append(Text(data))
 
-    parser.StartNamespaceDeclHandler = start_ns
-    parser.StartElementHandler = start_element
-    parser.EndElementHandler = end_element
-    parser.CharacterDataHandler = characters
-
-    normalized = _normalize_charset(content)
-    data = (normalized.encode("utf-8") if isinstance(normalized, str)
-            else normalized)
-    try:
-        parser.Parse(data, True)
-    except (expat.ExpatError, ValueError, LookupError) as e:
-        # malformed XML, or a codec pyexpat can't stream (ValueError
-        # "multi-byte encodings are not supported" for e.g. shift_jis,
-        # LookupError from the codec registry for unknown charset names)
-        if isinstance(data, bytes) and not root_holder and \
-                ("encoding" in str(e) or "encodings" in str(e)):
-            # multi-byte charset expat can't stream (e.g. shift_jis):
-            # decode with Python's codec for the declared encoding, retry
-            # as text (decl gets rewritten to UTF-8)
-            return parse_document(_decode_declared(data))
-        raise XMLParseError(str(e)) from e
+    expat_parse(content, start_element, end_element, characters, start_ns)
     if not root_holder:
         raise XMLParseError("no root element")
     return root_holder[0]
-
-
-def find_rdf_islands(root: Element):
-    """All ``rdf:RDF`` elements in document order — the reference's
-    ``root.xpath("//rdf:RDF")`` (reader.rb:195), which includes the root
-    itself and does **not** skip nested islands (the XXX at reader.rb:207)."""
-    return [el for el in root.iter_elements()
-            if el.ns == RDF_NS and el.local == "RDF"]

@@ -7,8 +7,9 @@ document's triples a set (the reference's ``RDF::Repository`` insert).
 Design notes for 100 TB scale:
 
 * The grammar is per-document and embarrassingly parallel — exactly Spark's
-  data-parallel grain. The entire recursive descent runs inside Arrow-batched
-  Python workers; the only process boundary is JVM ↔ Python Arrow IPC.
+  data-parallel grain. It runs in expat's callbacks inside Arrow-batched
+  Python workers, with no per-document tree and no recursion; the only
+  process boundary is JVM ↔ Python Arrow IPC.
   No per-row Python UDF dispatch happens at the Spark level (input_hint
   mandate): one Python call handles a whole Arrow batch via ``mapInArrow``,
   and output columns are built as Python lists converted straight to
@@ -32,7 +33,6 @@ Design notes for 100 TB scale:
 from __future__ import annotations
 
 import hashlib
-import sys
 from typing import Iterator
 
 import pyarrow as pa
@@ -109,8 +109,6 @@ def _col_or_none(rb: pa.RecordBatch, name: str, want: bool):
 def _make_parse_batch(has_base: bool, has_prov: bool, strict: bool,
                       max_content_bytes: int, canonicalize: bool = False):
     def parse_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # Hostile nesting headroom; RecursionError is still caught per-doc.
-        sys.setrecursionlimit(50_000)
         sha256 = hashlib.sha256
         buf = _ColumnBuffer()
         for rb in batches:
@@ -207,20 +205,19 @@ def errors_channel(extracted: DataFrame) -> DataFrame:
 def namespace_declarations(content) -> dict:
     """prefix (None: the default namespace) → namespace URI over every
     declaration in one document, later declarations (document order)
-    winning; read from the XML DOM alone — no grammar pass, and an
-    explicit-stack walk, so nesting depth is never an error. A
+    winning; read from expat's namespace-declaration events alone — no
+    grammar pass and no tree, so nesting depth is never an error. A
     malformed document declares nothing."""
-    from ..functions.xmldom import XMLParseError, parse_document
+    from ..functions.xmldom import XMLParseError, expat_parse
+    px: dict = {}
+
+    def declare(prefix, uri):
+        px[prefix] = uri or ""
+
     try:
-        stack = [parse_document(content)]
+        expat_parse(content, ns_start=declare)
     except XMLParseError:
         return {}
-    px: dict = {}
-    while stack:
-        el = stack.pop()
-        for prefix, ns in el.ns_decls:
-            px[prefix] = ns
-        stack.extend(c for c in reversed(el.children) if c.is_element)
     return px
 
 

@@ -2,10 +2,40 @@
 
 A from-scratch Python implementation of the W3C RDF/XML Syntax grammar with
 the same observable semantics as the reference reader
-(``/root/reference/lib/rdf/rdfxml/reader.rb``). Every production is a pure
-function over the mini-DOM in :mod:`rdf_rdfxml_spark.functions.xmldom`; the
-whole module runs *inside* Arrow-batched Spark UDF workers — it never touches
-the JVM and is embarrassingly parallel at the document grain.
+(``/root/reference/lib/rdf/rdfxml/reader.rb``). The reference descends
+recursively over a DOM; here the productions run in expat's start, end and
+character callbacks, and an explicit stack of frames holds what the DOM's
+parent links provide there: base, language, subject and the ``rdf:li``
+counter. No tree is built, and nothing recurses with document depth. The
+whole module runs *inside* Arrow-batched Spark UDF workers — it never
+touches the JVM and is embarrassingly parallel at the document grain.
+
+A node element's subject, ``rdf:type`` triple and property attributes are
+known at its start tag; ``parseType="Resource"`` and ``"Literal"`` are
+decided there too. Any other property element's production is decided at
+its end tag. The output — triples in order, blank-node labels and errors —
+is the one a recursive descent over the tree gives. Three places look
+ahead to get it:
+
+* **resourcePropertyElt** (a property element whose only element child is
+  a node element): the first element child is parsed right away behind a
+  mark (triple and error counts, the blank-node counter, an undo log of the
+  blank-node and ``rdf:ID`` tables). A second element child means no
+  production (reader.rb:413-564): everything since the mark is dropped and
+  the rest of the element is skipped.
+* **parseType="Collection"**: every list cell takes its blank-node id
+  before any member is parsed (reader.rb:469-496), so the element's events
+  are buffered to its end tag, the cells allocated, and the events replayed
+  through the same handlers.
+* **a root other than rdf:RDF, or a nested rdf:RDF**: whether the root is a
+  node element depends on whether any ``//rdf:RDF`` follows, and nested
+  islands are parsed again (reader.rb:195-207). Such a document is read
+  whole into a buffer of events first, then replayed in the reference's
+  order. A production that raises mid-stream takes the same path, so the
+  error list is the one the reference's order gives.
+
+Buffered events carry each start tag's count of element children, so a
+replay decides both lookaheads at the start tag and never buffers again.
 
 Term encoding (see SURVEY.md §1.2):
 
@@ -40,12 +70,18 @@ Deliberately replicated reference quirks (each cited):
   the parent context's base (reader.rb:436 passes ``ec``); all other
   productions use the property element's own context (reader.rb:450,482,
   534,562).
+* a nested node element (the object of a property element, or a collection
+  member) is parsed in its property element's context: its own
+  ``xml:base`` and ``xml:lang`` do not apply to it, only to its property
+  elements (reader.rb:413-423, 469-496).
 """
 
 from __future__ import annotations
 
+from itertools import islice
+
 from ..functions import iri as iri_mod
-from ..functions.c14n import c14nxl
+from ..functions.c14n import LiteralWriter
 from ..functions.iri import (
     is_ncname,
     ntriples_unescape,
@@ -56,10 +92,9 @@ from ..functions.iri import (
 from ..functions.xmldom import (
     RDF_NS,
     XML_NS,
-    Element,
     XMLParseError,
-    find_rdf_islands,
-    parse_document,
+    expat_parse,
+    split_name,
 )
 
 RDF_TYPE = RDF_NS + "type"
@@ -73,6 +108,8 @@ RDF_SUBJECT = RDF_NS + "subject"
 RDF_PREDICATE = RDF_NS + "predicate"
 RDF_OBJECT = RDF_NS + "object"
 RDF_XMLLITERAL = RDF_NS + "XMLLiteral"
+_RDF_RDF = RDF_NS + "RDF"
+_NIL = ("iri", RDF_NIL)
 
 # reader.rb:21-22
 CORE_SYNTAX_TERMS = frozenset(
@@ -87,191 +124,329 @@ _ILLEGAL_PROP_ATTRS = frozenset({RDF_DESCRIPTION, RDF_LI}) | OLD_TERMS
 _ILLEGAL_NODE_NAMES = CORE_SYNTAX_TERMS | {RDF_LI} | OLD_TERMS
 _ILLEGAL_PROP_NAMES = CORE_SYNTAX_TERMS | {RDF_DESCRIPTION} | OLD_TERMS
 
-
-def _attr_uri(a_ns: str | None, a_local: str) -> str:
-    """Attribute expanded name, XML-namespace default for unqualified attrs
-    (NodeProxy#uri, nokogiri.rb:169-173)."""
-    return (a_ns if a_ns is not None else XML_NS) + a_local
-
-
-class EvaluationContext:
-    """The recursive baggage (reader.rb:26-107)."""
-
-    __slots__ = ("base", "subject", "uri_mappings", "language", "li_counter",
-                 "_owns_map")
-
-    def __init__(self, base: str):
-        self.base = strip_fragment(base or "")
-        self.subject = None
-        self.uri_mappings: dict = {}
-        self.language: str | None = None
-        self.li_counter = 0
-        self._owns_map = True
-
-    def clone(self, element: Element | None) -> "EvaluationContext":
-        ec = EvaluationContext.__new__(EvaluationContext)
-        ec.base = self.base
-        ec.subject = None
-        # Copy-on-write: most elements declare no namespaces, so the
-        # mapping dict is shared until :meth:`extract_from_element`
-        # actually needs to write (round 8 — one dict copy per clone was
-        # measurable on the extraction hot path). No owner ever mutates
-        # a shared dict: every write path copies first unless this
-        # context already owns its private copy.
-        ec.uri_mappings = self.uri_mappings
-        ec._owns_map = False
-        ec.language = self.language
-        ec.li_counter = 0
-        if element is not None:
-            ec.extract_from_element(element)
-        return ec
-
-    def extract_from_element(self, el: Element) -> None:
-        # reader.rb:69-76: language, base (joined + fragment stripped),
-        # xmlns mappings (namespace URIs joined against base).
-        # one attrs scan for both xml:* context attributes (first match
-        # wins, same as Element.attr)
-        lang = base = None
-        for a_ns, a_local, _p, value in el.attrs:
-            if a_ns == XML_NS:
-                if a_local == "lang":
-                    if lang is None:
-                        lang = value
-                elif a_local == "base" and base is None:
-                    base = value
-        if lang is not None:
-            self.language = lang
-        if base is not None:
-            self.base = resolve_base(self.base, base)
-        if el.ns_decls:
-            if not self._owns_map:
-                self.uri_mappings = dict(self.uri_mappings)
-                self._owns_map = True
-            for prefix, uri in el.ns_decls:
-                self.uri_mappings[prefix] = \
-                    iri_mod.rfc3986_join(self.base, uri) \
-                    if uri and not iri_mod.has_scheme(uri) else uri
-
-    def extract_from_ancestors(self, el: Element) -> None:
-        for a in el.ancestors():
-            self.extract_from_element(a)
-        self.extract_from_element(el)
-
-    def li_next(self) -> str:
-        self.li_counter += 1
-        return f"{RDF_NS}_{self.li_counter}"
+# What the handlers do with events inside the top frame's element: drop
+# them, or hand them to its LiteralWriter or _Recorder.
+_SKIP, _LITERAL, _RECORD = 1, 2, 3
+_MISSING = object()
 
 
-class DocumentParser:
-    """One document's parse state: bnode allocation, rdf:ID registry,
-    triple + error accumulators."""
+class _Restart(Exception):
+    """The streamed pass cannot give the reference's order for this
+    document; it is read whole and replayed."""
 
-    def __init__(self, doc_key: str, base_uri: str = ""):
+
+def _literal(value: str, language: str | None):
+    # RDF::Literal downcases language tags; empty tag → plain literal.
+    return ("literal", value, language.lower() if language else None, None)
+
+
+def _xml_context(base: str, lang, attrs):
+    """(base, language) inside an element, from its ``xml:base`` and
+    ``xml:lang`` (reader.rb:69-76: base joined, fragment stripped)."""
+    for i in range(0, len(attrs), 2):
+        a_ns, a_local = split_name(attrs[i])[:2]
+        if a_ns == XML_NS:
+            if a_local == "lang":
+                lang = attrs[i + 1]
+            elif a_local == "base":
+                base = resolve_base(base, attrs[i + 1])
+    return base, lang
+
+
+class _Island:
+    """An rdf:RDF element: its element children are node elements."""
+    __slots__ = ("base", "lang")
+
+    def __init__(self, base, lang):
+        self.base, self.lang = base, lang
+
+
+class _Node:
+    """A node element, or a parseType="Resource" property element: its
+    element children are property elements of ``subject``."""
+    __slots__ = ("subject", "base", "lang", "li")
+
+    def __init__(self, subject, base, lang):
+        self.subject, self.base, self.lang = subject, base, lang
+        self.li = 0
+
+
+class _Prop:
+    """A property element whose production its end tag decides, or a
+    parseType="Literal" one (``lit``)."""
+    __slots__ = ("node", "predicate", "id_", "datatype", "resource",
+                 "node_id", "attrs", "base", "lang", "text", "n", "obj",
+                 "mark", "dead", "lit", "known")
+
+    def __init__(self, node, predicate, id_, datatype, resource, node_id,
+                 attrs, base, lang, known):
+        self.node, self.predicate, self.id_ = node, predicate, id_
+        self.datatype, self.resource, self.node_id = datatype, resource, node_id
+        self.attrs, self.base, self.lang = attrs, base, lang
+        self.known = known          # element children counted in advance
+        self.text = ""
+        self.n = 0                  # element children seen
+        self.obj = self.mark = self.lit = None
+        self.dead = False
+
+
+class _Collection:
+    """A parseType="Collection" property element: its element children are
+    the list members."""
+    __slots__ = ("subject", "predicate", "id_", "base", "lang", "cells",
+                 "i", "rec")
+
+    def __init__(self, subject, predicate, id_, base, lang):
+        self.subject, self.predicate, self.id_ = subject, predicate, id_
+        self.base, self.lang = base, lang
+        self.cells = self.rec = None
+        self.i = 0
+
+
+class _Recorder:
+    """Buffered events for a replay: a start tag is a ``[name, attrs,
+    element children]`` list, an end tag ``None``, character data a str.
+    ``top`` counts the element children of the buffered content."""
+    __slots__ = ("events", "open", "top")
+
+    def __init__(self):
+        self.events: list = []
+        self.open: list = []
+        self.top = 0
+
+    def start(self, name, attrs):
+        ev = [name, attrs, 0]
+        if self.open:
+            self.open[-1][2] += 1
+        else:
+            self.top += 1
+        self.open.append(ev)
+        self.events.append(ev)
+
+    def end(self, name=None):
+        self.open.pop()
+        self.events.append(None)
+
+    def text(self, data):
+        self.events.append(data)
+
+
+class _Reader:
+    """One document's parse state: the frame stack, blank-node allocation,
+    the rdf:ID registry, and the triple and error accumulators."""
+
+    def __init__(self, doc_key: str, base_uri: str):
         self.doc_key = doc_key
-        self.base_uri = base_uri or ""
+        self.base = strip_fragment(base_uri or "")
         self.triples: list[tuple] = []
         self.errors: list[str] = []
         self._bnode_cache: dict[str, str] = {}
-        self._bnode_counter = 0
+        self._counter = 0
         self._id_registry: dict[str, str] = {}
+        self._frames: list = []
+        self._mode = 0              # 0, _SKIP, _LITERAL or _RECORD
+        self._depth = 0             # elements open inside the top frame's
+        self._sink = None           # the mode's LiteralWriter / _Recorder
+        self._stream = True         # events come straight from expat
+        self._root_node = False     # the replayed root is a node element
+        self._island_ctx = (self.base, None)
+        self._marks = 0             # open resourcePropertyElt marks
+        self._undo: list = []
 
-    # -- term allocation -------------------------------------------------------
-    def fresh_bnode(self) -> str:
-        bid = f"b:{self.doc_key}:{self._bnode_counter}"
-        self._bnode_counter += 1
-        return bid
-
-    def bnode(self, label: str | None = None) -> str:
-        # reader.rb:252-255 — per-document labeled cache; nil label caches
-        # under "" (shared).
-        key = label or ""
-        cached = self._bnode_cache.get(key)
-        if cached is None:
-            cached = self.fresh_bnode()
-            self._bnode_cache[key] = cached
-        return cached
-
-    # -- diagnostics -----------------------------------------------------------
-    def error(self, message: str) -> None:
-        self.errors.append(message)
-
-    def add_triple(self, subject, predicate: str, obj) -> None:
-        self.triples.append((subject, predicate, obj))
-
-    # -- entry (reader.rb:185-230) ----------------------------------------------
-    def parse(self, content):
-        """Parse one document into ``self.triples`` / ``self.errors``."""
-        try:
-            root = parse_document(content)
-        except XMLParseError as e:
-            self.error(f"XML parse error: {e}")
+    # -- events (reader.rb:185-230) ---------------------------------------------
+    def start(self, name, attrs, known=None):
+        t = split_name(name)
+        if t[3] == _RDF_RDF and self._stream and self._frames:
+            raise _Restart          # a nested island (reader.rb:207)
+        if self._mode:
+            self._depth += 1
+            if self._sink is not None:
+                self._sink.start(name, attrs)
             return
-        islands = find_rdf_islands(root)
+        frames = self._frames
+        if not frames:
+            self._root(t, attrs)
+            return
+        top = frames[-1]
+        cls = top.__class__
+        if cls is _Node:
+            self._property(t, attrs, known, top)
+        elif cls is _Prop:
+            self._prop_child(t, attrs, top)
+        else:
+            # Top-level node elements take their own xml:base / xml:lang.
+            self._node(t, attrs, top.base, top.lang, cls is _Island)
+
+    def end(self, name=None):
+        if self._mode:
+            if self._depth:
+                self._depth -= 1
+                if self._sink is not None:
+                    self._sink.end()
+                return
+            self._mode = 0
+            self._sink = None
+        frames = self._frames
+        frame = frames[-1]
+        cls = frame.__class__
+        if cls is _Prop:
+            frames.pop()
+            self._prop_end(frame)
+            return
+        if cls is _Collection and frame.rec is not None:
+            rec, frame.rec = frame.rec, None
+            self._cells(frame, rec.top)
+            self._replay(rec.events)
+        frames.pop()
+        if cls is _Node and frames:
+            parent = frames[-1]
+            if parent.__class__ is _Prop:
+                parent.obj = frame.subject
+            elif parent.__class__ is _Collection:
+                self._member(parent, frame.subject)
+
+    def text(self, data):
+        if self._mode:
+            if self._sink is not None:
+                self._sink.text(data)
+            return
+        top = self._frames[-1]
+        if top.__class__ is _Prop and not top.n:
+            top.text += data
+
+    def _replay(self, events, i: int = 0) -> None:
+        """Replay buffered events from ``events[i]``, up to the end tag
+        that closes the last open frame."""
+        start, end, text, frames = self.start, self.end, self.text, \
+            self._frames
+        for ev in islice(events, i, None):
+            if ev is None:
+                end()
+                if not frames:
+                    return
+            elif ev.__class__ is str:
+                text(ev)
+            else:
+                start(ev[0], ev[1], ev[2])
+
+    def replay_document(self, content) -> None:
+        """Read the whole document, then run the productions in the
+        reference's order (reader.rb:195-207): every rdf:RDF element in
+        document order, nested ones included, or else the root as a node
+        element."""
+        self._stream = False
+        rec = _Recorder()
+        islands = []
+
+        def start(name, attrs):
+            if split_name(name)[3] == _RDF_RDF:
+                base, lang = self.base, None
+                for ev in rec.open:
+                    base, lang = _xml_context(base, lang, ev[1])
+                islands.append((len(rec.events), base, lang))
+            rec.start(name, attrs)
+
+        expat_parse(content, start, rec.end, rec.text)
         if not islands:
-            # Root element processed as a node element (reader.rb:196-204).
-            ec = EvaluationContext(self.base_uri)
-            ec.extract_from_element(root)
-            self.node_element(root, ec)
-            return
-        for island in islands:
-            ec = EvaluationContext(self.base_uri)
-            ec.extract_from_ancestors(island)
-            for child in island.element_children():
-                self.node_element(child, ec.clone(child))
+            self._root_node = True
+            self._replay(rec.events)
+        for i, base, lang in islands:
+            self._island_ctx = (base, lang)
+            self._replay(rec.events, i)
+
+    def _root(self, t, attrs) -> None:
+        if self._root_node:
+            # Root processed as a node element (reader.rb:196-204).
+            self._node(t, attrs, self.base, None, True)
+        elif t[3] != _RDF_RDF:
+            raise _Restart
+        else:
+            self._frames.append(_Island(*_xml_context(*self._island_ctx,
+                                                      attrs)))
 
     # -- productions -------------------------------------------------------------
-    def node_element(self, el: Element, ec: EvaluationContext):
-        """reader.rb:300-569. Returns the subject term."""
-        subject = ec.subject if ec.subject is not None \
-            else self.parse_subject(el, ec)
+    def _node(self, t, attrs, base: str, lang, own_context=False) -> None:
+        """nodeElement (reader.rb:300-328) up to its property elements;
+        ``own_context``: its xml:base / xml:lang apply to it."""
+        error = self.errors.append
+        pairs = []
+        about = id_ = node_id = resource = xml_base = None
+        for i in range(0, len(attrs), 2):
+            a = split_name(attrs[i])
+            value = attrs[i + 1]
+            pairs.append((a, value))
+            if a[3] in OLD_TERMS:  # reader.rb:672-678
+                error(f"Obsolete attribute '{a[0]}{a[1]}'")
+            if a[0] == RDF_NS:
+                if a[1] == "about":
+                    about = value
+                elif a[1] == "ID":
+                    id_ = value
+                elif a[1] == "nodeID":
+                    node_id = value
+                elif a[1] == "resource":
+                    resource = value
+            elif a[0] == XML_NS and own_context:
+                if a[1] == "lang":
+                    lang = value
+                elif a[1] == "base":
+                    xml_base = value
+        if xml_base is not None:
+            base = resolve_base(base, xml_base)
+        uri = t[3]
+        # Subject (reader.rb:583-619).
+        if uri in _ILLEGAL_NODE_NAMES:
+            error(f"Invalid use of rdf:{t[1]} as node element")
+        if node_id is not None and about is not None:
+            error("Cannot have rdf:nodeID and rdf:about.")
+        elif node_id is not None and id_ is not None:
+            error("Cannot have rdf:nodeID and rdf:ID.")
+        if id_ is not None:
+            subject = self._id_check(ntriples_unescape(id_), base)
+        elif node_id is not None:
+            checked = self._node_id_check(ntriples_unescape(node_id))
+            subject = ("bnode", self._bnode(checked))
+        elif about is not None:
+            subject = ("iri", resolve(base, ntriples_unescape(about)))
+        elif resource is not None:
+            # Non-standard extension (reader.rb:14).
+            subject = ("iri", resolve(base, ntriples_unescape(resource)))
+        else:
+            subject = ("bnode", self._fresh())
 
-        if el.uri != RDF_DESCRIPTION:
-            self.add_triple(subject, RDF_TYPE, ("iri", el.uri))
-
+        add = self.triples.append
+        if uri != RDF_DESCRIPTION:
+            add((subject, RDF_TYPE, ("iri", uri)))
         # Property attributes (reader.rb:313-328).
-        for a_ns, a_local, _a_prefix, value in el.attrs:
-            uri = _attr_uri(a_ns, a_local)
-            if uri == RDF_TYPE:
-                self.add_triple(subject, RDF_TYPE,
-                                ("iri", resolve(ec.base, value)))
-            elif self._is_property_attr(a_ns, uri, a_local):
-                self.add_triple(subject, uri,
-                                self._literal(value, ec.language))
+        for a, value in pairs:
+            a_uri = a[3]
+            if a_uri == RDF_TYPE:
+                add((subject, RDF_TYPE, ("iri", resolve(base, value))))
+            elif self._is_property_attr(a[0], a_uri, a[1]):
+                add((subject, a_uri, _literal(value, lang)))
+        self._frames.append(_Node(subject, base, lang))
 
-        # Property element list, document order (reader.rb:331-565).
-        for child in el.element_children():
-            self.property_element(child, subject, ec)
-        return subject
-
-    def property_element(self, child: Element, subject, ec: EvaluationContext):
-        child_ec = ec.clone(child)
-        predicate = child.uri
-        if predicate in _ILLEGAL_PROP_NAMES:
-            self.error(f"Invalid use of rdf:{child.local} as property element")
-
-        # one pass over children instead of two filtering properties
-        text_nodes = []
-        element_nodes = []
-        for c in child.children:
-            if c.is_element:
-                element_nodes.append(c)
-            elif c.value.strip():
-                text_nodes.append(c)
-
-        # li expansion (reader.rb:362) — counter lives on the *node
-        # element's* context.
-        if predicate == RDF_LI:
-            predicate = ec.li_next()
-
-        # Attribute classification (reader.rb:372-404).
-        attrs: list[tuple] = []          # [(uri, local, value, ns)]
-        id_ = datatype = parse_type = resource_attr = node_id = None
-        for a_ns, a_local, _a_prefix, value in child.attrs:
+    def _property(self, t, attrs, known, node: _Node) -> None:
+        """propertyElt (reader.rb:331-404) up to the production; the
+        productions its start tag decides run here."""
+        error = self.errors.append
+        # Attribute classification (reader.rb:372-404); xml:* give the
+        # property element's own context.
+        base, lang = node.base, node.lang
+        prop_attrs = ()             # ((uri, local, value, ns), ...)
+        id_ = datatype = parse_type = resource = node_id = None
+        for i in range(0, len(attrs), 2):
+            a_ns, a_local, _p, a_uri = split_name(attrs[i])
+            value = attrs[i + 1]
             if a_ns is None:
-                continue                 # unqualified: ignored (reader.rb:376-382)
+                continue            # unqualified: ignored (reader.rb:376-382)
             if a_ns == XML_NS:
-                continue                 # xml:* handled via context
-            if a_ns == RDF_NS:
+                if a_local == "lang":
+                    lang = value
+                elif a_local == "base":
+                    base = resolve_base(base, value)
+            elif a_ns == RDF_NS and a_local in (
+                    "ID", "datatype", "parseType", "resource", "nodeID"):
                 if a_local == "ID":
                     id_ = value
                 elif a_local == "datatype":
@@ -279,184 +454,236 @@ class DocumentParser:
                 elif a_local == "parseType":
                     parse_type = value
                 elif a_local == "resource":
-                    resource_attr = value
-                elif a_local == "nodeID":
-                    node_id = value
+                    resource = value
                 else:
-                    attrs.append((RDF_NS + a_local, a_local, value, a_ns))
+                    node_id = value
             else:
-                attrs.append((a_ns + a_local, a_local, value, a_ns))
+                prop_attrs += ((a_uri, a_local, value, a_ns),)
 
-        if node_id and resource_attr:
-            self.error("Cannot have rdf:nodeID and rdf:resource.")
-
+        predicate = t[3]
+        if predicate in _ILLEGAL_PROP_NAMES:
+            error(f"Invalid use of rdf:{t[1]} as property element")
+        if predicate == RDF_LI:
+            # li expansion (reader.rb:362): the counter lives on the node
+            # element's context.
+            node.li += 1
+            predicate = f"{RDF_NS}_{node.li}"
+        if node_id and resource:
+            error("Cannot have rdf:nodeID and rdf:resource.")
         if id_ is not None:
-            id_ = self.id_check(ntriples_unescape(id_), None)
-        if resource_attr is not None:
-            resource_attr = ntriples_unescape(resource_attr)
+            id_ = self._id_check(ntriples_unescape(id_), None)
+        if resource is not None:
+            resource = ntriples_unescape(resource)
         if node_id is not None:
-            node_id = self.node_id_check(ntriples_unescape(node_id))
+            node_id = self._node_id_check(ntriples_unescape(node_id))
 
-        if not attrs and datatype is None and parse_type is None \
-                and len(element_nodes) == 1:
-            # resourcePropertyElt (reader.rb:413-423)
-            new_subject = self.node_element(element_nodes[0],
-                                            child_ec.clone(None))
-            self.add_triple(subject, predicate, new_subject)
-        elif not attrs and parse_type is None and not element_nodes \
-                and text_nodes:
-            # literalPropertyElt (reader.rb:424-436)
-            if datatype is not None:
-                # quirk: datatype NOT base-resolved (reader.rb:430)
-                literal = ("literal", child.inner_text(), None, datatype)
-            else:
-                literal = self._literal(child.inner_text(), child_ec.language)
-            self.add_triple(subject, predicate, literal)
-            if id_:
-                self.reify(id_, subject, predicate, literal, ec)
+        subject = node.subject
+        if parse_type is None:
+            prop = _Prop(node, predicate, id_, datatype, resource, node_id,
+                         prop_attrs, base, lang, known is not None)
+            self._frames.append(prop)
+            if known is not None and (
+                    known > 1 or known and (prop_attrs or datatype is not None)):
+                prop.dead = True    # no production: skip the content
+                self._mode = _SKIP
         elif parse_type == "Resource":
             # parseTypeResourcePropertyElt (reader.rb:437-468)
-            if attrs:
-                self.error("Resource Property with extra attributes")
-            n = ("bnode", self.fresh_bnode())
-            self.add_triple(subject, predicate, n)
+            if prop_attrs:
+                error("Resource Property with extra attributes")
+            n = ("bnode", self._fresh())
+            self.triples.append((subject, predicate, n))
             if id_:
-                self.reify(id_, subject, predicate, n, child_ec)
-            # Synthetic rdf:Description with subject := n over child content.
-            inner_ec = child_ec.clone(None)
-            inner_ec.subject = n
-            for grandchild in child.element_children():
-                self.property_element(grandchild, n, inner_ec)
+                self._reify(id_, subject, predicate, n, base)
+            self._frames.append(_Node(n, base, lang))
         elif parse_type == "Collection":
             # parseTypeCollectionPropertyElt (reader.rb:469-496)
-            if attrs:
-                self.error("Resource Property with extra attributes")
-            cells = [("bnode", self.fresh_bnode()) for _ in element_nodes]
-            head = cells[0] if cells else ("iri", RDF_NIL)
-            self.add_triple(subject, predicate, head)
-            if id_:
-                self.reify(id_, subject, predicate, head, child_ec)
-            for i, f in enumerate(element_nodes):
-                obj = self.node_element(f, child_ec.clone(None))
-                self.add_triple(cells[i], RDF_FIRST, obj)
-                nxt = cells[i + 1] if i + 1 < len(cells) else ("iri", RDF_NIL)
-                self.add_triple(cells[i], RDF_REST, nxt)
-        elif parse_type is not None:
-            # parseTypeLiteralPropertyElt / Other (reader.rb:497-523)
-            if attrs:
-                self.error("Resource Property with extra attributes")
-            if resource_attr:
-                self.error("illegal rdf:resource")
-            value = c14nxl(child.children, language=ec.language,
-                           namespaces=child_ec.uri_mappings)
-            literal = ("literal", value, None, RDF_XMLLITERAL)
-            self.add_triple(subject, predicate, literal)
-        elif not text_nodes and not element_nodes:
-            # emptyPropertyElt (reader.rb:524-564)
-            if not attrs and resource_attr is None and node_id is None:
-                # quirk: language from *parent* ec (reader.rb:530)
-                literal = self._literal("", ec.language)
-                self.add_triple(subject, predicate, literal)
-                if id_:
-                    self.reify(id_, subject, predicate, literal, child_ec)
+            if prop_attrs:
+                error("Resource Property with extra attributes")
+            coll = _Collection(subject, predicate, id_, base, lang)
+            self._frames.append(coll)
+            if known is None:
+                coll.rec = self._sink = _Recorder()
+                self._mode = _RECORD
             else:
-                if resource_attr is not None:
-                    resource = ("iri", resolve(ec.base, resource_attr))
-                elif node_id:
-                    resource = ("bnode", self.bnode(node_id))
-                else:
-                    resource = ("bnode", self.fresh_bnode())
-                for uri, local, value, a_ns in attrs:
-                    if uri == RDF_TYPE:
-                        # quirk: raw string → plain literal (reader.rb:549)
-                        self.add_triple(resource, RDF_TYPE,
-                                        ("literal", value, None, None))
-                    elif self._is_property_attr(a_ns, uri, local):
-                        self.add_triple(resource, uri,
-                                        self._literal(value,
-                                                      child_ec.language))
-                self.add_triple(subject, predicate, resource)
-                if id_:
-                    self.reify(id_, subject, predicate, resource, child_ec)
-        # else: no production matches (e.g. text content + property attrs,
-        # or >1 element child) — reference emits nothing (reader.rb:413-564).
+                self._cells(coll, known)
+        else:
+            # parseTypeLiteralPropertyElt / Other (reader.rb:497-523): the
+            # literal takes the parent context's language (reader.rb:512).
+            if prop_attrs:
+                error("Resource Property with extra attributes")
+            if resource:
+                error("illegal rdf:resource")
+            prop = _Prop(node, predicate, id_, datatype, resource, node_id,
+                         prop_attrs, base, lang, known is not None)
+            prop.lit = self._sink = LiteralWriter(node.lang)
+            self._frames.append(prop)
+            self._mode = _LITERAL
+
+    def _prop_child(self, t, attrs, prop: _Prop) -> None:
+        """An element child of a property element whose production is
+        still open: the object of a resourcePropertyElt (reader.rb:413-423),
+        parsed in the property element's context, or the end of every
+        production."""
+        prop.n += 1
+        if prop.n == 1 and not prop.attrs and prop.datatype is None:
+            if not prop.known:
+                prop.mark = self._mark()
+            self._node(t, attrs, prop.base, prop.lang)
+            return
+        if prop.mark is not None:
+            self._rollback(prop.mark)
+            prop.mark = None
+        prop.dead = True
+        self._mode = _SKIP
+        self._depth = 1
+
+    def _prop_end(self, prop: _Prop) -> None:
+        if prop.dead:
+            return
+        add = self.triples.append
+        node = prop.node
+        subject, predicate, id_ = node.subject, prop.predicate, prop.id_
+        if prop.lit is not None:
+            add((subject, predicate,
+                 ("literal", prop.lit.value(), None, RDF_XMLLITERAL)))
+            return
+        if prop.n:
+            # resourcePropertyElt (reader.rb:413-423)
+            if prop.mark is not None:
+                self._commit()
+            add((subject, predicate, prop.obj))
+            return
+        text = prop.text
+        if text.strip():
+            if prop.attrs:
+                return              # text + property attributes: no production
+            # literalPropertyElt (reader.rb:424-436)
+            # quirk: datatype NOT base-resolved (reader.rb:430)
+            literal = ("literal", text, None, prop.datatype) \
+                if prop.datatype is not None else _literal(text, prop.lang)
+            add((subject, predicate, literal))
+            if id_:
+                self._reify(id_, subject, predicate, literal, node.base)
+            return
+        # emptyPropertyElt (reader.rb:524-564)
+        if not prop.attrs and prop.resource is None and prop.node_id is None:
+            # quirk: language from *parent* ec (reader.rb:530)
+            obj = _literal("", node.lang)
+        else:
+            if prop.resource is not None:
+                obj = ("iri", resolve(node.base, prop.resource))
+            elif prop.node_id:
+                obj = ("bnode", self._bnode(prop.node_id))
+            else:
+                obj = ("bnode", self._fresh())
+            for uri, local, value, a_ns in prop.attrs:
+                if uri == RDF_TYPE:
+                    # quirk: raw string → plain literal (reader.rb:549)
+                    add((obj, RDF_TYPE, ("literal", value, None, None)))
+                elif self._is_property_attr(a_ns, uri, local):
+                    add((obj, uri, _literal(value, prop.lang)))
+        add((subject, predicate, obj))
+        if id_:
+            self._reify(id_, subject, predicate, obj, prop.base)
+
+    def _cells(self, coll: _Collection, k: int) -> None:
+        """Allocate a collection's k list cells before its members."""
+        coll.cells = cells = [("bnode", self._fresh()) for _ in range(k)]
+        head = cells[0] if cells else _NIL
+        self.triples.append((coll.subject, coll.predicate, head))
+        if coll.id_:
+            self._reify(coll.id_, coll.subject, coll.predicate, head,
+                        coll.base)
+
+    def _member(self, coll: _Collection, obj) -> None:
+        cells, i = coll.cells, coll.i
+        add = self.triples.append
+        add((cells[i], RDF_FIRST, obj))
+        add((cells[i], RDF_REST, cells[i + 1] if i + 1 < len(cells) else _NIL))
+        coll.i = i + 1
+
+    # -- marks: speculative resourcePropertyElt objects ---------------------------
+    def _mark(self):
+        self._marks += 1
+        return (len(self.triples), len(self.errors), self._counter,
+                len(self._undo))
+
+    def _commit(self) -> None:
+        self._marks -= 1
+        if not self._marks:
+            self._undo.clear()
+
+    def _rollback(self, mark) -> None:
+        n_triples, n_errors, self._counter, n_undo = mark
+        del self.triples[n_triples:]
+        del self.errors[n_errors:]
+        undo = self._undo
+        while len(undo) > n_undo:
+            table, key, old = undo.pop()
+            if old is _MISSING:
+                del table[key]
+            else:
+                table[key] = old
+        self._commit()
 
     # -- helpers ---------------------------------------------------------------
-    def reify(self, id_: str, subject, predicate: str, obj, ec) -> None:
+    def _fresh(self) -> str:
+        bid = f"b:{self.doc_key}:{self._counter}"
+        self._counter += 1
+        return bid
+
+    def _bnode(self, label: str | None) -> str:
+        # reader.rb:252-255 — per-document labeled cache; nil label caches
+        # under "" (shared).
+        key = label or ""
+        cached = self._bnode_cache.get(key)
+        if cached is None:
+            cached = self._fresh()
+            if self._marks:
+                self._undo.append((self._bnode_cache, key, _MISSING))
+            self._bnode_cache[key] = cached
+        return cached
+
+    def _reify(self, id_: str, subject, predicate: str, obj, base) -> None:
         # reader.rb:573-580
-        rsubject = ("iri", iri_mod.rfc3986_join(ec.base, "#" + id_))
-        self.add_triple(rsubject, RDF_SUBJECT, subject)
-        self.add_triple(rsubject, RDF_PREDICATE, ("iri", predicate))
-        self.add_triple(rsubject, RDF_OBJECT, obj)
-        self.add_triple(rsubject, RDF_TYPE, ("iri", RDF_STATEMENT))
+        rsubject = ("iri", iri_mod.rfc3986_join(base, "#" + id_))
+        add = self.triples.append
+        add((rsubject, RDF_SUBJECT, subject))
+        add((rsubject, RDF_PREDICATE, ("iri", predicate)))
+        add((rsubject, RDF_OBJECT, obj))
+        add((rsubject, RDF_TYPE, ("iri", RDF_STATEMENT)))
 
-    def parse_subject(self, el: Element, ec: EvaluationContext):
-        # reader.rb:583-619
-        self.old_property_check(el)
-        if el.uri in _ILLEGAL_NODE_NAMES:
-            self.error(f"Invalid use of rdf:{el.local} as node element")
-
-        about = el.attr(RDF_NS, "about")
-        id_ = el.attr(RDF_NS, "ID")
-        node_id = el.attr(RDF_NS, "nodeID")
-        resource = el.attr(RDF_NS, "resource")
-
-        if node_id is not None and about is not None:
-            self.error("Cannot have rdf:nodeID and rdf:about.")
-        elif node_id is not None and id_ is not None:
-            self.error("Cannot have rdf:nodeID and rdf:ID.")
-
-        if id_ is not None:
-            return self.id_check(ntriples_unescape(id_), ec.base)
-        if node_id is not None:
-            checked = self.node_id_check(ntriples_unescape(node_id))
-            return ("bnode", self.bnode(checked))
-        if about is not None:
-            return ("iri", resolve(ec.base, ntriples_unescape(about)))
-        if resource is not None:
-            # Non-standard extension (reader.rb:14).
-            return ("iri", resolve(ec.base, ntriples_unescape(resource)))
-        return ("bnode", self.fresh_bnode())
-
-    def id_check(self, id_: str, base: str | None):
+    def _id_check(self, id_: str, base: str | None):
         # reader.rb:622-635
         if not is_ncname(id_):
-            self.error(f"ID attribute '{id_}' must be a NCName")
-        if base is not None:
-            uri = iri_mod.rfc3986_join(base, "#" + id_)
-            if self._id_registry.get(id_) == uri:
-                self.error(f"ID attribute '{id_}' may only be defined once "
-                           "for the same URI")
-            self._id_registry[id_] = uri
-            return ("iri", uri)
-        return id_
+            self.errors.append(f"ID attribute '{id_}' must be a NCName")
+        if base is None:
+            return id_
+        uri = iri_mod.rfc3986_join(base, "#" + id_)
+        registry = self._id_registry
+        old = registry.get(id_, _MISSING)
+        if old == uri:
+            self.errors.append(f"ID attribute '{id_}' may only be defined "
+                               "once for the same URI")
+        if self._marks:
+            self._undo.append((registry, id_, old))
+        registry[id_] = uri
+        return ("iri", uri)
 
-    def node_id_check(self, node_id: str):
+    def _node_id_check(self, node_id: str):
         # reader.rb:639-646 — invalid → error + nil
         if is_ncname(node_id):
             return node_id
-        self.error(f"nodeID attribute '{node_id}' must be an XML Name")
+        self.errors.append(f"nodeID attribute '{node_id}' must be an XML Name")
         return None
-
-    def old_property_check(self, el: Element) -> None:
-        # reader.rb:672-678
-        for a_ns, a_local, _p, _v in el.attrs:
-            if _attr_uri(a_ns, a_local) in OLD_TERMS:
-                self.error(f"Obsolete attribute '{a_ns}{a_local}'")
 
     def _is_property_attr(self, a_ns, uri: str, local: str) -> bool:
         # reader.rb:649-655
         if uri in _ILLEGAL_PROP_ATTRS:
-            self.error(f"Invalid use of rdf:{local}")
+            self.errors.append(f"Invalid use of rdf:{local}")
             return False
         return uri not in CORE_SYNTAX_TERMS and a_ns is not None \
             and a_ns != XML_NS
-
-    @staticmethod
-    def _literal(value: str, language: str | None):
-        # RDF::Literal downcases language tags; empty tag → plain literal.
-        lang = language.lower() if language else None
-        return ("literal", value, lang, None)
 
 
 def parse_rdfxml(content, base_uri: str = "", doc_key: str = "doc",
@@ -467,29 +694,36 @@ def parse_rdfxml(content, base_uri: str = "", doc_key: str = "doc",
     ``(subject_term, predicate_iri, object_term)`` tuples. Under ``strict``
     (the reference's ``validate:`` mode, reader.rb:225-227) a document with
     any error yields **no** triples — W3C negative-syntax semantics.
+    Malformed XML yields only its ``XML parse error`` message.
 
     ``canonicalize``: off-by-default literal canonicalization (reference
     reader option, reader.rb:128-129) — valid lexical forms of the core
     XSD numeric/boolean datatypes are rewritten to canonical form.
     """
-    parser = DocumentParser(doc_key, base_uri)
+    reader = _Reader(doc_key, base_uri)
     try:
-        parser.parse(content)
-    except RecursionError:
-        # A poison-pill document (hostile nesting) must land in the error
-        # channel, not kill the Spark task — a retry would just die again.
-        parser.error("recursion depth exceeded (document nesting too deep)")
-        return [], parser.errors
+        try:
+            expat_parse(content, reader.start, reader.end, reader.text)
+        except XMLParseError:
+            raise
+        except Exception:
+            # A root other than rdf:RDF, a nested rdf:RDF, or a production
+            # that raised before expat saw the whole document.
+            reader = _Reader(doc_key, base_uri)
+            reader.replay_document(content)
+    except XMLParseError as e:
+        return [], [f"XML parse error: {e}"]
     except Exception as e:  # defensive: per-document failure isolation
-        parser.error(f"internal parse failure: {type(e).__name__}: {e}")
-        return [], parser.errors
-    if strict and parser.errors:
-        return [], parser.errors
-    triples = parser.triples
+        reader.errors.append(
+            f"internal parse failure: {type(e).__name__}: {e}")
+        return [], reader.errors
+    if strict and reader.errors:
+        return [], reader.errors
+    triples = reader.triples
     if canonicalize:
         from ..functions.xsd import canonicalize_literal
         triples = [
             (s, p, ("literal", canonicalize_literal(o[1], o[3]), o[2], o[3])
              if o[0] == "literal" and o[3] else o)
             for s, p, o in triples]
-    return triples, parser.errors
+    return triples, reader.errors

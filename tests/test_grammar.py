@@ -460,8 +460,8 @@ def test_canonicalize_option_off_by_default_and_correct():
 def test_prefix_bookkeeping():
     """Reference prefix() callback surface (reader.rb:199,217): every
     namespace declaration in a document is collectable — without the
-    grammar, so a document too deep for its recursion still yields
-    them, and a malformed one yields none."""
+    grammar; a deep document yields them (and parses), and a malformed
+    one yields none."""
     from rdf_rdfxml_spark.operators.extract import namespace_declarations
     doc = (f'<rdf:RDF xmlns:rdf="{RDF}" xmlns:a="http://a/">'
            f'<rdf:Description xmlns:b="http://b/" rdf:about="http://x/">'
@@ -470,9 +470,94 @@ def test_prefix_bookkeeping():
         "rdf": RDF, "a": "http://a/", "b": "http://b/"}
     deep = (f'<rdf:RDF xmlns:rdf="{RDF}" xmlns:e="http://e/">'
             + '<e:x>' * 3000 + '</e:x>' * 3000 + '</rdf:RDF>')
-    _, errors = parse_rdfxml(deep, doc_key="d", strict=False)
-    assert any("recursion" in e for e in errors)
+    triples, errors = parse_rdfxml(deep, doc_key="d")
+    assert errors == [] and len(triples) == 3000
     assert namespace_declarations(deep) == {"rdf": RDF, "e": "http://e/"}
     assert namespace_declarations('<a xmlns:p="http://p/"><b></a>') == {}
     later = '<a xmlns:p="http://1/"><b xmlns:p="http://2/"/><c/></a>'
     assert namespace_declarations(later) == {"p": "http://2/"}
+
+
+def _deep_documents(k):
+    """Documents about ``2k`` elements deep, one per production that
+    nests, with the triple count each must give."""
+    head = f'xmlns:rdf="{RDF}" xmlns:e="http://e/"'
+    pairs = "<rdf:Description><e:p>" * k + "</e:p></rdf:Description>" * k
+    return {
+        # k - 1 resourcePropertyElt links + the innermost empty literal
+        "resource_objects": (f"<rdf:RDF {head}>{pairs}</rdf:RDF>", k),
+        "parse_type_resource": (
+            f'<rdf:RDF {head}><rdf:Description rdf:about="http://a/">'
+            + '<e:p rdf:parseType="Resource">' * (2 * k) + "</e:p>" * (2 * k)
+            + "</rdf:Description></rdf:RDF>", 2 * k),
+        # head, rdf:first and rdf:rest per level
+        "collections": (
+            f'<rdf:RDF {head}><rdf:Description rdf:about="http://a/">'
+            + '<e:p rdf:parseType="Collection"><rdf:Description>' * k
+            + "</rdf:Description></e:p>" * k
+            + "</rdf:Description></rdf:RDF>", 3 * k),
+        "xml_literal": (
+            f'<rdf:RDF {head}><rdf:Description rdf:about="http://a/">'
+            '<e:p rdf:parseType="Literal">' + "<e:x>" * (2 * k)
+            + "</e:x>" * (2 * k) + "</e:p></rdf:Description></rdf:RDF>", 1),
+        # root node element: replayed after the whole document is read
+        "root_node": (f"<e:T {head}>" + "<e:p><e:T>" * k + "</e:T></e:p>" * k
+                      + "</e:T>", 2 * k + 1),
+        # a second element child drops the whole deep first one
+        "rolled_back": (
+            f'<rdf:RDF {head}><rdf:Description rdf:about="http://a/">'
+            f"<e:p>{pairs}<rdf:Description/></e:p>"
+            "</rdf:Description></rdf:RDF>", 0),
+    }
+
+
+@pytest.mark.parametrize("shape", sorted(_deep_documents(1)))
+def test_deep_document_independent_of_recursion_limit(shape):
+    """No function on the parse path recurses with document depth: a
+    5,000-deep document parses to the same result under a recursion limit
+    a few dozen frames above the caller's as under the default one."""
+    import sys
+    doc, n_triples = _deep_documents(2500)[shape]
+    default = parse_rdfxml(doc, base_uri="http://b/", doc_key="d")
+    frame, depth = sys._getframe(), 0
+    while frame is not None:
+        frame, depth = frame.f_back, depth + 1
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(depth + 50)
+    try:
+        lowered = parse_rdfxml(doc, base_uri="http://b/", doc_key="d")
+    finally:
+        sys.setrecursionlimit(limit)
+    assert lowered == default
+    assert default[1] == [] and len(default[0]) == n_triples
+
+
+def _expected_triples(rows):
+    return [((r[0], r[1]), r[2],
+             ("literal", r[4], r[5], r[6]) if r[3] == "literal"
+             else (r[3], r[4])) for r in rows]
+
+
+def test_generator_corpora_parse_to_expected():
+    """The benchmark generators' documents (every production they emit:
+    typed nodes, property attributes, rdf:ID, nested nodes, rdf:nodeID,
+    Collection, parseType Literal and Resource, reification, containers)
+    parse to the triples the generator computed, up to blank-node
+    relabeling; its malformed documents give errors and no triples."""
+    from perfbench import gen
+    corpora = []
+    for seed in (3, 4):
+        docs, expected = gen.ontology_large(seed, 4, 50, 1_500)
+        corpora += [(docs, expected, set()), gen.crawl_small(seed, 400)]
+    n_malformed = 0
+    for docs, expected, malformed in corpora:
+        for i, doc in enumerate(docs):
+            triples, errors = parse_rdfxml(doc["content"], doc_key=str(i))
+            if i in malformed:
+                n_malformed += 1
+                assert errors and triples == [], doc["content"]
+                continue
+            assert errors == [], (errors, doc["content"])
+            assert isomorphic(list(dict.fromkeys(triples)),
+                              _expected_triples(expected[i])), doc["content"]
+    assert n_malformed > 20

@@ -50,6 +50,28 @@ def test_oversized_document_fail_soft(spark):
     assert extract(docs).filter("rec = 'triple'").count() == 1
 
 
+def test_deep_document_does_not_kill_the_job(spark):
+    """A 1.4 MB document of 30,000 nested node/property element pairs is
+    parsed like any other: the job succeeds and keeps the good document's
+    triples next to the deep one's. A recursive walk over such a document
+    overflows the worker's C stack and kills the Python worker, and with
+    it the whole job."""
+    from rdf_rdfxml_spark.plans.pipeline import construct_graph
+    n = 30_000
+    deep = (f'<rdf:RDF xmlns:rdf="{RDF}" xmlns:e="http://e/">'
+            + "<rdf:Description><e:p>" * n + "</e:p></rdf:Description>" * n
+            + "</rdf:RDF>")
+    good = (f'<rdf:RDF xmlns:rdf="{RDF}" xmlns:e="http://e/">'
+            '<rdf:Description rdf:about="http://a/"><e:p>v</e:p>'
+            '</rdf:Description></rdf:RDF>')
+    docs = spark.createDataFrame([{"content": deep}, {"content": good}])
+    graph = construct_graph(docs)
+    per_doc = {r["doc_sha"]: r["count"] for r in
+               graph.triples.groupBy("doc_sha").count().collect()}
+    assert sorted(per_doc.values()) == [1, n]
+    assert graph.errors.count() == 0
+
+
 _charset_bytes = st.builds(
     lambda decl, body: decl + body,
     st.sampled_from([
@@ -134,8 +156,8 @@ def test_malformed_xml_raises(doc):
 
 
 def test_deep_nesting_iterative():
-    """A 5000-deep document parses without RecursionError: expat's
-    callbacks keep an explicit element stack."""
+    """A 5000-deep document builds its tree without RecursionError:
+    expat's callbacks keep an explicit element stack."""
     root = parse_document("<r>" + "<a>" * 5000 + "</a>" * 5000 + "</r>")
     depth, el = 0, root
     while el.children:
