@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import arrowcols
+
 
 def _cos(a: str, b: str) -> str:
     """SQL expression: cosine similarity of two array<double> columns."""
@@ -665,10 +667,10 @@ def _centroid_partials():
                     a[1] += np.asarray(v, dtype=np.float64)
             if acc:
                 yield pa.RecordBatch.from_arrays(
-                    [pa.array(list(acc), type=pa.int32()),
-                     pa.array([a[0] for a in acc.values()], type=pa.int64()),
-                     pa.array([a[1].tolist() for a in acc.values()],
-                              type=pa.list_(pa.float64()))],
+                    [arrowcols.int32s(list(acc)),
+                     arrowcols.int64s([a[0] for a in acc.values()]),
+                     arrowcols.lists([a[1] for a in acc.values()],
+                                     pa.float64())],
                     names=["cell_id", "n", "sums"])
 
     return fn

@@ -12,15 +12,19 @@ Design notes for 100 TB scale:
   process boundary is JVM ↔ Python Arrow IPC.
   No per-row Python UDF dispatch happens at the Spark level (input_hint
   mandate): one Python call handles a whole Arrow batch via ``mapInArrow``,
-  and output columns are built as Python lists converted straight to
-  ``pyarrow`` arrays — measured 3.7× faster end-to-end than the
-  ``mapInPandas`` + row-tuple path (53.8k vs 14.6k docs/s on local[32];
-  pandas round-tripping was pure overhead for string columns).
+  and output columns are built as Python lists and assembled into Arrow
+  arrays from buffers by ``functions/arrowcols.py`` (``pa.array`` would
+  import pandas into every worker; PERF.md §31) — the list-to-Arrow
+  shape measured 3.7× faster end-to-end than the ``mapInPandas`` +
+  row-tuple path (53.8k vs 14.6k docs/s on local[32]; pandas
+  round-tripping was pure overhead for string columns).
 * Column pruning: only ``content`` + key columns are read by this stage —
   keep the select-list minimal upstream so Parquet/Iceberg scans prune.
 * Output is chunked every ``_FLUSH_ROWS`` rows so a batch of fat documents
   can't balloon one Arrow record batch (Python-worker memory stays
-  O(largest doc + flush buffer)).
+  O(largest doc + flush buffer)). A flush happens only between documents,
+  so one document's rows can pass a string column's 32-bit offsets; that
+  flush is split into several batches rather than failing the task.
 * Failures are per-document: malformed XML, grammar violations, hostile
   nesting all become ``rec='error'`` rows (W3C negative-syntax semantics,
   reader.rb:225-227); a poison document can never fail a task, so task
@@ -39,6 +43,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
+from ..functions import arrowcols
 from ..parser.grammar import parse_rdfxml
 from ..schema import EXTRACT_SCHEMA
 
@@ -91,13 +96,14 @@ class _ColumnBuffer:
         c[11].append(commit)
         self.n += 1
 
-    def flush(self) -> pa.RecordBatch:
-        rb = pa.RecordBatch.from_arrays(
-            [pa.array(col, type=pa.string()) for col in self.cols],
-            names=_COLUMNS)
+    def flush(self) -> Iterator[pa.RecordBatch]:
+        """The buffered rows as one batch, or as several when a column's
+        bytes pass the 32-bit offset limit (one document's triples can:
+        a long ``xml:base`` resolved into thousands of subjects)."""
+        cols = self.cols
         self.cols = [[] for _ in _COLUMNS]
         self.n = 0
-        return rb
+        return arrowcols.string_batches(cols, _COLUMNS)
 
 
 def _col_or_none(rb: pa.RecordBatch, name: str, want: bool):
@@ -149,9 +155,9 @@ def _make_parse_batch(has_base: bool, has_prov: bool, strict: bool,
                 for message in errors:
                     buf.add_error(message, doc_sha, repo, path, commit)
                 if buf.n >= _FLUSH_ROWS:
-                    yield buf.flush()
+                    yield from buf.flush()
         if buf.n:
-            yield buf.flush()
+            yield from buf.flush()
 
     return parse_batch
 
@@ -228,27 +234,27 @@ def document_prefixes(documents: DataFrame) -> DataFrame:
     namespace stats for KG pipelines (which vocabularies dominate a
     crawl, writer prefix tables, dialect drift detection), via
     :func:`namespace_declarations`. Same mapInArrow grain as extract."""
-    import pyarrow as pa
-
-    def batches(it):
-        import hashlib as _h
-        for rb in it:
-            contents = rb.column(
-                rb.schema.get_field_index("content")).to_pylist()
-            shas, prefs, nss = [], [], []
-            for content in contents:
-                data = (content.encode("utf-8")
-                        if isinstance(content, str) else content)
-                doc_sha = _h.sha256(data).hexdigest()
-                for prefix, ns in namespace_declarations(data).items():
-                    shas.append(doc_sha)
-                    prefs.append(prefix if prefix is not None else "")
-                    nss.append(ns)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(shas, type=pa.string()),
-                 pa.array(prefs, type=pa.string()),
-                 pa.array(nss, type=pa.string())],
-                names=["doc_sha", "prefix", "ns"])
-
     return documents.select("content").mapInArrow(
-        batches, schema="doc_sha string, prefix string, ns string")
+        _prefix_batches, schema="doc_sha string, prefix string, ns string")
+
+
+def _prefix_batches(batches: Iterator[pa.RecordBatch]
+                    ) -> Iterator[pa.RecordBatch]:
+    """:func:`document_prefixes`' Arrow UDF: one output batch per input
+    batch."""
+    sha256 = hashlib.sha256
+    for rb in batches:
+        contents = rb.column(rb.schema.get_field_index("content")).to_pylist()
+        shas, prefs, nss = [], [], []
+        for content in contents:
+            data = (content.encode("utf-8")
+                    if isinstance(content, str) else content)
+            doc_sha = sha256(data).hexdigest()
+            for prefix, ns in namespace_declarations(data).items():
+                shas.append(doc_sha)
+                prefs.append(prefix if prefix is not None else "")
+                nss.append(ns)
+        yield pa.RecordBatch.from_arrays(
+            [arrowcols.strings(shas), arrowcols.strings(prefs),
+             arrowcols.strings(nss)],
+            names=["doc_sha", "prefix", "ns"])

@@ -39,6 +39,7 @@ from pyspark.sql.types import (
     BinaryType, IntegerType, StringType, StructField, StructType,
 )
 
+from ..functions import arrowcols
 from .sketch import _cache_reset_and_persist
 
 MEDIA_SCHEMA = StructType([
@@ -1463,9 +1464,8 @@ def _signature_stage(media: DataFrame, sig_fn, out_col: str, *,
                     out_h.append(None)
                     out_e.append(f"{type(e).__name__}: {e}")
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, type=pa.string()),
-                 pa.array(out_h, type=pa.int64()),
-                 pa.array(out_e, type=pa.string())],
+                [arrowcols.strings(out_id), arrowcols.int64s(out_h),
+                 arrowcols.strings(out_e)],
                 names=["media_id", out_col, "error"])
 
     return media.select("media_id", payload_col).mapInArrow(

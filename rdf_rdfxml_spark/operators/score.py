@@ -16,6 +16,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import arrowcols
 from ..functions.nt import canonicalize_bnodes
 
 
@@ -37,8 +38,9 @@ def canonical_lines(triples_df: DataFrame,
 
     def canon(key: tuple, table: pa.Table) -> pa.Table:
         lines = list(canonicalize_bnodes(_rows_to_terms(table)))
-        return pa.table({group_col: [key[0].as_py()] * len(lines),
-                         "line": lines})
+        return pa.Table.from_arrays(
+            [arrowcols.strings([key[0].as_py()] * len(lines)),
+             arrowcols.strings(lines)], names=[group_col, "line"])
 
     return (triples_df
             .select(group_col, *_TERM_COLS)

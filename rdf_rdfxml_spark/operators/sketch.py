@@ -45,6 +45,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import arrowcols
+
 MINHASH_P = 4294967311  # prime > 2^32
 
 SIMHASH_BITS = 48
@@ -166,15 +168,14 @@ def _minhash_fn(n_hashes: int, n_bands: int, shingle: int,
                     out_band.append(band)
                     out_hash.append(md5(key.encode()).hexdigest())
                     out_idx.append(row_i)
-            cols = [pa.array(out_doc, type=pa.int64()),
-                    pa.array(out_band, type=pa.int32()),
-                    pa.array(out_hash, type=pa.string())]
+            cols = [arrowcols.int64s(out_doc), arrowcols.int32s(out_band),
+                    arrowcols.strings(out_hash)]
             names = ["doc_id", "band_id", "band_hash"]
             if passthrough is not None:
                 # replicate the source column row-per-band via take() —
                 # type-preserving (timestamps etc.), no python conversion
                 src = rb.column(rb.schema.get_field_index(passthrough))
-                cols.append(src.take(pa.array(out_idx, type=pa.int32())))
+                cols.append(src.take(arrowcols.int32s(out_idx)))
                 names.append(passthrough)
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
@@ -254,8 +255,8 @@ def _shingle_sets_fn(shingle: int):
                 out_doc.append(d)
                 out_set.append(sorted(hs))
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_doc, type=pa.int64()),
-                 pa.array(out_set, type=pa.list_(pa.int64()))],
+                [arrowcols.int64s(out_doc),
+                 arrowcols.lists(out_set, pa.int64())],
                 names=["doc_id", "shingles"])
 
     return fn
@@ -509,8 +510,7 @@ def _simhash_fn(bits: int):
                 out_doc.append(d)
                 out_sim.append(int(powers[votes > 0].sum()))
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_doc, type=pa.int64()),
-                 pa.array(out_sim, type=pa.int64())],
+                [arrowcols.int64s(out_doc), arrowcols.int64s(out_sim)],
                 names=["doc_id", "simhash"])
 
     return fn
@@ -571,8 +571,7 @@ def _winnow_fn(k: int, window: int):
                 out_doc.extend([d] * len(fps))
                 out_fp.extend(int(x) for x in fps)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_doc, type=pa.int64()),
-                 pa.array(out_fp, type=pa.int64())],
+                [arrowcols.int64s(out_doc), arrowcols.int64s(out_fp)],
                 names=["doc_id", "fp"])
 
     return fn

@@ -65,6 +65,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import arrowcols
 from .sketch import (ORACLE_SHINGLE_BOUND, _cache_reset_and_persist,
                      length_guard_cte)
 
@@ -104,9 +105,8 @@ def _selected_fn(k: int, window: int):
                 out_pos.extend(int(p) for p in sel)
                 out_fp.extend(int(hs[p]) for p in sel)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_doc, type=pa.int64()),
-                 pa.array(out_pos, type=pa.int64()),
-                 pa.array(out_fp, type=pa.int64())],
+                [arrowcols.int64s(out_doc), arrowcols.int64s(out_pos),
+                 arrowcols.int64s(out_fp)],
                 names=["doc_id", "pos", "fp"])
 
     return fn

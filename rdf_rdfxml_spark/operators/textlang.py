@@ -27,6 +27,7 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
+from ..functions import arrowcols
 from .sketch import ORACLE_SHINGLE_BOUND, length_guard_cte
 
 # top-frequency character trigrams per language (space-padded tokens)
@@ -69,9 +70,9 @@ def _langid_fn():
                 for lang in LANGS:
                     cols[f"{lang}_score"].append(scores[lang])
             yield pa.RecordBatch.from_arrays(
-                [pa.array(cols["doc_id"], type=pa.int64()),
-                 pa.array(cols["predicted"], type=pa.string())]
-                + [pa.array(cols[f"{lang}_score"], type=pa.int64())
+                [arrowcols.int64s(cols["doc_id"]),
+                 arrowcols.strings(cols["predicted"])]
+                + [arrowcols.int64s(cols[f"{lang}_score"])
                    for lang in LANGS],
                 names=["doc_id", "predicted"]
                 + [f"{lang}_score" for lang in LANGS])

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import arrowcols
 from ..operators.materialize import errors_alongside, materialize
 from ..plans.pipeline import construct_graph
 from ..schema import DOCUMENTS_SCHEMA
@@ -144,7 +145,8 @@ def _signature_bands(stream: DataFrame, signature, *, id_col: str,
     import pyarrow as pa
 
     def fn(it):
-        pa_id = pa.int64() if id_type == "long" else pa.string()
+        ids_col = (arrowcols.int64s if id_type == "long"
+                   else arrowcols.strings)
         for rb in it:
             ids = rb.column(rb.schema.get_field_index(id_col))
             cells = rb.column(rb.schema.get_field_index(src_col))
@@ -162,10 +164,9 @@ def _signature_bands(stream: DataFrame, signature, *, id_col: str,
                     out_val.append((h >> (b * width)) % (1 << width))
                     out_idx.append(k)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, type=pa_id),
-                 pa.array(out_band, type=pa.int32()),
-                 pa.array(out_val, type=pa.int64()),
-                 ts.take(pa.array(out_idx, type=pa.int32()))],
+                [ids_col(out_id), arrowcols.int32s(out_band),
+                 arrowcols.int64s(out_val),
+                 ts.take(arrowcols.int32s(out_idx))],
                 names=[id_col, "band_id", "band_value", ts_col])
 
     return (stream.select(id_col, src_col, F.col(ts_col))
@@ -363,8 +364,7 @@ def stream_decontaminate_flags(docs_stream: DataFrame, eval_grams, *,
                 out_id.append(ids[k].as_py())
                 out_n.append(hits)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, type=pa.int64()),
-                 pa.array(out_n, type=pa.int64())],
+                [arrowcols.int64s(out_id), arrowcols.int64s(out_n)],
                 names=[id_col, "n_hit_ngrams"])
 
     return (docs_stream.select(id_col, text_col)

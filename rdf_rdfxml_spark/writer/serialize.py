@@ -405,37 +405,10 @@ def write_rdfxml(triples, group_cols=("doc_sha",), attributes: str = "none",
                            if c not in group_cols and c in triples.columns]
     triples = triples.select(*needed)
     schema = ", ".join(f"{c} string" for c in group_cols) + ", xml string"
-    out_cols = group_cols + ["xml"]
-    opts = dict(attributes=attributes, base_uri=base_uri,
-                max_depth=max_depth, lang=lang, stylesheet=stylesheet)
-
-    def render_stream(batches):
-        import pyarrow as pa
-        cur_key, cur_rows = None, []
-        out = {c: [] for c in out_cols}
-
-        def flush():
-            if cur_key is None:
-                return
-            xml = serialize_graph(cur_rows, **opts)
-            for c, k in zip(group_cols, cur_key):
-                out[c].append(k)
-            out["xml"].append(xml)
-
-        for batch in batches:
-            for r in batch.to_pylist():
-                k = tuple(r[c] for c in group_cols)
-                if k != cur_key:
-                    flush()
-                    cur_key, cur_rows = k, []
-                cur_rows.append(r)
-            if out["xml"]:
-                yield pa.RecordBatch.from_pydict(
-                    {c: out[c] for c in out_cols})
-                out = {c: [] for c in out_cols}
-        flush()
-        if out["xml"]:
-            yield pa.RecordBatch.from_pydict({c: out[c] for c in out_cols})
+    render_stream = _render_stream(
+        group_cols, dict(attributes=attributes, base_uri=base_uri,
+                         max_depth=max_depth, lang=lang,
+                         stylesheet=stylesheet))
 
     if grouped:
         return triples.mapInArrow(render_stream, schema=schema)
@@ -446,3 +419,46 @@ def write_rdfxml(triples, group_cols=("doc_sha",), attributes: str = "none",
     return (triples.repartition(spread, *group_cols)
             .sortWithinPartitions(*group_cols)
             .mapInArrow(render_stream, schema=schema))
+
+
+def _render_stream(group_cols: list, opts: dict):
+    """:func:`write_rdfxml`'s Arrow UDF: a streaming groupby over batches
+    whose rows arrive grouped, rendering each group with
+    :func:`serialize_graph` (``opts``) into one ``(group_cols…, xml)``
+    row. A group is emitted when the next one starts, so rows are yielded
+    after each input batch that completed a group, and the last group
+    after the input ends."""
+    out_cols = group_cols + ["xml"]
+
+    def render_stream(batches):
+        import pyarrow as pa
+        from ..functions.arrowcols import strings
+        cur_key, cur_rows = None, []
+        out = [[] for _ in out_cols]
+
+        def flush():
+            if cur_key is None:
+                return
+            for col, k in zip(out, cur_key):
+                col.append(k)
+            out[-1].append(serialize_graph(cur_rows, **opts))
+
+        def batch():
+            return pa.RecordBatch.from_arrays([strings(c) for c in out],
+                                              names=out_cols)
+
+        for rb in batches:
+            for r in rb.to_pylist():
+                k = tuple(r[c] for c in group_cols)
+                if k != cur_key:
+                    flush()
+                    cur_key, cur_rows = k, []
+                cur_rows.append(r)
+            if out[-1]:
+                yield batch()
+                out = [[] for _ in out_cols]
+        flush()
+        if out[-1]:
+            yield batch()
+
+    return render_stream
